@@ -83,7 +83,7 @@ def q_knn_euclid(spark, sf):
 
 
 def q_knn_euclid_gemm(spark, sf):
-    """Q1 via the GEMM mapInPandas scale path (ids/ranks; kernel distances
+    """Q1 via the GEMM mapInArrow scale path (ids/ranks; kernel distances
     differ from the expr algebra at ~1e-8 so they are not emitted)."""
     res = knn(_train(spark, sf), _queries_mod(spark, sf), k=10, method="gemm")
     return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
@@ -400,7 +400,7 @@ def q_hnsw_scale_recall(spark, sf):
     # Off-oracle floor 0.8/0.35 (raised from 0.7/0.3 with round 7's
     # adaptive ef — VERDICT r6 ask #4): with ef='auto' the measured recall
     # holds ~0.885 mean / ≥0.5 min at BOTH the 20k and 200k fixtures
-    # (scripts/scale_hnsw.py, SCALING.md third table) instead of decaying
+    # (SCALING.md third table) instead of decaying
     # with shard size, so the defect floor tightens.  Still defect-only:
     # a broken build/beam lands far below it.
     mean_thr, min_thr = _gate(sf, tight=(0.95, 0.8), floor=(0.8, 0.35))
@@ -2415,7 +2415,7 @@ def q_semantic_dups(spark, sf):
     # expr scoring: engine-reproducible cosine fold term order (the 6-dp
     # round must agree with DuckDB's).  The gemm per-cluster BLAS kernel is
     # the scale path (default; pair sets identical, folds differ ~1e-15) —
-    # measured in scripts/scale_semdedup.py, parity-pinned in test_dedup.
+    # measured in SCALING.md (SemDeDup section), parity-pinned in test_dedup.
     out = dd.semantic_dup_pairs(emb, threshold=0.4, nlist=8, seed=1,
                                 max_iter=8, method="expr")
     return out.select("id_a", "id_b", "cluster_id",
@@ -3001,17 +3001,22 @@ def _dense_leg_ctx(base):
     immaterial) all derive from it — replacing three sequential driver
     jobs (envelope count, fit collect, query-block collect) with one.
 
-    The fit-sample limit keeps the collect bounded at scale exactly like
-    BQIndex.fit; past it ``len(ids)`` reads 1M, which still (correctly)
-    trips the 200k ALL_PAIRS envelope in ``_brute_vec_leg``."""
+    The collect is bounded by the BQ fit-sample cap.  The query block must
+    be complete, so a corpus past the cap raises instead of silently
+    dropping the queries beyond it."""
     import numpy as np
 
     from bigvectorbench_spark.operators.bq import MAX_FIT_SAMPLE_ROWS
 
     rows = (base.select("doc_id", "v").orderBy("doc_id")
-            .limit(MAX_FIT_SAMPLE_ROWS).collect())
+            .limit(MAX_FIT_SAMPLE_ROWS + 1).collect())
     if not rows:
         raise ValueError("cannot fit BQIndex on an empty table")
+    if len(rows) > MAX_FIT_SAMPLE_ROWS:
+        raise ValueError(
+            f"hybrid dense legs collect the whole corpus on the driver; it "
+            f"has more than MAX_FIT_SAMPLE_ROWS={MAX_FIT_SAMPLE_ROWS} rows, "
+            "so the query block past the cap would be lost")
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     V = np.array([r[1] for r in rows], dtype=np.float64)
     return ids, V

@@ -14,7 +14,7 @@ This package re-expresses that surface Spark-first:
 - every operator is a function ``DataFrame -> DataFrame`` built from
   ``pyspark.sql.functions`` so Catalyst can push filters, prune columns and
   broadcast the (always small) query side;
-- the only Python-side kernels are Arrow-batched (``mapInPandas`` GEMM
+- the only Python-side kernels are Arrow-batched (``mapInArrow`` GEMM
   scoring) and only where they beat whole-stage codegen.
 
 Convenience API (full surface lives in the submodules)::

@@ -225,7 +225,7 @@ class BQIndex:
     def search(
         self,
         codes: DataFrame,
-        queries: DataFrame,
+        queries: DataFrame | None,
         k: int = 10,
         *,
         words_col: str = "words",
@@ -267,6 +267,11 @@ class BQIndex:
         the per-search collect job.  Scoring is per-qid, so block order is
         immaterial; values must equal what collecting ``queries`` would
         yield (the caller's contract)."""
+        if queries is None and qblock is None:
+            raise ValueError("search needs queries or a qblock")
+        if queries is None and refine_train is not None:
+            raise ValueError("the exact refine reads the query vectors from "
+                             "queries; pass queries with refine_train")
         if pre_filter is not None:
             codes = codes.filter(
                 F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)

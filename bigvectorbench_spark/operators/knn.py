@@ -16,7 +16,7 @@ Two physical strategies behind one API:
 ``method="gemm"`` — the scale path, mirroring the reference's BLAS batching
   (bruteforce/module.py:173-188) in Spark terms: queries are collected to the
   driver (they are ≤10k rows by design — reference README.md:188-241) and
-  shipped to every partition; an Arrow-batched ``mapInPandas`` kernel does one
+  shipped to every partition; an Arrow-batched ``mapInArrow`` kernel does one
   numpy GEMM per batch and emits only each batch's local top-k per query.
   A final window merges the ≤ k·num_batches candidates per query.  Shuffle
   volume is O(q·k·batches) instead of O(q·n): that is the difference between

@@ -16,12 +16,12 @@ This module provides that pipeline shape, Spark-first:
 - **real decode, three tiers** (``_decode_payload``): PNG payloads decode
   with the built-in pure-Python codec below (zlib inflate + scanline
   unfilter — no external library needed, always available); other formats
-  decode through PIL when it is importable (import-gated, mirroring
-  sources/vectors.py's HuggingFace gating); payloads neither engine can
-  read fall back to the deterministic byte-derived fake (crc32-seeded,
-  stable across executors) so the pipeline shape stays testable on opaque
-  fixtures.  ``codec="real"`` turns the fallback into a hard error for
-  corpora where silent fakes would be a correctness bug.
+  decode through PIL when it is importable (import-gated); payloads
+  neither engine can read fall back to the deterministic byte-derived
+  fake (crc32-seeded, stable across executors) so the pipeline shape
+  stays testable on opaque fixtures.  ``codec="real"`` turns the
+  fallback into a hard error for corpora where silent fakes would be a
+  correctness bug.
 """
 
 from __future__ import annotations

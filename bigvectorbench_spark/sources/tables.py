@@ -45,6 +45,17 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The part files of a sharded ``name.parquet`` directory (sorted,
+    ``_SUCCESS`` and other non-parquet files skipped), or the file itself."""
+    import os
+
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet"))
+
+
 _ROWS_CACHE: dict[str, int] = {}
 
 
@@ -65,12 +76,7 @@ def table_rows(sf_dir: str, name: str) -> int:
         return _ROWS_CACHE[path]
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        n = sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path) if f.endswith(".parquet"))
-    else:
-        n = pq.read_metadata(path).num_rows
+    n = sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
     _ROWS_CACHE[path] = n
     return n
 
@@ -79,12 +85,13 @@ _DIM_CACHE: dict[tuple[str, str, str], int] = {}
 
 
 def table_dim(sf_dir: str, name: str, col: str) -> int:
-    """Element count of a list column's first row, read with pyarrow from
-    the parquet file directly (one tiny batch, no Spark job) — the
-    table_rows convention for the other plan-construction statistic
-    vector operators need: the vector width.  Matches
-    ``df.select(size(col)).first()`` on any table whose column width is
-    uniform (every shipped embedding table)."""
+    """Element count of a list column's first non-null row, read with
+    pyarrow from the parquet files directly (small batches, no Spark job)
+    — the table_rows convention for the other plan-construction statistic
+    vector operators need: the vector width.  Matches the first non-null
+    ``df.select(size(col))`` on any table whose column width is uniform
+    (every shipped embedding table).  Empty shards and null rows are
+    skipped; a column with no non-null row raises ``ValueError``."""
     import os
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -93,14 +100,15 @@ def table_dim(sf_dir: str, name: str, col: str) -> int:
         return _DIM_CACHE[key]
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        path = next(os.path.join(path, f) for f in sorted(os.listdir(path))
-                    if f.endswith(".parquet"))
-    batch = next(pq.ParquetFile(path).iter_batches(batch_size=1,
-                                                   columns=[col]))
-    d = len(batch.column(0)[0])
-    _DIM_CACHE[key] = d
-    return d
+    for f in _parquet_files(path):
+        for batch in pq.ParquetFile(f).iter_batches(batch_size=64,
+                                                    columns=[col]):
+            for v in batch.column(0):
+                if v.is_valid:
+                    d = len(v)
+                    _DIM_CACHE[key] = d
+                    return d
+    raise ValueError(f"{path}: column {col!r} has no non-null row")
 
 
 def table_fingerprint(sf_dir: str, name: str) -> str:
@@ -117,11 +125,8 @@ def table_fingerprint(sf_dir: str, name: str) -> str:
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    files = (sorted(os.path.join(path, f) for f in os.listdir(path)
-                    if f.endswith(".parquet"))
-             if os.path.isdir(path) else [path])
     h = hashlib.md5()
-    for f in files:
+    for f in _parquet_files(path):
         md = pq.read_metadata(f)
         h.update(f"{md.num_rows}:{os.path.getsize(f)}".encode())
         for rg in range(md.num_row_groups):

@@ -18,6 +18,7 @@ Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as bench.py.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import sys
@@ -33,6 +34,15 @@ from bigvectorbench_spark import get_spark
 def _rest(base: str, path: str):
     with urllib.request.urlopen(base + path) as r:
         return json.loads(r.read().decode())
+
+
+def _job_ms(job: dict) -> int:
+    """completionTime - submissionTime of a /jobs entry, in ms.  The REST
+    API writes times as ``2026-10-17T09:55:01.123GMT``."""
+    def ts(v):
+        return datetime.datetime.strptime(
+            v.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z").timestamp()
+    return round((ts(job["completionTime"]) - ts(job["submissionTime"])) * 1e3)
 
 
 def main() -> None:
@@ -80,7 +90,7 @@ def main() -> None:
             "n_stages": n_stages, "n_tasks": n_tasks,
             "executor_run_ms": run_ms,
             "jobs": [{"stages": len(j.get("stageIds", [])),
-                      "dur_ms": j.get("numCompletedTasks", 0)} for j in jobs],
+                      "dur_ms": _job_ms(j)} for j in jobs],
         }, separators=(",", ":")), flush=True)
 
 

@@ -119,18 +119,23 @@ def test_search_refined_recall_beats_hamming(spark):
     for r in knn(tdf, qdf, k=10, method="expr").collect():
         exact.setdefault(r["qid"], set()).add(r["id"])
 
-    def recall(index):
+    def recall(index, overfetch=8):
         codes = index.encode(tdf, keep=["id"])
-        res = index.search(codes, qdf, k=10, refine_train=tdf, overfetch=8)
+        res = index.search(codes, qdf, k=10, refine_train=tdf,
+                           overfetch=overfetch)
         got = {}
         for r in res.collect():
             got.setdefault(r["qid"], set()).add(r["id"])
         return float(np.mean([len(got[q] & exact[q]) / 10 for q in exact]))
 
-    centered = recall(BQIndex.fit(tdf, sort_col="id"))
+    fitted = BQIndex.fit(tdf, sort_col="id")
+    centered = recall(fitted)
     raw = recall(BQIndex.fit(tdf, center=False))
     assert centered >= 0.7, centered
     assert centered > raw, (centered, raw)
+    # a wider hamming pre-rank is a superset of candidates for the same
+    # exact refine: recall is monotone in overfetch
+    assert recall(fitted, overfetch=2) <= centered, centered
 
 
 def test_search_pre_filter_composes(spark):
@@ -268,13 +273,21 @@ def test_search_qblock_matches_collect_path(spark):
     assert got_perm == want
     with pytest.raises(ValueError, match="kernel-path shortcut"):
         idx.search(codes, q, k=7, qblock=(qids, qmat), method="expr")
+    with pytest.raises(ValueError, match="queries or a qblock"):
+        idx.search(codes, None, k=7)
+    with pytest.raises(ValueError, match="pass queries with refine_train"):
+        idx.search(codes, None, k=7, qblock=(qids, qmat),
+                   refine_train=_vec_df(spark, X))
 
 
-def test_fused_ctx_thresholds_match_fit(spark):
+def test_fused_ctx_thresholds_match_fit(spark, monkeypatch):
     """__spark_entry__._dense_leg_ctx's float64 mean over the id-sorted
     collected matrix must reproduce BQIndex.fit(sort_col='id') bit for bit
-    (the fused hybrid prelude replaces the fit collect with it)."""
+    (the fused hybrid prelude replaces the fit collect with it).  Its
+    collect is capped, and a corpus past the cap raises rather than
+    returning a truncated query block."""
     import __spark_entry__ as entry
+    from bigvectorbench_spark.operators import bq
 
     rng = np.random.RandomState(7)
     V = rng.randint(-50, 50, size=(60, 16)).astype(np.int64)
@@ -289,3 +302,8 @@ def test_fused_ctx_thresholds_match_fit(spark):
                     F.col("v").cast("array<double>").alias("vec")),
         vec_col="vec", sort_col="doc_id")
     assert [float(x) for x in M.mean(axis=0)] == fit.thresholds
+    monkeypatch.setattr(bq, "MAX_FIT_SAMPLE_ROWS", 60)
+    assert len(entry._dense_leg_ctx(base)[0]) == 60
+    monkeypatch.setattr(bq, "MAX_FIT_SAMPLE_ROWS", 59)
+    with pytest.raises(ValueError, match="MAX_FIT_SAMPLE_ROWS=59"):
+        entry._dense_leg_ctx(base)

@@ -108,8 +108,12 @@ def test_search_recall_not_worse_than_pq(spark):
 
     m, ksub, over = 4, 16, 4
     opq = OPQIndex.fit(tdf, m=m, ksub=ksub, iters=4, sort_col="id")
-    r_opq = recall(opq.search(opq.encode(tdf), qdf, k=10,
+    enc = opq.encode(tdf)
+    r_opq = recall(opq.search(enc, qdf, k=10,
                               refine_train=tdf, overfetch=over))
+    # the exact refine of the k·overfetch ADC candidates dominates pure ADC
+    r_adc = recall(opq.search(enc, qdf, k=10))
+    assert r_opq >= r_adc, (r_opq, r_adc)
     pq = PQIndex.fit(tdf, m=m, ksub=ksub, seed=1, max_iter=8, sort_col="id")
     r_pq = recall(pq.search(pq.encode(tdf), qdf, k=10,
                             refine_train=tdf, overfetch=over))

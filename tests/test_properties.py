@@ -130,17 +130,6 @@ def test_avi_roundtrip_property(n, h, w, seed):
         np.testing.assert_array_equal(bgr[..., c], fr)
 
 
-@given(st.binary(max_size=6000))
-@settings(max_examples=60, deadline=None)
-def test_lzf_roundtrip_property(payload):
-    """Pure-Python liblzf codec: decompress(compress(x)) == x for arbitrary
-    byte strings (covers literal-only, match-heavy, and overlap cases the
-    generators happen to produce)."""
-    from bigvectorbench_spark.sources.lzf import lzf_compress, lzf_decompress
-
-    assert lzf_decompress(lzf_compress(payload)) == payload
-
-
 @given(st.integers(min_value=1, max_value=64),
        st.integers(min_value=0, max_value=2**31 - 1))
 @settings(max_examples=8, deadline=None)

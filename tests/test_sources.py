@@ -1,4 +1,5 @@
-"""Source/sink tests: fvecs/ivecs round-trip, text vectors, result tree."""
+"""Source/sink tests: fvecs/ivecs round-trip, text vectors, result tree,
+and parquet footer statistics (row counts, content fingerprint, vector width)."""
 
 import struct
 
@@ -161,18 +162,36 @@ def test_table_rows_and_fingerprint_sharded_dir(tmp_path):
 
 
 def test_table_dim_matches_size_probe(spark, tmp_path):
-    """table_dim (pyarrow footer-adjacent one-row read, the r13 probe-job
-    shortcut) must equal select(size(col)).first() on a list column."""
+    """table_dim (pyarrow read of the first non-null row, no probe job)
+    must equal the first non-null select(size(col)) on a list column — on
+    a single file, on a sharded directory whose first shard is empty and
+    whose first row is null, and it refuses a column with no non-null row."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from bigvectorbench_spark.sources.tables import table_dim
 
-    tbl = pa.table({"vec_id": pa.array([0, 1], pa.int64()),
-                    "embedding": pa.array([[1.0] * 7, [2.0] * 7],
-                                          pa.list_(pa.float32()))})
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    def tbl(vecs):
+        return pa.table({"vec_id": pa.array(range(len(vecs)), pa.int64()),
+                         "embedding": pa.array(vecs, pa.list_(pa.float32()))})
+
+    pq.write_table(tbl([[1.0] * 7, [2.0] * 7]),
+                   str(tmp_path / "embeddings.parquet"))
     want = (spark.read.parquet(str(tmp_path / "embeddings.parquet"))
             .select(F.size("embedding").alias("d")).first()["d"])
     assert table_dim(str(tmp_path), "embeddings", "embedding") == want == 7
+
+    sharded = tmp_path / "sharded" / "embeddings.parquet"
+    sharded.mkdir(parents=True)
+    pq.write_table(tbl([]), str(sharded / "part-0.parquet"))
+    pq.write_table(tbl([None, [3.0] * 5]), str(sharded / "part-1.parquet"))
+    want = (spark.read.parquet(str(sharded))
+            .select(F.size("embedding").alias("d"))
+            .filter(F.col("d") >= 0).first()["d"])
+    got = table_dim(str(sharded.parent), "embeddings", "embedding")
+    assert got == want == 5
+
+    pq.write_table(tbl([None, None]), str(tmp_path / "nulls.parquet"))
+    with pytest.raises(ValueError, match="no non-null row"):
+        table_dim(str(tmp_path), "nulls", "embedding")

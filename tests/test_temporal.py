@@ -153,8 +153,7 @@ def test_salted_tolerance_and_tie_rules(spark):
 
 def test_salted_skewed_key_parity(spark):
     """Skew stress shape at test scale: one hot user holds 92% of all rows
-    (the '1 user with 10⁶ events' pattern — scripts/stress_asof.py runs the
-    full-size version).  Salted and plain sweeps must agree exactly on a
+    (the '1 user with 10⁶ events' pattern).  Salted and plain sweeps must agree exactly on a
     dense randomized stream where matches cross many buckets."""
     import random
 
