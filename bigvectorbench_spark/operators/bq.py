@@ -30,7 +30,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from bigvectorbench_spark.functions import distance as dx
-from bigvectorbench_spark.operators.knn import MAX_BROADCAST_QUERIES, topk_window
+from bigvectorbench_spark.operators.knn import (
+    _check_envelope, _collect_queries, arrow_rows, topk_scan, topk_window)
 
 _OUT_SCHEMA = "qid bigint, id bigint, dist double, rank int"
 
@@ -204,11 +205,9 @@ class BQIndex:
         def fn(batches):
             thr = bc.value
             for batch in batches:
-                n = batch.num_rows
-                if n == 0:
+                if batch.num_rows == 0:
                     continue
-                X = (batch.column(vec_idx).flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64, copy=False).reshape(n, d))
+                X = arrow_rows(batch.column(vec_idx))
                 W = pack_np(X, thr)
                 yield pa.RecordBatch.from_arrays(
                     [*[batch.column(i) for i in keep_idx],
@@ -247,15 +246,11 @@ class BQIndex:
         BIN_FLAT behavior for genuinely binary data.
 
         ``method``: 'kernel' (default via 'auto') scores each Arrow batch
-        against the whole broadcast query block with a byte-LUT popcount and
-        emits per-batch partial top-n candidates — the shuffle carries
-        O(q·n_cand·batches) rows, the knn-GEMM discipline.  Because integer
-        hamming TIES are routine (d+1 possible values), the partial
-        selection is (hamming, id)-lexicographic, so kernel candidates are
-        bit-identical to the global window's and to an external lexsort
-        recomputation.  'expr' keeps the pure-Column form (JVM fold per
-        pair — no Python, but per-pair HOF evaluation costs ~3× the kernel
-        at 100 queries; the declared-oracle shape).
+        with a byte-LUT popcount in ``knn.topk_scan``, whose (dist, id)
+        selection keeps the routine integer-hamming ties bit-identical to
+        an external (hamming, id) lexsort.  'expr' keeps the pure-Column
+        form (JVM fold per pair — no Python, but per-pair HOF evaluation
+        costs ~3× the kernel at 100 queries; the declared-oracle shape).
 
         ``pre_filter`` composes filtered-ANN semantics: applied to the
         codes table before scoring so Catalyst pushes it into the scan.
@@ -329,65 +324,32 @@ class BQIndex:
     def _candidates_kernel(self, codes, queries, n_cand,
                            words_col, id_col, qid_col, query_vec_col,
                            qblock=None) -> DataFrame:
-        """(qid, id, _ham, rank): Arrow-batched byte-LUT popcount against the
-        broadcast packed query block, per-batch partial top-n_cand with a
-        (hamming, id)-lexicographic tie rule, global window merge — the
-        knn-GEMM shuffle discipline (O(q·n_cand·batches) rows move, never
-        O(q·n))."""
-        spark = codes.sparkSession
+        """(qid, id, _ham, rank): ``knn.topk_scan`` scored by byte-LUT
+        popcounts against the packed query block."""
         if qblock is not None:
             qids = np.asarray(qblock[0], dtype=np.int64)
             qmat = np.asarray(qblock[1], dtype=np.float64)
+            _check_envelope(len(qids))
         else:
-            rows = queries.select(
-                F.col(qid_col).cast("bigint"), query_vec_col).collect()
-            qids = np.array([r[0] for r in rows], dtype=np.int64)
-            qmat = np.array([r[1] for r in rows], dtype=np.float64)
+            qids, qmat = _collect_queries(queries, qid_col, query_vec_col)
         if len(qids) == 0:
-            return spark.createDataFrame([], "qid bigint, id bigint, _ham bigint, rank int")
-        if len(qids) > MAX_BROADCAST_QUERIES:
-            raise ValueError(
-                f"{len(qids)} queries exceed the broadcast envelope "
-                f"({MAX_BROADCAST_QUERIES}); split the query set or use method='expr'")
-        qwords = pack_np(qmat, self.thresholds)
-        bc = spark.sparkContext.broadcast((qids, qwords.view(np.uint8)))
-        n_words = qwords.shape[1]
-
-        import pyarrow as pa
-
-        def score(batches):
-            b_qids, b_qu8 = bc.value
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                ids = batch.column("id").to_numpy()
-                W = (batch.column("words").flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.int64, copy=False).reshape(n, n_words))
-                Wu8 = W.view(np.uint8)
-                kk = min(n_cand, n)
-                # ids < 2^31 admit an O(n) composite-key argpartition for the
-                # (hamming, id) tie rule; otherwise exact lexsort per query.
-                small_ids = len(ids) > 0 and ids.min() >= 0 and ids.max() < (1 << 31)
-                out_ids, out_ham, out_qid = [], [], []
-                for qi in range(len(b_qids)):
-                    x = np.bitwise_xor(Wu8, b_qu8[qi][None, :])
-                    ham = _POP[x].sum(axis=1, dtype=np.int64)
-                    if small_ids:
-                        key = (ham << np.int64(31)) | ids
-                        part = np.argpartition(key, kk - 1)[:kk]
-                    else:
-                        part = np.lexsort((ids, ham))[:kk]
-                    out_qid.append(np.full(kk, b_qids[qi], dtype=np.int64))
-                    out_ids.append(ids[part])
-                    out_ham.append(ham[part])
-                yield pa.RecordBatch.from_pydict({
-                    "qid": pa.array(np.concatenate(out_qid), pa.int64()),
-                    "id": pa.array(np.concatenate(out_ids), pa.int64()),
-                    "_ham": pa.array(np.concatenate(out_ham), pa.int64()),
-                })
-
+            return codes.sparkSession.createDataFrame(
+                [], "qid bigint, id bigint, _ham bigint, rank int")
         t = codes.select(F.col(id_col).cast("bigint").alias("id"),
                          F.col(words_col).alias("words"))
-        partial = t.mapInArrow(score, schema="qid bigint, id bigint, _ham bigint")
-        return topk_window(partial, n_cand, dist="_ham")
+        return topk_scan(
+            t, {"qid": qids}, n_cand,
+            lambda batch, qu8: hamming_bytes(arrow_rows(batch.column("words"), np.int64), qu8),
+            state=pack_np(qmat, self.thresholds).view(np.uint8),
+            dist="_ham", dist_dtype=np.int64)
+
+
+def hamming_bytes(W: np.ndarray, Qu8: np.ndarray) -> np.ndarray:
+    """(n × nq) int64 hamming distances between packed int64 word rows ``W``
+    and byte-viewed packed queries ``Qu8`` (one byte-LUT popcount pass per
+    query)."""
+    Wu8 = W.view(np.uint8)
+    H = np.empty((len(W), len(Qu8)), dtype=np.int64)
+    for qi in range(len(Qu8)):
+        H[:, qi] = _POP[np.bitwise_xor(Wu8, Qu8[qi][None, :])].sum(axis=1, dtype=np.int64)
+    return H

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import distance as dist_fns
 from bigvectorbench_spark.operators.knn import (
-    MAX_BROADCAST_QUERIES, pair_dist_below_join, topk_window)
+    CLUSTER_COL, _query_rows, pair_dist_below_join, topk_window)
 
 _PLACEHOLDER = re.compile(r"\{(\w+)\}")
 _EQ_REWRITE = re.compile(r"(?<![=!<>])==")
@@ -187,7 +187,6 @@ def filtered_ivf_knn(
     overfetch/tie rules, so the composition takes a full SQL value oracle
     (the ivf_knn convention: embedded assignment + probe lists).
     """
-    from bigvectorbench_spark.operators.similarity import CLUSTER_COL
     from bigvectorbench_spark.plans.selectivity import POST_FILTER_THRESHOLD
 
     if strategy == "auto":
@@ -221,15 +220,8 @@ def filtered_ivf_knn(
     # pre: predicate + cell membership in one broadcast join condition
     import numpy as np
 
-    q_rows = queries.select(
-        F.col(qid_col).cast("bigint"), F.col(qvec).cast("array<double>"),
-        *query_param_cols).collect()
-    if len(q_rows) > MAX_BROADCAST_QUERIES:
-        raise ValueError(
-            f"{len(q_rows)} queries exceed the broadcast envelope "
-            f"({MAX_BROADCAST_QUERIES}); split the query set or use "
-            f"strategy='post'"
-        )
+    q_rows = _query_rows(queries, qid_col, F.col(qvec).cast("array<double>"),
+                         *query_param_cols)
     spark = indexed_train.sparkSession
     if not q_rows:
         return spark.createDataFrame([], "qid bigint, id bigint, dist double, rank int")

@@ -24,13 +24,18 @@ Two physical strategies behind one API:
   (euclidean ranked by ‖t‖²−2t·q with ‖t‖² precomputable; angular as dot of
   unit vectors — bruteforce/module.py:128-150) lives inside the kernel.
 
+The kernel is ``topk_scan``, shared by every Arrow scan-path operator (IVF,
+PQ, IVF-PQ, BQ, multi-vector); each supplies only its per-batch scoring.
+Its per-batch selection keeps the k smallest rows by (dist, id), so the
+kernels break ties by ascending id exactly as the final window does.
+
 Output schema (both paths): (qid BIGINT, id BIGINT, dist DOUBLE, rank INT),
 rank 1..k ordered by (dist, id).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -44,9 +49,14 @@ _OUT_SCHEMA = "qid bigint, id bigint, dist double, rank int"
 # ≤10k rows, README.md:188-241): the GEMM path broadcasts queries by value.
 MAX_BROADCAST_QUERIES = 100_000
 
+# The IVF cell column (similarity.IVFIndex.assign): ``topk_scan`` masks by it.
+CLUSTER_COL = "cluster_id"
 
-def topk_window(scored: DataFrame, k: int, qid: str = "qid", dist: str = "dist", id_col: str = "id") -> DataFrame:
-    """Per-query top-k: the A1 window (SURVEY §2.6), deterministic on ties."""
+
+def topk_window(scored: DataFrame, k: int, qid: str | list[str] = "qid", dist: str = "dist",
+                id_col: str = "id") -> DataFrame:
+    """Per-query top-k: the A1 window (SURVEY §2.6), deterministic on ties.
+    ``qid`` may name several key columns (one window per key tuple)."""
     w = Window.partitionBy(qid).orderBy(F.col(dist).asc(), F.col(id_col).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -168,99 +178,147 @@ def _knn_jaccard_sparse(train, queries, k, vec_col, qvec, id_col, qid_col) -> Da
     return topk_window(scored, k).select("qid", "id", "dist", "rank")
 
 
-def _collect_queries(queries: DataFrame, qid_col: str, qvec: str) -> tuple[np.ndarray, np.ndarray]:
-    rows = queries.select(F.col(qid_col).cast("bigint"), qvec).collect()
-    if len(rows) > MAX_BROADCAST_QUERIES:
+def _query_rows(queries: DataFrame, qid_col: str, qvec, *extra) -> list:
+    """Collect ``(qid, qvec, *extra)`` query rows to the driver, refusing a
+    block past the broadcast envelope."""
+    rows = queries.select(F.col(qid_col).cast("bigint"), qvec, *extra).collect()
+    _check_envelope(len(rows))
+    return rows
+
+
+def _check_envelope(n: int) -> None:
+    if n > MAX_BROADCAST_QUERIES:
         raise ValueError(
-            f"{len(rows)} queries exceed the broadcast envelope "
-            f"({MAX_BROADCAST_QUERIES}); split the query set or use method='expr'"
+            f"{n} queries exceed the broadcast envelope "
+            f"({MAX_BROADCAST_QUERIES}); split the query set or use the expression path"
         )
+
+
+def _collect_queries(queries: DataFrame, qid_col: str, qvec: str) -> tuple[np.ndarray, np.ndarray]:
+    rows = _query_rows(queries, qid_col, qvec)
     qids = np.array([r[0] for r in rows], dtype=np.int64)
     if not rows:
         return qids, np.zeros((0, 0), dtype=np.float64)
-    qmat = np.array([r[1] for r in rows], dtype=np.float64)
-    return qids, qmat
+    return qids, np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def unit_rows(X: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return X / n
+
+
+def arrow_rows(column, dtype=np.float64) -> np.ndarray:
+    """An Arrow list column as an (n_rows × width) matrix.  List arrays hold
+    ONE contiguous values buffer: flatten() + reshape converts the whole
+    batch with no per-row Python object — the reason the kernels are
+    mapInArrow, not mapInPandas (~3x less transfer overhead at wide dims)."""
+    return (column.flatten().to_numpy(zero_copy_only=False)
+            .astype(dtype, copy=False).reshape(len(column), -1))
+
+
+def partial_topk(D: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Row indices (kk × n_cols) of each column's kk = min(k, n) smallest
+    rows of ``D`` by (D, id) — the global tie rule, so a per-batch
+    selection never drops a row the final window would rank.  One
+    argpartition at k-1 and k; only the columns whose k-th and (k+1)-th
+    values tie are re-picked by a (D, id) lexsort of their rows at or below
+    the k-th value.  A tie at +inf (fewer than k unmasked rows) needs no
+    re-pick: those rows are dropped by the caller."""
+    n = len(ids)
+    if k >= n:
+        return np.broadcast_to(np.arange(n)[:, None], D.shape)
+    part = np.argpartition(D, [k - 1, k], axis=0)
+    kth, nxt = np.take_along_axis(D, part[k - 1:k + 1], axis=0)
+    part = part[:k]
+    for c in np.flatnonzero((kth == nxt) & np.isfinite(kth)):
+        rows = np.flatnonzero(D[:, c] <= kth[c])
+        part[:, c] = rows[np.lexsort((ids[rows], D[rows, c]))[:k]]
+    return part
+
+
+def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
+              member: Optional[np.ndarray] = None, dist: str = "dist",
+              dist_dtype=np.float64) -> DataFrame:
+    """The Arrow top-k kernel every scan-path operator shares.
+
+    ``frame`` is the projected train side: an ``id`` column, the columns
+    ``score`` reads and, with ``member``, ``cluster_id``.  ``keys`` names
+    the query axis: equal-length arrays, one per output key column
+    (``qid``; multi-vector search uses ``qid`` and ``j``).  The keys,
+    ``state`` and ``member`` are broadcast once.  ``score(batch, state)``
+    returns the (n_rows × n_query_cols) distance matrix of one non-empty
+    Arrow batch.  ``member`` is an (nlist × n_query_cols) bool matrix: a
+    row scores only for the query columns whose probe list holds its cell.
+
+    Each batch emits only its per-column partial top-k (``partial_topk``),
+    so the shuffle carries O(q·k·batches) rows instead of O(q·n); a final
+    window ranks them.  Returns ``(keys…, id, dist, rank)`` with rank 1..k
+    ordered by (dist, id) per key."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    names = list(keys)
+    cols = [np.asarray(a) for a in keys.values()]
+    schema = pa.schema([(n, pa.from_numpy_dtype(c.dtype)) for n, c in zip(names, cols)]
+                       + [("id", pa.int64()), (dist, pa.from_numpy_dtype(np.dtype(dist_dtype)))])
+    bc = frame.sparkSession.sparkContext.broadcast((cols, state, member))
+
+    def scan(batches):
+        b_cols, b_state, b_member = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column("id").to_numpy()
+            D = score(batch, b_state)
+            if b_member is not None:
+                D = np.where(b_member[batch.column(CLUSTER_COL).to_numpy()], D, np.inf)
+            part = partial_topk(D, ids, k)
+            out_d = np.take_along_axis(D, part, axis=0).T.ravel()
+            keep = np.isfinite(out_d) if b_member is not None else slice(None)
+            yield pa.RecordBatch.from_arrays(
+                [*(np.repeat(c, len(part))[keep] for c in b_cols),
+                 ids[part.T].ravel()[keep], out_d[keep]],
+                schema=schema)
+
+    partial = frame.mapInArrow(scan, schema=from_arrow_schema(schema))
+    return topk_window(partial, k, qid=names, dist=dist).select(*names, "id", dist, "rank")
+
+
+def gemm_scan(frame: DataFrame, qids: np.ndarray, qmat: np.ndarray, k: int,
+              metric: str, member: Optional[np.ndarray] = None) -> DataFrame:
+    """``topk_scan`` scored by one GEMM per batch of ``frame.vec``."""
+    if metric == "euclidean":
+        state = qmat, (qmat * qmat).sum(axis=1)[None, :]
+    else:
+        state = unit_rows(qmat) if metric == "angular" else qmat
+
+    def score(batch, st):
+        X = arrow_rows(batch.column("vec"))
+        if metric == "euclidean":
+            # ‖t−q‖² = ‖t‖² − 2 t·q + ‖q‖²  (bruteforce/module.py:128-137)
+            Q, q2 = st
+            return np.sqrt(np.maximum((X * X).sum(axis=1)[:, None] - 2.0 * (X @ Q.T) + q2, 0.0))
+        if metric == "angular":
+            return 1.0 - unit_rows(X) @ st.T
+        # hamming: mean of elementwise mismatch, floats ∈ {0,1}, in row
+        # blocks that bound the (rows × queries × d) comparison tensor
+        return np.concatenate([(X[i:i + 2048, None, :] != st[None, :, :]).mean(axis=2)
+                               for i in range(0, len(X), 2048)])
+
+    return topk_scan(frame, {"qid": qids}, k, score, state=state, member=member)
 
 
 def _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col) -> DataFrame:
     if metric not in ("euclidean", "angular", "hamming"):
         # jaccard is set-typed; GEMM does not apply (expr path handles it).
         return _knn_expr(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
-
     qids, qmat = _collect_queries(queries, qid_col, qvec)
-    spark = train.sparkSession
     if len(qids) == 0:
-        return spark.createDataFrame([], _OUT_SCHEMA)
-    bc = spark.sparkContext.broadcast((qids, qmat))
-
-    import pyarrow as pa
-
-    def score_partition(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        b_qids, b_qmat = bc.value
-        nq = len(b_qids)
-        if metric == "angular":
-            qn = np.linalg.norm(b_qmat, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            b_qunit = b_qmat / qn
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            # Arrow list arrays hold ONE contiguous values buffer: flatten()
-            # + reshape turns the whole batch into a matrix with no per-row
-            # Python object conversion — the reason this is mapInArrow, not
-            # mapInPandas (~3x less transfer overhead at wide dims).
-            lv = batch.column("vec")
-            X = (
-                lv.flatten().to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(len(ids), -1)
-            )
-            if metric == "euclidean":
-                # ‖t−q‖² = ‖t‖² − 2 t·q + ‖q‖²  (bruteforce/module.py:128-137)
-                d2 = (
-                    (X * X).sum(axis=1)[:, None]
-                    - 2.0 * (X @ b_qmat.T)
-                    + (b_qmat * b_qmat).sum(axis=1)[None, :]
-                )
-                D = np.sqrt(np.maximum(d2, 0.0))
-            elif metric == "angular":
-                xn = np.linalg.norm(X, axis=1, keepdims=True)
-                xn[xn == 0] = 1.0
-                D = 1.0 - (X / xn) @ b_qunit.T
-            else:  # hamming: mean of elementwise mismatch, floats ∈ {0,1}
-                D = (
-                    (X[:, None, :] != b_qmat[None, :, :]).mean(axis=2)
-                    if X.shape[0] * nq * X.shape[1] < 50_000_000
-                    else _hamming_blocked(X, b_qmat)
-                )
-            kk = min(k, len(ids))
-            # per-batch partial top-k (argpartition: bruteforce/module.py:201)
-            part = np.argpartition(D, kk - 1, axis=0)[:kk, :]
-            out_qid = np.repeat(b_qids, kk)
-            cols = part.T  # (nq, kk) train row indices per query
-            out_id = ids[cols].ravel()
-            out_d = np.take_along_axis(D, part, axis=0).T.ravel()
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "qid": pa.array(out_qid, pa.int64()),
-                    "id": pa.array(out_id, pa.int64()),
-                    "dist": pa.array(out_d, pa.float64()),
-                    "rank": pa.array(np.zeros(len(out_id), dtype=np.int32), pa.int32()),
-                }
-            )
-
+        return train.sparkSession.createDataFrame([], _OUT_SCHEMA)
     t = train.select(F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec"))
-    partial = t.mapInArrow(score_partition, schema=_OUT_SCHEMA)
-    # Final merge: candidates per query are ≤ k·num_batches — tiny.
-    return topk_window(partial.drop("rank"), k).select("qid", "id", "dist", "rank")
-
-
-def _hamming_blocked(X: np.ndarray, Q: np.ndarray, block: int = 2048) -> np.ndarray:
-    out = np.empty((X.shape[0], Q.shape[0]), dtype=np.float64)
-    for i in range(0, X.shape[0], block):
-        out[i : i + block] = (X[i : i + block, None, :] != Q[None, :, :]).mean(axis=2)
-    return out
+    return gemm_scan(t, qids, qmat, k, metric)
 
 
 def knn_hamming_packed(

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import distance as dist_fns
@@ -117,8 +117,6 @@ def mv_knn_fused(
     scored = tj.join(F.broadcast(qj), "j").select(
         "qid", "id", "j", dist_fns.l2_dist(F.col("vec"), F.col("qvec")).alias("dist")
     )
-    from pyspark.sql import Window
-
     win = Window.partitionBy("qid", "j").orderBy(F.col("dist").asc(), F.col("id").asc())
     top = scored.withColumn("rn", F.row_number().over(win)).filter(F.col("rn") <= fetch)
     w_arr = F.lit([float(x) for x in w]).cast("array<double>")
@@ -160,11 +158,11 @@ def mv_indexed_fused(
     candidate lists fuse with the identical WeightedRanker formula
     score = Σ_j w_j / (1 + dist_j), missing positions contributing 0.
 
-    100 TB design: the per-position candidate stage reads ONLY the packed
-    code column and shuffles O(q · per_vector_k · batches) rows (the BQ
-    kernel discipline); float vectors are touched for just the
-    ~q · per_vector_k · overfetch refine rows per position.  The brute
-    twin scores every (query, entity, position) triple — v full scans.
+    100 TB design: the per-position candidate stage is one
+    ``knn.topk_scan`` over the (qid, j) query axis; float vectors are
+    touched for just the ~q · per_vector_k · overfetch refine rows per
+    position.  The brute twin scores every (query, entity, position)
+    triple — v full scans.
 
     Value-oracle determinism: refine distances are the engine-stable
     expression fold rounded to 4 dp before scoring; per-position
@@ -174,28 +172,19 @@ def mv_indexed_fused(
     (id-sorted mean thresholds + (hamming, id) lexsort, the bq_knn
     convention) replays the whole pipeline exactly.
 
-    Execution shape (optimization round r12): the v legs share ONE plan
-    instead of v independent ones.  All v per-position thresholds come
-    from a single id-sorted driver collect (was: v orderBy+collect jobs);
-    the query block is collected once and packed per position (was: one
-    collect per leg inside the BQ kernel); ONE ``mapInArrow`` pass over
-    (id, vecs) scores every position's hamming pre-rank (was: v encode +
-    score passes); candidate selection, the exact refine and the ranking
-    run per (qid, j) under single windows/joins (was: 2 windows + 2 joins
-    per leg).  Per-position candidate sets, refine distances and the
-    fusion ladder are bit-identical to the per-leg form — the partial
-    top-``n_cand`` per batch is a superset of the global top regardless
-    of batching, the (hamming, id) / (dist, id) tie rules are unchanged,
-    and ``element_at(lit(w), j+1)`` reproduces each leg's weight literal
-    exactly (pinned in test_multivector's numpy replay).  The train
-    projection is persisted for its three passes (fit collect, kernel
-    scan, refine join) — callers release it via ``spark.catalog
-    .clearCache()`` (the bench/oracle convention)."""
+    Execution shape: the v legs share ONE plan — one id-sorted collect
+    fits all v thresholds, one query collect is packed per position, one
+    scan pre-ranks every position, and candidate selection, refine and
+    ranking run per (qid, j) under single windows and joins.  Results are
+    bit-identical to v separate BQ legs (pinned in test_multivector's
+    numpy replay).  The train projection is persisted for its three passes
+    (fit collect, kernel scan, refine join) — callers release it via
+    ``spark.catalog.clearCache()`` (the bench/oracle convention)."""
     import numpy as np
 
     from bigvectorbench_spark.operators.bq import (
-        MAX_FIT_SAMPLE_ROWS, _POP, pack_np)
-    from bigvectorbench_spark.operators.knn import MAX_BROADCAST_QUERIES
+        MAX_FIT_SAMPLE_ROWS, hamming_bytes, pack_np)
+    from bigvectorbench_spark.operators.knn import _collect_queries, arrow_rows, topk_scan
 
     qvecs = query_vecs_col or vecs_col
     if num_vectors is None:
@@ -230,67 +219,26 @@ def mv_indexed_fused(
         thrs = [np.zeros(d, dtype=np.float64) for _ in range(v)]
 
     # --- the query block: ONE collect, packed per position --------------
-    qrows = queries.select(F.col(qid_col).cast("bigint").alias("qid"),
-                           F.col(qvecs).alias("v")).collect()
-    if len(qrows) == 0:
+    qids, Q = _collect_queries(queries, qid_col, qvecs)  # Q: (q, v, d)
+    if len(qids) == 0:
         return spark.createDataFrame(
             [], "qid bigint, id bigint, score double, rank int")
-    if len(qrows) > MAX_BROADCAST_QUERIES:
-        raise ValueError(
-            f"{len(qrows)} queries exceed the broadcast envelope "
-            f"({MAX_BROADCAST_QUERIES}); split the query set")
-    qids_np = np.array([r["qid"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["v"] for r in qrows], dtype=np.float64)  # (q, v, d)
+    nq = len(qids)
     qpk = [pack_np(np.ascontiguousarray(Q[:, j, :]), list(thrs[j]))
            .view(np.uint8) for j in range(v)]
-    bc = spark.sparkContext.broadcast(
-        (qids_np, qpk, [list(th) for th in thrs]))
 
-    import pyarrow as pa
+    def score(batch, st):
+        b_qpk, b_thr = st
+        X = arrow_rows(batch.column("vecs").flatten()).reshape(batch.num_rows, v, d)
+        return np.hstack([
+            hamming_bytes(pack_np(np.ascontiguousarray(X[:, j, :]), b_thr[j]), b_qpk[j])
+            for j in range(v)])
 
-    def score(batches):
-        b_qids, b_qpk, b_thr = bc.value
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            X = (batch.column("vecs").flatten().flatten()
-                 .to_numpy(zero_copy_only=False)
-                 .astype(np.float64, copy=False).reshape(n, v, d))
-            kk = min(n_cand, n)
-            small_ids = ids.min() >= 0 and ids.max() < (1 << 31)
-            out_qid, out_j, out_ids, out_ham = [], [], [], []
-            for j in range(v):
-                Wu8 = pack_np(np.ascontiguousarray(X[:, j, :]),
-                              b_thr[j]).view(np.uint8)
-                for qi in range(len(b_qids)):
-                    x = np.bitwise_xor(Wu8, b_qpk[j][qi][None, :])
-                    ham = _POP[x].sum(axis=1, dtype=np.int64)
-                    if small_ids:
-                        key = (ham << np.int64(31)) | ids
-                        part = np.argpartition(key, kk - 1)[:kk]
-                    else:
-                        part = np.lexsort((ids, ham))[:kk]
-                    out_qid.append(np.full(kk, b_qids[qi], dtype=np.int64))
-                    out_j.append(np.full(kk, j, dtype=np.int32))
-                    out_ids.append(ids[part])
-                    out_ham.append(ham[part])
-            yield pa.RecordBatch.from_pydict({
-                "qid": pa.array(np.concatenate(out_qid), pa.int64()),
-                "j": pa.array(np.concatenate(out_j), pa.int32()),
-                "id": pa.array(np.concatenate(out_ids), pa.int64()),
-                "_ham": pa.array(np.concatenate(out_ham), pa.int64()),
-            })
-
-    from pyspark.sql import Window
-
-    partial = t.mapInArrow(
-        score, schema="qid bigint, j int, id bigint, _ham bigint")
-    cw = Window.partitionBy("qid", "j").orderBy(
-        F.col("_ham").asc(), F.col("id").asc())
-    cand = (partial.withColumn("rn", F.row_number().over(cw))
-            .filter(F.col("rn") <= n_cand).select("qid", "j", "id"))
+    # query axis: column j·nq + i scores query i at position j
+    cand = topk_scan(
+        t, {"qid": np.tile(qids, v), "j": np.repeat(np.arange(v, dtype=np.int32), nq)},
+        n_cand, score, state=(qpk, [list(th) for th in thrs]),
+        dist="_ham", dist_dtype=np.int64).select("qid", "j", "id")
 
     # --- exact refine: one join over the per-position float vectors -----
     tpos = t.select("id", F.posexplode("vecs").alias("j", "_tvec"))

@@ -12,9 +12,7 @@ Search is ADC (asymmetric distance computation): the *query* stays full
 precision; per query a (m × ksub) lookup table of subspace distances is built
 once on the driver (tiny: m·ksub doubles), broadcast, and each train row's
 approximate distance is the sum of m table lookups — no float vectors are
-read at all.  The scan is an Arrow kernel emitting per-batch partial top-k,
-identical shuffle discipline to the exact GEMM path (operators/knn.py): the
-shuffle carries O(q·k·batches) rows, never O(q·n).
+read at all.  The scan is ``knn.topk_scan``.
 
 Codebooks are fit driver-side on a bounded sample (the standard fit-on-sample
 / assign-distributed pattern, same as IVFIndex.fit).
@@ -29,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, ShortType, StructField, StructType
 
-from bigvectorbench_spark.operators.knn import _collect_queries, topk_window
+from bigvectorbench_spark.operators.knn import (
+    CLUSTER_COL, _collect_queries, arrow_rows, topk_scan, topk_window, unit_rows)
 from bigvectorbench_spark.operators.similarity import _kmeans_pp
 
 _OUT_SCHEMA = "qid bigint, id bigint, dist double, rank int"
@@ -85,7 +84,7 @@ class PQIndex:
         if d % m != 0:
             raise ValueError(f"d={d} not divisible by m={m}")
         if metric == "angular":
-            X = _unit_rows(X)
+            X = unit_rows(X)
         dsub = d // m
         if engine == "auto":
             # rows·ksub·d ~ total argmin work across all m fits; below ~2e8
@@ -160,13 +159,10 @@ class PQIndex:
                 n = batch.num_rows
                 if n == 0:
                     continue
-                X = (batch.column(vec_idx).flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64, copy=False).reshape(n, m, dsub))
+                X = arrow_rows(batch.column(vec_idx))
                 if metric == "angular":
-                    flat = X.reshape(n, m * dsub)
-                    nrm = np.linalg.norm(flat, axis=1, keepdims=True)
-                    nrm[nrm == 0] = 1.0
-                    X = (flat / nrm).reshape(n, m, dsub)
+                    X = unit_rows(X)
+                X = X.reshape(n, m, dsub)
                 codes = np.empty((n, m), dtype=np.int16)
                 for j in range(m):
                     S = X[:, j, :]
@@ -229,57 +225,39 @@ class PQIndex:
         if pre_filter is not None:
             encoded = encoded.filter(
                 F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)
-        metric = self.metric
-        if metric == "angular":
-            qmat = _unit_rows(qmat)
-        # LUT[j, c, q]: subspace distance (L2²) or inner product — m·ksub·nq
-        # doubles, built once and broadcast (for m=96, ksub=256, 10k queries:
-        # ~2 GB worst case; typical benchmark query sets are ≤10k and m ≤ 64).
-        Qs = qmat.reshape(len(qids), self.m, self.dsub)
-        if metric == "euclidean":
-            lut = np.stack([
-                ((self.codebooks[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
-                for j in range(self.m)
-            ])  # (m, ksub, nq)
-        else:
-            lut = np.stack([self.codebooks[j] @ Qs[:, j, :].T for j in range(self.m)])
-        bc = spark.sparkContext.broadcast((qids, lut, metric))
-        m = self.m
         k_adc = k * overfetch if refine_train is not None else k
-
-        import pyarrow as pa
-
-        def score(batches):
-            b_qids, b_lut, b_metric = bc.value
-            nq = len(b_qids)
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                ids = batch.column("id").to_numpy()
-                codes = (batch.column("codes").flatten().to_numpy(zero_copy_only=False)
-                         .astype(np.int64, copy=False).reshape(n, m))
-                acc = np.zeros((n, nq), dtype=np.float64)
-                for j in range(m):
-                    acc += b_lut[j][codes[:, j], :]
-                D = np.sqrt(np.maximum(acc, 0.0)) if b_metric == "euclidean" else 1.0 - acc
-                kk = min(k_adc, n)
-                part = np.argpartition(D, kk - 1, axis=0)[:kk, :]
-                yield pa.RecordBatch.from_pydict({
-                    "qid": pa.array(np.repeat(b_qids, kk), pa.int64()),
-                    "id": pa.array(ids[part.T].ravel(), pa.int64()),
-                    "dist": pa.array(np.take_along_axis(D, part, axis=0).T.ravel(), pa.float64()),
-                    "rank": pa.array(np.zeros(nq * kk, dtype=np.int32), pa.int32()),
-                })
-
         t = encoded.select(
             F.col(id_col).cast("bigint").alias("id"), F.col(codes_col).alias("codes"))
-        partial = t.mapInArrow(score, schema=_OUT_SCHEMA)
-        adc = topk_window(partial.drop("rank"), k_adc).select("qid", "id", "dist", "rank")
+        adc = self._adc_scan(t, qids, qmat, k_adc)
         if refine_train is None:
             return adc
         return self._refine(adc, refine_train, queries, k,
                             refine_vec_col, id_col, qid_col, query_vec_col)
+
+    def _adc_scan(self, frame: DataFrame, qids, qmat, k: int, member=None) -> DataFrame:
+        """``knn.topk_scan`` scored by LUT gathers over ``frame.codes``.
+        LUT[j, c, q] is the subspace L2² (euclidean) or inner product of
+        the unit query (angular): m·ksub·nq doubles, built once and
+        broadcast (for m=96, ksub=256, 10k queries: ~2 GB worst case;
+        typical benchmark query sets are ≤10k and m ≤ 64)."""
+        metric, m = self.metric, self.m
+        Qs = (unit_rows(qmat) if metric == "angular" else qmat).reshape(len(qids), m, self.dsub)
+        if metric == "euclidean":
+            lut = np.stack([
+                ((self.codebooks[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
+                for j in range(m)
+            ])  # (m, ksub, nq)
+        else:
+            lut = np.stack([self.codebooks[j] @ Qs[:, j, :].T for j in range(m)])
+
+        def score(batch, b_lut):
+            codes = arrow_rows(batch.column("codes"), np.int64)
+            acc = np.zeros((len(codes), b_lut.shape[2]), dtype=np.float64)
+            for j in range(m):
+                acc += b_lut[j][codes[:, j], :]
+            return np.sqrt(np.maximum(acc, 0.0)) if metric == "euclidean" else 1.0 - acc
+
+        return topk_scan(frame, {"qid": qids}, k, score, state=lut, member=member)
 
     def _refine(self, cand, train, queries, k, vec_col, id_col, qid_col, qvec_col) -> DataFrame:
         """Exact re-rank of the ADC candidates: broadcast the (qid, id) pairs
@@ -387,85 +365,29 @@ def ivfpq_search(
     milvus/module.py:567-620): IVF cell pruning bounds WHICH rows are
     scanned (partition pruning when the table is written partitioned by
     cluster_id), PQ ADC bounds WHAT is read per row (m smallint codes, no
-    float vectors).  One Arrow kernel does LUT-gather scoring with a
-    (cluster × query) membership mask so rows outside a query's probe list
-    never enter its partial top-k — the same mask discipline as
-    IVFIndex._search_gemm.
+    float vectors).  The ADC scan masks rows to the queries that probe
+    their cell (``knn.topk_scan``).
 
     ``indexed_encoded`` must carry both ``cluster_id`` (ivf.assign) and
     ``codes_col`` (pq.encode).  Optional exact refine as in PQIndex.search.
     """
-    import pyarrow as pa
-
-    from bigvectorbench_spark.operators.similarity import CLUSTER_COL
-
     spark = indexed_encoded.sparkSession
     qids, qmat = _collect_queries(queries, qid_col, query_vec_col)
     if len(qids) == 0:
         return spark.createDataFrame([], _OUT_SCHEMA)
     probes = ivf.probe_lists(qmat, nprobe)
-    nlist = len(ivf.centroids)
-    member = np.zeros((nlist, len(qids)), dtype=bool)
-    for qi, cells in enumerate(probes):
-        member[cells, qi] = True
-
     all_cells = sorted({int(c) for row in probes for c in row})
     pruned = indexed_encoded.filter(F.col(CLUSTER_COL).isin(all_cells))
     if pre_filter is not None:
         pruned = pruned.filter(
             F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)
-
-    metric = pq.metric
-    if metric == "angular":
-        qmat = _unit_rows(qmat)
-    Qs = qmat.reshape(len(qids), pq.m, pq.dsub)
-    if metric == "euclidean":
-        lut = np.stack([
-            ((pq.codebooks[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
-            for j in range(pq.m)
-        ])
-    else:
-        lut = np.stack([pq.codebooks[j] @ Qs[:, j, :].T for j in range(pq.m)])
-    bc = spark.sparkContext.broadcast((qids, lut, member, metric))
-    m = pq.m
     k_adc = k * overfetch if refine_train is not None else k
-
-    def score(batches):
-        b_qids, b_lut, b_member, b_metric = bc.value
-        nq = len(b_qids)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            cl = batch.column(CLUSTER_COL).to_numpy()
-            codes = (batch.column("codes").flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.int64, copy=False).reshape(n, m))
-            acc = np.zeros((n, nq), dtype=np.float64)
-            for j in range(m):
-                acc += b_lut[j][codes[:, j], :]
-            D = np.sqrt(np.maximum(acc, 0.0)) if b_metric == "euclidean" else 1.0 - acc
-            D = np.where(b_member[cl], D, np.inf)
-            kk = min(k_adc, n)
-            part = np.argpartition(D, kk - 1, axis=0)[:kk, :]
-            out_d = np.take_along_axis(D, part, axis=0).T.ravel()
-            out_id = ids[part.T].ravel()
-            out_qid = np.repeat(b_qids, kk)
-            keep = np.isfinite(out_d)
-            yield pa.RecordBatch.from_pydict({
-                "qid": pa.array(out_qid[keep], pa.int64()),
-                "id": pa.array(out_id[keep], pa.int64()),
-                "dist": pa.array(out_d[keep], pa.float64()),
-                "rank": pa.array(np.zeros(int(keep.sum()), dtype=np.int32), pa.int32()),
-            })
-
     t = pruned.select(
         F.col(id_col).cast("bigint").alias("id"),
         F.col(CLUSTER_COL).cast("int").alias(CLUSTER_COL),
         F.col(codes_col).alias("codes"),
     )
-    partial = t.mapInArrow(score, schema=_OUT_SCHEMA)
-    adc = topk_window(partial.drop("rank"), k_adc).select("qid", "id", "dist", "rank")
+    adc = pq._adc_scan(t, qids, qmat, k_adc, ivf.probe_mask(probes))
     if refine_train is None:
         return adc
     return pq._refine(adc, refine_train, queries, k,
@@ -505,8 +427,3 @@ def _fit_books_spark(
         for r in sorted(rows, key=lambda r: r["j"])
     ])
 
-
-def _unit_rows(X: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(X, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return X / n

@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import distance as dist_fns
-from bigvectorbench_spark.operators.knn import topk_window, _collect_queries
-
-CLUSTER_COL = "cluster_id"
+from bigvectorbench_spark.operators.knn import (
+    CLUSTER_COL, _collect_queries, arrow_rows, gemm_scan, topk_window,
+    unit_rows)
 
 # auto_nprobe calibration (the hnsw.auto_ef / sparse.auto_m twin —
 # VERDICT r10 ask #5, completing the auto-knob trilogy).  Measured on the
@@ -150,9 +150,7 @@ class IVFIndex:
         if metric == "angular":
             # spherical kmeans: fit on unit vectors; cell boundaries then
             # follow angles, so L2 probing == angular probing
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            X = X / norms
+            X = unit_rows(X)
         return cls(centroids=_kmeans_pp(X, nlist, seed, max_iter), metric=metric)
 
     def save(self, spark: SparkSession, path: str) -> None:
@@ -221,12 +219,9 @@ class IVFIndex:
             for batch in batches:
                 if batch.num_rows == 0:
                     continue
-                X = (batch.column(vec_idx).flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64, copy=False).reshape(batch.num_rows, -1))
+                X = arrow_rows(batch.column(vec_idx))
                 if metric == "angular":
-                    n = np.linalg.norm(X, axis=1, keepdims=True)
-                    n[n == 0] = 1.0
-                    X = X / n
+                    X = unit_rows(X)
                 d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ b_C.T) + c2
                 cid = d2.argmin(axis=1).astype(np.int32)
                 yield pa.RecordBatch.from_arrays(
@@ -256,13 +251,19 @@ class IVFIndex:
         if nprobe == "auto":
             nprobe = auto_nprobe(len(self.centroids))
         if self.metric == "angular":
-            norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            qmat = qmat / norms
+            qmat = unit_rows(qmat)
         d2 = ((qmat[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
         nprobe = min(nprobe, len(self.centroids))
         part = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
         return part
+
+    def probe_mask(self, probes: np.ndarray) -> np.ndarray:
+        """(nlist × n_queries) bool: query i probes cell c — the
+        ``member`` mask of ``knn.topk_scan``."""
+        member = np.zeros((len(self.centroids), len(probes)), dtype=bool)
+        for qi, cells in enumerate(probes):
+            member[cells, qi] = True
+        return member
 
     def search(
         self,
@@ -323,64 +324,15 @@ class IVFIndex:
         return topk_window(scored, k).select("qid", "id", "dist", "rank")
 
     def _search_gemm(self, pruned: DataFrame, qids, qmat, probes, k, vec_col, id_col) -> DataFrame:
-        """Arrow GEMM scoring for IVF candidates: one matmul per batch, with
-        a (cluster, query) membership mask so rows outside a query's probe
-        list can never enter its partial top-k.  Same kernel discipline as
-        operators/knn.py — the expression path scores each candidate pair in
-        O(d) interpreted steps, which at 200k×256-d made pruned IVF *slower*
-        than the exact GEMM scan; this kernel restores the pruning win."""
-        import pyarrow as pa
-
-        nlist = len(self.centroids)
-        member = np.zeros((nlist, len(qids)), dtype=bool)
-        for qi, cells in enumerate(probes):
-            member[cells, qi] = True
-        metric = self.metric
-        spark = pruned.sparkSession
-        bc = spark.sparkContext.broadcast((qids, qmat, member))
-
-        def score(batches):
-            b_qids, b_qmat, b_member = bc.value
-            if metric == "angular":
-                qn = np.linalg.norm(b_qmat, axis=1, keepdims=True)
-                qn[qn == 0] = 1.0
-                b_qunit = b_qmat / qn
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                ids = batch.column("id").to_numpy()
-                cl = batch.column(CLUSTER_COL).to_numpy()
-                X = (batch.column("vec").flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64, copy=False).reshape(len(ids), -1))
-                if metric == "euclidean":
-                    d2 = ((X * X).sum(1)[:, None] - 2.0 * (X @ b_qmat.T)
-                          + (b_qmat * b_qmat).sum(1)[None, :])
-                    D = np.sqrt(np.maximum(d2, 0.0))
-                else:
-                    xn = np.linalg.norm(X, axis=1, keepdims=True)
-                    xn[xn == 0] = 1.0
-                    D = 1.0 - (X / xn) @ b_qunit.T
-                D = np.where(b_member[cl], D, np.inf)
-                kk = min(k, len(ids))
-                part = np.argpartition(D, kk - 1, axis=0)[:kk, :]
-                out_d = np.take_along_axis(D, part, axis=0).T.ravel()
-                out_id = ids[part.T].ravel()
-                out_qid = np.repeat(b_qids, kk)
-                keep = np.isfinite(out_d)
-                yield pa.RecordBatch.from_pydict({
-                    "qid": pa.array(out_qid[keep], pa.int64()),
-                    "id": pa.array(out_id[keep], pa.int64()),
-                    "dist": pa.array(out_d[keep], pa.float64()),
-                    "rank": pa.array(np.zeros(keep.sum(), dtype=np.int32), pa.int32()),
-                })
-
+        """IVF candidates scored by ``knn.gemm_scan``, masked to each
+        query's probed cells (the expression path's O(d) interpreted steps
+        per pair made pruned IVF slower than the exact scan at 200k×256-d)."""
         t = pruned.select(
             F.col(id_col).cast("bigint").alias("id"),
             F.col(CLUSTER_COL).cast("int").alias(CLUSTER_COL),
             F.col(vec_col).alias("vec"),
         )
-        partial = t.mapInArrow(score, schema="qid bigint, id bigint, dist double, rank int")
-        return topk_window(partial.drop("rank"), k).select("qid", "id", "dist", "rank")
+        return gemm_scan(t, qids, qmat, k, self.metric, self.probe_mask(probes))
 
 
 def candidate_counts(

@@ -56,9 +56,6 @@ def _parquet_files(path: str) -> list[str]:
                   if f.endswith(".parquet"))
 
 
-_ROWS_CACHE: dict[str, int] = {}
-
-
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count from the parquet FOOTER (pyarrow metadata), no Spark job.
 
@@ -71,17 +68,10 @@ def table_rows(sf_dir: str, name: str) -> int:
     layout scripts/gen_sf.py writes at sf1)."""
     import os
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if path in _ROWS_CACHE:
-        return _ROWS_CACHE[path]
     import pyarrow.parquet as pq
 
-    n = sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
-    _ROWS_CACHE[path] = n
-    return n
-
-
-_DIM_CACHE: dict[tuple[str, str, str], int] = {}
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
 
 
 def table_dim(sf_dir: str, name: str, col: str) -> int:
@@ -94,20 +84,15 @@ def table_dim(sf_dir: str, name: str, col: str) -> int:
     skipped; a column with no non-null row raises ``ValueError``."""
     import os
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (path, name, col)
-    if key in _DIM_CACHE:
-        return _DIM_CACHE[key]
     import pyarrow.parquet as pq
 
+    path = os.path.join(sf_dir, f"{name}.parquet")
     for f in _parquet_files(path):
         for batch in pq.ParquetFile(f).iter_batches(batch_size=64,
                                                     columns=[col]):
             for v in batch.column(0):
                 if v.is_valid:
-                    d = len(v)
-                    _DIM_CACHE[key] = d
-                    return d
+                    return len(v)
     raise ValueError(f"{path}: column {col!r} has no non-null row")
 
 

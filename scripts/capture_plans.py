@@ -10,17 +10,35 @@ plan is the analyzed+optimized physical plan BEFORE execution (AQE shows
 isFinalPlan=false); that is the right artifact for judging plan *shape*
 (Exchange count, join strategy, PushedFilters, Python-eval nodes), which
 does not depend on runtime re-optimization.
+
+Per-session noise is stripped so plans captured at two commits diff line
+by line: expression ids (``qid#123L`` -> ``qidL``), ``[plan_id=N]`` and the
+directories of absolute file paths (``file:/data/sf0.1/x.parquet`` ->
+``x.parquet``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from bigvectorbench_spark import get_spark
+
+_NOISE = [
+    (re.compile(r"#\d+"), ""),
+    (re.compile(r",? ?\[plan_id=\d+\]"), ""),
+    (re.compile(r"(?:file:)?/(?:[^/\s,\[\]]+/)+"), ""),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _NOISE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -43,7 +61,7 @@ def main() -> None:
         except Exception as e:  # a query that cannot even plan is itself news
             plan = f"PLANNING FAILED: {type(e).__name__}: {e}\n"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
+            f.write(normalize(plan))
         print(f"  {name}: {len(plan)} chars", file=sys.stderr, flush=True)
         spark.catalog.clearCache()
 

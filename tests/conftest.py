@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import numpy as np
@@ -33,6 +34,42 @@ def make_blobs(n, d, centers=10, seed=1):
     C = rng.randn(centers, d) * 5
     idx = rng.randint(0, centers, size=n)
     return (C[idx] + rng.randn(n, d)).astype(np.float32)
+
+
+def make_ties(n, d=16, n_dup=40, n_queries=20, seed=5):
+    """Vectors whose distances are exact and tie bit-for-bit: every row has
+    four ±1 entries and zeros elsewhere (norm 2), so euclidean, angular and
+    PQ ADC arithmetic are exact in float64.  Ids 20, 22, … hold ``n_dup``
+    copies of one vector; the first four queries are that vector with one
+    sign flipped, so its copies are all nearest at the same distance.  The
+    other queries are random rows of the same form (distances take few
+    values, so ties at the k-th are routine).  Returns (X, Q) float32."""
+    rng = np.random.RandomState(seed)
+
+    def rows(m):
+        out = np.zeros((m, d), dtype=np.float32)
+        for r in out:
+            r[rng.choice(d, 4, replace=False)] = rng.choice([-1.0, 1.0], 4)
+        return out
+
+    X, Q = rows(n), rows(n_queries)
+    X[20:20 + 2 * n_dup:2] = X[20]
+    for i, j in enumerate(np.flatnonzero(X[20])):
+        Q[i] = X[20]
+        Q[i, j] = -Q[i, j]
+    return X, Q
+
+
+@contextlib.contextmanager
+def arrow_batch_rows(spark, n):
+    """Arrow kernels see batches of at most ``n`` rows inside the block."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="session")

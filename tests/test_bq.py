@@ -213,13 +213,12 @@ def test_kernel_rejects_oversized_query_block(spark):
     codes = idx.encode(tdf, keep=["id"])
     q = _vec_df(spark, X, id_name="qid")
     old = knn_mod.MAX_BROADCAST_QUERIES
-    import bigvectorbench_spark.operators.bq as bq_mod
     try:
-        bq_mod.MAX_BROADCAST_QUERIES = 5
+        knn_mod.MAX_BROADCAST_QUERIES = 5
         with pytest.raises(ValueError, match="broadcast envelope"):
             idx.search(codes, q, k=3, method="kernel")
     finally:
-        bq_mod.MAX_BROADCAST_QUERIES = old
+        knn_mod.MAX_BROADCAST_QUERIES = old
 
 
 def test_encode_kernel_matches_expr(spark):

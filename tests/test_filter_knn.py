@@ -249,7 +249,8 @@ def test_filtered_ivf_pre_refuses_oversized_query_set(ivf_fdata, monkeypatch):
     the distributed alternative."""
     idx, indexed, train, test = ivf_fdata
     q = test.limit(8).withColumn("l", F.col("label_0"))
-    monkeypatch.setattr(fknn, "MAX_BROADCAST_QUERIES", 4)
+    from bigvectorbench_spark.operators import knn as knn_mod
+    monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 4)
     with pytest.raises(ValueError, match="broadcast envelope"):
         fknn.filtered_ivf_knn(
             idx, indexed, q, k=3, filter_template="label_0 == {l}",

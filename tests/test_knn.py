@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.operators import knn as knn_ops
-from tests.conftest import brute_force_knn, make_blobs
+from tests.conftest import arrow_batch_rows, brute_force_knn, make_blobs, make_ties
 
 
 @pytest.fixture(scope="module")
@@ -25,16 +25,34 @@ def data(spark):
     return Xtr, Xte, train, test
 
 
-@pytest.mark.parametrize("method", ["expr", "gemm"])
+@pytest.fixture(scope="module")
+def tie_data(spark):
+    """Duplicates tied at the k-th distance, >k of them per 32-row batch
+    (ids stay in partition order) and spread over several batches."""
+    Xtr, Xte = make_ties(500)
+    train = spark.createDataFrame(
+        [(i, [float(x) for x in Xtr[i]]) for i in range(len(Xtr))],
+        "id bigint, vec array<float>",
+    ).cache()
+    test = spark.createDataFrame(
+        [(i, [float(x) for x in Xte[i]]) for i in range(len(Xte))],
+        "qid bigint, vec array<float>",
+    ).cache()
+    return Xtr, Xte, train, test
+
+
+@pytest.mark.parametrize(
+    "method,corpus",
+    [("expr", "data"), ("gemm", "data"), ("expr", "tie_data"), ("gemm", "tie_data")],
+    ids=["expr", "gemm", "expr-ties", "gemm-ties"])
 @pytest.mark.parametrize("metric", ["euclidean", "angular"])
-def test_knn_matches_numpy_oracle(data, method, metric):
-    Xtr, Xte, train, test = data
+def test_knn_matches_numpy_oracle(request, method, corpus, metric):
+    Xtr, Xte, train, test = request.getfixturevalue(corpus)
     k = 10
     res = knn_ops.knn(train, test, k=k, metric=metric, method=method)
-    got = {
-        qid: [r["id"] for r in rows]
-        for qid, rows in _group(res.orderBy("qid", "rank").collect()).items()
-    }
+    with arrow_batch_rows(train.sparkSession, 32):
+        rows = res.orderBy("qid", "rank").collect()
+    got = {qid: [r["id"] for r in rs] for qid, rs in _group(rows).items()}
     expect = brute_force_knn(Xtr, Xte, k, metric)
     for qid in range(len(Xte)):
         assert got[qid] == list(expect[qid]), f"qid={qid} method={method} metric={metric}"

@@ -6,7 +6,7 @@ import pytest
 
 from bigvectorbench_spark.operators.knn import knn
 from bigvectorbench_spark.operators.pq import PQIndex
-from tests.conftest import make_blobs
+from tests.conftest import arrow_batch_rows, make_blobs, make_ties
 
 
 @pytest.fixture(scope="module")
@@ -173,6 +173,51 @@ def test_ivfpq_composition(pq_data, spark):
         ivfpq_search(ivf, idx, table, test, k=10, nprobe=8,
                      refine_train=train, overfetch=5), exact, 10)
     assert refined > 0.9
+
+
+@pytest.mark.parametrize("path", ["pq", "ivfpq"])
+def test_adc_topk_matches_numpy_lexsort(spark, path):
+    """ADC top-k is the (ADC distance, id) lexsort of a numpy replay of the
+    LUT sums, on a corpus with >k duplicates tied at the k-th distance
+    inside one 32-row batch and across batches."""
+    from bigvectorbench_spark.operators.pq import ivfpq_search
+    from bigvectorbench_spark.operators.similarity import CLUSTER_COL, IVFIndex
+    X, Q = make_ties(500)
+    train = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(len(X))], "id bigint, vec array<float>")
+    test = spark.createDataFrame(
+        [(i, [float(x) for x in Q[i]]) for i in range(len(Q))], "qid bigint, vec array<float>")
+    # 1-d subspaces over {-1, 0, 1}: three codes reproduce every row, so
+    # ADC distances are exact and the copies' ties survive encoding
+    idx = PQIndex.fit(train, m=16, ksub=3, seed=1)
+    ivf = IVFIndex.fit(train, nlist=8, seed=3)
+    table = ivf.assign(idx.encode(train)).cache()
+    k = 10
+    if path == "pq":
+        res = idx.search(table, test, k=k)
+    else:
+        res = ivfpq_search(ivf, idx, table, test, k=k, nprobe=2)
+    with arrow_batch_rows(spark, 32):
+        got = [(r["qid"], r["id"]) for r in res.orderBy("qid", "rank").collect()]
+
+    rows = table.select("id", "codes", CLUSTER_COL).collect()
+    ids = np.array([r["id"] for r in rows])
+    codes = np.array([r["codes"] for r in rows], dtype=np.int64)
+    Qs = Q.astype(np.float64).reshape(len(Q), idx.m, idx.dsub)
+    acc = np.zeros((len(ids), len(Q)))
+    for j in range(idx.m):
+        lut = ((idx.codebooks[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
+        acc += lut[codes[:, j], :]
+    D = np.sqrt(np.maximum(acc, 0.0))
+    if path == "ivfpq":
+        cells = np.array([r[CLUSTER_COL] for r in rows])
+        member = np.zeros((8, len(Q)), dtype=bool)
+        for qi, probe in enumerate(ivf.probe_lists(Q.astype(np.float64), 2)):
+            member[probe, qi] = True
+        D = np.where(member[cells], D, np.inf)
+    want = [(qi, int(ids[i])) for qi in range(len(Q))
+            for i in np.lexsort((ids, D[:, qi]))[:k] if np.isfinite(D[i, qi])]
+    assert got == want
 
 
 def test_ivfpq_filtered(pq_data, spark):

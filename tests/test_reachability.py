@@ -18,11 +18,6 @@ EXEMPT = {
     # (test_properties, the random_filter_ratio tests), as does
     # scripts/create_filter_dataset.py.
     f"{PKG}.fixtures",
-    # Unreached, kept with their tests (test_sources, test_skew_bucketing)
-    # for one more change so that a single change never drops more than a
-    # few dozen tier-1 tests at once; ROADMAP lists their removal.
-    f"{PKG}.sources.vectors",
-    f"{PKG}.plans.skew",
 }
 
 

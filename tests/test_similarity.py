@@ -6,7 +6,7 @@ import pytest
 
 from bigvectorbench_spark.operators import similarity as sim
 from bigvectorbench_spark.operators.knn import knn
-from tests.conftest import make_blobs
+from tests.conftest import arrow_batch_rows, make_blobs, make_ties
 
 
 @pytest.fixture(scope="module")
@@ -23,6 +23,22 @@ def ivf_data(spark):
     return X, train, test, idx, indexed
 
 
+@pytest.fixture(scope="module")
+def ivf_tie_data(spark):
+    """make_ties corpus: >k duplicates tied at the k-th distance per
+    32-row batch, spread over several batches."""
+    X, Q = make_ties(500)
+    train = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(len(X))], "id bigint, vec array<float>"
+    ).cache()
+    test = spark.createDataFrame(
+        [(i, [float(x) for x in Q[i]]) for i in range(len(Q))], "qid bigint, vec array<float>"
+    ).cache()
+    idx = sim.IVFIndex.fit(train, nlist=8, seed=1)
+    indexed = idx.assign(train).cache()
+    return X, train, test, idx, indexed
+
+
 def _recall(res, exact, k):
     got, want = {}, {}
     for r in res.collect():
@@ -32,11 +48,12 @@ def _recall(res, exact, k):
     return np.mean([len(got.get(q, set()) & want[q]) / k for q in want])
 
 
-def test_ivf_full_probe_is_exact(ivf_data):
-    _, train, test, idx, indexed = ivf_data
-    exact = knn(train, test, k=10, method="expr")
-    full = idx.search(indexed, test, k=10, nprobe=8)
-    assert _recall(full, exact, 10) == 1.0
+def test_ivf_full_probe_is_exact(ivf_data, ivf_tie_data):
+    for _, train, test, idx, indexed in (ivf_data, ivf_tie_data):
+        exact = knn(train, test, k=10, method="expr")
+        full = idx.search(indexed, test, k=10, nprobe=8)
+        with arrow_batch_rows(train.sparkSession, 32):
+            assert _recall(full, exact, 10) == 1.0
 
 
 def test_ivf_recall_monotone_in_nprobe(ivf_data):
@@ -112,7 +129,7 @@ def test_ivf_partitioned_layout_prunes(ivf_data, tmp_path, spark):
 
 
 def test_ivf_angular_full_probe_exact(spark):
-    from tests.conftest import make_blobs
+    from tests.conftest import arrow_batch_rows, make_blobs, make_ties
     X = make_blobs(500, 12, centers=15, seed=9)
     train = spark.createDataFrame(
         [(i, [float(x) for x in X[i]]) for i in range(450)], "id bigint, vec array<float>").cache()
