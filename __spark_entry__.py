@@ -56,6 +56,29 @@ def _gate(sf: str, tight: tuple[float, float], floor: tuple[float, float]) -> tu
     return tight if _ORACLE_SF in str(sf) else floor
 
 
+def _recall_gate(approx: DataFrame, exact: DataFrame, mean_thr: float,
+                 min_thr: float, *extra, lead=(), col: str = "id") -> DataFrame:
+    """The one-row recall gate: per-query recall@k of ``approx`` against
+    ``exact`` (both (qid, ``col``) top-k rows), aggregated to n_queries,
+    the ``lead`` columns, the mean/min threshold booleans the oracle
+    asserts TRUE, and the ``extra`` columns."""
+    def neighbors(df):
+        return df.groupBy("qid").agg(F.collect_list(col).alias("neighbors"))
+
+    per_q = mx.recall_per_query(neighbors(approx), neighbors(exact))
+    return per_q.agg(
+        F.count("*").alias("n_queries"), *lead,
+        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
+        (F.min("recall") >= min_thr).alias("min_recall_ok"), *extra)
+
+
+def _pinned_mean(n_rows: int):
+    """Mean recall to 2 dp, pinned by the oracle only on corpora of at most
+    500 rows (null elsewhere)."""
+    return (F.when(F.lit(n_rows <= 500), F.round(F.avg("recall"), 2))
+            .cast("double").alias("mean_recall_r2"))
+
+
 # --------------------------------------------------------------------- helpers
 
 def _train(spark, sf):
@@ -299,19 +322,9 @@ def q_hnsw_recall(spark, sf):
     num_shards = max(4, -(-n_rows // 125))
     shards = build_hnsw_shards(t, m=8, ef_construction=64,
                                num_shards=num_shards, seed=3)
-    approx = hnsw_search(shards, q, k=10, ef=16).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    pinned = n_rows <= 500
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-        F.when(F.lit(pinned), F.round(F.avg("recall"), 2))
-         .cast("double").alias("mean_recall_r2"),
-    )
+    return _recall_gate(
+        hnsw_search(shards, q, k=10, ef=16), knn(t, q, k=10, method="expr"),
+        mean_thr, min_thr, _pinned_mean(n_rows))
 
 
 # Serving-scale HNSW configuration (VERDICT r5 ask #2): shard count tracks
@@ -407,19 +420,9 @@ def q_hnsw_scale_recall(spark, sf):
     shards, n_rows = _hnsw_scale_index(spark, sf)
     t = _train(spark, sf)
     q = _queries_block(spark, sf, n_rows)
-    approx = hnsw_search(shards, q, k=10, ef=_HNSW_SCALE_EF).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    pinned = n_rows <= 500
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-        F.when(F.lit(pinned), F.round(F.avg("recall"), 2))
-         .cast("double").alias("mean_recall_r2"),
-    )
+    return _recall_gate(
+        hnsw_search(shards, q, k=10, ef=_HNSW_SCALE_EF),
+        knn(t, q, k=10, method="expr"), mean_thr, min_thr, _pinned_mean(n_rows))
 
 
 def q_knn_jaccard(spark, sf):
@@ -528,18 +531,11 @@ def q_filter_ivf_recall(spark, sf):
         idx, idx.assign(t), q, k=10,
         filter_template="label >= {lo} and label <= {hi}",
         query_param_cols=["lo", "hi"], nprobe=4, strategy="auto",
-        selectivity=0.44).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
+        selectivity=0.44)
     exact = filtered_knn(
         t, q, k=10, filter_template="label >= {lo} and label <= {hi}",
-        query_param_cols=["lo", "hi"]).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+        query_param_cols=["lo", "hi"])
+    return _recall_gate(approx, exact, mean_thr, min_thr)
 
 
 def q_mv_knn(spark, sf):
@@ -801,17 +797,9 @@ def q_opq_recall(spark, sf):
     idx = OPQIndex.fit(t, m=8, ksub=16, iters=3, seed=1, max_iter=8,
                        sort_col="id")
     enc = idx.encode(t).select("id", "codes")
-    approx = idx.search(enc, q, k=10, refine_train=t,
-                        overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = idx.search(enc, q, k=10, refine_train=t, overfetch=4)
+    return _recall_gate(approx, knn(t, q, k=10, method="expr"),
+                        mean_thr, min_thr)
 
 
 def q_jl_knn(spark, sf):
@@ -873,16 +861,9 @@ def q_bq_recall(spark, sf):
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = BQIndex.fit(t, sort_col="id")
     approx = idx.search(idx.encode(t, keep=["id"]), q, k=10,
-                        refine_train=t, overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+                        refine_train=t, overfetch=4)
+    return _recall_gate(approx, knn(t, q, k=10, method="expr"),
+                        mean_thr, min_thr)
 
 
 def q_sq8_knn(spark, sf):
@@ -918,16 +899,8 @@ def q_sq8_recall(spark, sf):
 
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     tq = quantize_table(t, vec_col="vec", out_col="qvec").select("id", "qvec")
-    approx = knn_quantized(tq, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    return _recall_gate(knn_quantized(tq, q, k=10, method="expr"),
+                        knn(t, q, k=10, method="expr"), mean_thr, min_thr)
 
 
 def q_ivf_recall(spark, sf):
@@ -945,16 +918,8 @@ def q_ivf_recall(spark, sf):
     mean_thr, min_thr = _gate(sf, tight=(0.7, 0.45), floor=(0.4, 0.2))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.assign(t), q, k=10, nprobe=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    return _recall_gate(idx.search(idx.assign(t), q, k=10, nprobe=4),
+                        knn(t, q, k=10, method="expr"), mean_thr, min_thr)
 
 
 def q_ivf_auto_recall(spark, sf):
@@ -984,17 +949,10 @@ def q_ivf_auto_recall(spark, sf):
     n = table_rows(sf, "embeddings")
     nlist = max(8, round(math.sqrt(n)))
     idx = IVFIndex.fit(t, nlist=nlist, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.assign(t), q, k=10, nprobe="auto").groupBy(
-        "qid").agg(F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        F.lit(auto_nprobe(nlist)).cast("bigint").alias("auto_nprobe"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    return _recall_gate(
+        idx.search(idx.assign(t), q, k=10, nprobe="auto"),
+        knn(t, q, k=10, method="expr"), mean_thr, min_thr,
+        lead=[F.lit(auto_nprobe(nlist)).cast("bigint").alias("auto_nprobe")])
 
 
 def q_pq_recall(spark, sf):
@@ -1012,17 +970,9 @@ def q_pq_recall(spark, sf):
     mean_thr, min_thr = _gate(sf, tight=(0.5, 0.3), floor=(0.3, 0.05))
     t, q = _train(spark, sf), _queries_mod(spark, sf)
     idx = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.encode(t), q, k=10, refine_train=t,
-                        overfetch=4).groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    exact = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(approx, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    approx = idx.search(idx.encode(t), q, k=10, refine_train=t, overfetch=4)
+    return _recall_gate(approx, knn(t, q, k=10, method="expr"),
+                        mean_thr, min_thr)
 
 
 def q_recall_lowdim_vs_full(spark, sf):
@@ -2287,16 +2237,9 @@ def q_sparse_delta_parity(spark, sf):
     rebuilt = sp.sparse_postings(docs, post=all_post).persist()
     queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
         F.col("doc_id").alias("qid"))
-    stale = sp.sparse_topk(docs, queries, k=10, wpost=absorbed).groupBy(
-        "qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    fresh = sp.sparse_topk(docs, queries, k=10, wpost=rebuilt).groupBy(
-        "qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    per_q = mx.recall_per_query(stale, fresh)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    return _recall_gate(sp.sparse_topk(docs, queries, k=10, wpost=absorbed),
+                        sp.sparse_topk(docs, queries, k=10, wpost=rebuilt),
+                        mean_thr, min_thr, col="doc_id")
 
 
 def q_bloom_decontaminate(spark, sf):
@@ -2719,20 +2662,13 @@ def q_sparse_prune_recall(spark, sf):
     queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
         F.col("doc_id").alias("qid"))
     wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost).groupBy("qid").agg(
-        F.collect_list("doc_id").alias("neighbors"))
+    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
     pruned = sp.sparse_topk(
         docs, queries, k=10,
         wpost=sp.prune_postings(wpost, m="auto",
                                 n_docs=load_table(spark, sf, "documents").count()),
-        qwpost=wpost
-    ).groupBy("qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    per_q = mx.recall_per_query(pruned, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+        qwpost=wpost)
+    return _recall_gate(pruned, exact, mean_thr, min_thr, col="doc_id")
 
 
 def q_sparse_filter_knn(spark, sf):
@@ -2803,19 +2739,11 @@ def q_sparse_quantile_recall(spark, sf):
     queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
         F.col("doc_id").alias("qid"))
     wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost).groupBy("qid").agg(
-        F.collect_list("doc_id").alias("neighbors"))
-    pruned = sp.sparse_topk(
-        docs, queries, k=10,
-        wpost=sp.prune_postings(wpost, m="spectrum"),
-        qwpost=wpost
-    ).groupBy("qid").agg(F.collect_list("doc_id").alias("neighbors"))
-    per_q = mx.recall_per_query(pruned, exact)
-    return per_q.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"),
-    )
+    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
+    pruned = sp.sparse_topk(docs, queries, k=10,
+                            wpost=sp.prune_postings(wpost, m="spectrum"),
+                            qwpost=wpost)
+    return _recall_gate(pruned, exact, mean_thr, min_thr, col="doc_id")
 
 
 def q_hybrid_rrf_topk(spark, sf):

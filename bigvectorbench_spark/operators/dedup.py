@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import text as tx
 from bigvectorbench_spark.functions import distance as dist_fns
+from bigvectorbench_spark.operators.knn import arrow_rows
 
 def _widen(df: DataFrame) -> DataFrame:
     """Small parquet inputs arrive as 1-2 partitions; expression-heavy
@@ -386,11 +387,12 @@ def minhash_sets(
                     H = hm[:, None] * a[None, :]
                     H += b[None, :]
                     H %= _MERSENNE
-                    starts = np.minimum(offsets[lo:hi] - offsets[lo],
-                                        len(seg) - 1)
-                    red = np.minimum.reduceat(H, starts, axis=0)
-                    seg_counts = counts[lo:hi]
-                    sigs[lo:hi][seg_counts > 0] = red[seg_counts > 0]
+                    # Segments start at the non-empty documents only: an
+                    # empty document's offset equals the next one's, and
+                    # would cut the segment before it one shingle short.
+                    full = counts[lo:hi] > 0
+                    starts = offsets[lo:hi][full] - offsets[lo]
+                    sigs[lo:hi][full] = np.minimum.reduceat(H, starts, axis=0)
                 lo = hi
             yield pa.RecordBatch.from_pydict({
                 "id": pa.array(ids, pa.int64()),
@@ -734,8 +736,7 @@ def embedding_dup_pairs(
                 if n == 0:
                     continue
                 ids = batch.column("id").to_numpy()
-                X = (batch.column("u").flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64, copy=False).reshape(n, -1))
+                X = arrow_rows(batch.column("u"))
                 S = X @ Ub.T
                 ii, jj = np.nonzero((S >= thr) & (ids[:, None] < ids_b[None, :]))
                 if len(ii) == 0:
@@ -782,8 +783,7 @@ def embedding_dup_pairs(
             if n == 0:
                 continue
             ids = batch.column("id").to_numpy()
-            X = (batch.column("vec").flatten().to_numpy(zero_copy_only=False)
-                 .astype(np.float64, copy=False).reshape(n, -1))
+            X = arrow_rows(batch.column("vec"))
             bits = (X @ P.T) >= 0  # (n, num_planes)
             out_id, out_band, out_bucket = [], [], []
             for band in range(bands):

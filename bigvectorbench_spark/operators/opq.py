@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from bigvectorbench_spark.operators.knn import arrow_rows
 from bigvectorbench_spark.operators.pq import PQIndex
 from bigvectorbench_spark.operators.similarity import _kmeans_pp
 
@@ -202,8 +203,7 @@ class OPQIndex:
                 n = batch.num_rows
                 if n == 0:
                     continue
-                X = (batch.column(vec_idx).flatten().to_numpy(zero_copy_only=False)
-                     .astype(np.float64, copy=False).reshape(n, d))
+                X = arrow_rows(batch.column(vec_idx))
                 XR = np.round(X @ Rl, ROUND_TO)
                 yield pa.RecordBatch.from_arrays(
                     [*batch.columns,

@@ -30,6 +30,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigvectorbench_spark.operators.knn import arrow_rows
+
 
 def projection_matrix(in_dim: int, out_dim: int, seed: int = 1) -> np.ndarray:
     """(out_dim, in_dim) Gaussian JL matrix, rows scaled by 1/√out_dim so
@@ -91,8 +93,7 @@ def project(
             if n == 0:
                 continue
             ids = batch.column("id").to_numpy()
-            X = (batch.column("vec").flatten().to_numpy(zero_copy_only=False)
-                 .astype(np.float64, copy=False).reshape(n, -1))
+            X = arrow_rows(batch.column("vec"))
             Y = X @ P.T
             if rt is not None:
                 Y = np.round(Y, rt)

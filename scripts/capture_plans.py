@@ -1,67 +1,42 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") output for declared queries into text
-files (the optimization-round evidence convention: plans/rN/<query>_<tag>.txt).
+"""Capture the normalised ``explain("formatted")`` plan of declared queries
+into text files (the evidence convention: plans/<round>/<query>_<tag>.txt).
 
 Usage: python scripts/capture_plans.py OUT_DIR TAG [query ...]
 
 With no query list, captures every declared query.  TAG is appended to
-the filename (e.g. "before" -> plans/r12/knn_euclid_before.txt).  The
-plan is the analyzed+optimized physical plan BEFORE execution (AQE shows
-isFinalPlan=false); that is the right artifact for judging plan *shape*
-(Exchange count, join strategy, PushedFilters, Python-eval nodes), which
-does not depend on runtime re-optimization.
-
-Per-session noise is stripped so plans captured at two commits diff line
-by line: expression ids (``qid#123L`` -> ``qidL``), ``[plan_id=N]`` and the
-directories of absolute file paths (``file:/data/sf0.1/x.parquet`` ->
-``x.parquet``).
+the filename (e.g. "before" -> plans/r12/knn_euclid_before.txt).  Each
+query is built and explained without being run, through ``bench.explain``,
+the same function that fingerprints every plan in the bench records; see
+``bench.normalize`` for the per-session noise it strips.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
+import bench
 from bigvectorbench_spark import get_spark
-
-_NOISE = [
-    (re.compile(r"#\d+"), ""),
-    (re.compile(r",? ?\[plan_id=\d+\]"), ""),
-    (re.compile(r"(?:file:)?/(?:[^/\s,\[\]]+/)+"), ""),
-]
-
-
-def normalize(plan: str) -> str:
-    for pattern, repl in _NOISE:
-        plan = pattern.sub(repl, plan)
-    return plan
 
 
 def main() -> None:
-    out_dir = sys.argv[1]
-    tag = sys.argv[2]
-    names = sys.argv[3:]
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
-    if not names:
-        names = list(qs)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted")
-    for name in names:
+    for name in names or list(qs):
         try:
-            df = qs[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(mode)
+            plan = bench.explain(qs[name](spark, sf_dir))
         except Exception as e:  # a query that cannot even plan is itself news
-            plan = f"PLANNING FAILED: {type(e).__name__}: {e}\n"
+            plan = bench.normalize(f"PLANNING FAILED: {type(e).__name__}: {e}\n")
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(normalize(plan))
+            f.write(plan)
         print(f"  {name}: {len(plan)} chars", file=sys.stderr, flush=True)
         spark.catalog.clearCache()
 

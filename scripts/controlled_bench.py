@@ -11,7 +11,8 @@ already best-of-3 per query, so the merged number is the min over
 N x 3 runs — the closest observable to the query's uncontended cost on a
 shared machine.  The merged file records, per query, the min and the
 per-invocation minima (`spread` > 1.5x flags a query that never saw a
-quiet window and should be re-run, not trusted).
+quiet window and should be re-run, not trusted).  Each invocation's runs
+are read from the per-query records bench.py writes to stderr.
 
 Usage: python scripts/controlled_bench.py [N_INVOCATIONS] [OUT_JSON]
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_BENCH_RUNS pass
@@ -28,6 +29,13 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def record_runs(stderr: str) -> dict:
+    """query -> per-run seconds, from one invocation's stderr records."""
+    recs = [json.loads(line) for line in stderr.splitlines()
+            if line.startswith('{"query"')]
+    return {r["query"]: r["runs"] for r in recs if "runs" in r}
+
+
 def run_once(i: int) -> tuple[dict, dict]:
     """One full bench.py invocation -> (headline dict, per-run map)."""
     proc = subprocess.run(
@@ -36,25 +44,45 @@ def run_once(i: int) -> tuple[dict, dict]:
     # The headline is matched by its required leading key (ADVICE r9 #4),
     # not by "any JSON-looking line" — a stray '{...}' printed to stdout
     # after the real result must error, never silently replace it.
-    headline = None
-    for line in proc.stdout.splitlines():
-        line = line.strip()
-        if line.startswith('{"metric"'):
-            if headline is not None:
-                raise RuntimeError(
-                    f"invocation {i}: multiple headline JSON lines on stdout")
-            headline = json.loads(line)
-    runs = {}
-    for line in proc.stderr.splitlines():
-        line = line.strip()
-        if line.startswith('{"runs":'):
-            runs = json.loads(line)["runs"]
-    if headline is None:
+    heads = [json.loads(line) for line in proc.stdout.splitlines()
+             if line.strip().startswith('{"metric"')]
+    if len(heads) != 1:
         sys.stderr.write(proc.stderr[-3000:])
-        raise RuntimeError(f"invocation {i}: no headline JSON on stdout")
-    if headline.get("errors"):
-        raise RuntimeError(f"invocation {i}: errors {headline['errors']}")
-    return headline, runs
+        raise RuntimeError(f"invocation {i}: {len(heads)} headline JSON "
+                           "lines on stdout, expected 1")
+    if heads[0].get("errors"):
+        raise RuntimeError(f"invocation {i}: errors {heads[0]['errors']}")
+    return heads[0], record_runs(proc.stderr)
+
+
+def merge(invocations: list[dict]) -> tuple[dict, dict]:
+    """(merged artifact, runs artifact) from [{"headline", "runs"}, ...]:
+    each query's minimum over every run of every invocation."""
+    names = sorted({q for inv in invocations for q in inv["runs"]})
+    queries, per_inv, spread = {}, {}, {}
+    for q in names:
+        mins = [min(inv["runs"][q]) for inv in invocations
+                if q in inv["runs"]]
+        queries[q] = round(min(mins), 3)
+        per_inv[q] = [round(m, 3) for m in mins]
+        spread[q] = round(max(mins) / max(min(mins), 1e-9), 2)
+    merged = {
+        "metric": "headline_queries_total_time",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "sf": invocations[0]["headline"].get("sf"),
+        "protocol": (f"per-query min across {len(invocations)} full "
+                     "invocations, each best-of-3 (VERDICT r8 ask #4)"),
+        # Queries whose per-invocation minima spread >1.5x never saw a
+        # quiet window on the shared machine: annotated IN the artifact so
+        # downstream comparisons skip them instead of chasing phantom
+        # regressions.
+        "protocol_flagged_spread_gt_1.5x": {
+            q: s for q, s in sorted(spread.items()) if s > 1.5},
+        "queries": queries,
+    }
+    return merged, {"per_invocation_min": per_inv, "spread": spread,
+                    "invocations": [inv["runs"] for inv in invocations]}
 
 
 def main() -> None:
@@ -69,46 +97,13 @@ def main() -> None:
             f"invocation {i}: total {headline['value']}s, "
             f"{len(runs)} queries\n")
 
-    # Per-query min across invocations (each invocation's value is already
-    # its best-of-3).  Full precision comes from the runs maps.
-    names = sorted({q for inv in invocations for q in inv["runs"]})
-    queries, per_inv, spread = {}, {}, {}
-    for q in names:
-        mins = [min(inv["runs"][q]) for inv in invocations
-                if q in inv["runs"]]
-        queries[q] = round(min(mins), 3)
-        per_inv[q] = [round(m, 3) for m in mins]
-        spread[q] = round(max(mins) / max(min(mins), 1e-9), 2)
-    total = round(sum(queries.values()), 3)
-
-    base = invocations[0]["headline"]
-    merged = {
-        "metric": "headline_queries_total_time",
-        "value": total,
-        "unit": "sec",
-        "sf": base.get("sf"),
-        "protocol": (f"per-query min across {n} full invocations, "
-                     "each best-of-3 (VERDICT r8 ask #4)"),
-        # Ask r9 #8: queries whose per-invocation minima spread >1.5x never
-        # saw a quiet window on the shared machine — annotated IN the
-        # artifact so downstream comparisons skip them instead of chasing
-        # phantom regressions (the machine-timed IUD latencies live here
-        # by construction).
-        "protocol_flagged_spread_gt_1.5x": {
-            q: s for q, s in sorted(spread.items()) if s > 1.5},
-        "queries": queries,
-    }
+    merged, runs_out = merge(invocations)
     with open(os.path.join(REPO, out_json), "w") as f:
         json.dump(merged, f, indent=1, sort_keys=True)
-    runs_out = out_json.replace(".json", "_runs.json")
-    with open(os.path.join(REPO, runs_out), "w") as f:
-        json.dump({"per_invocation_min": per_inv, "spread": spread,
-                   "invocations": [inv["runs"] for inv in invocations]},
-                  f, indent=1, sort_keys=True)
-
-    noisy = {q: s for q, s in spread.items() if s > 1.5}
-    print(json.dumps({"total": total, "n_queries": len(queries),
-                      "noisy_gt_1.5x": noisy}))
+    with open(os.path.join(REPO, out_json.replace(".json", "_runs.json")), "w") as f:
+        json.dump(runs_out, f, indent=1, sort_keys=True)
+    print(json.dumps({"total": merged["value"], "n_queries": len(merged["queries"]),
+                      "noisy_gt_1.5x": merged["protocol_flagged_spread_gt_1.5x"]}))
 
 
 if __name__ == "__main__":

@@ -4,38 +4,41 @@ TAIL and parses the LAST line as the headline JSON, so
 
 - stdout must end with one compact JSON line under ~1,900 chars carrying
   {metric, value, unit, queries, sf};
-- the bulky per-run arrays must go to stderr (their own JSON line), never
-  stdout.
+- the per-query records (per-run arrays, phase split, Spark counts, plan
+  fingerprint) go to stderr, one JSON line per query, never stdout.
 
-Runs bench.main() in-process on a tiny query subset at sf0.001.
+Runs bench.py as a subprocess on a tiny query subset at sf0.001: the
+records read the Spark UI REST API, which the test session runs without.
 """
 
-import io
 import json
+import os
+import subprocess
 import sys
-from contextlib import redirect_stderr, redirect_stdout
 
-import pytest
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
-
-@pytest.fixture()
-def bench_env(monkeypatch, spark):
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUERIES",
-                       "token_stats,corpus_rollup")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "2")
-    sys.path.insert(0, "/root/repo")
-    import bench
-    return bench
+RECORD_KEYS = {"query", "runs", "cold_s", "min_s", "build_s", "plan_s",
+               "exec_s", "jobs", "stages", "tasks", "task_s", "job_s",
+               "shuffle_mb", "spill_mb", "persisted_rdds", "plan"}
+PLAN_KEYS = {"exchange", "broadcast_exchange", "in_memory", "python_eval",
+             "sha1"}
 
 
-def test_bench_stdout_fits_driver_tail_window(bench_env):
-    out, err = io.StringIO(), io.StringIO()
-    with redirect_stdout(out), redirect_stderr(err):
-        bench_env.main()
+def test_bench_stdout_fits_driver_tail_window(sf_dir):
+    env = {**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir,
+           "SPARK_GRAFT_BENCH_QUERIES": "token_stats,corpus_rollup",
+           "SPARK_GRAFT_BENCH_RUNS": "2"}
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    proc = subprocess.run([sys.executable, os.path.join(ROOT, "bench.py")],
+                          capture_output=True, text=True, env=env, cwd=ROOT,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
 
     # the driver's exact parse: last line of the last 2000 stdout chars
-    tail = out.getvalue()[-2000:]
+    tail = proc.stdout[-2000:]
     last = tail.strip().rsplit("\n", 1)[-1]
     head = json.loads(last)
     assert head["metric"] == "headline_queries_total_time"
@@ -43,24 +46,53 @@ def test_bench_stdout_fits_driver_tail_window(bench_env):
     assert set(head["queries"]) == {"token_stats", "corpus_rollup"}
     assert len(last) < 1900
 
-    # runs arrays live on stderr as their own parseable JSON line
-    runs_lines = [l for l in err.getvalue().splitlines()
-                  if l.startswith('{"runs"')]
-    assert len(runs_lines) == 1
-    runs = json.loads(runs_lines[0])["runs"]
-    assert set(runs) == set(head["queries"])
-    assert all(len(v) == 2 for v in runs.values())  # SPARK_GRAFT_BENCH_RUNS
+    # one record per query on stderr, in queries() order
+    import __spark_entry__ as entry
+
+    recs = [json.loads(l) for l in proc.stderr.splitlines()
+            if l.startswith('{"query"')]
+    assert [r["query"] for r in recs] == [q for q in entry.queries()
+                                          if q in head["queries"]]
+    for r in recs:
+        assert set(r) == RECORD_KEYS and set(r["plan"]) == PLAN_KEYS
+        assert len(r["runs"]) == 2  # SPARK_GRAFT_BENCH_RUNS
+        assert r["cold_s"] == r["runs"][0] and r["min_s"] == min(r["runs"])
+        assert head["queries"][r["query"]] == r["min_s"]
+        assert r["jobs"] >= 1 and len(r["job_s"]) == r["jobs"]
+        assert len(r["plan"]["sha1"]) == 40
 
     # and never on stdout (the defect that truncated BENCH_r05)
-    assert '"runs"' not in out.getvalue()
+    assert '"runs"' not in proc.stdout
+
+
+def test_controlled_bench_merges_records_by_min():
+    """controlled_bench reads each invocation's runs from the stderr
+    records (error records carry none) and keeps each query's minimum."""
+    import controlled_bench as cb
+
+    def stderr(recs):
+        return "\n".join(["progress noise"] + [json.dumps(r) for r in recs])
+
+    inv0 = cb.record_runs(stderr([{"query": "a", "runs": [2.0, 1.5]},
+                                  {"query": "b", "runs": [0.4, 0.5]},
+                                  {"query": "c", "error": "boom"}]))
+    inv1 = cb.record_runs(stderr([{"query": "a", "runs": [1.8, 1.2]},
+                                  {"query": "b", "runs": [1.0, 0.9]}]))
+    assert inv0 == {"a": [2.0, 1.5], "b": [0.4, 0.5]}
+    merged, runs = cb.merge([{"headline": {"sf": 0.1}, "runs": inv0},
+                             {"headline": {"sf": 0.1}, "runs": inv1}])
+    assert merged["queries"] == {"a": 1.2, "b": 0.4}
+    assert merged["value"] == 1.6 and merged["sf"] == 0.1
+    assert runs["per_invocation_min"] == {"a": [1.5, 1.2], "b": [0.4, 0.9]}
+    assert runs["spread"] == {"a": 1.25, "b": 2.25}
+    assert merged["protocol_flagged_spread_gt_1.5x"] == {"b": 2.25}
+    assert runs["invocations"] == [inv0, inv1]
 
 
 def test_fit_headline_line_tiers():
     """The contract line must fit the driver's 2000-char stdout tail at
     any query count: precision tiers first, then slowest-kept trimming
     with an explicit q_omitted marker."""
-    import json
-
     import bench
 
     timings = {f"query_name_{i:03d}": 0.001 + i * 0.037 for i in range(120)}
@@ -78,8 +110,6 @@ def test_fit_headline_line_tiers():
 
 
 def test_fit_headline_line_small_set_untouched():
-    import json
-
     import bench
 
     timings = {"a": 1.234, "b": 0.567}

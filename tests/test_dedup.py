@@ -200,15 +200,24 @@ def test_embedding_dups_srp_dim_param_identical(vectors):
 
 def test_minhash_kernel_matches_expr(spark):
     """The Arrow reduceat kernel and the Column aggregate form are the same
-    hash family — signatures must be bit-identical, including empty docs."""
+    hash family — signatures must be bit-identical, including empty docs:
+    between non-empty ones, and last in a batch right after a non-empty
+    one (one partition, so all rows share the kernel's batch)."""
     import pyspark.sql.functions as F
     from bigvectorbench_spark.operators.dedup import minhash_from_hashes, minhash_sets
-    rows = [(0, [11, 22, 33]), (1, []), (2, [-5, 7]), (3, [2**40, -2**40])]
-    sets_df = spark.createDataFrame(rows, "id bigint, sh array<bigint>")
-    kern = {r["id"]: r["sig"] for r in minhash_sets(sets_df, num_perm=16).collect()}
-    expr = {r["id"]: r["sig"] for r in sets_df.select(
-        "id", minhash_from_hashes(F.col("sh"), num_perm=16).alias("sig")).collect()}
-    assert kern == expr
+    schema = "id bigint, sh array<bigint>"
+    for sets_df in (
+        spark.createDataFrame(
+            [(0, [11, 22, 33]), (1, []), (2, [-5, 7]), (3, [2**40, -2**40])],
+            schema),
+        spark.createDataFrame(
+            [(0, [11, 22, 33]), (1, []), (2, [-5, 7, 9, 40]), (3, [])],
+            schema).coalesce(1),
+    ):
+        kern = {r["id"]: r["sig"] for r in minhash_sets(sets_df, num_perm=16).collect()}
+        expr = {r["id"]: r["sig"] for r in sets_df.select(
+            "id", minhash_from_hashes(F.col("sh"), num_perm=16).alias("sig")).collect()}
+        assert kern == expr
 
 
 # ------------------------------------------------- components / canonical
