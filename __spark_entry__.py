@@ -34,8 +34,8 @@ from bigvectorbench_spark.operators import retrieval as rt
 from bigvectorbench_spark.operators.bq import BQIndex
 from bigvectorbench_spark.operators.pq import PQIndex
 from bigvectorbench_spark.operators.similarity import IVFIndex
+from bigvectorbench_spark.operators.temporal import sessionize, windowed_event_counts
 from bigvectorbench_spark.sources.tables import load_table
-from bigvectorbench_spark.streaming.ingest import sessionize, windowed_event_counts
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -807,13 +807,12 @@ def q_jl_knn(spark, sf):
     64→16 dims (seeded Gaussian matrix, 4× bandwidth/FLOP cut), exact
     kNN in the reduced space.  Projected coordinates round to 6 dp before
     ranking so the whole pipeline — projection fold included — is
-    engine-stable and value-oracled (the GEMM path is the scale twin,
-    pinned to this one in tests)."""
+    engine-stable and value-oracled."""
     from bigvectorbench_spark.operators import projection as pj
 
     emb = load_table(spark, sf, "embeddings").select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    proj = pj.project(emb, out_dim=16, in_dim=64, seed=1, method="expr", round_to=6)
+    proj = pj.project(emb, out_dim=16, in_dim=64, seed=1, round_to=6)
     q = proj.filter("id % 50 = 0").select(F.col("id").alias("qid"), "vec")
     res = knn(proj, q, k=10, method="expr")
     return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
@@ -928,8 +927,8 @@ def q_ivf_auto_recall(spark, sf):
     sparse.auto_m): the index builds under the classic nlist ≈ sqrt(n)
     rule and searches with the calibrated recall-holding probe count
     auto_nprobe(nlist) = ceil(0.0934·nlist^0.6215) (measured decade
-    ladder SCALE_IVF_AUTO_r11: recall 0.954–0.998 across 20k→632k where
-    a fixed nprobe=4 decays 0.997→0.813).  Emits the RESOLVED
+    ladder: recall 0.954–0.998 across 20k→632k where a fixed nprobe=4
+    decays 0.997→0.813).  Emits the RESOLVED
     auto_nprobe as a value column — the oracle recomputes the ceil
     formula in SQL from the same row count, so a drifted coefficient,
     a broken resolution path, or a wrong nlist derivation all
@@ -1582,8 +1581,8 @@ def q_sketch_bounds(spark, sf):
     # rewrite keys the FIRST partial aggregate by (source, text) — so the
     # 16 KB HLL register block and both exact-percentile buffers were
     # built and merged once per DISTINCT DOCUMENT, not per source
-    # (plans/r13/sketch_bounds_before.txt: partial_approx_count_distinct
-    # under Keys [source, text]), ~80 MB of agg state for a 5k-doc corpus
+    # (the plan showed partial_approx_count_distinct under
+    # Keys [source, text]), ~80 MB of agg state for a 5k-doc corpus
     # squeezed through 5 tasks — the measured one-core serialization
     # (job_stats: n_tasks=5, 6.6 s executor CPU; scaling ratio 0.77).
     # Split, the sketch agg holds one buffer per source per partition and
@@ -1668,9 +1667,8 @@ def q_media_pipeline(spark, sf):
     outputs are the oracle-able stages — payload plumbing (byte length,
     md5 over the binary column) and the metadata-only planners
     (aspect-preserving resize plan, every-nth frame sampling work-list).
-    The decode/feature kernels (real pure-Python PNG codec + import-gated
-    PIL, fake fallback for opaque bytes) are pixel-level test-verified in
-    test_multimodal."""
+    The decode/feature kernels are oracled by q_audio_features and
+    q_video_features."""
     from bigvectorbench_spark.operators import multimodal as mmx
 
     docs = load_table(spark, sf, "documents")
@@ -1710,9 +1708,9 @@ def q_audio_features(spark, sf):
     """Audio tier of the multimodal pipeline, VALUE-oracled end-to-end
     through the real pure-Python WAV codec (VERDICT r5 "What's missing
     #1"): synthesize integer-sawtooth PCM clips keyed by doc_id →
-    ``wav_encode`` → real RIFF/WAVE bytes → ``audio_features(codec=
-    "real")`` (hard-error mode: the fake fallback is FORBIDDEN here, so a
-    codec regression fails loudly) → energy features.  The waveform is
+    ``wav_encode`` → real RIFF/WAVE bytes → ``audio_features`` (an
+    undecodable payload raises, so a codec regression fails loudly) →
+    energy features.  The waveform is
     pure integer arithmetic (multimodal.sawtooth_pcm), so DuckDB
     recomputes the exact samples closed-form and the rms/zcr/peak values
     match bit-for-bit — the encode→decode→feature path has a genuine
@@ -1743,7 +1741,7 @@ def q_audio_features(spark, sf):
                                 "content": contents, "meta": metas})
 
     media = docs.mapInPandas(_synth, schema=mmx.MEDIA_SCHEMA)
-    feats = mmx.audio_features(media, codec="real")
+    feats = mmx.audio_features(media)
     return feats.select(
         "media_id",
         F.col("n_samples").cast("bigint").alias("n_samples"),
@@ -1759,7 +1757,7 @@ def q_video_features(spark, sf):
     through the real pure-Python uncompressed-AVI codec (the RIFF/DIB
     twin of ``q_audio_features``): synthesize integer-gradient frames
     keyed by doc_id → ``avi_encode`` → real AVI bytes →
-    ``video_features(codec="real")`` (fake fallback FORBIDDEN) →
+    ``video_features`` (an undecodable payload raises) →
     clip features.  Frames are pure integer arithmetic
     (multimodal.gradient_frames: pixel = (3x+5y+7f) mod 256), so DuckDB
     recomputes the exact stored bytes closed-form and mean_luma8/motion
@@ -1790,7 +1788,7 @@ def q_video_features(spark, sf):
                                 "content": contents, "meta": metas})
 
     media = docs.mapInPandas(_synth, schema=mmx.MEDIA_SCHEMA)
-    feats = mmx.video_features(media, codec="real")
+    feats = mmx.video_features(media)
     return feats.select(
         "media_id",
         F.col("n_frames").cast("bigint").alias("n_frames"),
@@ -2056,8 +2054,7 @@ def q_ccnet_bins(spark, sf):
     lang_id buckets x bigram-LM fluency terciles, exact-rank form with
     the deterministic (score desc, doc_id) tie-break; 'unscored' bin for
     docs with no in-vocabulary bigram so the report partitions the
-    corpus.  The approx-percentile tagging twin (mode='approx') is the
-    100 TB row-tagging path, declared rows-only.  Buckets use the
+    corpus.  Buckets use the
     corpus's pre-classified lang column (CCNet buckets on its fastText
     output, which in a warehouse IS a column; the marker-n-gram lang_id
     fallback is the lang_col=None mode, pytest-covered)."""
@@ -2120,11 +2117,11 @@ def q_llm_data_mix(spark, sf):
     # localCheckpoint boundaries DO cut the per-run cold cost (same-
     # session 3-way A/B at sf0.1: persist 5.0-6.9 s, eager checkpoint
     # 5.0-5.3 s, lazy 4.3-4.8 s per cold run) — but they LOSE under the
-    # bench's best-of-N protocol (interleaved tree A/B OPT_AB_r13_ckpt:
-    # 1.31x), because persist's runs 2..N re-match run 1's still-
-    # registered cache entries by plan identity while checkpointed RDDs
-    # are new objects every run.  persist stays; the checkpoint variant
-    # is the right shape only for single-shot cold execution.
+    # bench's best-of-N protocol (interleaved tree A/B: 1.31x), because
+    # persist's runs 2..N re-match run 1's still-registered cache entries
+    # by plan identity while checkpointed RDDs are new objects every run.
+    # persist stays; the checkpoint variant is the right shape only for
+    # single-shot cold execution.
     lines = _docs_lines(spark, sf)
     c4 = cur.c4_clean(lines, extra_cols=("source",)).persist()
     s1 = c4.groupBy("source").agg(
@@ -2355,12 +2352,10 @@ def q_semantic_dups(spark, sf):
     recall trade-off; the brute twin (embedding_cosine_dups, same 0.4
     threshold) bounds what this path can see."""
     emb = load_table(spark, sf, "embeddings")
-    # expr scoring: engine-reproducible cosine fold term order (the 6-dp
-    # round must agree with DuckDB's).  The gemm per-cluster BLAS kernel is
-    # the scale path (default; pair sets identical, folds differ ~1e-15) —
-    # measured in SCALING.md (SemDeDup section), parity-pinned in test_dedup.
+    # the cosine fold's term order is engine-reproducible, so the 6-dp
+    # round agrees with DuckDB's
     out = dd.semantic_dup_pairs(emb, threshold=0.4, nlist=8, seed=1,
-                                max_iter=8, method="expr")
+                                max_iter=8)
     return out.select("id_a", "id_b", "cluster_id",
                       F.round("cosine", 6).alias("cosine"))
 
@@ -2370,9 +2365,7 @@ def q_lm_fluency(spark, sf):
     exact-arithmetic form): LM fit on the doc_id % 7 = 0 reference slice,
     every doc scored — OOV-pair count, LM hit-rate, and the mean MLE
     conditional likelihood of seen pairs (6-dp-rounded terms accumulated
-    in DECIMAL, so both engines sum identical exact values).  The library's
-    ``mode="perplexity"`` adds true add-alpha bits-per-bigram, pytest-
-    verified (ln is not IEEE-exact across engines — excluded here)."""
+    in DECIMAL, so both engines sum identical exact values)."""
     from bigvectorbench_spark.operators import lm
     return lm.lm_score_report(_docs_wide(spark, sf))
 
@@ -2648,7 +2641,7 @@ def q_sparse_prune_recall(spark, sf):
     top-10 recall against the exact join is emitted as oracle-asserted
     threshold booleans.  m resolves via sparse.auto_m (VERDICT r8 ask #2 —
     the hnsw auto_ef twin: m ∝ corpus holds the cut fraction ≈14% and
-    recall ≈constant across decades, SCALE_SPARSE_r9.json); at the
+    recall ≈constant across decades); at the
     500-doc oracle corpora the floor gives m=64, which removes 26-28% of
     all postings (every cut from the high-df unigram head, whose idf≈0.25
     weights carry little score mass; the df≈28 bigram tail survives whole)
@@ -2692,22 +2685,17 @@ def q_sparse_filter_knn(spark, sf):
 
 
 def q_sparse_filter_adaptive(spark, sf):
-    """Adaptive filtered sparse search — the G5 pre/post-filter policy
-    for the sparse family (the dense filtered kNN's plans/selectivity.py
-    treatment; reference policy create_artificial_datasets.py:165-283 +
-    the pgvector filtered-search SQL, pgvector/module.py:90-102): the
-    predicate here keeps ~85% of documents (lang <> 'zh'), so
-    ``mode="auto"`` measures selectivity, lands PAST
-    sparse.FILTER_SPARSE_PRE_MAX_SEL, and authors the POSTFILTER plan —
-    score the full query-vocabulary postings, semi-join the allowed ids
-    on the aggregated (qid, doc_id, score) frame, then rank.  Both
-    authorings return identical rows (weights are corpus-global) AND
-    converge physically — Catalyst sinks the postfilter semi below the
-    score aggregate; the 500k sweep measured them equal at every
-    selectivity (SCALE_FILTER_SPARSE_r10.json), which IS the Spark-first
-    answer to the reference's branch policy: declare either, the
-    optimizer picks.  Fully value-oracled by the same filtered SQL form
-    as sparse_filter_knn."""
+    """Filtered sparse search at high selectivity — the G5 pre/post-filter
+    policy for the sparse family (reference policy
+    create_artificial_datasets.py:165-283 + the pgvector filtered-search
+    SQL, pgvector/module.py:90-102): the predicate here keeps ~85% of
+    documents (lang <> 'zh'), where the reference would post-filter.
+    Here both authorings return identical rows (weights are corpus-global)
+    AND converge physically — Catalyst sinks a postfilter semi-join below
+    the score aggregate, and a 500k-doc sweep measured them equal at every
+    selectivity — so the one prefilter plan serves every selectivity.
+    Fully value-oracled by the same filtered SQL form as
+    sparse_filter_knn."""
     from bigvectorbench_spark.operators import sparse as sp
 
     docs = _docs_wide(spark, sf)
@@ -2715,15 +2703,14 @@ def q_sparse_filter_adaptive(spark, sf):
         F.col("doc_id").alias("qid"))
     wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
     return sp.filtered_sparse_topk(
-        docs, queries, predicate="lang <> 'zh'", k=10, wpost=wpost,
-        mode="auto", n_docs=load_table(spark, sf, "documents").count())
+        docs, queries, predicate="lang <> 'zh'", k=10, wpost=wpost)
 
 
 def q_sparse_quantile_recall(spark, sf):
     """The spectrum-general auto_m gate (VERDICT r9 ask #4): ``m`` is
     resolved by sparse.auto_m_spectrum — a bounded df-spectrum aggregate
     holding the postings CUT FRACTION at the Zipf-decade operating point
-    (≈14.2%, SCALE_SPARSE_r9.json) on ANY term-frequency shape, where the
+    (≈14.2%) on ANY term-frequency shape, where the
     0.04·n fast path assumes Zipf.  Same gate shape as
     sparse_prune_recall: the spectrum-pruned index serves the queries
     with full query-side vectors, and top-10 recall vs the exact join is
@@ -2731,7 +2718,7 @@ def q_sparse_quantile_recall(spark, sf):
     ≈14% prunes LESS than the 500-doc floor m=64 (which cuts 26-28%
     here), so recall sits at/above prune_recall's 0.96-0.98 floor; tight
     gate 0.9/0.8, off-sf floor 0.6/0.3.  Both spectra validated at the
-    500k regime in SCALE_SPARSE_r10.json (Zipf + uniform-df)."""
+    500k regime (Zipf + uniform-df)."""
     from bigvectorbench_spark.operators import sparse as sp
 
     mean_thr, min_thr = _gate(sf, tight=(0.9, 0.8), floor=(0.6, 0.3))
@@ -2785,9 +2772,9 @@ def q_hybrid_sparse_rrf(spark, sf):
     fusion arithmetic are replayed in SQL.
 
     100× forms of both legs are separately declared: the sparse leg's is
-    the impact-pruned index (sparse_prune_recall gates it; the decade is
-    SCALE_SPARSE_r8.json), the dense leg's is the BQ-indexed candidate
-    stage hybrid_rrf_scale already runs through the same rrf_fuse — this
+    the impact-pruned index (sparse_prune_recall gates it), the dense
+    leg's is the BQ-indexed candidate stage hybrid_rrf_scale already runs
+    through the same rrf_fuse — this
     query pins the multi-FIELD composition semantics at oracle scale.
     The dense leg rides the size-enveloped ``_brute_vec_leg`` anchor."""
     from bigvectorbench_spark.operators import sparse as sp
@@ -2898,7 +2885,7 @@ def _hashed_base_int(spark, sf, *, persist: bool = False, tk=None):
     without the boundary each reference re-runs the md5 embedding fold —
     measured 20.4s → 11.5s for hybrid_rrf_scale at 50k Zipf docs /
     200 queries, flipping it from 1.5× OVER the brute twin to 1.8×
-    under (SCALE_RETRIEVAL_r8.json).
+    under.
 
     ``tk``: the shared ``(doc_id, tk)`` frame from ``_doc_tokens`` —
     derives the embedding from the same tokens without re-tokenizing."""
@@ -3011,7 +2998,7 @@ def _bq_vec_leg(spark, sf, *, out_k: int, overfetch: int = 8, base=None,
     k·overfetch survivors.  This replaces q_hybrid_rrf_topk's brute
     crossJoin (O(n·q) per run) with O(n·q/64) candidate scan + O(q·k·
     overfetch) refine — measured 1.6× under brute at 500k rows and
-    2.9×/decade vs 4.1× (SCALE_RETRIEVAL_r7.json).
+    2.9×/decade vs 4.1×.
 
     Deterministic end to end: the BQ fit is the id-sorted float64 mean
     (BQIndex.fit contract), the hamming pre-rank breaks ties by ascending
@@ -3270,7 +3257,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # oracled queries / 50 slots ≈ a 2.6-round cycle): every oracled query
     # is DRIVER-checked at least once every 3 rounds via window rotation,
     # AND sweep-checked by scripts/check_oracle.py at BOTH oracle sfs
-    # EVERY round (ORACLE_SWEEP_r{N}.json + _sf0.01) — the sweep is the
+    # EVERY round (ORACLE_SWEEP_pr{N}.json + _sf0.01) — the sweep is the
     # per-round correctness net; the driver window re-validates through
     # the driver's own harness on the ≤3-round cadence.  New declarations
     # always lead their first window; queries whose CODE changed in-round
@@ -3952,8 +3939,8 @@ SELECT qid, doc_id, score, rank FROM r WHERE rank <= 10
 _SPARSE_KNN_SQL = _sparse_knn_sql()
 _SPARSE_FILTER_KNN_SQL = _sparse_knn_sql("lang = 'en'")
 # sparse_filter_adaptive: same corpus-global-weights filtered form at ~85%
-# selectivity — the Spark side's auto mode picks the POSTFILTER plan there,
-# and prefilter ≡ postfilter by construction, so one SQL oracles both.
+# selectivity; prefilter ≡ postfilter by construction, so one SQL oracles
+# either authoring.
 _SPARSE_FILTER_ADAPTIVE_SQL = _sparse_knn_sql("lang <> 'zh'")
 
 # n_queries restricts to docs with >=1 token: the Spark gates derive the

@@ -51,13 +51,20 @@ from bigvectorbench_spark import get_spark
 from vbench.spans import SparkStats
 
 # Per-session noise, stripped so plans from two commits diff line by line:
-# expression ids (``qid#123L`` -> ``qidL``), ``[plan_id=N]`` and the
+# expression ids (``qid#123L`` -> ``qidL``), ``[plan_id=N]``, the
 # directories of absolute file paths (``file:/data/sf0.1/x.parquet`` ->
-# ``x.parquet``).
+# ``x.parquet``), the whole-stage-codegen and AQE query-stage ids
+# (``[codegen id : N]``, a QueryStage's ``Arguments: N``), which a plan
+# materialized during the build numbers differently from run to run, and
+# RDD ids (``MapPartitionsRDD[471]``), which count every RDD the session
+# made before.
 _NOISE = [
     (re.compile(r"#\d+"), ""),
     (re.compile(r",? ?\[plan_id=\d+\]"), ""),
     (re.compile(r"(?:file:)?/(?:[^/\s,\[\]]+/)+"), ""),
+    (re.compile(r" \[codegen id : \d+\]"), ""),
+    (re.compile(r"(QueryStage\nOutput \[\d+\]: .*\nArguments: )\d+"), r"\1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
 ]
 
 

@@ -39,14 +39,11 @@ from bigvectorbench_spark.operators.groundtruth import (
 from bigvectorbench_spark.operators.metrics import (
     latency_percentiles,
     pareto_frontier,
-    qps,
     recall_per_query,
-    recall_summary,
 )
 from bigvectorbench_spark.operators.similarity import IVFIndex
 from bigvectorbench_spark.operators.dedup import (
     embedding_dup_pairs,
-    exact_dedup,
     exact_dup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -63,7 +60,6 @@ __all__ = [
     "assert_unique_candidates",
     "build_groundtruth",
     "embedding_dup_pairs",
-    "exact_dedup",
     "exact_dup_groups",
     "filtered_knn",
     "get_spark",
@@ -79,10 +75,8 @@ __all__ = [
     "pack_results",
     "pareto_frontier",
     "postfilter_knn",
-    "qps",
     "quantize_table",
     "recall_per_query",
-    "recall_summary",
     "simhash_pairs",
     "topk_window",
     "verify_distances",

@@ -190,8 +190,7 @@ def random_text(spark: SparkSession, n: int = 4_000, vocab: int = 2_000,
     word i drawn with probability ∝ 1/(i+1)^alpha from a ``vocab``-word
     vocabulary, doc lengths uniform in [30, 120) — so the df spectrum has
     the stopword head impact pruning is built for.  1% of docs become
-    EXTERNAL text queries (they are removed from the corpus; the sparse
-    runner weighs them under corpus statistics via text_query_weights).
+    EXTERNAL text queries (they are removed from the corpus).
     Returns (train(id, text), test(qid, text))."""
     rng = np.random.RandomState(seed)
     p = 1.0 / np.power(np.arange(1, vocab + 1), alpha)

@@ -5,10 +5,8 @@ featurizer pipelines use when a learned encoder is unavailable or when the
 embedding step itself must be engine-reproducible.
 
 Each token lands in bucket ``portable_hash60(w) % d`` with a +/-1 sign from
-the next hash bit; a document's raw vector is the signed bucket-count
-histogram (EXACT INTEGERS — the only floats appear in the final L2
-normalization, one sqrt + one division per component, both correctly
-rounded IEEE ops any engine reproduces bit-for-bit).
+the next hash bit; a document's vector is the signed bucket-count
+histogram — exact integers any engine reproduces bit-for-bit.
 
 Scale shape: one md5 per token (materialized before the fold — the HOF
 re-evaluation trap), then a d-wide arithmetic fold per document inside
@@ -22,7 +20,7 @@ from pyspark.sql import Column, functions as F
 
 from bigvectorbench_spark.functions import text as tx
 
-__all__ = ["token_hashes", "hashed_embedding", "hashed_embedding_unit"]
+__all__ = ["token_hashes", "hashed_embedding"]
 
 
 def token_hashes(tk: Column) -> Column:
@@ -65,20 +63,3 @@ def hashed_embedding(th: Column, *, dim: int = 64) -> Column:
             ).otherwise(F.lit(0)),
         ),
     )
-
-
-def hashed_embedding_unit(th: Column, *, dim: int = 64) -> Column:
-    """L2-normalized double form of hashed_embedding (same materialized
-    token-hash input) — NULL for documents whose raw vector is all-zero
-    (no tokens, or signs cancel in every bucket), so downstream cosine
-    math never divides by zero.
-
-    CONVENIENCE FORM for small frames: the normalization re-references
-    the integer vector per component, so hot paths should materialize
-    hashed_embedding() in a select and normalize that column instead
-    (the q_hashed_embed_knn plan keeps integer vectors end-to-end and
-    normalizes nothing — cosine divides by the two norms directly)."""
-    v = hashed_embedding(th, dim=dim)
-    nsq = F.aggregate(v, F.lit(0).cast("bigint"), lambda a, x: a + x * x)
-    unit = F.transform(v, lambda x: x.cast("double") / F.sqrt(nsq))
-    return F.when(nsq > 0, unit)

@@ -51,10 +51,6 @@ def avg_token_len_from_tokens(tk: Column) -> Column:
     return F.when(F.size(tk) == 0, 0.0).otherwise(total / F.size(tk).cast("double"))
 
 
-def avg_token_len(text: Column) -> Column:
-    return avg_token_len_from_tokens(tokens(text))
-
-
 def _index_range(count: Column) -> Column:
     """sequence(1, count), empty when count ≤ 0 (Spark's sequence(1,0) is a
     *descending* [1,0], not empty — guard against it)."""
@@ -80,13 +76,6 @@ def shingles_from_tokens(tk: Column, n: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles joined by a single space (the dedup unit).
-    Convenience form for single-use contexts; hot paths should materialize
-    tokens first and call ``shingles_from_tokens`` (see its docstring)."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def char_ngrams(text: Column, n: int = 3) -> Column:
     """Distinct character n-grams of the lowercased text."""
     t = F.lower(F.trim(text))
@@ -99,10 +88,6 @@ def stopword_ratio_from_tokens(tk: Column, stopwords: Sequence[str] = EN_STOPWOR
     sw = F.lit(list(stopwords))
     hits = F.size(F.filter(tk, lambda w: F.array_contains(sw, w)))
     return F.when(F.size(tk) == 0, 0.0).otherwise(hits / F.size(tk).cast("double"))
-
-
-def stopword_ratio(text: Column, stopwords: Sequence[str] = EN_STOPWORDS) -> Column:
-    return stopword_ratio_from_tokens(tokens(text), stopwords)
 
 
 def punct_ratio(text: Column) -> Column:
@@ -135,12 +120,6 @@ def quality_score_from_tokens(tk: Column, text: Column) -> Column:
     return (
         0.3 * len_score + 0.2 * awl_score + 0.2 * sw_score + 0.3 * noise_score
     ).alias("quality")
-
-
-def quality_score(text: Column) -> Column:
-    """Convenience form over raw text — single-use contexts; hot paths
-    materialize tokens first (see ``quality_score_from_tokens``)."""
-    return quality_score_from_tokens(tokens(text), text)
 
 
 def lang_scores_from_tokens(tk: Column, joined: Column) -> Column:
@@ -181,13 +160,6 @@ def lang_id_from_tokens(tk: Column, joined: Column, default: str = "en") -> Colu
     return F.when(best["neg"] < 0, best["lang"]).otherwise(F.lit(default))
 
 
-def lang_id(text: Column, default: str = "en") -> Column:
-    """Convenience form over raw text — single-use contexts; hot paths
-    materialize tokens + joined first (see ``lang_id_from_tokens``)."""
-    tk = tokens(text)
-    return lang_id_from_tokens(tk, F.concat_ws("", tk), default)
-
-
 def portable_hash60(s: Column) -> Column:
     """Engine-portable 60-bit hash: the first 15 hex digits of md5, as a
     BIGINT.  md5 is bit-identical everywhere, so any engine can reproduce
@@ -213,14 +185,6 @@ def fingerprint_from_tokens(
     hash_fn = (lambda s: F.xxhash64(s)) if hash == "xxhash64" else portable_hash60
     hashes = F.transform(shingles_from_tokens(tk, shingle_n), hash_fn)
     return F.slice(F.array_sort(F.array_distinct(hashes)), 1, num_mins)
-
-
-def doc_fingerprint(text: Column, *, shingle_n: int = 3, num_mins: int = 8,
-                    hash: str = "xxhash64") -> Column:
-    """Convenience form over raw text — single-use contexts; hot paths
-    materialize tokens first (see ``shingles_from_tokens``)."""
-    return fingerprint_from_tokens(tokens(text), shingle_n=shingle_n,
-                                   num_mins=num_mins, hash=hash)
 
 
 # BPE-ish regex pre-tokenization (the GPT-2 pattern family, simplified to

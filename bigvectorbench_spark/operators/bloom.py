@@ -107,7 +107,7 @@ def bloom_build(df: DataFrame, col: str, *, m_bits: int, k: int) -> bytes:
     independent of partition count.  (The earlier single-stage fold
     collected partitions × m/8 bytes: at a measured ~29M-hash inventory
     that is 32 × ~52 MB ≈ 1.7 GB and trips the default 1 GiB
-    spark.driver.maxResultSize — SCALE_BLOOM_r9.json's regime.)"""
+    spark.driver.maxResultSize.)"""
     import pyarrow as pa
 
     n_bytes = (m_bits + 7) // 8
@@ -174,20 +174,14 @@ def _flat_positions(pos_col) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _probe_frame(df: DataFrame, pos_expr, bloom, fold, out_col: str):
-    """Shared mapInArrow driver for the probes: append ``__pos`` JVM-side,
+    """mapInArrow driver for the probe: append ``__pos`` JVM-side,
     run ``fold(bitmap, flat, lens) -> bool ndarray`` per batch on the raw
     Arrow buffers (the earlier to_pandas form put the full 500k-doc bloom
-    report at 60.3s; this flat-buffer path halves it to 31.0s —
-    SCALE_BLOOM_r8.json), emit the original columns plus the boolean.
+    report at 60.3s; this flat-buffer path halves it to 31.0s), emit the
+    original columns plus the boolean.
 
-    ``bloom`` may be raw bytes OR an already-created ``Broadcast`` handle:
-    a long-lived probe service (the streaming decontamination path calls
-    this once PER MICRO-BATCH) passes the handle so the 188 MB bitmap
-    ships once for the stream's lifetime instead of once per trigger
-    (measured cost-neutral per batch at 500k — workers cache the value —
-    but it stops the per-trigger broadcast churn; the measured per-batch
-    latency defect was partition starvation, fixed in
-    bloom_probe_batch)."""
+    ``bloom`` may be raw bytes OR an already-created ``Broadcast`` handle,
+    so a caller that probes many frames ships the bitmap once."""
     import pyarrow as pa
     from pyspark.broadcast import Broadcast
 
@@ -212,21 +206,6 @@ def _probe_frame(df: DataFrame, pos_expr, bloom, fold, out_col: str):
          for f in with_pos.schema if f.name != "__pos"]
         + [f"{out_col} boolean"])
     return with_pos.mapInArrow(probe, schema=out_schema)
-
-
-def bloom_probe(df: DataFrame, col: str, bloom, *, m_bits: int,
-                k: int, out_col: str = "maybe_member") -> DataFrame:
-    """Append a boolean column: True iff every one of the value's k bits is
-    set (definitely-not-present ⇒ False; no false negatives).  ``m_bits``
-    must be the BUILD-time value — the bitmap's byte padding makes it
-    unrecoverable from ``len(bloom)``."""
-    k_ = k
-
-    def fold(bm, flat, lens):
-        return ((bm[flat >> 3] >> (flat & 7)) & 1).reshape(-1, k_).all(axis=1)
-
-    return _probe_frame(df, bloom_positions(F.col(col), m_bits, k), bloom,
-                        fold, out_col)
 
 
 def bloom_probe_any(df: DataFrame, arr_col: str, bloom, *,

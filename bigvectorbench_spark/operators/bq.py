@@ -175,7 +175,7 @@ class BQIndex:
         ``method='expr'`` is the unrolled whole-stage-codegen packer — free
         of Python workers, but its d literal comparisons make janino
         compile+evaluate cost grow with d (measured 83 s to encode 200k
-        rows at d=1024, SCALE_BQ_r7.json).  ``'kernel'`` packs each Arrow
+        rows at d=1024).  ``'kernel'`` packs each Arrow
         batch with ``pack_np`` (identical bit layout — pinned in test_bq) in
         one vectorized pass; 'auto' switches to it past d=128."""
         cols = keep if keep is not None else df.columns

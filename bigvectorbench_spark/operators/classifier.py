@@ -1,9 +1,9 @@
 """Weak-supervision document-quality classifier — the CCNet / fastText
 pattern every web-corpus pipeline ships: label a bounded sample with a
-cheap heuristic (here ``functions.text.quality_score``), train a linear
-model over hashing-trick features, then score the ENTIRE corpus with the
-model — which generalizes past the heuristic's hard thresholds and costs
-one expression fold per document at inference.
+cheap heuristic (here ``functions.text.quality_score_from_tokens``),
+train a linear model over hashing-trick features, then score the ENTIRE
+corpus with the model — which generalizes past the heuristic's hard
+thresholds and costs one expression fold per document at inference.
 
 Spark-first layout (the fit-on-sample / apply-distributed pattern of
 IVF/PQ/BQ/OPQ):

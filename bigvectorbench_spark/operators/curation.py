@@ -651,8 +651,7 @@ def rolling_window_hashes(th: Column, n: int) -> Column:
 
 def decontaminate_report(df: DataFrame, *, id_col: str = "doc_id",
                          text_col: str = "text", group_col: str = "source",
-                         eval_mod: int = 97, ngram: int = 8,
-                         method: str = "expr") -> DataFrame:
+                         eval_mod: int = 97, ngram: int = 8) -> DataFrame:
     """Train/eval n-gram-overlap decontamination (the standard test-set
     contamination check): the eval split is the deterministic slice
     ``id % eval_mod = 0``; a train document is contaminated if it shares
@@ -660,29 +659,12 @@ def decontaminate_report(df: DataFrame, *, id_col: str = "doc_id",
 
     Scale shape: the eval inventory is FIXED SIZE (benchmarks don't grow
     with the corpus), so it is broadcast and the train side is scanned,
-    never shuffled.  ``method="expr"`` (default, the oracle shape) probes
-    via `explode` + broadcast LEFT SEMI join + per-doc distinct;
-    ``method="arrow"`` collects the eval inventory to a sorted numpy
-    array at construction time (the fixed-size analog of the IVF/PQ/HNSW
-    index-build collects — an explicit envelope, ~1/eval_mod of the
-    corpus) and probes train windows with vectorized searchsorted inside
-    the batched kernel — no explode, no join, one boolean per document
-    out.  Identical results (test_decontaminate_arrow_matches_expr).
-
-    MEASURED: unlike the Gopher kernels, the arrow form does NOT win here
-    (500k Zipf docs: expr 7.8s, arrow 10.1s) — the expr path's probe is a
-    broadcast-hash semi join inside codegen, already optimal, and the
-    kernel re-pays Python tokenize+md5 plus an O(log|eval|) searchsorted
-    per window.  expr stays the default; the kernel is kept as the
-    measured counter-example (vectorizing only beats Catalyst when the
-    expression form is interpreter-bound HOF folds, not when it is a
-    join)."""
-    if method == "arrow":
-        return _decontaminate_report_arrow(
-            df, id_col=id_col, text_col=text_col, group_col=group_col,
-            eval_mod=eval_mod, ngram=ngram)
-    if method != "expr":
-        raise ValueError(f"unknown method {method!r}")
+    never shuffled: the probe is `explode` + broadcast LEFT SEMI join +
+    per-doc distinct, a broadcast-hash semi join inside codegen.  (A
+    searchsorted Arrow kernel over a collected eval inventory measured
+    slower at 500k Zipf docs, 10.1 s against 7.8 s: vectorizing beats
+    Catalyst only when the expression form is interpreter-bound HOF
+    folds, not when it is a join.)"""
     tokenized = df.select(
         F.col(id_col), F.col(group_col),
         tx.tokens(F.col(text_col)).alias("tk"),
@@ -720,66 +702,6 @@ def decontaminate_report(df: DataFrame, *, id_col: str = "doc_id",
             F.count("*").cast("bigint").alias("n_train"),
             F.sum(F.coalesce("hit", F.lit(0))).cast("bigint")
             .alias("n_contaminated"),
-        )
-    )
-
-
-def _decontaminate_report_arrow(df: DataFrame, *, id_col: str,
-                                text_col: str, group_col: str,
-                                eval_mod: int, ngram: int) -> DataFrame:
-    """Kernel form of decontamination: the eval window-hash inventory is
-    collected once (sorted int64 array, broadcast), and each train batch
-    probes every window hash against it with searchsorted — emitting one
-    contaminated flag per document.  Shuffle account: the eval-side scan
-    reads ~1/eval_mod of the corpus; the train scan is map-only; the only
-    shuffle left is the per-group rollup (the expr form additionally
-    materializes the exploded window stream through a semi join and a
-    per-doc distinct)."""
-    import numpy as np
-
-    eval_rows = (
-        df.filter(F.col(id_col) % eval_mod == 0)
-        .select(tx.tokens(F.col(text_col)).alias("tk"))
-        .select(token_hashes(F.col("tk")).alias("th"))
-        .select(F.explode(
-            F.array_distinct(rolling_window_hashes(F.col("th"), ngram))
-        ).alias("wh"))
-        .distinct().collect()
-    )
-    ev = np.sort(np.fromiter((r["wh"] for r in eval_rows), np.int64,
-                             len(eval_rows)))
-    bc = df.sparkSession.sparkContext.broadcast(ev)
-    schema = f"{group_col} string, hit int"
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        evs = bc.value
-        cache: dict[str, tuple[int, int]] = {}
-        for pdf in batches:
-            groups = pdf[group_col].tolist()
-            toks = _tokenize_docs(pdf[text_col].tolist())
-            th, _, doc_lens = _hash_flat(toks, cache)
-            starts, wdoc = _window_starts(_window_ctx(doc_lens), ngram)
-            wh = _rolling_flat(th, starts, ngram)
-            hit_docs = np.zeros(len(toks), np.int32)
-            if len(wh) and len(evs):
-                idx = np.searchsorted(evs, wh)
-                idx[idx == len(evs)] = len(evs) - 1
-                hit_docs[np.unique(wdoc[evs[idx] == wh])] = 1
-            yield pd.DataFrame({
-                group_col: pd.Series(groups, dtype="object"),
-                "hit": hit_docs,
-            })
-
-    train = df.filter(F.col(id_col) % eval_mod != 0)
-    flagged = train.select(group_col, text_col).mapInPandas(gen, schema)
-    return (
-        flagged.groupBy(group_col)
-        .agg(
-            F.count("*").cast("bigint").alias("n_train"),
-            F.sum("hit").cast("bigint").alias("n_contaminated"),
         )
     )
 

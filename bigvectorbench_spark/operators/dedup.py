@@ -246,8 +246,8 @@ def ngram_jaccard_pairs(
     - ``"auto"`` (default): exact below ``hot_min_docs`` documents, hot
       above — measured crossover: the hot path's fixed overhead (histogram
       aggregate + head collect + broadcast) costs +60% at 2k docs, reaches
-      parity at 50k, and wins 1.8× at 500k (SCALE_NGRAM_HOT_r7.json); the
-      one extra count() is a narrow cached-input job.
+      parity at 50k, and wins 1.8× at 500k; the one extra count() is a
+      narrow job.
 
     Either order produces the IDENTICAL verified pair set (prefix
     completeness needs only a consistent global total order).
@@ -256,7 +256,7 @@ def ngram_jaccard_pairs(
         raise ValueError(f"threshold must be in (0,1], got {threshold}")
     if freq_order not in ("hot", "exact", "auto"):
         raise ValueError(f"unknown freq_order {freq_order!r}")
-    sets_df = _shingle_sets(_widen(df), id_col, text_col, n, tk=tk).cache()
+    sets_df = _shingle_sets(_widen(df), id_col, text_col, n, tk=tk)
     if freq_order == "auto":
         freq_order = "hot" if sets_df.count() >= hot_min_docs else "exact"
 
@@ -405,16 +405,6 @@ def minhash_sets(
     return t.mapInArrow(kernel, schema="id bigint, sig array<bigint>")
 
 
-def minhash_signature(text: Column, *, shingle_n: int = 3, num_perm: int = 64,
-                      seed: int = 1) -> Column:
-    """Convenience form over raw text — single-use contexts only; the LSH
-    pipeline materializes shingle hashes first (see _shingle_sets)."""
-    hashes = F.transform(
-        tx.word_shingles(text, shingle_n), lambda s: F.xxhash64(s)
-    )
-    return minhash_from_hashes(hashes, num_perm=num_perm, seed=seed)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
@@ -437,7 +427,7 @@ def minhash_lsh_pairs(
         raise ValueError(f"num_perm={num_perm} not divisible by bands={bands}")
     rows_per_band = num_perm // bands
 
-    sets_df = _shingle_sets(_widen(df), id_col, text_col, shingle_n, hash=hash).cache()
+    sets_df = _shingle_sets(_widen(df), id_col, text_col, shingle_n, hash=hash)
     sig = minhash_sets(sets_df, num_perm=num_perm, seed=seed)
     banded = sig.select(
         "id",
@@ -832,7 +822,6 @@ def semantic_dup_pairs(
     nlist: int = 8,
     seed: int = 1,
     max_iter: int = 8,
-    method: str = "gemm",
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped semantic near-dup pairs (Abbas et al.
     2023): k-means partitions the embedding space, and exact cosine pairs
@@ -852,16 +841,8 @@ def semantic_dup_pairs(
     straddling a k-means boundary are missed (the published trade-off;
     srp_recall-style gating applies).
 
-    ``method="expr"`` scores each within-cluster pair with the exact
-    unit-vector cosine fold — engine-reproducible term order, the value-
-    oracle declaration, fine for small clusters.  ``method="gemm"``
-    (default) is what SemDeDup actually runs at scale: rows group by
-    cluster (one shuffle of (id, unit-vector) rows) and each cluster is
-    scored as blocked ``U·Uᵀ`` numpy GEMMs inside ``applyInPandas`` —
-    the 64-d fold per candidate pair becomes one BLAS call per row block,
-    measured ~100× faster at 2.5k-row clusters, with block size bounding
-    the score-matrix memory.  Pair SETS are identical; cosines differ at
-    ~1e-15 fold order (the embedding_dup_pairs gemm/brute convention).
+    Each within-cluster pair is scored with the exact unit-vector cosine
+    fold — engine-reproducible term order, so the scores value-oracle.
 
     Output: (id_a, id_b, cluster_id, cosine)."""
     from bigvectorbench_spark.operators.similarity import IVFIndex
@@ -873,55 +854,17 @@ def semantic_dup_pairs(
     unit = (idx.assign(base, vec_col="vec")
             .select("id", "cluster_id",
                     dist_fns.unit_vec(F.col("vec")).alias("u")))
-    if method == "expr":
-        a, b = unit.alias("a"), unit.alias("b")
-        return (
-            a.join(b, (F.col("a.cluster_id") == F.col("b.cluster_id"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.cluster_id").alias("cluster_id"),
-                dist_fns.dot(F.col("a.u"), F.col("b.u")).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
+    a, b = unit.alias("a"), unit.alias("b")
+    return (
+        a.join(b, (F.col("a.cluster_id") == F.col("b.cluster_id"))
+               & (F.col("a.id") < F.col("b.id")))
+        .select(
+            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+            F.col("a.cluster_id").alias("cluster_id"),
+            dist_fns.dot(F.col("a.u"), F.col("b.u")).alias("cosine"),
         )
-    if method != "gemm":
-        raise ValueError(f"unknown method {method!r}")
-    thr = float(threshold)
-
-    def _score(key, pdf):
-        import pandas as pd
-
-        cid = int(key[0])
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        U = np.stack(pdf["u"].to_numpy()[order]).astype(np.float64)
-        n = len(ids)
-        out_a, out_b, out_c = [], [], []
-        block = 1024  # bounds the score matrix at block × n doubles
-        for i0 in range(0, n, block):
-            i1 = min(i0 + block, n)
-            S = U[i0:i1] @ U.T
-            ii, jj = np.nonzero(S >= thr)
-            keep = (ii + i0) < jj  # upper triangle: id_a < id_b
-            if keep.any():
-                out_a.append(ids[ii[keep] + i0])
-                out_b.append(ids[jj[keep]])
-                out_c.append(S[ii[keep], jj[keep]])
-        if not out_a:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cluster_id": [], "cosine": []}
-            ).astype({"id_a": "int64", "id_b": "int64",
-                      "cluster_id": "int32", "cosine": "float64"})
-        return pd.DataFrame({
-            "id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b),
-            "cluster_id": np.full(sum(map(len, out_a)), cid, dtype=np.int32),
-            "cosine": np.concatenate(out_c),
-        })
-
-    return unit.groupBy("cluster_id").applyInPandas(
-        _score, "id_a bigint, id_b bigint, cluster_id int, cosine double")
+        .filter(F.col("cosine") >= threshold)
+    )
 
 
 def dup_components(

@@ -27,7 +27,7 @@ the log-weight mean is for single-bucket comparisons, and the keep rule
 raw pool) is an exact decimal-vs-integer comparison — no float boundary
 can flip a document's disposition between engines.  ``mode="log"`` adds
 the paper's log-ratio mean for in-engine use, pytest-verified against
-Python math (the lm.py perplexity precedent).
+Python math.
 
 Scale design (the shuffle account at 100 TB):
 
@@ -43,9 +43,8 @@ Scale design (the shuffle account at 100 TB):
   is map-side combined (a document's exploded rows are
   partition-contiguous), so the only corpus-sized shuffle carries ~one
   row per document.  Document TEXT never moves.
-- **Selection**: the keep flag is row-local; ``dsir_topk`` is a global
-  TakeOrdered (per-partition heaps + driver merge of k rows) — no sort
-  shuffle of the corpus.
+- **Selection**: the keep flag is row-local — no sort shuffle of the
+  corpus.
 """
 
 from __future__ import annotations
@@ -55,7 +54,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from bigvectorbench_spark.functions import text as tx
 from bigvectorbench_spark.operators import curation as cur
 
-__all__ = ["bigram_buckets", "dsir_weights", "dsir_report", "dsir_topk"]
+__all__ = ["bigram_buckets", "dsir_weights", "dsir_report"]
 
 DEFAULT_BUCKETS = 4096  # power of two: bucket = rolling_hash & (B-1)
 
@@ -191,20 +190,3 @@ def dsir_report(df: DataFrame, *, id_col: str = "doc_id",
             .alias("mean_weight"),
         )
     )
-
-
-def dsir_topk(df: DataFrame, k: int, *, id_col: str = "doc_id",
-              text_col: str = "text",
-              target_filter: Column | None = None, target_mod: int = 17,
-              num_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """The resampling step, deterministic form: the k most target-like
-    documents by (mean_weight desc, id asc — a total order, so ties can't
-    make the result engine-dependent).  orderBy().limit(k) compiles to
-    TakeOrderedAndProject: per-partition k-heaps merged on the driver, no
-    global sort shuffle — safe at any corpus size for serving-sized k."""
-    w = dsir_weights(df, id_col=id_col, text_col=text_col,
-                     target_filter=target_filter, target_mod=target_mod,
-                     num_buckets=num_buckets).filter(F.col("n_bigrams") > 0)
-    return (w.orderBy(F.col("mean_weight").desc(), F.col(id_col))
-            .limit(k)
-            .select(id_col, "n_bigrams", "mean_weight", "keep"))

@@ -24,8 +24,11 @@ ground-truth builder (create_artificial_datasets.py:151-285):
   the predicate into the Parquet scan.
 - **post-filter** (ANN-first): over-fetch ``k·1.5/ratio`` nearest neighbors
   ignoring labels, then drop non-matching rows.  Only meaningful for the
-  approximate path (IVF/LSH), where scoring fewer rows is the win; exposed
-  here for plan parity and used by ``plans/selectivity.py``.
+  approximate path (IVF/LSH), where scoring fewer rows is the win.
+
+``filtered_ivf_knn(strategy="auto")`` picks between them by the reference's
+branch: post-filter when the filter keeps at least
+``POST_FILTER_THRESHOLD`` of the rows (create_artificial_datasets.py:165).
 """
 
 from __future__ import annotations
@@ -42,6 +45,8 @@ from bigvectorbench_spark.operators.knn import (
 
 _PLACEHOLDER = re.compile(r"\{(\w+)\}")
 _EQ_REWRITE = re.compile(r"(?<![=!<>])==")
+
+POST_FILTER_THRESHOLD = 0.2  # create_artificial_datasets.py:165
 
 QUERY_PREFIX = "__q_"
 
@@ -187,8 +192,6 @@ def filtered_ivf_knn(
     overfetch/tie rules, so the composition takes a full SQL value oracle
     (the ivf_knn convention: embedded assignment + probe lists).
     """
-    from bigvectorbench_spark.plans.selectivity import POST_FILTER_THRESHOLD
-
     if strategy == "auto":
         if selectivity is None:
             raise ValueError("strategy='auto' needs a selectivity estimate")

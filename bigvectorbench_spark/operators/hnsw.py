@@ -87,12 +87,10 @@ class _ShardHNSW:
         self.links: list[list[list[int]]] = []  # node -> level -> neighbors
         self.entry = -1
         self.max_level = -1
-        self.n_dist = 0        # distance evaluations (search-work meter)
 
     # -- distances ---------------------------------------------------------
 
     def _d(self, q, idxs):
-        self.n_dist += len(idxs)
         diff = self.X[idxs] - q
         return np.einsum("ij,ij->i", diff, diff)
 
@@ -375,7 +373,7 @@ def hnsw_delta_shards(
     The trade is search-side: each absorb adds shards, and search cost
     is Σ per-shard beams — metered by :func:`hnsw_delta_report`
     (work_growth = shards vs a same-sizing rebuild); the measured
-    policy (SCALE_HNSW_DELTA_r11 + _fine ladders) is compact at
+    policy (coarse and fine ladders) is compact at
     work_growth ≥ 2.5, the edge of the measured regime where absorb
     still strictly dominates rebuild at serving (recall flat
     0.80–0.83, wall ≤ 0.92× the rebuilt layout's through 28 shards).
@@ -546,44 +544,3 @@ def hnsw_search(
 
     cand = shards.mapInPandas(_search, "qid bigint, id bigint, dist double")
     return topk_window(cand, k).select("qid", "id", "dist", "rank")
-
-
-def hnsw_search_work(
-    shards: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    ef: int | str = 64,
-    qid_col: str = "qid",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """Search-WORK meter for the scaling argument: runs the same beam
-    search as ``hnsw_search`` but emits per-shard distance-evaluation
-    counts instead of neighbors — ``(shard_rows, n_queries, dist_evals)``
-    per shard.  Brute force evaluates ``shard_rows`` distances per query;
-    sublinearity is ``dist_evals / (n_queries · shard_rows) ≪ 1`` growing
-    smaller with corpus size (SCALING.md's HNSW section)."""
-    q_rows = queries.select(
-        F.col(qid_col).cast("bigint"), F.col(vec_col).cast("array<double>")
-    ).collect()
-    Q = (np.stack([r[1] for r in q_rows]) if q_rows else np.zeros((0, 1)))
-    bc = shards.sparkSession.sparkContext.broadcast(Q)
-
-    def _work(pdf_iter):
-        import pandas as pd
-
-        Q_ = bc.value
-        for pdf in pdf_iter:
-            for payload in pdf["payload"]:
-                g = _resident_graph(bytes(payload))
-                ef_eff = _resolve_ef(ef, len(g.ids), k)
-                g.n_dist = 0
-                for qi in range(len(Q_)):
-                    g.search(Q_[qi], k, ef_eff)
-                yield pd.DataFrame({
-                    "shard_rows": [len(g.ids)],
-                    "n_queries": [len(Q_)],
-                    "dist_evals": [int(g.n_dist)]})
-
-    return shards.mapInPandas(
-        _work, "shard_rows bigint, n_queries bigint, dist_evals bigint")

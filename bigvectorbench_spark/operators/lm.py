@@ -5,18 +5,12 @@ every document's bigrams against it, and emit per-document fluency
 statistics a pipeline bins on (CCNet keeps the low-perplexity "head" of
 each language bucket).
 
-Two scoring modes:
-
-- ``mode="exact"`` (the value-oracle form): every emitted number is exact
-  integer arithmetic or a single correctly-rounded double division —
-  out-of-vocabulary bigram counts, LM hit-rate, and the mean conditional
-  MLE likelihood ``c(w1 w2)/c(w1 ·)`` accumulated in DECIMAL after one
-  deterministic 6-dp round per term.  No transcendental functions, so
-  DuckDB reproduces every value bit-for-bit.
-- ``mode="perplexity"`` adds the classical add-alpha log-perplexity
-  (bits per bigram).  ``ln`` is not IEEE-exactly-rounded, so this column
-  is pytest-verified against Python math rather than cross-engine hashed
-  — the reason the declared driver query uses ``exact``.
+Every emitted number is exact integer arithmetic or a single
+correctly-rounded double division — out-of-vocabulary bigram counts, LM
+hit-rate, and the mean conditional MLE likelihood ``c(w1 w2)/c(w1 ·)``
+accumulated in DECIMAL after one deterministic 6-dp round per term.  No
+transcendental functions (a log-perplexity would need ``ln``, which is not
+IEEE-exactly-rounded), so DuckDB reproduces every value bit-for-bit.
 
 Scale design (the shuffle account at 100 TB):
 
@@ -88,8 +82,6 @@ def lm_score_report(
     text_col: str = "text",
     train_filter: Column | None = None,
     train_mod: int = 7,
-    mode: str = "exact",
-    alpha: float = 0.1,
 ) -> DataFrame:
     """Per-document LM fluency report.  The LM trains on the reference
     slice selected by ``train_filter`` (default: ``id % train_mod == 0``,
@@ -102,49 +94,20 @@ def lm_score_report(
     pairs (NULL when none), each term rounded to 6 dp then accumulated in
     DECIMAL so the sum is order-independent and engine-exact.  High
     mean_cond_lik + low OOV = predictable, reference-like text; the
-    filtering signal perplexity binning thresholds on, in exact arithmetic.
-
-    ``mode="perplexity"`` appends ``bits_per_bigram``: add-``alpha``
-    smoothed cross-entropy in bits, with OOV contexts falling back to the
-    uniform 1/V term (V = distinct context vocabulary).  Float-transcendental
-    — see the module docstring for why the oracle mode excludes it."""
-    if mode not in ("exact", "perplexity"):
-        raise ValueError(f"unknown mode {mode!r}")
+    filtering signal perplexity binning thresholds on, in exact arithmetic."""
     sid = F.col(id_col)
     cond = train_filter if train_filter is not None else (sid % train_mod == 0)
     lm = fit_bigram_lm(df.filter(cond), id_col=id_col, text_col=text_col)
 
     pairs = doc_bigrams(df, id_col=id_col, text_col=text_col)
     scored = pairs.join(lm, ["w1", "w2"], "left")
-    if mode == "perplexity":
-        # The (w1, w2) join loses c_ctx for seen-context/unseen-pair rows
-        # (the whole LM row misses); smoothing needs the context count
-        # whenever w1 is in vocabulary, so join it independently.
-        ctx_tbl = lm.select("w1", "c_ctx").distinct()
-        scored = (scored.drop("c_ctx")
-                  .join(ctx_tbl, ["w1"], "left"))
 
     seen = F.col("c_bg").isNotNull()
     lik = F.round(F.col("c_bg") / F.col("c_ctx"), 6).cast("decimal(18,6)")
-    aggs = [
+    n_seen = F.col("n_bigrams") - F.col("n_oov")
+    base = scored.groupBy(id_col).agg(
         F.count("*").cast("bigint").alias("n_bigrams"),
         F.sum(F.when(seen, 0).otherwise(1)).cast("bigint").alias("n_oov"),
-    ]
-    n_seen = F.col("n_bigrams") - F.col("n_oov")
-    if mode == "perplexity":
-        # V from the LM's context vocabulary: one scalar, computed once.
-        v_row = lm.select(F.countDistinct("w1").alias("v")).first()
-        V = max(1, int(v_row["v"]) if v_row and v_row["v"] else 1)
-        a = float(alpha)
-        log2 = 0.6931471805599453  # ln 2
-        smoothed = F.when(
-            F.col("c_ctx").isNotNull(),
-            (F.coalesce(F.col("c_bg"), F.lit(0)) + a)
-            / (F.col("c_ctx") + a * V),
-        ).otherwise(F.lit(1.0 / V))
-        aggs.append((-F.avg(F.log(smoothed)) / log2).alias("bits_per_bigram"))
-    base = scored.groupBy(id_col).agg(
-        *aggs,
         F.sum(F.when(seen, lik)).alias("_lik_sum"),
     )
     out = base.select(
@@ -155,7 +118,6 @@ def lm_score_report(
         F.when(n_seen > 0,
                F.round(F.col("_lik_sum").cast("double") / n_seen, 6))
         .cast("double").alias("mean_cond_lik"),
-        *(["bits_per_bigram"] if mode == "perplexity" else []),
     )
     # Docs with <2 tokens produce no pair rows at all — restore them with
     # zero counts so the report covers the whole corpus (a loader must see
@@ -170,8 +132,6 @@ def lm_score_report(
             F.lit(0).cast("bigint").alias("n_oov"),
             F.lit(None).cast("double").alias("hit_rate"),
             F.lit(None).cast("double").alias("mean_cond_lik"),
-            *([F.lit(None).cast("double").alias("bits_per_bigram")]
-              if mode == "perplexity" else []),
         )
     )
     return out.unionByName(empties)
@@ -185,7 +145,6 @@ def ccnet_bins_report(
     train_filter: Column | None = None,
     train_mod: int = 7,
     n_bins: int = 3,
-    mode: str = "exact",
     lang_col: str | None = None,
 ) -> DataFrame:
     """CCNet's final step (Wenzek et al. 2020): split each LANGUAGE bucket
@@ -204,15 +163,8 @@ def ccnet_bins_report(
     land in 'unscored' so the report partitions the corpus.  mean_lik
     accumulates the 6-dp scores in DECIMAL (order-independent, exact).
 
-    ``mode="exact"`` ranks with one window per language — one task per
-    language at report granularity (fine for a report; a language is at
-    most the corpus).  ``mode="approx"`` replaces the rank with
-    approx_percentile cutpoints per language and row-local threshold
-    tagging — the 100 TB tagging path (no per-language global sort), at
-    the cost of approximate bin boundaries (the quality_deciles /
-    quality_tags_approx twin convention; rows-only checkable)."""
-    if mode not in ("exact", "approx"):
-        raise ValueError(f"unknown mode {mode!r}")
+    The rank is one window per language — one task per language at report
+    granularity (fine for a report; a language is at most the corpus)."""
     from pyspark.sql import Window
 
     from bigvectorbench_spark.functions import text as tx2
@@ -242,27 +194,12 @@ def ccnet_bins_report(
     scored = j.filter(F.col("mean_cond_lik").isNotNull())
     names = (["head", "middle", "tail"] if n_bins == 3
              else [f"bin{i}" for i in range(n_bins)])
-    if mode == "exact":
-        w = Window.partitionBy("lang").orderBy(
-            F.col("mean_cond_lik").desc(), sid)
-        ranked = scored.select(
-            "lang", "n_tok", "mean_cond_lik",
-            F.row_number().over(w).alias("rk"),
-            F.count("*").over(Window.partitionBy("lang")).alias("cnt"),
-        ).withColumn("_b", F.expr(f"((rk - 1) * {int(n_bins)}) DIV cnt"))
-    else:
-        cuts = scored.groupBy("lang").agg(
-            F.percentile_approx(
-                "mean_cond_lik",
-                [1.0 - (i + 1) / n_bins for i in range(n_bins - 1)],
-            ).alias("cut"))
-        ranked = scored.join(F.broadcast(cuts), "lang").withColumn(
-            "_b",
-            F.aggregate(
-                F.col("cut"), F.lit(0),
-                lambda acc, c: acc
-                + (F.col("mean_cond_lik") <= c).cast("int")),
-        )
+    w = Window.partitionBy("lang").orderBy(F.col("mean_cond_lik").desc(), sid)
+    ranked = scored.select(
+        "lang", "n_tok", "mean_cond_lik",
+        F.row_number().over(w).alias("rk"),
+        F.count("*").over(Window.partitionBy("lang")).alias("cnt"),
+    ).withColumn("_b", F.expr(f"((rk - 1) * {int(n_bins)}) DIV cnt"))
     bin_name = F.element_at(
         F.array(*[F.lit(n) for n in names]), F.col("_b").cast("int") + 1)
     binned = ranked.groupBy("lang", bin_name.alias("bin")).agg(

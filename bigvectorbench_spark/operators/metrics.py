@@ -36,20 +36,6 @@ def recall_per_query(run: DataFrame, truth: DataFrame, *, run_col: str = "neighb
     return j
 
 
-def recall_summary(run: DataFrame, truth: DataFrame, **kw) -> DataFrame:
-    """mean ± std over queries (plotting/metrics.py:19-26)."""
-    return recall_per_query(run, truth, **kw).agg(
-        F.avg("recall").alias("mean_recall"),
-        F.coalesce(F.stddev_pop("recall"), F.lit(0.0)).alias("std_recall"),
-        F.count("*").alias("n_queries"),
-    )
-
-
-def qps(times: DataFrame, time_col: str = "latency") -> DataFrame:
-    """1 / mean(per-query seconds) (plotting/metrics.py:51-58)."""
-    return times.agg((F.lit(1.0) / F.avg(time_col)).alias("qps"))
-
-
 def latency_percentiles(
     times: DataFrame,
     time_col: str = "latency",
@@ -64,29 +50,6 @@ def latency_percentiles(
         for i, p in enumerate(percentiles)
     ]
     return df.select(*cols)
-
-
-def avg_time_ms(times: DataFrame, time_col: str = "latency") -> DataFrame:
-    """Mean per-query time in milliseconds (plotting/metrics.py:170-176)."""
-    return times.agg((F.avg(time_col) * 1000).alias("avg_time_ms"))
-
-
-def artifact_size_kb(path: str) -> float:
-    """data_size / index_size analog (plotting/metrics.py:118-138): the
-    reference measures backend memory deltas; the Spark artifact is its
-    on-disk footprint (parquet bytes of the table / index layout)."""
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total / 1024.0
-
-
-def queries_per_size(qps_value: float, index_size_kb: float) -> float:
-    """queriessize metric: index_size(kB)/QPS (plotting/metrics.py:255-262)."""
-    return index_size_kb / qps_value if qps_value > 0 else float("inf")
 
 
 def best_search_time(per_run_times: DataFrame, run_col: str = "run",

@@ -13,20 +13,16 @@ This module provides that pipeline shape, Spark-first:
   is queryable/prunable without touching payloads.
 - every payload-touching operator is an Arrow-batched ``mapInPandas`` so
   bytes move once per batch, not once per row;
-- **real decode, three tiers** (``_decode_payload``): PNG payloads decode
-  with the built-in pure-Python codec below (zlib inflate + scanline
-  unfilter — no external library needed, always available); other formats
-  decode through PIL when it is importable (import-gated); payloads
-  neither engine can read fall back to the deterministic byte-derived
-  fake (crc32-seeded, stable across executors) so the pipeline shape
-  stays testable on opaque fixtures.  ``codec="real"`` turns the
-  fallback into a hard error for corpora where silent fakes would be a
-  correctness bug.
+- **real decode**: the feature operators decode WAV and uncompressed AVI
+  payloads with the pure-Python codecs below (no external library) and
+  raise on a payload those codecs cannot read, so a codec regression
+  fails loudly instead of producing made-up features;
+- the metadata planners (``resize_meta``, ``sample_frames``) never touch
+  payloads.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from typing import Iterator, Optional
@@ -42,21 +38,12 @@ MEDIA_SCHEMA = (
     "n_frames:int, duration_s:float>"
 )
 
-try:  # richer-format decoder (JPEG, WebP, ...), if available
-    import PIL.Image  # noqa: F401
-    from io import BytesIO as _BytesIO
-
-    HAS_PIL = True
-except Exception:  # pragma: no cover - container has no PIL
-    HAS_PIL = False
-
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
 # ------------------------------------------------------------- PNG codec
-# Minimal, from-the-spec PNG support (RFC 2083): 8-bit depth, color types
-# 0/2/4/6, non-interlaced, all five scanline filters.  This is the subset
-# every standard encoder (including PIL's default) emits for photos.
+# Minimal, from-the-spec PNG encoder (RFC 2083): 8-bit grayscale,
+# filter 0 — the image payloads of ``synthetic_media``.
 
 def png_encode(gray: np.ndarray) -> bytes:
     """Encode an (H, W) uint8 grayscale array as a valid PNG (filter 0)."""
@@ -72,84 +59,6 @@ def png_encode(gray: np.ndarray) -> bytes:
     raw = b"".join(b"\x00" + gray[y].tobytes() for y in range(h))
     return (PNG_MAGIC + chunk(b"IHDR", ihdr)
             + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b""))
-
-
-def _unfilter(raw: bytes, h: int, w: int, ch: int) -> np.ndarray:
-    """Reverse PNG scanline filtering → (h, w*ch) uint8 samples."""
-    stride = w * ch
-    out = np.empty((h, stride), np.uint8)
-    prev = np.zeros(stride, np.int32)
-    pos = 0
-    for y in range(h):
-        ft = raw[pos]
-        pos += 1
-        line = np.frombuffer(raw[pos:pos + stride], np.uint8).astype(np.int32)
-        pos += stride
-        if ft == 0:  # None
-            rec = line
-        elif ft == 2:  # Up (vectorized — the common photo filter)
-            rec = (line + prev) & 0xFF
-        elif ft in (1, 3, 4):  # Sub / Average / Paeth need a left scan
-            rec = line.copy()
-            for x in range(stride):
-                a = int(rec[x - ch]) if x >= ch else 0
-                b = int(prev[x])
-                if ft == 1:
-                    rec[x] = (line[x] + a) & 0xFF
-                elif ft == 3:
-                    rec[x] = (line[x] + ((a + b) >> 1)) & 0xFF
-                else:
-                    c = int(prev[x - ch]) if x >= ch else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    rec[x] = (line[x] + pr) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ft}")
-        out[y] = rec.astype(np.uint8)
-        prev = rec
-    return out
-
-
-def png_decode(data: bytes) -> np.ndarray:
-    """Decode a PNG payload → (H, W) float32 grayscale in [0, 1].
-
-    Color images reduce by ITU-R BT.601 luminance; alpha is dropped.
-    Raises ValueError on the unsupported corners (16-bit, palette,
-    interlaced) — callers treat that as 'not decodable here' and try PIL."""
-    if data[:8] != PNG_MAGIC:
-        raise ValueError("not a PNG")
-    pos, ihdr, idat = 8, None, []
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack(">I", data[pos:pos + 4])
-        tag = data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body)
-        elif tag == b"IDAT":
-            idat.append(body)
-        elif tag == b"IEND":
-            break
-    if ihdr is None or not idat:
-        raise ValueError("truncated PNG")
-    w, h, depth, ctype, _comp, _filt, interlace = ihdr
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype)
-    if depth != 8 or channels is None or interlace != 0:
-        raise ValueError(f"unsupported PNG variant (depth={depth}, "
-                         f"color={ctype}, interlace={interlace})")
-    raw = zlib.decompress(b"".join(idat))
-    if len(raw) != h * (w * channels + 1):
-        raise ValueError("PNG data length mismatch")
-    samples = _unfilter(raw, h, w, channels).reshape(h, w, channels)
-    if ctype == 0:
-        gray = samples[:, :, 0].astype(np.float32)
-    elif ctype == 4:  # gray + alpha
-        gray = samples[:, :, 0].astype(np.float32)
-    else:  # RGB / RGBA → BT.601 luma
-        rgb = samples[:, :, :3].astype(np.float32)
-        gray = rgb[:, :, 0] * 0.299 + rgb[:, :, 1] * 0.587 + rgb[:, :, 2] * 0.114
-    return gray / 255.0
 
 
 # ------------------------------------------------------------- WAV codec
@@ -180,7 +89,7 @@ def wav_decode(data: bytes) -> tuple[np.ndarray, int]:
     float32 — every int16/32768 is a ≤15-bit dyadic rational), 8-bit is
     unsigned-biased per the spec.  Stereo averages to mono.  Raises
     ValueError on compressed/float formats — callers treat that as 'not
-    decodable here', mirroring png_decode's unsupported corners."""
+    decodable here'."""
     if data[:4] != WAV_MAGIC or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, pcm = 12, None, None
@@ -215,9 +124,8 @@ def wav_decode(data: bytes) -> tuple[np.ndarray, int]:
 
 
 def _decode_audio_payload(content: bytes) -> Optional[tuple[np.ndarray, int]]:
-    """Real audio decode → (float32 samples, sample_rate), or None when no
-    available engine reads the payload (WAV via the pure-Python codec; no
-    compressed-audio analog of PIL exists in this container)."""
+    """Real audio decode → (float32 samples, sample_rate), or None when the
+    pure-Python WAV codec cannot read the payload."""
     if content[:4] == WAV_MAGIC:
         try:
             return wav_decode(content)
@@ -232,7 +140,7 @@ def _decode_audio_payload(content: bytes) -> Optional[tuple[np.ndarray, int]]:
 # and WAV): BI_RGB 24-bit DIB frames ('00db' chunks), bottom-up rows, BGR
 # byte order, rows padded to 4 bytes.  This is the one video container a
 # pure-Python decoder can read exactly — compressed streams ('00dc' with
-# biCompression != 0) raise, and fall to the deterministic fake.
+# biCompression != 0) raise.
 
 AVI_MAGIC = b"RIFF"
 
@@ -278,10 +186,9 @@ def avi_encode(frames: np.ndarray, fps: int = 10) -> bytes:
 
 
 def avi_decode(data: bytes) -> tuple[np.ndarray, float]:
-    """Decode an uncompressed AVI → ((n, H, W) float32 grayscale in
-    [0, 1], fps).  BT.601 luma over the BGR samples; raises ValueError on
-    compressed streams or non-24-bit DIBs (callers treat that as 'not
-    decodable here', like the PNG/WAV codecs)."""
+    """Decode an uncompressed AVI → ((n, H, W, 3) uint8 BGR frames, fps).
+    Raises ValueError on compressed streams or non-24-bit DIBs (callers
+    treat that as 'not decodable here', like the WAV codec)."""
     if data[:4] != AVI_MAGIC or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
     w = h = None
@@ -325,17 +232,9 @@ def avi_decode(data: bytes) -> tuple[np.ndarray, float]:
     return out, fps
 
 
-def avi_decode_luma(data: bytes) -> tuple[np.ndarray, float]:
-    """avi_decode + BT.601 luma → ((n, H, W) float32 in [0, 1], fps)."""
-    bgr, fps = avi_decode(data)
-    f = bgr.astype(np.float32)
-    return (f[..., 2] * 0.299 + f[..., 1] * 0.587 + f[..., 0] * 0.114) / 255.0, fps
-
-
 def _decode_video_payload(content: bytes) -> Optional[tuple[np.ndarray, float]]:
     """Real video decode → ((n, H, W, 3) uint8 BGR frames, fps), or None
-    when no available engine reads the payload (uncompressed AVI only —
-    no ffmpeg analog exists in this container)."""
+    when the pure-Python codec cannot read it (uncompressed AVI only)."""
     if content[:4] == AVI_MAGIC and content[8:12] == b"AVI ":
         try:
             return avi_decode(content)
@@ -344,174 +243,7 @@ def _decode_video_payload(content: bytes) -> Optional[tuple[np.ndarray, float]]:
     return None
 
 
-def _decode_payload(content: bytes) -> Optional[np.ndarray]:
-    """Real decode → (H, W) float32 grayscale in [0, 1], or None if no
-    available engine can read the payload.  PNG uses the pure-Python codec
-    (always available, deterministic); everything else goes through PIL
-    when importable."""
-    if content[:8] == PNG_MAGIC:
-        try:
-            return png_decode(content)
-        except ValueError:
-            pass  # odd PNG variant — fall through to PIL if present
-    if HAS_PIL:
-        try:
-            img = PIL.Image.open(_BytesIO(content)).convert("L")
-            return np.asarray(img, dtype=np.float32) / 255.0
-        except Exception:
-            return None
-    return None
-
-
-def _fake_decode(content: bytes, out_elems: int) -> np.ndarray:
-    """Fallback codec of last resort: deterministic float32 values derived
-    from the payload bytes (crc32-seeded), standing in for decoded
-    pixels/samples when no real engine can read the format.  Stable across
-    processes — the pipeline is reproducible either way."""
-    seed = zlib.crc32(content) & 0xFFFFFFFF
-    rng = np.random.RandomState(seed)
-    return rng.rand(out_elems).astype(np.float32)
-
-
-def decode_image(df: DataFrame, *, max_pixels: int = 64 * 64,
-                 codec: str = "auto") -> DataFrame:
-    """Decode image payloads → (media_id, height, width, pixels ARRAY<FLOAT>).
-
-    ``codec``: ``"auto"`` (default) decodes real pixels where an engine can
-    read the payload (pure-Python PNG codec, then PIL if importable) and
-    falls back to the deterministic fake for opaque bytes; ``"real"``
-    raises on undecodable payloads (corrupt-data must be visible, not
-    faked); ``"fake"`` forces the stub (fixture mode).
-
-    Output size is bounded by ``max_pixels`` regardless of payload size —
-    decoded frames downsample by power-of-two striding, the fake path caps
-    meta dims the same way — so executor memory per batch is predictable."""
-    if codec not in ("auto", "real", "fake"):
-        raise ValueError(f"codec must be auto|real|fake, got {codec!r}")
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_ids, out_h, out_w, out_px = [], [], [], []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"])
-                arr = None if codec == "fake" else _decode_payload(content)
-                if arr is not None:
-                    while arr.shape[0] * arr.shape[1] > max_pixels:
-                        arr = arr[::2, ::2]
-                    h, w = arr.shape
-                    px = arr.astype(np.float32).reshape(-1)
-                else:
-                    if codec == "real":
-                        raise ValueError(
-                            f"media_id={row['media_id']}: payload not decodable "
-                            "by any available engine (PNG codec"
-                            + (", PIL" if HAS_PIL else "; PIL not installed")
-                            + ") and codec='real' forbids the fake fallback")
-                    meta = row["meta"]
-                    h = min(int(meta["height"] or 8), 256)
-                    w = min(int(meta["width"] or 8), 256)
-                    while h * w > max_pixels:
-                        h, w = max(h // 2, 1), max(w // 2, 1)
-                    px = _fake_decode(content, h * w)
-                out_ids.append(row["media_id"]); out_h.append(h); out_w.append(w)
-                out_px.append(px.tolist())
-            yield pd.DataFrame({"media_id": out_ids, "height": out_h,
-                                "width": out_w, "pixels": out_px})
-
-    return (
-        df.filter(F.col("kind") == "image")
-        .select("media_id", "content", "meta")
-        .mapInPandas(_decode, schema="media_id bigint, height int, width int, pixels array<float>")
-    )
-
-
-def extract_features(df: DataFrame, *, dim: int = 64, codec: str = "auto") -> DataFrame:
-    """Feature extraction → (media_id, embedding ARRAY<FLOAT>): the batch
-    embedding-generation stage (BASELINE.json: 'MLlib for batch embedding
-    generation').  Decodable payloads embed real pixel content (resampled
-    grayscale signature — deterministic, engine-independent); opaque ones
-    use the fake under ``codec="auto"``.  At scale this UDF is where an
-    ONNX/torch batch-infer call goes, one model per executor, Arrow
-    batches in — the surrounding plan (select-prune, batch iteration,
-    schema) is exactly what that deployment uses."""
-
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            embs = []
-            for c in pdf["content"]:
-                content = bytes(c)
-                arr = None if codec == "fake" else _decode_payload(content)
-                if arr is not None:
-                    g = arr.reshape(-1)
-                    idx = np.linspace(0.0, g.size - 1, dim)
-                    emb = np.interp(idx, np.arange(g.size), g).astype(np.float32)
-                elif codec == "real":
-                    raise ValueError("payload not decodable and codec='real'")
-                else:
-                    emb = _fake_decode(content, dim)
-                embs.append(emb.tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "embedding": embs})
-
-    return df.select("media_id", "content").mapInPandas(
-        _embed, schema="media_id bigint, embedding array<float>"
-    )
-
-
-def decode_audio(df: DataFrame, *, max_samples: int = 65536,
-                 codec: str = "auto") -> DataFrame:
-    """Decode audio payloads → (media_id, sample_rate, n_samples,
-    samples ARRAY<FLOAT>) — the audio twin of ``decode_image``.
-
-    ``codec`` tiers mirror the image path exactly: ``"auto"`` decodes real
-    samples where the pure-Python WAV codec reads the payload and falls
-    back to the deterministic fake for opaque bytes; ``"real"`` raises on
-    undecodable payloads; ``"fake"`` forces the stub.  Output is bounded
-    by ``max_samples`` via power-of-two striding (decimation), keeping
-    per-batch executor memory predictable whatever the clip length."""
-    if codec not in ("auto", "real", "fake"):
-        raise ValueError(f"codec must be auto|real|fake, got {codec!r}")
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_ids, out_sr, out_n, out_s = [], [], [], []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"])
-                dec = None if codec == "fake" else _decode_audio_payload(content)
-                if dec is not None:
-                    s, sr = dec
-                    while s.size > max_samples:
-                        s = s[::2]
-                        sr = max(sr // 2, 1)
-                else:
-                    if codec == "real":
-                        raise ValueError(
-                            f"media_id={row['media_id']}: payload not decodable "
-                            "by the WAV codec and codec='real' forbids the "
-                            "fake fallback")
-                    meta = row["meta"]
-                    sr = int(meta["sample_rate"] or 8000)
-                    n = min(int((meta["duration_s"] or 1.0) * sr), max_samples)
-                    s = _fake_decode(content, max(n, 1)) * 2.0 - 1.0
-                out_ids.append(row["media_id"]); out_sr.append(sr)
-                out_n.append(s.size); out_s.append(s.astype(np.float32).tolist())
-            yield pd.DataFrame({"media_id": out_ids, "sample_rate": out_sr,
-                                "n_samples": out_n, "samples": out_s})
-
-    return (
-        df.filter(F.col("kind") == "audio")
-        .select("media_id", "content", "meta")
-        .mapInPandas(_decode, schema="media_id bigint, sample_rate int, "
-                                     "n_samples bigint, samples array<float>")
-    )
-
-
-def audio_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Spectral/energy features from decoded audio → (media_id,
     sample_rate, n_samples, rms, zero_crossings, peak, dominant_freq_hz).
 
@@ -522,7 +254,7 @@ def audio_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
     integers (the audio_features oracle relies on this).  dominant_freq_hz
     is the argmax bin of an rFFT magnitude spectrum (numpy), the one
     genuinely float-order-dependent feature — pinned in tests, not
-    oracled."""
+    oracled.  A payload the WAV codec cannot read raises."""
 
     def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -533,18 +265,11 @@ def audio_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
                                     "dominant_freq_hz")}
             for _, row in pdf.iterrows():
                 content = bytes(row["content"])
-                dec = None if codec == "fake" else _decode_audio_payload(content)
-                if dec is not None:
-                    s, sr = dec
-                elif codec == "real":
+                dec = _decode_audio_payload(content)
+                if dec is None:
                     raise ValueError(
-                        f"media_id={row['media_id']}: payload not decodable "
-                        "and codec='real' forbids the fake fallback")
-                else:
-                    meta = row["meta"]
-                    sr = int(meta["sample_rate"] or 8000)
-                    n = max(min(int((meta["duration_s"] or 1.0) * sr), 65536), 1)
-                    s = _fake_decode(content, n) * 2.0 - 1.0
+                        f"media_id={row['media_id']}: payload not decodable")
+                s, sr = dec
                 s64 = s.astype(np.float64)
                 n = s64.size
                 rms = float(np.sqrt(np.sum(s64 * s64) / n)) if n else 0.0
@@ -574,65 +299,7 @@ def audio_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
     )
 
 
-def decode_frames(df: DataFrame, *, every_n: int = 10, max_pixels: int = 64 * 64,
-                  codec: str = "auto") -> DataFrame:
-    """Execute the ``sample_frames`` plan against real payloads: decode
-    every ``every_n``-th frame → (media_id, frame_idx, height, width,
-    pixels ARRAY<FLOAT> luma) — the video twin of ``decode_image``, same
-    codec tiers (AVI codec real / fake for opaque / ``"real"`` raises),
-    same power-of-two pixel bound."""
-    if codec not in ("auto", "real", "fake"):
-        raise ValueError(f"codec must be auto|real|fake, got {codec!r}")
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = {k: [] for k in ("media_id", "frame_idx", "height",
-                                    "width", "pixels")}
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"])
-                dec = None if codec == "fake" else _decode_video_payload(content)
-                if dec is not None:
-                    bgr, _fps = dec
-                    f32 = bgr.astype(np.float32)
-                    luma = (f32[..., 2] * 0.299 + f32[..., 1] * 0.587
-                            + f32[..., 0] * 0.114) / 255.0
-                    idxs = range(0, luma.shape[0], every_n)
-                elif codec == "real":
-                    raise ValueError(
-                        f"media_id={row['media_id']}: payload not decodable "
-                        "by the AVI codec and codec='real' forbids the fake "
-                        "fallback")
-                else:
-                    meta = row["meta"]
-                    n = max(int(meta["n_frames"] or 1), 1)
-                    hh = min(int(meta["height"] or 8), 64)
-                    ww = min(int(meta["width"] or 8), 64)
-                    idxs = range(0, n, every_n)
-                    fake = _fake_decode(content, len(idxs) * hh * ww).reshape(
-                        len(idxs), hh, ww)
-                    luma = dict(zip(idxs, fake))  # fake frames keyed by idx
-                for fi in idxs:
-                    arr = luma[fi]
-                    while arr.shape[0] * arr.shape[1] > max_pixels:
-                        arr = arr[::2, ::2]
-                    rows["media_id"].append(row["media_id"])
-                    rows["frame_idx"].append(fi)
-                    rows["height"].append(arr.shape[0])
-                    rows["width"].append(arr.shape[1])
-                    rows["pixels"].append(arr.reshape(-1).tolist())
-            yield pd.DataFrame(rows)
-
-    return (
-        df.filter(F.col("kind") == "video")
-        .select("media_id", "content", "meta")
-        .mapInPandas(_decode, schema="media_id bigint, frame_idx int, "
-                                     "height int, width int, pixels array<float>")
-    )
-
-
-def video_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
+def video_features(df: DataFrame) -> DataFrame:
     """Clip-level features from decoded video → (media_id, n_frames,
     height, width, fps, mean_luma8, motion).
 
@@ -640,7 +307,8 @@ def video_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
     are computed on the RAW DIB bytes with int64 accumulation, then one
     double division — exact, order-independent arithmetic any engine
     reproduces bit-for-bit from the same integers (the video_features
-    oracle recomputes the synthetic frames closed-form in SQL)."""
+    oracle recomputes the synthetic frames closed-form in SQL).  A payload
+    the AVI codec cannot read raises."""
 
     def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -650,26 +318,16 @@ def video_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
                                     "width", "fps", "mean_luma8", "motion")}
             for _, row in pdf.iterrows():
                 content = bytes(row["content"])
-                dec = None if codec == "fake" else _decode_video_payload(content)
-                if dec is not None:
-                    bgr, fps = dec
-                    n, h, w, _ = bgr.shape
-                    b64 = bgr.astype(np.int64)
-                    mean8 = float(b64.sum()) / (n * h * w * 3) / 255.0
-                    motion = (float(np.abs(b64[1:] - b64[:-1]).sum())
-                              / ((n - 1) * h * w * 3) / 255.0 if n > 1 else 0.0)
-                elif codec == "real":
+                dec = _decode_video_payload(content)
+                if dec is None:
                     raise ValueError(
-                        f"media_id={row['media_id']}: payload not decodable "
-                        "and codec='real' forbids the fake fallback")
-                else:
-                    meta = row["meta"]
-                    n = max(int(meta["n_frames"] or 1), 1)
-                    h = min(int(meta["height"] or 8), 64)
-                    w = min(int(meta["width"] or 8), 64)
-                    fps = float(n) / meta["duration_s"] if meta["duration_s"] else 0.0
-                    fake = _fake_decode(content, 2)
-                    mean8, motion = float(fake[0]), float(fake[1])
+                        f"media_id={row['media_id']}: payload not decodable")
+                bgr, fps = dec
+                n, h, w, _ = bgr.shape
+                b64 = bgr.astype(np.int64)
+                mean8 = float(b64.sum()) / (n * h * w * 3) / 255.0
+                motion = (float(np.abs(b64[1:] - b64[:-1]).sum())
+                          / ((n - 1) * h * w * 3) / 255.0 if n > 1 else 0.0)
                 rows["media_id"].append(row["media_id"])
                 rows["n_frames"].append(n)
                 rows["height"].append(h); rows["width"].append(w)
@@ -690,8 +348,7 @@ def video_features(df: DataFrame, *, codec: str = "auto") -> DataFrame:
 def resize_meta(df: DataFrame, *, max_side: int = 256) -> DataFrame:
     """Resize planning: pure-metadata operator computing target dimensions
     (aspect-preserving, longest side ≤ max_side) WITHOUT touching payloads —
-    runs as a narrow column expression over the whole corpus; the actual
-    pixel resample belongs in decode_image's UDF."""
+    runs as a narrow column expression over the whole corpus."""
     w, h = F.col("meta.width"), F.col("meta.height")
     scale = F.least(F.lit(1.0), F.lit(max_side) / F.greatest(w, h).cast("double"))
     return df.withColumn("target_width", F.ceil(w * scale).cast("int")).withColumn(
@@ -701,7 +358,7 @@ def resize_meta(df: DataFrame, *, max_side: int = 256) -> DataFrame:
 
 def sample_frames(df: DataFrame, *, every_n: int = 10) -> DataFrame:
     """Video frame sampling plan: explode frame indices 0, n, 2n, … from
-    meta.n_frames — pure Spark (no payload IO) producing the work-list the
+    meta.n_frames — pure Spark (no payload IO) producing the work-list a
     frame decoder consumes.  Output: (media_id, frame_idx)."""
     idx = F.sequence(F.lit(0), F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
                      F.lit(every_n))
@@ -736,9 +393,8 @@ def synthetic_media(spark: SparkSession, n: int = 100, *, seed: int = 7) -> Data
     tiers are real: images are PNGs (seeded random grayscale, encoded by
     ``png_encode``), audio clips are WAVs (integer sawtooth PCM,
     ``wav_encode``), and videos are uncompressed AVIs (integer gradient
-    frames, ``avi_encode``) — every decode tier runs end-to-end in any
-    environment.  Opaque-byte fallbacks are exercised by dedicated test
-    fixtures instead."""
+    frames, ``avi_encode``) — the feature operators decode them in any
+    environment."""
     rows = []
     kinds = ["image", "audio", "video"]
     for i in range(n):

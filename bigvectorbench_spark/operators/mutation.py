@@ -25,7 +25,7 @@ of the base table is passed through unshuffled.
 from __future__ import annotations
 
 import time
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +45,6 @@ class VectorTable:
         self._schema = base.schema
         self._log: list[tuple[int, str, Optional[Row]]] = []  # (seq, op, row)
         self._seq = 0
-        self._num_entities = base.count()
         self._max_id = (base.agg(F.max(id_col)).first() or [None])[0]
         if self._max_id is None:
             self._max_id = -1
@@ -69,12 +68,11 @@ class VectorTable:
         return time.perf_counter() - t0
 
     def insert(self, values: dict) -> float:
-        """M3: append a new row; id assigned = num_entities++ when absent
+        """M3: append a new row; id assigned = max id + 1 when absent
         (reference assigns id = current row count, base/module.py:142-152)."""
         if self.id_col not in values:
             values = {**values, self.id_col: self._max_id + 1}
         self._max_id = max(self._max_id, values[self.id_col])
-        self._num_entities += 1
         return self._append(OP_INSERT, values)
 
     def update(self, id_value, values: dict) -> float:
@@ -83,12 +81,7 @@ class VectorTable:
 
     def delete(self, id_value) -> float:
         """M5: tombstone-by-id (milvus delete, module.py:516-530)."""
-        self._num_entities -= 1
         return self._append(OP_DELETE, {self.id_col: id_value})
-
-    @property
-    def num_entities(self) -> int:
-        return self._num_entities
 
     # ------------------------------------------------------------------ view
     def _log_df(self) -> Optional[DataFrame]:
@@ -137,45 +130,3 @@ class VectorTable:
         self.snapshot().write.mode("overwrite").parquet(path)
         self._base = self.spark.read.parquet(path)
         self._log.clear()
-
-
-def iud_latency_sweep(
-    table: VectorTable,
-    test_rows: Sequence[dict],
-    *,
-    update_ids: Optional[Sequence] = None,
-    delete_ids: Optional[Sequence] = None,
-    seed: int = 1,
-) -> DataFrame:
-    """Sequential insert/update/delete latency sweep (runner.py:245-335):
-    one insert per test row (fresh id), one update of a random existing id,
-    one delete of a sampled id without replacement.  Returns the F9 schema
-    (op_id, insert_latency, update_latency, delete_latency) plus the average
-    row the reference appends (results.py:153-155)."""
-    import random
-
-    rng = random.Random(seed)
-    n = len(test_rows)
-    existing = [r[table.id_col] for r in
-                table.snapshot().select(table.id_col).collect()]
-    if update_ids is None:
-        update_ids = [rng.choice(existing) for _ in range(n)]
-    if delete_ids is None:
-        delete_ids = rng.sample(existing, min(n, len(existing)))
-
-    out = []
-    for i, row in enumerate(test_rows):
-        ins = table.insert(dict(row))
-        upd = table.update(update_ids[i], dict(row))
-        dele = table.delete(delete_ids[i]) if i < len(delete_ids) else None
-        out.append((i, ins, upd, dele))
-    df = table.spark.createDataFrame(
-        out, "op_id bigint, insert_latency double, update_latency double, delete_latency double"
-    )
-    avg = df.agg(
-        F.lit(-1).cast("bigint").alias("op_id"),
-        F.avg("insert_latency").alias("insert_latency"),
-        F.avg("update_latency").alias("update_latency"),
-        F.avg("delete_latency").alias("delete_latency"),
-    )
-    return df.unionByName(avg)

@@ -180,15 +180,6 @@ class PQIndex:
 
         return df.mapInArrow(fn, schema=out_schema)
 
-    def decode(self, codes: np.ndarray) -> np.ndarray:
-        """Reconstruct approximations from an (n, m) code matrix (test /
-        error-analysis helper; never used in the search path)."""
-        n = codes.shape[0]
-        out = np.empty((n, self.m * self.dsub), dtype=np.float64)
-        for j in range(self.m):
-            out[:, j * self.dsub:(j + 1) * self.dsub] = self.codebooks[j][codes[:, j]]
-        return out
-
     # ---- search (ADC) ----------------------------------------------------
     def search(
         self,
@@ -426,4 +417,3 @@ def _fit_books_spark(
         np.array(r["cent"], dtype=np.float64).reshape(ksub, dsub)
         for r in sorted(rows, key=lambda r: r["j"])
     ])
-

@@ -34,7 +34,7 @@ from bigvectorbench_spark.operators.knn import (
 
 # auto_nprobe calibration (the hnsw.auto_ef / sparse.auto_m twin —
 # VERDICT r10 ask #5, completing the auto-knob trilogy).  Measured on the
-# SCALE_IVF_AUTO_r11 decade ladder (20k → 632k rows, 32-d/100-center
+# decade ladder (20k → 632k rows, 32-d/100-center
 # blobs, nlist = round(sqrt(n)) — the classic build rule): the minimal
 # nprobe holding mean recall ≥ 0.9 vs exact kNN is
 # (nlist 141 → 2, 251 → 3, 447 → 4, 795 → 6); a FIXED nprobe=4 decays
@@ -111,18 +111,14 @@ class IVFIndex:
         seed: int = 1,
         sample_fraction: float = 1.0,
         max_iter: int = 20,
-        engine: str = "numpy",
         max_sample_rows: int = 1_000_000,
         sort_col: str | None = None,
     ) -> "IVFIndex":
-        """Fit centroids on a (bounded) sample.
-
-        ``engine="numpy"`` (default): collect ≤ ``max_sample_rows`` sampled
-        vectors to the driver and run kmeans++ there — the standard
-        100 TB pattern (fit on a sample, *assignment* stays distributed),
-        and free of MLlib's per-job JVM overhead at small scale.
-        ``engine="mllib"``: distributed MLlib KMeans for when even the
-        sample must not be collected.
+        """Fit centroids on a (bounded) sample: collect ≤
+        ``max_sample_rows`` sampled vectors to the driver and run kmeans++
+        there — the standard 100 TB pattern (fit on a sample, *assignment*
+        stays distributed), and free of MLlib's per-job JVM overhead at
+        small scale.
 
         ``sort_col``: kmeans++ seeding is row-order dependent (the rng
         indexes into the sample matrix), so callers that need the fitted
@@ -132,17 +128,6 @@ class IVFIndex:
         df = train if sample_fraction >= 1.0 else train.sample(sample_fraction, seed=seed)
         if sort_col is not None:
             df = df.orderBy(sort_col)
-        if engine == "mllib":
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            feats = df.select(
-                array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-            model = KMeans(k=nlist, seed=seed, maxIter=max_iter).fit(feats)
-            cents = np.array([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-            return cls(centroids=cents, metric=metric)
-        if engine != "numpy":
-            raise ValueError(f"unknown engine {engine!r}")
         rows = df.select(vec_col).limit(max_sample_rows).collect()
         X = np.array([r[0] for r in rows], dtype=np.float64)
         if len(X) < nlist:
@@ -333,45 +318,6 @@ class IVFIndex:
             F.col(vec_col).alias("vec"),
         )
         return gemm_scan(t, qids, qmat, k, self.metric, self.probe_mask(probes))
-
-
-def candidate_counts(
-    index: IVFIndex,
-    indexed_train: DataFrame,
-    queries: DataFrame,
-    *,
-    nprobe: int | str = 4,
-    vec_col: str = "vec",
-    qid_col: str = "qid",
-) -> DataFrame:
-    """'candidates' metric (reference plotting/metrics.py:241-247): how many
-    train rows each query's probe list actually scans — the cost knob the
-    recall/QPS trade-off turns on.  One aggregation over cell sizes; no
-    scoring."""
-    spark = indexed_train.sparkSession
-    qids, qmat = _collect_queries(queries, qid_col, vec_col)
-    probes = index.probe_lists(qmat, nprobe)
-    cell_sizes = {
-        r[CLUSTER_COL]: r["n"]
-        for r in indexed_train.groupBy(CLUSTER_COL).agg(F.count("*").alias("n")).collect()
-    }
-    rows = [
-        (int(qids[i]), int(sum(cell_sizes.get(int(c), 0) for c in probes[i])))
-        for i in range(len(qids))
-    ]
-    return spark.createDataFrame(rows, "qid bigint, n_candidates bigint")
-
-
-def srp_signature(vec, planes: np.ndarray):
-    """Sign-random-projection bit signature (cosine LSH) as a string column;
-    shared with dedup's embedding path. ``planes``: (num_planes, d)."""
-    bits = [
-        F.when(
-            dist_fns.dot(vec, F.lit(p.tolist()).cast("array<double>")) >= 0, "1"
-        ).otherwise("0")
-        for p in planes
-    ]
-    return F.concat(*bits)
 
 
 def ivf_delta_report(

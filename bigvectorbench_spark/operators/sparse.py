@@ -217,30 +217,11 @@ def load_index(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def text_query_weights(
-    queries: DataFrame,
-    base_post: DataFrame,
-    *,
-    qid_col: str = "qid",
-    text_col: str = "text",
-) -> DataFrame:
-    """(qid, term, qwv) weights for EXTERNAL query text — queries that are
-    not corpus rows (a serving stream, ad-hoc requests): lexical features
-    weighted under the CORPUS statistics via ``stale_weight_postings``
-    (the query is a zero-size 'delta'; unseen terms get the rarest-known
-    idf and simply match nothing).  Feed ``sparse_topk(qweights=...)``."""
-    qp = stale_weight_postings(
-        queries.select(F.col(qid_col).alias("doc_id"), F.col(text_col)),
-        base_post)
-    return qp.select(F.col("doc_id").alias("qid"), "term",
-                     F.col("w").alias("qwv"))
-
-
 # auto_m calibration (the hnsw.auto_ef twin — VERDICT r8 ask #2): the
-# measured operating rule from the 50k→500k Zipf decade
-# (SCALE_SPARSE_r8/r9.json) is LINEAR — m ∝ corpus holds the postings cut
-# fraction ≈14% and recall ≈constant (0.81 → 0.79 across the decade at
-# ~10× under exact search cost), where a FIXED m decays 0.81 → 0.53.
+# measured operating rule from the 50k→500k Zipf decade is LINEAR —
+# m ∝ corpus holds the postings cut fraction ≈14% and recall ≈constant
+# (0.81 → 0.79 across the decade at ~10× under exact search cost), where
+# a FIXED m decays 0.81 → 0.53.
 # m/n_docs = 2000/50k = 20000/500k = 0.04 is the calibrated coefficient;
 # the floor keeps tiny corpora (and the oracle sfs' 500-doc tables, where
 # 0.04·n ≪ 64) at the declared-gate operating point.
@@ -257,10 +238,10 @@ def auto_m(n_docs: int) -> int:
 
 # The operating INVARIANT behind auto_m is the postings cut fraction (the
 # Zipf decade held recall because 0.04·n held the cut at ≈14.2%:
-# SCALE_SPARSE_r9.json 0.1424 → 0.1422).  On a non-Zipf df spectrum the
-# 0.04 coefficient silently lands a different cut — so the general rule
-# (VERDICT r9 ask #4) computes m from the spectrum itself, holding the cut
-# fraction; 0.04·n stays the Zipf-validated fast path (no extra job).
+# 0.1424 → 0.1422).  On a non-Zipf df spectrum the 0.04 coefficient
+# silently lands a different cut — so the general rule (VERDICT r9 ask
+# #4) computes m from the spectrum itself, holding the cut fraction;
+# 0.04·n stays the Zipf-validated fast path (no extra job).
 _AUTO_M_CUT = 0.1424
 
 # df histogram resolution cap: exact df buckets up to this value, then a
@@ -331,14 +312,14 @@ def prune_postings(wpost: DataFrame, m: int | str = "auto",
 
     ``m="auto"`` (default) resolves via :func:`auto_m` — the rule that
     holds recall constant across corpus decades instead of letting a
-    fixed cap decay (SCALE_SPARSE_r8.json: 0.81 → 0.53 over one decade at
-    m=2000).  Pass ``n_docs`` (the corpus row count — a metadata-only
-    parquet count) to skip the fallback distinct-count job over the
-    index; the 0.04 coefficient carries enough slack that the
-    all-docs vs docs-with-≥1-feature distinction never moves m
-    materially.  ``m="spectrum"`` resolves via :func:`auto_m_spectrum` —
-    one extra bounded aggregate over the index that holds the cut
-    fraction on ANY df spectrum (VERDICT r9 ask #4), where the 0.04·n
+    fixed cap decay (0.81 → 0.53 over one decade at m=2000).  Pass
+    ``n_docs`` (the corpus row count — a metadata-only parquet count) to
+    skip the fallback distinct-count job over the index; the 0.04
+    coefficient carries enough slack that the all-docs vs
+    docs-with-≥1-feature distinction never moves m materially.
+    ``m="spectrum"`` resolves via :func:`auto_m_spectrum` — one extra
+    bounded aggregate over the index that holds the cut fraction on ANY
+    df spectrum (VERDICT r9 ask #4), where the 0.04·n
     fast path assumes Zipf."""
     if m == "auto":
         m = auto_m(n_docs if n_docs is not None
@@ -353,36 +334,6 @@ def prune_postings(wpost: DataFrame, m: int | str = "auto",
     )
 
 
-# Filtered-search plan threshold (the sparse G5 analog, VERDICT r9 ask
-# #3) — auto mode picks the PREFILTER logical plan at/below this
-# selectivity, POSTFILTER above.  The 500k-doc sweep
-# (SCALE_FILTER_SPARSE_r10.json) found NO physical flip to encode:
-# Catalyst's PushDownLeftSemiAntiJoin sinks the postfilter's
-# aggregated-frame semi-join below the score aggregate onto the posting
-# side (doc_id is a grouping key and left-side-only), so both modes
-# converge to the same physical plan — measured EQUAL wall at all five
-# selectivities (pruned index: 1.5→10.4 s across 0.1%→85%, pre ≈ post
-# within noise at every point; cost is O(allowed ∩ query-vocab
-# postings), monotone in selectivity, for either authoring).  The knob
-# therefore selects the LOGICAL plan only — kept because the adaptive
-# query pins the reference's G5 policy shape and the convergence itself
-# (declare either; the optimizer picks the physical strategy) is the
-# Spark-first answer to it.  Rows are identical by construction (weights
-# are corpus-global), so no setting can affect results.
-FILTER_SPARSE_PRE_MAX_SEL = 0.40
-
-# Largest allowed-id set the prefilter plan will hint as a BROADCAST
-# build side (8 B/id → ~32 MB at the cap).  Measured at 500k
-# (SCALE_FILTER_SPARSE_r10.json pre_bcast vs pre_smj): the hint is
-# cost-neutral there — AQE already converts the runtime semi-join once
-# the filtered side's map stage reports small.  Kept as a planner assist
-# for the cases AQE can't cover (static planning of a first stage, AQE
-# off); past the cap the id set genuinely doesn't fit a broadcast
-# (billions of ids at 100 TB × high selectivity) and the shuffle is the
-# honest cost.
-BROADCAST_IDS_MAX = 4_000_000
-
-
 def filtered_sparse_topk(
     docs: DataFrame,
     queries: DataFrame,
@@ -394,10 +345,6 @@ def filtered_sparse_topk(
     qid_col: str = "qid",
     wpost: DataFrame | None = None,
     qwpost: DataFrame | None = None,
-    qweights: DataFrame | None = None,
-    mode: str = "pre",
-    n_docs: int | None = None,
-    n_allowed: int | None = None,
 ) -> DataFrame:
     """Filtered sparse search — the sparse twin of the dense filtered kNN
     (Q4): Milvus serves SPARSE_FLOAT_VECTOR ANN under a scalar filter
@@ -412,44 +359,20 @@ def filtered_sparse_topk(
     cost.  Query-side vectors default to the FULL index (``qwpost``):
     query documents need not satisfy the predicate themselves.
 
-    ``mode``: ``"pre"`` (default) semi-joins the postings before scoring;
-    ``"post"`` scores the full query-vocabulary postings and filters the
-    aggregated (qid, doc_id, score) frame before ranking — identical
-    rows; ``"auto"`` picks by measured predicate selectivity against
-    :data:`FILTER_SPARSE_PRE_MAX_SEL` (the G5 pre/post policy shape the
-    dense filtered kNN gets from plans/selectivity.py).  The choice is
-    LOGICAL-plan-only: Catalyst sinks the postfilter semi-join below the
-    score aggregate, physically converging the modes — measured equal at
-    all five selectivities of the 500k sweep (SCALE_FILTER_SPARSE_r10).  ``n_docs`` (metadata-only parquet count) skips
-    the denominator job in auto mode.  ``n_allowed`` (the allowed-doc
-    count, when the caller knows it) lets the prefilter hint the id set
-    as a broadcast build side below :data:`BROADCAST_IDS_MAX` — without
-    it the planner can't size a filtered scan and sort-merge-shuffles
-    the whole index (auto mode counts, so it always knows)."""
+    There is no post-filter plan to choose: a semi-join of the allowed
+    ids on the aggregated (qid, doc_id, score) frame is sunk by Catalyst's
+    PushDownLeftSemiAntiJoin below the score aggregate onto the posting
+    side (doc_id is a grouping key), so both authorings converge to this
+    plan; a 500k-doc sweep measured them equal at selectivities from 0.1%
+    to 85%."""
     if wpost is None:
         wpost = sparse_postings(docs, id_col=id_col, text_col=text_col)
     if qwpost is None:
         qwpost = wpost
     allowed = docs.filter(predicate).select(F.col(id_col).alias("doc_id"))
-    if mode == "auto":
-        total = n_docs if n_docs is not None else docs.count()
-        if n_allowed is None:
-            n_allowed = allowed.count()
-        sel = n_allowed / max(total, 1)
-        mode = "pre" if sel <= FILTER_SPARSE_PRE_MAX_SEL else "post"
-    if mode == "pre":
-        if n_allowed is not None and n_allowed <= BROADCAST_IDS_MAX:
-            allowed = F.broadcast(allowed)
-        fpost = wpost.join(allowed, "doc_id", "left_semi")
-        return sparse_topk(docs, queries, k=k, id_col=id_col,
-                           text_col=text_col, qid_col=qid_col, wpost=fpost,
-                           qwpost=qwpost, qweights=qweights)
-    if mode != "post":
-        raise ValueError(f"unknown filtered-sparse mode {mode!r}; "
-                         "expected pre|post|auto")
+    fpost = wpost.join(allowed, "doc_id", "left_semi")
     return sparse_topk(docs, queries, k=k, id_col=id_col, text_col=text_col,
-                       qid_col=qid_col, wpost=wpost, qwpost=qwpost,
-                       qweights=qweights, allowed=allowed)
+                       qid_col=qid_col, wpost=fpost, qwpost=qwpost)
 
 
 def sparse_topk(
@@ -462,19 +385,10 @@ def sparse_topk(
     qid_col: str = "qid",
     wpost: DataFrame | None = None,
     qwpost: DataFrame | None = None,
-    qweights: DataFrame | None = None,
-    allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Exact sparse inner-product top-k: for each query document, the ``k``
     documents with the highest TF-IDF inner product.  Returns
     (qid, doc_id, score, rank).
-
-    ``allowed``: a one-column (doc_id) frame restricting CANDIDATES at the
-    aggregated-score stage — the POSTFILTER plan of filtered sparse
-    search: scoring is unrestricted, the semi-join lands on the small
-    (qid, doc_id, score) frame before ranking, so results equal the
-    prefilter plan exactly (scores are per-(qid, doc) sums — dropping a
-    doc after aggregation equals dropping its postings before it).
 
     ``queries`` is a one-column frame of query doc ids (``qid_col``) drawn
     from the corpus — queries are sparse vectors themselves, so their
@@ -483,9 +397,6 @@ def sparse_topk(
     full exact index is built in-plan.  ``qwpost``: where the QUERY
     vectors' weights come from (default: ``wpost``) — pass the full index
     here when ``wpost`` is pruned, since real queries arrive untruncated.
-    ``qweights``: a ready (qid, term, qwv) frame for queries that are NOT
-    corpus documents (external text, a query stream — see
-    ``text_query_weights``); when given, ``queries`` is ignored.
 
     Only postings whose term occurs in some query survive the broadcast
     semi-join, so a rare-vocabulary query set touches a sliver of the
@@ -495,16 +406,13 @@ def sparse_topk(
     """
     if wpost is None:
         wpost = sparse_postings(docs, id_col=id_col, text_col=text_col)
-    if qweights is not None:
-        qw = qweights.select("qid", "term", "qwv")
-    else:
-        if qwpost is None:
-            qwpost = wpost
-        qids = queries.select(F.col(qid_col).alias("qid"))
-        # Query-side sparse vectors: the query docs' own rows of the index.
-        qw = qwpost.join(
-            F.broadcast(qids), qwpost["doc_id"] == F.col("qid")
-        ).select("qid", "term", F.col("w").alias("qwv"))
+    if qwpost is None:
+        qwpost = wpost
+    qids = queries.select(F.col(qid_col).alias("qid"))
+    # Query-side sparse vectors: the query docs' own rows of the index.
+    qw = qwpost.join(
+        F.broadcast(qids), qwpost["doc_id"] == F.col("qid")
+    ).select("qid", "term", F.col("w").alias("qwv"))
     # The broadcast term join IS the query-vocabulary filter: only postings
     # whose term occurs in some query survive it, row-identically to the
     # qvocab-distinct semi-join it replaces (r13) — one fewer aggregate and
@@ -517,9 +425,6 @@ def sparse_topk(
     per_doc = scored.groupBy("qid", "doc_id").agg(
         F.round(F.sum("c"), 6).cast("double").alias("score")
     )
-    if allowed is not None:
-        per_doc = per_doc.join(allowed.select("doc_id"), "doc_id",
-                               "left_semi").select("qid", "doc_id", "score")
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id"))
     return (
         per_doc.withColumn("rank", F.row_number().over(w).cast("bigint"))

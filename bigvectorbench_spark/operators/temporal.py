@@ -32,6 +32,7 @@ pipeline extension surface.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -284,3 +285,53 @@ def interval_join(
         "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in payload_fields]
     )
     return inner.unionByName(missing).drop("__lid")
+
+
+def windowed_event_counts(
+    events: DataFrame,
+    *,
+    ts_col: str = "ts",
+    window_duration: str = "1 hour",
+    watermark: str = "1 hour",
+    group_col: Optional[str] = "event_type",
+) -> DataFrame:
+    """Tumbling-window counts with a watermark for late data — works on both
+    a streaming and a batch DataFrame (same plan; batch ignores the
+    watermark), so the oracle can check it in batch mode."""
+    df = events
+    if df.isStreaming:
+        df = df.withWatermark(ts_col, watermark)
+    keys = [F.window(F.col(ts_col), window_duration).alias("w")]
+    if group_col:
+        keys.append(F.col(group_col))
+    out = df.groupBy(*keys).agg(F.count("*").alias("n_events"))
+    return out.select(
+        F.col("w.start").alias("window_start"),
+        *([group_col] if group_col else []),
+        "n_events",
+    )
+
+
+def sessionize(
+    events: DataFrame,
+    *,
+    ts_col: str = "ts",
+    user_col: str = "user_id",
+    gap: str = "30 minutes",
+) -> DataFrame:
+    """Session windows (gap-based).  Streaming uses Spark's native
+    ``session_window``; the same call works in batch for oracle checking.
+    Output: (user_id, session_start, session_end, n_events)."""
+    df = events
+    if df.isStreaming:
+        df = df.withWatermark(ts_col, gap)
+    return (
+        df.groupBy(F.session_window(F.col(ts_col), gap).alias("s"), F.col(user_col))
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            F.col(user_col),
+            F.col("s.start").alias("session_start"),
+            F.col("s.end").alias("session_end"),
+            "n_events",
+        )
+    )

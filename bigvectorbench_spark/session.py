@@ -28,11 +28,9 @@ _DEFAULTS = {
     # (UNABLE_TO_ACQUIRE_MEMORY).  Starting wide and letting AQE
     # coalesce bounds per-task state — but it is NOT free at small
     # scale: measured +45-85% on the multi-stage PPJoin at sf0.1
-    # (2.6s → 3.8s at 64, 4.9s at 256 initial partitions), so the
-    # default stays at the core count and big-corpus jobs turn the
-    # env knob instead (a 100 TB cluster job runs thousands here).
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
-        os.environ.get("SPARK_GRAFT_INITIAL_SHUFFLE", "32"),
+    # (2.6s → 3.8s at 64, 4.9s at 256 initial partitions), so it stays
+    # at the shuffle width here (a 100 TB cluster job runs thousands).
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
     # ARRAY<FLOAT> vectors decode fastest with the vectorized reader.
     "spark.sql.parquet.enableVectorizedReader": "true",
     # Queries are broadcast by design; keep the threshold generous so the

@@ -41,10 +41,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def _parquet_files(path: str) -> list[str]:
     """The part files of a sharded ``name.parquet`` directory (sorted,
     ``_SUCCESS`` and other non-parquet files skipped), or the file itself."""

@@ -5,7 +5,7 @@ into text files (the evidence convention: plans/<round>/<query>_<tag>.txt).
 Usage: python scripts/capture_plans.py OUT_DIR TAG [query ...]
 
 With no query list, captures every declared query.  TAG is appended to
-the filename (e.g. "before" -> plans/r12/knn_euclid_before.txt).  Each
+the filename (e.g. "before" -> plans/pr8/knn_euclid_before.txt).  Each
 query is built and explained without being run, through ``bench.explain``,
 the same function that fingerprints every plan in the bench records; see
 ``bench.normalize`` for the per-session noise it strips.

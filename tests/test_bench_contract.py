@@ -118,3 +118,22 @@ def test_fit_headline_line_small_set_untouched():
     parsed = json.loads(bench.fit_headline_line(out, timings))
     assert parsed["queries"] == {"a": 1.234, "b": 0.567}
     assert "q_omitted" not in parsed
+
+
+def test_normalize_strips_run_to_run_stage_numbering():
+    """Two captures of the same sparse_quantile_recall plan in fresh
+    sessions number their codegen stages and AQE query stages
+    differently; normalised, they are byte-identical, and arguments that
+    are not stage ids survive.  RDD ids, which count the session's earlier
+    RDDs, go too."""
+    import bench
+
+    plans = os.path.join(ROOT, "plans", "pr5")
+    a, b = (open(os.path.join(plans, f"sparse_quantile_recall_{t}.txt")).read()
+            for t in ("before", "before_rerun"))
+    assert a != b
+    assert bench.normalize(a) == bench.normalize(b)
+    assert "[codegen id" not in bench.normalize(a)
+    assert "Arguments: coalesced" in bench.normalize(a)
+    assert bench.normalize("MapPartitionsRDD[471] at applySchema") == (
+        "MapPartitionsRDD[] at applySchema")

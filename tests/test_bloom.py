@@ -23,12 +23,19 @@ def test_params_monotone_and_sane():
         bl.bloom_params(10, 1.5)
 
 
+def _probe_one(df, bm, m, k):
+    """Membership of each row's single value ``v``, through the array
+    probe as a one-element array."""
+    return bl.bloom_probe_any(df.select(F.array("v").alias("vs")), "vs", bm,
+                              m_bits=m, k=k)
+
+
 def test_no_false_negatives(spark):
     items = spark.range(0, 2000).select((F.col("id") * 7919 + 13).alias("v"))
     m, k = bl.bloom_params(2000, 0.01)
     bm = bl.bloom_build(items, "v", m_bits=m, k=k)
-    probed = bl.bloom_probe(items, "v", bm, m_bits=m, k=k)
-    assert probed.filter(~F.col("maybe_member")).count() == 0
+    probed = _probe_one(items, bm, m, k)
+    assert probed.filter(~F.col("any_member")).count() == 0
 
 
 def test_fp_rate_near_theory(spark):
@@ -38,7 +45,7 @@ def test_fp_rate_near_theory(spark):
     m, k = bl.bloom_params(2000, 0.01)
     bm = bl.bloom_build(items, "v", m_bits=m, k=k)
     others = spark.range(0, 20000).select((-F.col("id") * 104729 - 7).alias("v"))
-    fp = bl.bloom_probe(others, "v", bm, m_bits=m, k=k).filter("maybe_member").count()
+    fp = _probe_one(others, bm, m, k).filter("any_member").count()
     assert fp / 20000 < 0.03
 
 
@@ -76,11 +83,11 @@ def test_probe_keeps_all_columns(spark):
     items = spark.createDataFrame([(i,) for i in range(10)], "v bigint")
     m, k = bl.bloom_params(10, 0.01)
     bm = bl.bloom_build(items, "v", m_bits=m, k=k)
-    df = spark.createDataFrame([(1, 5, "a"), (2, 123456, "b")],
-                               "id bigint, v bigint, tag string")
-    out = bl.bloom_probe(df, "v", bm, m_bits=m, k=k)
-    assert set(out.columns) == {"id", "v", "tag", "maybe_member"}
-    rows = {r["id"]: (r["tag"], r["maybe_member"]) for r in out.collect()}
+    df = spark.createDataFrame([(1, [5], "a"), (2, [123456], "b")],
+                               "id bigint, vs array<bigint>, tag string")
+    out = bl.bloom_probe_any(df, "vs", bm, m_bits=m, k=k)
+    assert set(out.columns) == {"id", "vs", "tag", "any_member"}
+    rows = {r["id"]: (r["tag"], r["any_member"]) for r in out.collect()}
     assert rows[1] == ("a", True)
 
 
@@ -135,10 +142,8 @@ def test_multichunk_build_is_byte_identical(spark, monkeypatch):
 
 
 def test_probe_accepts_broadcast_handle(spark):
-    """A pre-created Broadcast handle probes identically to raw bytes —
-    the serving contract: a per-trigger caller (streaming decontamination)
-    broadcasts the bitmap ONCE and reuses the handle instead of
-    re-shipping it every micro-batch."""
+    """A pre-created Broadcast handle probes identically to raw bytes, so
+    a caller probing many frames broadcasts the bitmap once."""
     df = spark.createDataFrame(
         [(1, [10, 20]), (2, [30]), (3, [])], "id bigint, vs array<bigint>")
     inv = spark.createDataFrame([(10,), (30,)], "wh bigint")

@@ -330,10 +330,9 @@ def test_gopher_quality_arrow_matches_expr(spark):
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in e.collect()]
 
 
-def test_decontaminate_arrow_matches_expr(spark):
-    """searchsorted-kernel vs explode+semi-join parity: same contaminated
-    counts per group, including the no-contamination and the
-    empty-eval-inventory (no id % 97 == 0 in range) cases."""
+def test_decontaminate_report_counts(spark):
+    """Contaminated counts per group, including the no-contamination and
+    the empty-eval-inventory (no id % 97 == 0 in range) cases."""
     run = " ".join(f"e{i}" for i in range(8))       # one 8-gram
     rows = [(0, "s", f"eval doc with marker {run} end"),       # eval (0%97)
             (1, "s", f"train sharing {run} yes"),              # contaminated
@@ -342,17 +341,12 @@ def test_decontaminate_arrow_matches_expr(spark):
             (4, "t", "short"),                                 # no 8-gram
             (5, "t", None)]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    a = cur.decontaminate_report(df, method="arrow").orderBy("source")
-    e = cur.decontaminate_report(df, method="expr").orderBy("source")
-    assert a.columns == e.columns
-    got = [tuple(r) for r in a.collect()]
-    assert got == [tuple(r) for r in e.collect()]
+    got = [tuple(r) for r in cur.decontaminate_report(df).orderBy("source").collect()]
     assert got == [("s", 2, 1), ("t", 3, 1)]
     # empty eval inventory: ids shifted so none hit id % 97 == 0
     df2 = df.withColumn("doc_id", F.col("doc_id") + 1)
-    a2 = cur.decontaminate_report(df2, method="arrow").orderBy("source")
-    e2 = cur.decontaminate_report(df2, method="expr").orderBy("source")
-    assert [tuple(r) for r in a2.collect()] == [tuple(r) for r in e2.collect()]
+    got2 = [tuple(r) for r in cur.decontaminate_report(df2).orderBy("source").collect()]
+    assert got2 == [("s", 3, 0), ("t", 3, 0)]
 
 
 # ------------------------------------------------- substring rewrite (apply)

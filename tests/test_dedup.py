@@ -330,23 +330,6 @@ def test_semantic_dup_pairs_cluster_ids_match_assignment(vectors):
         assert r["cluster_id"] == cid[r["id_a"]] == cid[r["id_b"]]
 
 
-def test_semantic_dup_pairs_gemm_matches_expr(vectors):
-    """The per-cluster blocked-GEMM kernel (scale path) and the expression
-    cosine fold (oracle path) must find the identical pair set with
-    cosines equal to float fold noise."""
-    V, df = vectors
-    expr = {(r["id_a"], r["id_b"]): (r["cluster_id"], r["cosine"]) for r in
-            dd.semantic_dup_pairs(df, threshold=0.98, nlist=4,
-                                  method="expr").collect()}
-    gemm = {(r["id_a"], r["id_b"]): (r["cluster_id"], r["cosine"]) for r in
-            dd.semantic_dup_pairs(df, threshold=0.98, nlist=4,
-                                  method="gemm").collect()}
-    assert set(gemm) == set(expr)
-    for k in expr:
-        assert gemm[k][0] == expr[k][0]
-        assert abs(gemm[k][1] - expr[k][1]) < 1e-12
-
-
 # ---------------------------------------------------------- incremental dedup
 
 

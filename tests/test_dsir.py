@@ -119,23 +119,6 @@ def test_dsir_log_mode_matches_math(spark):
         assert got[d]["log_weight_mean"] == pytest.approx(want, rel=1e-12)
 
 
-def test_dsir_topk_deterministic_order(spark):
-    corpus = {0: "alpha beta gamma alpha beta",
-              1: "alpha beta gamma delta epsilon",
-              2: "zeta eta theta iota kappa",
-              17: "alpha beta alpha beta alpha beta"}
-    df = spark.createDataFrame(list(corpus.items()),
-                               "doc_id long, text string")
-    rows = dsir.dsir_topk(df, 3).collect()
-    assert len(rows) == 3
-    ws = [(r["mean_weight"], r["doc_id"]) for r in rows]
-    assert ws == sorted(ws, key=lambda x: (-x[0], x[1]))
-    # top-1 is the most target-like doc
-    all_w = {r["doc_id"]: r["mean_weight"]
-             for r in dsir.dsir_weights(df).collect()}
-    assert rows[0]["mean_weight"] == max(all_w.values())
-
-
 def test_dsir_report_partitions_docs(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rep = dsir.dsir_report(docs).collect()

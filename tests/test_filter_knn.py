@@ -5,7 +5,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.operators import filter_knn as fknn
-from bigvectorbench_spark.plans import selectivity as sel
 from tests.conftest import make_blobs
 
 
@@ -127,26 +126,6 @@ def test_postfilter_knn_agrees_when_overfetch_sufficient(fdata):
     a = [(r["qid"], r["id"]) for r in pre.orderBy("qid", "rank").collect()]
     b = [(r["qid"], r["id"]) for r in post.orderBy("qid", "rank").collect()]
     assert a == b
-
-
-def test_selectivity_estimate_and_plan(fdata):
-    _, labs, train, _ = fdata
-    ratio = sel.estimate_selectivity(train, "label_0 <= 50")
-    true_ratio = (labs[:350, 0] <= 50).mean()
-    assert ratio == pytest.approx(true_ratio, abs=1e-9)
-    assert sel.choose_plan(0.5, 10) == sel.FilterPlan("post", 0.5, 30)
-    assert sel.choose_plan(0.05, 10).strategy == "pre"
-
-
-def test_adaptive_filtered_knn_both_branches(fdata):
-    X, labs, train, test = fdata
-    res, plan = sel.adaptive_filtered_knn(
-        train, test, 5, "euclidean",
-        filter_template=TEMPLATE, query_param_cols=["label_0", "label_1"],
-        representative_predicate="label_0 <= 50 and label_1 <= 50",
-    )
-    assert plan.strategy in ("pre", "post")
-    assert res.count() > 0
 
 
 @pytest.fixture(scope="module")

@@ -137,23 +137,6 @@ def test_load_or_build_caches_and_serves_identical_results(data, tmp_path, spark
     assert r1 == r2 and len(r1) == 125
 
 
-def test_search_work_sublinear_in_shard_size(data):
-    """The scale-mode argument, measured: at fixed ef the beam evaluates
-    far fewer distances than the shard holds — per-query work is bounded
-    by the graph walk, not the corpus (brute force = shard_rows per
-    query)."""
-    from bigvectorbench_spark.operators.hnsw import hnsw_search_work
-
-    train, queries, shards = data
-    rows = hnsw_search_work(shards, queries, k=5, ef=8).collect()
-    assert {r["n_queries"] for r in rows} == {25}
-    total_evals = sum(r["dist_evals"] for r in rows)
-    brute_evals = sum(r["shard_rows"] * r["n_queries"] for r in rows)
-    # 800 rows / 4 shards at ef=8: the beam touches well under half of
-    # each shard (measured ~0.2); brute force touches all of it
-    assert total_evals < 0.5 * brute_evals
-
-
 def test_auto_ef_calibration():
     """ef='auto' reproduces the measured constant-recall ladder (SCALING.md:
     shard 2,500 → 48, shard 25,000 → 384) and floors at exact-search width

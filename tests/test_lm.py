@@ -1,8 +1,7 @@
 """Bigram-LM fluency scoring (operators/lm.py) vs a sequential Python
-oracle: LM counts, OOV accounting, exact mean conditional likelihood, and
-the add-alpha perplexity mode against Python math."""
+oracle: LM counts, OOV accounting and the exact mean conditional
+likelihood."""
 
-import math
 from collections import Counter
 
 import pytest
@@ -95,32 +94,6 @@ def test_custom_train_filter(spark):
     assert rep == {i: want[i][:2] for i in range(8)}
 
 
-def test_perplexity_mode_matches_math(spark):
-    a = 0.1
-    rep = {r["doc_id"]: r["bits_per_bigram"]
-           for r in lm.lm_score_report(_df(spark), mode="perplexity",
-                                       alpha=a).collect()}
-    bg, ctx = _python_lm({0, 7})
-    V = len(ctx)
-    for i, t in TEXTS:
-        tk = [w for w in t.lower().split() if w]
-        prs = list(zip(tk, tk[1:]))
-        if not prs:
-            assert rep[i] is None
-            continue
-        bits = -sum(
-            math.log2((bg.get(p, 0) + a) / (ctx[p[0]] + a * V))
-            if p[0] in ctx else math.log2(1.0 / V)
-            for p in prs
-        ) / len(prs)
-        assert rep[i] == pytest.approx(bits, rel=1e-9), i
-
-
-def test_invalid_mode(spark):
-    with pytest.raises(ValueError):
-        lm.lm_score_report(_df(spark), mode="nope")
-
-
 # ---------------------------------------------------------------- CCNet bins
 
 
@@ -161,20 +134,6 @@ def test_ccnet_bins_exact_partitions_and_order(spark):
                 >= by[(lang, "tail")]["mean_lik"])
     # docs partition: 26 total
     assert sum(r["n_docs"] for r in out) == 26
-
-
-def test_ccnet_bins_approx_mode_partitions(spark):
-    df = _bins_corpus(spark)
-    out = lm.ccnet_bins_report(df, lang_col="lang", mode="approx").collect()
-    assert sum(r["n_docs"] for r in out) == 26
-    names = {r["bin"] for r in out}
-    assert names <= {"head", "middle", "tail", "unscored"}
-    # approx thresholds still respect ordering of bin means where present
-    by = {(r["lang"], r["bin"]): r for r in out}
-    for lang in ("en", "fr"):
-        got = [by[(lang, b)]["mean_lik"] for b in ("head", "middle", "tail")
-               if (lang, b) in by]
-        assert got == sorted(got, reverse=True)
 
 
 def test_ccnet_bins_langid_fallback(spark):

@@ -1,10 +1,10 @@
-"""Log-structured table DML semantics + streaming micro-batch ingest."""
+"""Log-structured table DML semantics and the batch event-time windows."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.operators import mutation as mut
-from bigvectorbench_spark.streaming import ingest as ing
+from bigvectorbench_spark.operators import temporal as tp
 
 
 @pytest.fixture()
@@ -19,13 +19,11 @@ def table(spark, tmp_path):
 
 
 def test_insert_assigns_next_id(table):
-    assert table.num_entities == 10
     table.insert({"vec": [99.0, 0.0], "label": 7})
     snap = table.snapshot()
     assert snap.count() == 11
     row = snap.filter("id = 10").collect()[0]
     assert row["label"] == 7
-    assert table.num_entities == 11
 
 
 def test_update_overwrites_row(table):
@@ -60,32 +58,6 @@ def test_checkpoint_compacts(table, tmp_path):
     assert snap.filter("id = 1").collect()[0]["label"] == 9
 
 
-def test_iud_latency_sweep(table):
-    rows = [{"vec": [float(i), 1.0], "label": 0} for i in range(5)]
-    out = mut.iud_latency_sweep(table, rows).collect()
-    assert len(out) == 6  # 5 ops + average row (op_id = -1)
-    avg = [r for r in out if r["op_id"] == -1][0]
-    assert avg["insert_latency"] > 0
-
-
-def test_stream_upsert_and_read(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, batch in enumerate([[(0, "a"), (1, "b")], [(1, "b2"), (2, "c")]]):
-        spark.createDataFrame(batch, "id bigint, val string").coalesce(1).write.mode(
-            "append"
-        ).json(str(src))
-    stream = spark.readStream.schema("id bigint, val string").json(str(src))
-    q, times = ing.stream_upsert_to_table(
-        stream, str(tmp_path / "table"), str(tmp_path / "ckpt")
-    )
-    view = ing.read_upsert_table(spark, str(tmp_path / "table"))
-    got = {r["id"]: r["val"] for r in view.collect()}
-    assert set(got) == {0, 1, 2}
-    assert got[1] in ("b", "b2")  # one of the versions won deterministically by seq
-    assert len(times) >= 1
-
-
 def test_windowed_event_counts_batch(spark):
     ev = spark.createDataFrame(
         [("2024-01-01 00:10:00", "click"), ("2024-01-01 00:50:00", "click"),
@@ -93,7 +65,7 @@ def test_windowed_event_counts_batch(spark):
         "ts_s string, event_type string",
     ).select(F.col("ts_s").cast("timestamp").alias("ts"), "event_type")
     out = {(str(r["window_start"]), r["event_type"]): r["n_events"]
-           for r in ing.windowed_event_counts(ev).collect()}
+           for r in tp.windowed_event_counts(ev).collect()}
     assert out[("2024-01-01 00:00:00", "click")] == 2
     assert out[("2024-01-01 01:00:00", "view")] == 1
 
@@ -104,7 +76,7 @@ def test_sessionize_batch(spark):
          ("2024-01-01 02:00:00", 1), ("2024-01-01 00:05:00", 2)],
         "ts_s string, user_id bigint",
     ).select(F.col("ts_s").cast("timestamp").alias("ts"), "user_id")
-    out = ing.sessionize(ev).orderBy("user_id", "session_start").collect()
+    out = tp.sessionize(ev).orderBy("user_id", "session_start").collect()
     u1 = [r for r in out if r["user_id"] == 1]
     assert len(u1) == 2  # the 2h gap splits sessions
     assert u1[0]["n_events"] == 2

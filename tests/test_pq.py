@@ -53,7 +53,7 @@ def test_pq_encode_is_argmin_and_reconstruction_close(pq_data):
         d2 = ((S[:, None, :] - idx.codebooks[j][None, :, :]) ** 2).sum(axis=2)
         assert (codes[:, j] == d2.argmin(axis=1)).all()
     # quantization error well below the data scale
-    rec = idx.decode(codes)
+    rec = np.hstack([idx.codebooks[j][codes[:, j]] for j in range(idx.m)])
     rel = np.linalg.norm(rec - V, axis=1) / np.maximum(np.linalg.norm(V, axis=1), 1e-9)
     assert rel.mean() < 0.25
 
@@ -255,7 +255,7 @@ def test_pq_delta_report_accounting(pq_data, spark):
         S = Xs[:, j, :]
         codes[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ idx.codebooks[j].T)
                        + c2[j][None, :]).argmin(axis=1)
-    recon = idx.decode(codes)
+    recon = np.hstack([idx.codebooks[j][codes[:, j]] for j in range(idx.m)])
     err = ((X[:700] - recon) ** 2).sum(axis=1)
 
     def side_mean(mask):

@@ -215,24 +215,6 @@ def test_sparse_delta_report_matches_python(spark, docs):
     assert row["mean_idf_drift"] >= 0
 
 
-def test_text_query_weights_parity_with_in_corpus_queries(spark, docs):
-    """An external query whose text equals a corpus document gets the
-    SAME weights as that document's own index rows (same corpus stats),
-    so qweights-path results equal the in-corpus query path exactly."""
-    base_post = sp.lexical_postings(docs)
-    wpost = sp.sparse_postings(docs, post=base_post).cache()
-    in_q = spark.createDataFrame([(3,)], "qid bigint")
-    expect = sorted((r["rank"], r["doc_id"], r["score"]) for r in
-                    sp.sparse_topk(docs, in_q, k=5, wpost=wpost).collect())
-    text3 = docs.filter("doc_id = 3").collect()[0]["text"]
-    ext_q = spark.createDataFrame([(3, text3)], "qid bigint, text string")
-    got = sorted((r["rank"], r["doc_id"], r["score"]) for r in
-                 sp.sparse_topk(None, None, k=5, wpost=wpost,
-                                qweights=sp.text_query_weights(
-                                    ext_q, base_post)).collect())
-    assert got == expect
-
-
 def test_index_save_load_roundtrip(spark, docs, tmp_path):
     """The weighted index round-trips through parquet with identical rows
     and identical search results (build once, serve across jobs)."""
@@ -251,7 +233,7 @@ def test_index_save_load_roundtrip(spark, docs, tmp_path):
 
 def test_auto_m_rule():
     """auto_m is the calibrated linear rule (m = 0.04·n, floor 64) — the
-    measured decade invariant (SCALE_SPARSE_r9.json): 50k→2000, 500k→20000
+    measured decade invariant: 50k→2000, 500k→20000
     (the hand-picked r8 values), small corpora land on the floor the
     declared gates were calibrated at."""
     assert sp.auto_m(500) == 64          # oracle-sf corpora: the floor
@@ -309,56 +291,6 @@ def test_filtered_sparse_plan_semi_join_no_cartesian(spark, docs):
         if "NestedLoopJoin" in line:
             # only the broadcast one-row stats cross survives
             assert "BroadcastNestedLoopJoin" in line and "Cross" in line
-
-
-def test_filtered_sparse_modes_identical(spark, docs):
-    """pre / post / auto return identical rows (weights are corpus-global;
-    the postfilter semi-join on the aggregated score frame drops exactly
-    the rows the prefilter never scored) — the plan knob is pure cost."""
-    wpost = sp.sparse_postings(docs).cache()
-    queries = spark.createDataFrame([(0,), (3,)], "qid bigint")
-    frames = {
-        mode: sorted(map(tuple, sp.filtered_sparse_topk(
-            docs, queries, predicate="source = 'web'", k=5, wpost=wpost,
-            mode=mode).collect()))
-        for mode in ("pre", "post", "auto")
-    }
-    assert frames["pre"] == frames["post"] == frames["auto"]
-    assert len(frames["pre"]) > 0
-    with pytest.raises(ValueError, match="pre|post|auto"):
-        sp.filtered_sparse_topk(docs, queries, predicate="source = 'web'",
-                                k=5, wpost=wpost, mode="bogus")
-
-
-def test_filtered_sparse_auto_picks_by_selectivity(spark, docs, monkeypatch):
-    """auto mode flips at FILTER_SPARSE_PRE_MAX_SEL: a 5/7 predicate
-    (~0.71) picks POST, and after forcing the threshold above it the same
-    predicate picks PRE — observed via the ANALYZED plan (the authored
-    shape: the prefilter semi-joins the POSTING side below the score
-    aggregate, the postfilter semi-joins the aggregated frame above it;
-    the OPTIMIZED plan is deliberately not asserted — Catalyst's
-    PushDownLeftSemiAntiJoin may sink the postfilter semi below the
-    aggregate, converging the plans at small scale)."""
-    wpost = sp.sparse_postings(docs).cache()
-    queries = spark.createDataFrame([(0,)], "qid bigint")
-
-    def _semi_above_agg(df):
-        plan = df._jdf.queryExecution().analyzed().toString()
-        semi = plan.find("LeftSemi")
-        agg = plan.find("Aggregate")
-        assert semi != -1 and agg != -1
-        # the plan prints top-down: the POSTFILTER semi sits ABOVE
-        # (before) the score aggregate, the PREFILTER semi below it.
-        return semi < agg
-
-    post = sp.filtered_sparse_topk(docs, queries, predicate="source = 'web'",
-                                   k=5, wpost=wpost, mode="auto")
-    assert _semi_above_agg(post)
-
-    monkeypatch.setattr(sp, "FILTER_SPARSE_PRE_MAX_SEL", 0.99)
-    pre = sp.filtered_sparse_topk(docs, queries, predicate="source = 'web'",
-                                  k=5, wpost=wpost, mode="auto")
-    assert not _semi_above_agg(pre)
 
 
 def test_auto_m_spectrum_holds_cut_fraction():

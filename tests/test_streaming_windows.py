@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from bigvectorbench_spark.streaming.ingest import sessionize, windowed_event_counts
+from bigvectorbench_spark.operators.temporal import sessionize, windowed_event_counts
 
 
 def _write_file(path, rows, mtime):

@@ -15,14 +15,16 @@ def test_tokens_and_counts(spark):
     assert _eval(spark, tx.tokens(F.col("t")), "") == []
     assert _eval(spark, tx.token_count(F.col("t")), "a b  c") == 3
     assert _eval(spark, tx.char_count(F.col("t")), "abc") == 3
-    assert _eval(spark, tx.avg_token_len(F.col("t")), "ab abcd") == pytest.approx(3.0)
-    assert _eval(spark, tx.avg_token_len(F.col("t")), "") == 0.0
+    assert _eval(spark, tx.avg_token_len_from_tokens(tx.tokens(F.col("t"))),
+                 "ab abcd") == pytest.approx(3.0)
+    assert _eval(spark, tx.avg_token_len_from_tokens(tx.tokens(F.col("t"))),
+                 "") == 0.0
 
 
 def test_word_shingles(spark):
-    got = _eval(spark, tx.word_shingles(F.col("t"), 2), "a b c a b")
+    got = _eval(spark, tx.shingles_from_tokens(tx.tokens(F.col("t")), 2), "a b c a b")
     assert sorted(got) == ["a b", "b c", "c a"]  # distinct
-    assert _eval(spark, tx.word_shingles(F.col("t"), 3), "a b") == []
+    assert _eval(spark, tx.shingles_from_tokens(tx.tokens(F.col("t")), 3), "a b") == []
 
 
 def test_char_ngrams(spark):
@@ -31,7 +33,8 @@ def test_char_ngrams(spark):
 
 
 def test_ratios(spark):
-    assert _eval(spark, tx.stopword_ratio(F.col("t")), "the cat and dog") == pytest.approx(0.5)
+    assert _eval(spark, tx.stopword_ratio_from_tokens(tx.tokens(F.col("t"))),
+                 "the cat and dog") == pytest.approx(0.5)
     assert _eval(spark, tx.punct_ratio(F.col("t")), "ab,.") == pytest.approx(0.5)
     assert _eval(spark, tx.digit_ratio(F.col("t")), "a1b2") == pytest.approx(0.5)
     assert _eval(spark, tx.punct_ratio(F.col("t")), "") == 0.0
@@ -40,25 +43,29 @@ def test_ratios(spark):
 def test_quality_score_ordering(spark):
     good = "the quick brown fox jumps over the lazy dog and runs far away to the hills"
     bad = "@@@@ #### 1234 !!!! %%%%"
-    qg = _eval(spark, tx.quality_score(F.col("t")), good)
-    qb = _eval(spark, tx.quality_score(F.col("t")), bad)
+    q = tx.quality_score_from_tokens(tx.tokens(F.col("t")), F.col("t"))
+    qg = _eval(spark, q, good)
+    qb = _eval(spark, q, bad)
     assert 0.0 <= qb < qg <= 1.0
 
 
 def test_lang_id(spark):
-    assert _eval(spark, tx.lang_id(F.col("t")), "the cat is on the mat") == "en"
-    assert _eval(spark, tx.lang_id(F.col("t")), "der hund und die katze ist") == "de"
-    assert _eval(spark, tx.lang_id(F.col("t")), "le chat est dans la maison et") == "fr"
-    assert _eval(spark, tx.lang_id(F.col("t")), "el gato es una mascota que") == "es"
-    assert _eval(spark, tx.lang_id(F.col("t")), "我是的了") == "zh"
-    assert _eval(spark, tx.lang_id(F.col("t")), "xyzzy plugh") == "en"  # fallback
+    tk = tx.tokens(F.col("t"))
+    lang = tx.lang_id_from_tokens(tk, F.concat_ws("", tk))
+    assert _eval(spark, lang, "the cat is on the mat") == "en"
+    assert _eval(spark, lang, "der hund und die katze ist") == "de"
+    assert _eval(spark, lang, "le chat est dans la maison et") == "fr"
+    assert _eval(spark, lang, "el gato es una mascota que") == "es"
+    assert _eval(spark, lang, "我是的了") == "zh"
+    assert _eval(spark, lang, "xyzzy plugh") == "en"  # fallback
 
 
 def test_doc_fingerprint_similarity(spark):
     a = "one two three four five six seven eight nine ten"
-    fa = _eval(spark, tx.doc_fingerprint(F.col("t")), a)
-    fb = _eval(spark, tx.doc_fingerprint(F.col("t")), a + " eleven")
-    fc = _eval(spark, tx.doc_fingerprint(F.col("t")), "totally different words entirely here now")
+    fp = tx.fingerprint_from_tokens(tx.tokens(F.col("t")))
+    fa = _eval(spark, fp, a)
+    fb = _eval(spark, fp, a + " eleven")
+    fc = _eval(spark, fp, "totally different words entirely here now")
     assert fa == sorted(fa)
     overlap_ab = len(set(fa) & set(fb))
     overlap_ac = len(set(fa) & set(fc))
@@ -126,24 +133,6 @@ def test_hashed_embedding_matches_python(spark):
 
     for i, t in enumerate(texts):
         assert got[i] == py(t), i
-
-
-def test_hashed_embedding_unit_norm_and_null(spark):
-    import math
-
-    from pyspark.sql import functions as F
-    from bigvectorbench_spark.functions import embed as em
-    from bigvectorbench_spark.functions import text as tx
-
-    df = spark.createDataFrame(
-        [(1, "some words in here"), (2, "")], "doc_id long, text string")
-    rows = {r["doc_id"]: r["u"] for r in df.select(
-        "doc_id",
-        em.hashed_embedding_unit(em.token_hashes(tx.tokens(F.col("text")))).alias("u"),
-    ).collect()}
-    assert rows[2] is None  # empty doc -> NULL, no divide-by-zero
-    norm = math.sqrt(sum(x * x for x in rows[1]))
-    assert norm == pytest.approx(1.0, rel=1e-12)
 
 
 def test_hashed_embedding_power_of_two_guard(spark):
