@@ -1620,11 +1620,10 @@ def _docs_wide(spark, sf):
     """documents, spread across cores: the table arrives as ONE parquet file
     (one scan partition), which would run every per-doc text pipeline on a
     single thread.  The shuffle moves only the raw text once — cheap — and
-    every downstream stage then uses the full cluster.  (At 100 TB the
-    source would already be many files and this becomes a no-op choice.)"""
-    import os
-    par = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return load_table(spark, sf, "documents").repartition(par)
+    every downstream stage then uses the full cluster, as wide as the
+    session's ``defaultParallelism``.  (At 100 TB the source would already
+    be many files and this becomes a no-op.)"""
+    return dd._widen(load_table(spark, sf, "documents"))
 
 
 def q_token_stats(spark, sf):
@@ -2056,8 +2055,7 @@ def q_ccnet_bins(spark, sf):
     docs with no in-vocabulary bigram so the report partitions the
     corpus.  Buckets use the
     corpus's pre-classified lang column (CCNet buckets on its fastText
-    output, which in a warehouse IS a column; the marker-n-gram lang_id
-    fallback is the lang_col=None mode, pytest-covered)."""
+    output, which in a warehouse IS a column)."""
     from bigvectorbench_spark.operators import lm
     return (lm.ccnet_bins_report(_docs_wide(spark, sf), lang_col="lang")
             .orderBy("lang", "bin"))

@@ -23,9 +23,10 @@ A failed query writes {"query", "error"} and nulls the headline value.
   materialized but never collected, the action a cluster job performs.
   ``runs`` records every run, not just the minimum, so machine load shows
   as uniform inflation while a plan regression moves the minimum itself.
-- ``cold_s`` is run 1, which starts after the previous query's
-  ``clearCache``; later runs may reuse frames run 1 persisted, so
-  ``min_s`` is a warm number.
+- Every run starts with an empty cache: ``clearCache`` follows each run,
+  so no run reuses a frame an earlier run persisted, and ``min_s`` is the
+  best of N runs that each build their persists anew.  ``cold_s`` is
+  run 1; ``persisted_rdds`` counts what run 1 left persisted.
 - ``build_s`` (the query builder's eager driver jobs: fits, collects,
   envelope counts) and ``exec_s`` split run 1's clock.  The Spark counts
   are read from the UI REST API (``vbench.spans.SparkStats``) for run 1's
@@ -112,10 +113,12 @@ def run_query(spark, stats: SparkStats, name: str, fn, sf_dir: str,
             # Jobs between runs (none are expected) stay out of run 1's counts.
             sc.setJobGroup("bench-idle", "idle")
             if i == 0:
-                frame, build_s = df, t1 - t0
-        t0 = time.perf_counter()
-        text = explain(frame)
-        plan_s = time.perf_counter() - t0
+                build_s = t1 - t0
+                t0 = time.perf_counter()
+                text = explain(df)
+                plan_s = time.perf_counter() - t0
+                persisted = stats.persisted_rdds()
+            spark.catalog.clearCache()
         st = stats.group(f"{group}0")
         return {
             "query": name, "runs": [round(t, 3) for t in times],
@@ -127,7 +130,7 @@ def run_query(spark, stats: SparkStats, name: str, fn, sf_dir: str,
             "job_s": [round(e - s, 3) for s, e in st["intervals"]],
             "shuffle_mb": round(st["shuffle_mb"], 3),
             "spill_mb": round(st["spill_mb"], 3),
-            "persisted_rdds": stats.persisted_rdds(),
+            "persisted_rdds": persisted,
             "plan": plan_shape(text),
         }
     except Exception as e:  # one broken query must not kill the run

@@ -14,8 +14,15 @@ This package re-expresses that surface Spark-first:
 - every operator is a function ``DataFrame -> DataFrame`` built from
   ``pyspark.sql.functions`` so Catalyst can push filters, prune columns and
   broadcast the (always small) query side;
-- the only Python-side kernels are Arrow-batched (``mapInArrow`` GEMM
-  scoring) and only where they beat whole-stage codegen.
+- Python-side kernels run only where they beat whole-stage codegen.  The
+  Arrow ones share one idiom, ``operators.knn.arrow_map`` (the ANN scans,
+  index builds, Bloom probe and dedup signatures; Bloom's build fold and
+  merge emit once per partition and call ``mapInArrow`` directly).  Nine
+  pandas-API kernels remain: the HNSW build and search
+  (``hnsw.py``), BPE segmentation (``bpe.py``), the audio and video
+  features (``multimodal.py``), the Gopher quality and repetition flags
+  (``curation.py``), MMR reranking (``retrieval.py``, ``applyInPandas``)
+  and the Spark-engine PQ codebook fit (``pq.py``).
 
 Convenience API (full surface lives in the submodules)::
 

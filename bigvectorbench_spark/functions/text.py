@@ -76,13 +76,6 @@ def shingles_from_tokens(tk: Column, n: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of the lowercased text."""
-    t = F.lower(F.trim(text))
-    idx = _index_range(F.length(t) - (n - 1))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, n)))
-
-
 def stopword_ratio_from_tokens(tk: Column, stopwords: Sequence[str] = EN_STOPWORDS) -> Column:
     """Stopword fraction from a MATERIALIZED tokens column."""
     sw = F.lit(list(stopwords))

@@ -31,6 +31,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigvectorbench_spark.operators.knn import arrow_map, list_parts
+
 
 def _next_prime(n: int) -> int:
     """Smallest prime ≥ n (trial division — n here is ≤ a few billion, so
@@ -160,54 +162,6 @@ def bloom_build(df: DataFrame, col: str, *, m_bits: int, k: int) -> bytes:
     return out.tobytes()
 
 
-def _flat_positions(pos_col) -> tuple[np.ndarray, np.ndarray]:
-    """(flat int64 positions, per-row element counts) from an Arrow list
-    array — zero pandas, (near-)zero copy: ``flatten()`` respects slices,
-    lengths come from the compute kernel."""
-    import pyarrow.compute as pc
-
-    lens = pc.list_value_length(pos_col).to_numpy(zero_copy_only=False)
-    lens = np.nan_to_num(lens).astype(np.int64)
-    flat = pos_col.flatten().to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False)
-    return flat, lens
-
-
-def _probe_frame(df: DataFrame, pos_expr, bloom, fold, out_col: str):
-    """mapInArrow driver for the probe: append ``__pos`` JVM-side,
-    run ``fold(bitmap, flat, lens) -> bool ndarray`` per batch on the raw
-    Arrow buffers (the earlier to_pandas form put the full 500k-doc bloom
-    report at 60.3s; this flat-buffer path halves it to 31.0s), emit the
-    original columns plus the boolean.
-
-    ``bloom`` may be raw bytes OR an already-created ``Broadcast`` handle,
-    so a caller that probes many frames ships the bitmap once."""
-    import pyarrow as pa
-    from pyspark.broadcast import Broadcast
-
-    bc = (bloom if isinstance(bloom, Broadcast)
-          else df.sparkSession.sparkContext.broadcast(bloom))
-    with_pos = df.withColumn("__pos", pos_expr)
-    keep = [f.name for f in with_pos.schema if f.name != "__pos"]
-
-    def probe(batches):
-        bm = np.frombuffer(bc.value, dtype=np.uint8)
-        for batch in batches:
-            idx = batch.schema.get_field_index("__pos")
-            flat, lens = _flat_positions(batch.column(idx))
-            res = fold(bm, flat, lens)
-            arrays = [batch.column(batch.schema.get_field_index(c))
-                      for c in keep]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [pa.array(res)], keep + [out_col])
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
-         for f in with_pos.schema if f.name != "__pos"]
-        + [f"{out_col} boolean"])
-    return with_pos.mapInArrow(probe, schema=out_schema)
-
-
 def bloom_probe_any(df: DataFrame, arr_col: str, bloom, *,
                     m_bits: int, k: int,
                     out_col: str = "any_member") -> DataFrame:
@@ -215,21 +169,26 @@ def bloom_probe_any(df: DataFrame, arr_col: str, bloom, *,
     probes positive — the per-document contamination shape, with NO explode
     and NO shuffle (positions flatten JVM-side; the kernel segments the
     flat hit stream back into rows).  An empty array probes False."""
-    k_ = k
+    import pyarrow as pa
 
-    def fold(bm, flat, lens):
-        hit_w = ((bm[flat >> 3] >> (flat & 7)) & 1).reshape(-1, k_).all(axis=1)
-        n_rows = len(lens)
-        wlens = lens // k_
-        any_row = np.zeros(n_rows, dtype=bool)
+    def probe(batch, bitmap):
+        # the kernel reads the raw Arrow buffers (the earlier to_pandas form
+        # put the full 500k-doc bloom report at 60.3 s; this flat-buffer
+        # path halves it to 31.0 s): one hit per k-position window, then
+        # ANY over each row's windows
+        bm = np.frombuffer(bitmap, dtype=np.uint8)
+        flat, offsets = list_parts(batch.column("__pos"))
+        hit_w = ((bm[flat >> 3] >> (flat & 7)) & 1).reshape(-1, k).all(axis=1)
+        wlens = np.diff(offsets) // k
+        any_row = np.zeros(len(wlens), dtype=bool)
         nz = wlens > 0
         if nz.any():
-            ends = np.cumsum(wlens)
-            starts = ends - wlens
+            starts = np.cumsum(wlens) - wlens
             any_row[nz] = np.maximum.reduceat(
                 hit_w.astype(np.int8), starts[nz]).astype(bool)
-        return any_row
+        return [any_row]
 
-    pos = F.flatten(F.transform(
-        F.col(arr_col), lambda v: bloom_positions(v, m_bits, k)))
-    return _probe_frame(df, pos, bloom, fold, out_col)
+    with_pos = df.withColumn("__pos", F.flatten(F.transform(
+        F.col(arr_col), lambda v: bloom_positions(v, m_bits, k))))
+    return arrow_map(with_pos, probe, [(out_col, pa.bool_())], state=bloom,
+                     keep=df.columns)

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from bigvectorbench_spark.functions import distance as dx
 from bigvectorbench_spark.operators.knn import (
-    _check_envelope, _collect_queries, arrow_rows, topk_scan, topk_window)
+    _check_envelope, _collect_queries, arrow_map, arrow_rows, topk_scan, topk_window)
 
 _OUT_SCHEMA = "qid bigint, id bigint, dist double, rank int"
 
@@ -142,23 +142,6 @@ class BQIndex:
         X = np.array([r[0] for r in rows], dtype=np.float64)
         return cls(thresholds=[float(x) for x in X.mean(axis=0)])
 
-    # ---- persistence (index artifact, shareable across jobs) -------------
-    def save(self, spark, path: str) -> None:
-        """Persist the per-dimension thresholds as parquet (the IVFIndex/
-        PQIndex save convention) — with the packed-code table this is the
-        whole BQ index: build once, serve from storage."""
-        rows = [(i, float(t)) for i, t in enumerate(self.thresholds)]
-        spark.createDataFrame(
-            rows, "dim int, threshold double"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "BQIndex":
-        rows = spark.read.parquet(path).orderBy("dim").collect()
-        if not rows:
-            raise ValueError(f"no thresholds at {path}")
-        return cls(thresholds=[r["threshold"] for r in rows])
-
     def encode(
         self,
         df: DataFrame,
@@ -188,38 +171,13 @@ class BQIndex:
                 *cols, pack_thresholds(F.col(vec_col), self.thresholds).alias(out_col))
 
         import pyarrow as pa
-        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-        work_cols = list(dict.fromkeys([*cols, vec_col]))
-        work = df.select(*work_cols)
-        out_schema = StructType(
-            [work.schema[c] for c in cols]
-            + [StructField(out_col, ArrayType(LongType()))])
-        bc = df.sparkSession.sparkContext.broadcast(
-            np.asarray(self.thresholds, dtype=np.float64))
-        vec_idx = work_cols.index(vec_col)
-        keep_idx = [work_cols.index(c) for c in cols]
-        d = self.d
-        n_words = (d + 63) // 64
+        def pack(batch, thr):
+            return [pack_np(arrow_rows(batch.column(vec_col)), thr)]
 
-        def fn(batches):
-            thr = bc.value
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                X = arrow_rows(batch.column(vec_idx))
-                W = pack_np(X, thr)
-                yield pa.RecordBatch.from_arrays(
-                    [*[batch.column(i) for i in keep_idx],
-                     pa.FixedSizeListArray.from_arrays(
-                         pa.array(W.ravel(), pa.int64()), n_words).cast(
-                         pa.list_(pa.int64()))],
-                    schema=pa.schema(
-                        [batch.schema.field(i) for i in keep_idx]
-                        + [pa.field(out_col, pa.list_(pa.int64()))]),
-                )
-
-        return work.mapInArrow(fn, schema=out_schema)
+        work = df.select(*dict.fromkeys([*cols, vec_col]))
+        return arrow_map(work, pack, [(out_col, pa.list_(pa.int64()))],
+                         state=np.asarray(self.thresholds, dtype=np.float64), keep=cols)
 
     def search(
         self,

@@ -584,19 +584,6 @@ def gopher_repetition_report(df: DataFrame, *, text_col: str = "text",
 # ------------------------------------------------------ eval decontamination
 
 
-def window_hashes(tk: Column, n: int, *, distinct: bool = False) -> Column:
-    """Portable 60-bit hashes of every n-token window (NOT n-distinct
-    shingles: positions matter for occurrence counting).  Uses
-    `portable_hash60` so oracles can reproduce the keys; the 8-byte hash —
-    not the window text — is what downstream joins shuffle."""
-    idx = F.when(F.size(tk) >= n,
-                 F.sequence(F.lit(1), F.size(tk) - (n - 1))
-                 ).otherwise(F.lit([]).cast("array<int>"))
-    wins = F.transform(
-        idx, lambda i: tx.portable_hash60(F.concat_ws(" ", F.slice(tk, i, n))))
-    return F.array_distinct(wins) if distinct else wins
-
-
 # Rolling-hash constants, shared verbatim with the oracle SQL: per-token
 # hashes are the portable 60-bit md5 value reduced to 40 bits, window
 # hashes fold them with acc·P + x (mod M).  Bounds: acc < M = 2^41 and
@@ -623,7 +610,7 @@ def token_hashes(tk: Column) -> Column:
 def rolling_window_hashes(th: Column, n: int) -> Column:
     """Window hashes from a MATERIALIZED token-hash column: the n-token
     window at position i hashes to the polynomial fold of th[i..i+n−1].
-    This replaces md5-of-the-window-STRING (window_hashes): the md5 input
+    This replaces an md5 of each window STRING: the md5 input
     volume drops from n× the corpus text to 1× (one short token each),
     and each window costs n−1 multiply-add-mods unrolled into one codegen
     expression — measured 24.9s → 6.5s for the hash stage on the 500k-doc

@@ -18,16 +18,17 @@ Scale design notes (the whole point of these implementations):
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import text as tx
 from bigvectorbench_spark.functions import distance as dist_fns
-from bigvectorbench_spark.operators.knn import arrow_rows
+from bigvectorbench_spark.operators.knn import arrow_map, arrow_rows, list_parts
 
 def _widen(df: DataFrame) -> DataFrame:
     """Small parquet inputs arrive as 1-2 partitions; expression-heavy
@@ -58,14 +59,6 @@ def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         .groupBy("text_key")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("canonical_id"))
     )
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one representative (min id) per identical-content group."""
-    w_key = text_key(F.col(text_col)).alias("__key")
-    keyed = df.withColumn("__key", w_key)
-    winners = keyed.groupBy("__key").agg(F.min(id_col).alias(id_col))
-    return keyed.join(winners, ["__key", id_col], "inner").drop("__key")
 
 
 # ------------------------------------------------- n-gram Jaccard (inverted index)
@@ -169,34 +162,23 @@ def _hot_order_prefix(
     finally:
         freq.unpersist()
     hotmap = {r["shingle"]: r["freq"] for r in hot_rows}
-    bc = sets_df.sparkSession.sparkContext.broadcast(hotmap)
     thr, max_f = float(threshold), max_shingle_freq
 
-    def _prefix(batches):
-        import math as _math
+    def _prefix(batch, hm):
+        ids_out, sh_out = [], []
+        for did, sh in zip(batch.column("id").to_pylist(), batch.column("sh").to_pylist()):
+            if max_f is not None:
+                sh = [s for s in sh if hm.get(s, 1) <= max_f]
+            if not sh:
+                continue
+            sh.sort(key=lambda s: (hm.get(s, 1), s))
+            plen = len(sh) - math.ceil(thr * len(sh)) + 1
+            ids_out.extend([did] * plen)
+            sh_out.extend(sh[:plen])
+        return [ids_out, sh_out]
 
-        import pyarrow as pa
-
-        hm = bc.value
-        for batch in batches:
-            ids_out, sh_out = [], []
-            ids = batch.column("id").to_pylist()
-            shs = batch.column("sh").to_pylist()
-            for did, sh in zip(ids, shs):
-                if max_f is not None:
-                    sh = [s for s in sh if hm.get(s, 1) <= max_f]
-                if not sh:
-                    continue
-                sh.sort(key=lambda s: (hm.get(s, 1), s))
-                plen = len(sh) - _math.ceil(thr * len(sh)) + 1
-                ids_out.extend([did] * plen)
-                sh_out.extend(sh[:plen])
-            if ids_out:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_out, pa.int64()), pa.array(sh_out, pa.int64())],
-                    ["id", "shingle"])
-
-    return sets_df.mapInArrow(_prefix, "id bigint, shingle bigint")
+    return arrow_map(sets_df, _prefix, [("id", pa.int64()), ("shingle", pa.int64())],
+                     state=hotmap)
 
 
 def ngram_jaccard_pairs(
@@ -349,10 +331,6 @@ def minhash_sets(
     ``minhash_from_hashes`` (same universal-hash params, same modulus); the
     Column form evaluates num_perm interpreted ops per shingle and is kept
     for single-use contexts and as the parity oracle."""
-    import pyarrow as pa
-
-    params = np.array(_perm_params(num_perm, seed), dtype=np.int64)
-    bc = sets_df.sparkSession.sparkContext.broadcast(params)
 
     # Per-chunk shingle budget: the permuted-hash matrix H is
     # (shingles, num_perm) int64 — unchunked, a 10k-doc Arrow batch of
@@ -363,46 +341,35 @@ def minhash_sets(
     # results are bit-identical (chunks split on document boundaries).
     _CHUNK = 1 << 16
 
-    def kernel(batches):
-        ab = bc.value
+    def kernel(batch, ab):
         a, b = ab[:, 0], ab[:, 1]
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            lv = batch.column("sh")
-            counts = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-            offsets = np.concatenate([[0], np.cumsum(counts)])
-            flat = lv.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            sigs = np.full((n, len(a)), _MERSENNE, dtype=np.int64)
-            lo = 0  # first doc of the current chunk
-            while lo < n:
-                hi = lo + 1
-                while hi < n and offsets[hi + 1] - offsets[lo] <= _CHUNK:
-                    hi += 1
-                seg = flat[offsets[lo]:offsets[hi]]
-                if len(seg):
-                    hm = seg % _MERSENNE  # numpy % matches pmod (>= 0)
-                    H = hm[:, None] * a[None, :]
-                    H += b[None, :]
-                    H %= _MERSENNE
-                    # Segments start at the non-empty documents only: an
-                    # empty document's offset equals the next one's, and
-                    # would cut the segment before it one shingle short.
-                    full = counts[lo:hi] > 0
-                    starts = offsets[lo:hi][full] - offsets[lo]
-                    sigs[lo:hi][full] = np.minimum.reduceat(H, starts, axis=0)
-                lo = hi
-            yield pa.RecordBatch.from_pydict({
-                "id": pa.array(ids, pa.int64()),
-                "sig": pa.FixedSizeListArray.from_arrays(
-                    pa.array(sigs.ravel(), pa.int64()), len(a)
-                ).cast(pa.list_(pa.int64())),
-            })
+        n = batch.num_rows
+        flat, offsets = list_parts(batch.column("sh"))
+        counts = np.diff(offsets)
+        sigs = np.full((n, len(a)), _MERSENNE, dtype=np.int64)
+        lo = 0  # first doc of the current chunk
+        while lo < n:
+            hi = lo + 1
+            while hi < n and offsets[hi + 1] - offsets[lo] <= _CHUNK:
+                hi += 1
+            seg = flat[offsets[lo]:offsets[hi]]
+            if len(seg):
+                hm = seg % _MERSENNE  # numpy % matches pmod (>= 0)
+                H = hm[:, None] * a[None, :]
+                H += b[None, :]
+                H %= _MERSENNE
+                # Segments start at the non-empty documents only: an
+                # empty document's offset equals the next one's, and
+                # would cut the segment before it one shingle short.
+                full = counts[lo:hi] > 0
+                starts = offsets[lo:hi][full] - offsets[lo]
+                sigs[lo:hi][full] = np.minimum.reduceat(H, starts, axis=0)
+            lo = hi
+        return [batch.column("id").to_numpy(), sigs]
 
     t = sets_df.select(F.col("id").cast("bigint").alias("id"), "sh")
-    return t.mapInArrow(kernel, schema="id bigint, sig array<bigint>")
+    return arrow_map(t, kernel, [("id", pa.int64()), ("sig", pa.list_(pa.int64()))],
+                     state=np.array(_perm_params(num_perm, seed), dtype=np.int64))
 
 
 def minhash_lsh_pairs(
@@ -576,8 +543,6 @@ def simhash64(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     and per-document vote sums come from cumsum differences at the list
     offsets (handles empty documents, unlike reduceat).
     Output: (id, simhash BIGINT)."""
-    import pyarrow as pa
-
     hashed = _widen(df).select(
         F.col(id_col).alias("id"),
         F.transform(tx.tokens(F.col(text_col)), _hash_fn(hash)).alias("hs"),
@@ -586,31 +551,20 @@ def simhash64(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     shifts = np.arange(64, dtype=np.uint64)
     weights = (np.uint64(1) << shifts)
 
-    def _simhash(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            lv = batch.column("hs")
-            counts = np.asarray([len(lv[i]) for i in range(len(lv))], dtype=np.int64) \
-                if not hasattr(lv, "value_lengths") else lv.value_lengths().to_numpy(zero_copy_only=False)
-            offsets = np.concatenate([[0], np.cumsum(counts)])
-            flat = lv.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
-            if len(flat):
-                bits = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int8)
-                pm = (2 * bits - 1).astype(np.int8)
-                cs = np.vstack([np.zeros((1, 64), dtype=np.int64),
-                                np.cumsum(pm, axis=0, dtype=np.int64)])
-                votes = cs[offsets[1:]] - cs[offsets[:-1]]
-            else:
-                votes = np.zeros((len(ids), 64), dtype=np.int64)
-            sig = ((votes > 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
-            yield pa.RecordBatch.from_pydict({
-                "id": pa.array(ids, pa.int64()),
-                "simhash": pa.array(sig.astype(np.int64), pa.int64()),
-            })
+    def _simhash(batch, _):
+        flat, offsets = list_parts(batch.column("hs"), np.uint64)
+        if len(flat):
+            bits = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int8)
+            pm = (2 * bits - 1).astype(np.int8)
+            cs = np.vstack([np.zeros((1, 64), dtype=np.int64),
+                            np.cumsum(pm, axis=0, dtype=np.int64)])
+            votes = cs[offsets[1:]] - cs[offsets[:-1]]
+        else:
+            votes = np.zeros((batch.num_rows, 64), dtype=np.int64)
+        sig = ((votes > 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
+        return [batch.column("id").to_numpy(), sig.astype(np.int64)]
 
-    return hashed.mapInArrow(_simhash, schema="id bigint, simhash bigint")
+    return arrow_map(hashed, _simhash, [("id", pa.int64()), ("simhash", pa.int64())])
 
 
 def simhash_pairs(
@@ -714,31 +668,17 @@ def embedding_dup_pairs(
                 f"{ALL_PAIRS_MAX_ROWS}) — use method='srp' at this size")
         ids_all = np.array([r["id"] for r in rows], dtype=np.int64)
         U = np.array([r["u"] for r in rows], dtype=np.float64)
-        bc = base.sparkSession.sparkContext.broadcast((ids_all, U))
         thr = float(threshold)
 
-        def _score(batches):
-            import pyarrow as pa
+        def _score(batch, st):
+            ids_b, Ub = st
+            ids = batch.column("id").to_numpy()
+            S = arrow_rows(batch.column("u")) @ Ub.T
+            ii, jj = np.nonzero((S >= thr) & (ids[:, None] < ids_b[None, :]))
+            return [ids[ii], ids_b[jj], S[ii, jj]]
 
-            ids_b, Ub = bc.value
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                ids = batch.column("id").to_numpy()
-                X = arrow_rows(batch.column("u"))
-                S = X @ Ub.T
-                ii, jj = np.nonzero((S >= thr) & (ids[:, None] < ids_b[None, :]))
-                if len(ii) == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids[ii]), pa.array(ids_b[jj]),
-                     pa.array(S[ii, jj])],
-                    ["id_a", "id_b", "cosine"],
-                )
-
-        return unit.mapInArrow(
-            _score, "id_a bigint, id_b bigint, cosine double")
+        return arrow_map(unit, _score, [("id_a", pa.int64()), ("id_b", pa.int64()),
+                                        ("cosine", pa.float64())], state=(ids_all, U))
     if method != "srp":
         raise ValueError(f"unknown method {method!r}")
 
@@ -761,35 +701,19 @@ def embedding_dup_pairs(
     # O(num_planes·d) interpreted HOF steps per row.  mapInArrow so the list
     # column's contiguous values buffer reshapes straight into the GEMM
     # matrix (no per-row Python object conversion).
-    bc_planes = base.sparkSession.sparkContext.broadcast(planes)
+    weights = (1 << np.arange(per_band - 1, -1, -1)).astype(np.int64)
 
-    def _sigs(batches):
-        import pyarrow as pa
+    def _sigs(batch, P):
+        ids = batch.column("id").to_numpy()
+        bits = (arrow_rows(batch.column("vec")) @ P.T) >= 0  # (n, num_planes)
+        buckets = [bits[:, band * per_band:(band + 1) * per_band].astype(np.int64) @ weights
+                   for band in range(bands)]
+        return [np.tile(ids, bands), np.repeat(np.arange(bands, dtype=np.int32), len(ids)),
+                np.concatenate(buckets)]
 
-        P = bc_planes.value
-        weights = (1 << np.arange(per_band - 1, -1, -1)).astype(np.int64)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            X = arrow_rows(batch.column("vec"))
-            bits = (X @ P.T) >= 0  # (n, num_planes)
-            out_id, out_band, out_bucket = [], [], []
-            for band in range(bands):
-                chunk = bits[:, band * per_band:(band + 1) * per_band]
-                out_id.append(ids)
-                out_band.append(np.full(n, band, dtype=np.int32))
-                out_bucket.append(chunk.astype(np.int64) @ weights)
-            yield pa.RecordBatch.from_pydict({
-                "id": pa.array(np.concatenate(out_id), pa.int64()),
-                "band": pa.array(np.concatenate(out_band), pa.int32()),
-                "bucket": pa.array(np.concatenate(out_bucket), pa.int64()),
-            })
-
-    sigs = base.select(
-        F.col("id").cast("bigint").alias("id"), "vec"
-    ).mapInArrow(_sigs, schema="id bigint, band int, bucket bigint")
+    sigs = arrow_map(base.select(F.col("id").cast("bigint").alias("id"), "vec"), _sigs,
+                     [("id", pa.int64()), ("band", pa.int32()), ("bucket", pa.int64())],
+                     state=planes)
     a, b = sigs.alias("a"), sigs.alias("b")
     # candidates carry only ids through distinct; unit vectors re-join after,
     # so the (potentially wide) bucket join shuffles narrow rows only
@@ -960,23 +884,6 @@ def dup_components(
         raise RuntimeError(f"dup_components did not converge in {max_iter} rounds")
 
     return comp.select("id", F.col("comp").alias("component_id"))
-
-
-def canonical_docs(
-    docs: DataFrame,
-    components: DataFrame,
-    *,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep-list after clustering: one row per surviving document — the
-    minimum-id member of each duplicate component plus every document that
-    was in no pair. Anti-join of the drop set (component members with
-    id != component_id) against the corpus; no shuffle of document payloads
-    beyond the id join."""
-    drops = components.filter(F.col("id") != F.col("component_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return docs.join(drops, id_col, "left_anti")
 
 
 # ------------------------------------------------------- incremental dedup

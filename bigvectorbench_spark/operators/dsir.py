@@ -25,9 +25,7 @@ over its bigram occurrences) is monotone in "target-likeness" exactly as
 the log-weight mean is for single-bucket comparisons, and the keep rule
 ``weight_sum >= n_bigrams`` (mean ratio >= 1: more target-like than the
 raw pool) is an exact decimal-vs-integer comparison — no float boundary
-can flip a document's disposition between engines.  ``mode="log"`` adds
-the paper's log-ratio mean for in-engine use, pytest-verified against
-Python math.
+can flip a document's disposition between engines.
 
 Scale design (the shuffle account at 100 TB):
 
@@ -108,7 +106,7 @@ def _ratio_table(occ: DataFrame, is_target: Column,
 def dsir_weights(df: DataFrame, *, id_col: str = "doc_id",
                  text_col: str = "text",
                  target_filter: Column | None = None, target_mod: int = 17,
-                 num_buckets: int = DEFAULT_BUCKETS, mode: str = "exact",
+                 num_buckets: int = DEFAULT_BUCKETS,
                  extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Per-document importance weights against the target slice selected
     by ``target_filter`` (default ``id % target_mod == 0`` — the planted
@@ -119,32 +117,22 @@ def dsir_weights(df: DataFrame, *, id_col: str = "doc_id",
     Output per doc: ``n_bigrams``, ``weight_sum`` (DECIMAL(28,6), exact),
     ``mean_weight`` (round(weight_sum/n, 6) double; NULL when no bigrams),
     ``keep`` (weight_sum >= n_bigrams — mean ratio >= 1, exact compare;
-    false for unscoreable docs).  ``mode="log"`` appends
-    ``log_weight_mean`` — the paper's mean log-ratio (transcendental,
-    pytest-verified, excluded from the oracle mode)."""
-    if mode not in ("exact", "log"):
-        raise ValueError(f"unknown mode {mode!r}")
+    false for unscoreable docs)."""
     sid = F.col(id_col)
     is_t = target_filter if target_filter is not None else (
         sid % target_mod == 0)
     occ = bigram_buckets(df, id_col=id_col, text_col=text_col,
                          num_buckets=num_buckets, extra_cols=extra_cols)
     ratios = _ratio_table(occ, is_t, num_buckets)
-    aggs = [
-        F.count("*").cast("bigint").alias("n_bigrams"),
-        F.sum("term").cast("decimal(28,6)").alias("weight_sum"),
-    ]
-    if mode == "log":
-        aggs.append(F.avg(F.log(F.col("term").cast("double")))
-                    .alias("log_weight_mean"))
     per_doc = (occ.join(F.broadcast(ratios), "b")
-               .groupBy(id_col, *extra_cols).agg(*aggs))
+               .groupBy(id_col, *extra_cols).agg(
+                   F.count("*").cast("bigint").alias("n_bigrams"),
+                   F.sum("term").cast("decimal(28,6)").alias("weight_sum")))
     scored = per_doc.select(
         id_col, *extra_cols, "n_bigrams", "weight_sum",
         F.round(F.col("weight_sum").cast("double") / F.col("n_bigrams"), 6)
         .alias("mean_weight"),
         (F.col("weight_sum") >= F.col("n_bigrams")).alias("keep"),
-        *(["log_weight_mean"] if mode == "log" else []),
     )
     # <2-token docs emit no pair rows — restore them unscored so a loader
     # sees every document's disposition (the lm.py empties pattern)
@@ -158,8 +146,6 @@ def dsir_weights(df: DataFrame, *, id_col: str = "doc_id",
             F.lit(None).cast("decimal(28,6)").alias("weight_sum"),
             F.lit(None).cast("double").alias("mean_weight"),
             F.lit(False).alias("keep"),
-            *([F.lit(None).cast("double").alias("log_weight_mean")]
-              if mode == "log" else []),
         )
     )
     return scored.unionByName(empties)

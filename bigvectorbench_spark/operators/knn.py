@@ -29,6 +29,13 @@ PQ, IVF-PQ, BQ, multi-vector); each supplies only its per-batch scoring.
 Its per-batch selection keeps the k smallest rows by (dist, id), so the
 kernels break ties by ascending id exactly as the final window does.
 
+``topk_scan`` runs on ``arrow_map``, the package's one Arrow batch idiom:
+broadcast the state once, call a per-batch function on each non-empty
+batch, pass chosen input columns through and declare the new columns as
+Arrow types.  The index builds (IVF assign, PQ/BQ encode, OPQ rotate),
+the Bloom probe and the dedup signature kernels use it too, with
+``arrow_rows`` and ``list_parts`` to read list columns as numpy.
+
 Output schema (both paths): (qid BIGINT, id BIGINT, dist DOUBLE, rank INT),
 rank 1..k ordered by (dist, id).
 """
@@ -238,6 +245,63 @@ def partial_topk(D: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     return part
 
 
+def list_parts(column, dtype=np.int64) -> tuple[np.ndarray, np.ndarray]:
+    """``(flat, offsets)`` of an Arrow list column: row i's elements are
+    ``flat[offsets[i]:offsets[i + 1]]``.  ``flatten()`` respects a sliced
+    array's offset and skips the values behind null lists, so a null list
+    reads as an empty one."""
+    import pyarrow.compute as pc
+
+    lens = pc.fill_null(pc.list_value_length(column), 0).to_numpy()
+    offsets = np.zeros(len(column) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    flat = column.flatten().to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    return flat, offsets
+
+
+def _arrow_array(values, arrow_type):
+    """``values`` as an Arrow array of ``arrow_type``; a 2-D ndarray becomes
+    a list column of its rows (one contiguous values buffer, no per-row
+    Python object)."""
+    import pyarrow as pa
+
+    if isinstance(values, np.ndarray) and values.ndim == 2:
+        n, width = values.shape
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width)
+        return pa.ListArray.from_arrays(
+            offsets, pa.array(values.ravel(), arrow_type.value_type))
+    return pa.array(values, arrow_type)
+
+
+def arrow_map(frame: DataFrame, fn, out, *, state=None, keep=()) -> DataFrame:
+    """The one Arrow batch kernel: ``fn(batch, state)`` runs on every
+    non-empty Arrow batch of ``frame`` and returns one array per
+    ``(name, pyarrow type)`` in ``out``.  ``state`` is broadcast once.  The
+    ``keep`` input columns pass through ahead of the new ones (then ``fn``
+    must return one value per input row); a 2-D ndarray becomes a list
+    column of its rows.  The Spark types of the new columns come from
+    their Arrow types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    keep, new = list(keep), pa.schema(out)
+    schema = StructType([frame.schema[c] for c in keep] + from_arrow_schema(new).fields)
+    names = keep + new.names
+    bc = frame.sparkSession.sparkContext.broadcast(state)
+
+    def kernel(batches):
+        b_state = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            cols = [_arrow_array(v, f.type) for v, f in zip(fn(batch, b_state), new)]
+            yield pa.RecordBatch.from_arrays([*(batch.column(c) for c in keep), *cols],
+                                             names=names)
+
+    return frame.mapInArrow(kernel, schema=schema)
+
+
 def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
               member: Optional[np.ndarray] = None, dist: str = "dist",
               dist_dtype=np.float64) -> DataFrame:
@@ -257,32 +321,25 @@ def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
     window ranks them.  Returns ``(keys…, id, dist, rank)`` with rank 1..k
     ordered by (dist, id) per key."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     names = list(keys)
     cols = [np.asarray(a) for a in keys.values()]
-    schema = pa.schema([(n, pa.from_numpy_dtype(c.dtype)) for n, c in zip(names, cols)]
-                       + [("id", pa.int64()), (dist, pa.from_numpy_dtype(np.dtype(dist_dtype)))])
-    bc = frame.sparkSession.sparkContext.broadcast((cols, state, member))
+    out = ([(n, pa.from_numpy_dtype(c.dtype)) for n, c in zip(names, cols)]
+           + [("id", pa.int64()), (dist, pa.from_numpy_dtype(np.dtype(dist_dtype)))])
 
-    def scan(batches):
-        b_cols, b_state, b_member = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column("id").to_numpy()
-            D = score(batch, b_state)
-            if b_member is not None:
-                D = np.where(b_member[batch.column(CLUSTER_COL).to_numpy()], D, np.inf)
-            part = partial_topk(D, ids, k)
-            out_d = np.take_along_axis(D, part, axis=0).T.ravel()
-            keep = np.isfinite(out_d) if b_member is not None else slice(None)
-            yield pa.RecordBatch.from_arrays(
-                [*(np.repeat(c, len(part))[keep] for c in b_cols),
-                 ids[part.T].ravel()[keep], out_d[keep]],
-                schema=schema)
+    def scan(batch, st):
+        b_cols, b_state, b_member = st
+        ids = batch.column("id").to_numpy()
+        D = score(batch, b_state)
+        if b_member is not None:
+            D = np.where(b_member[batch.column(CLUSTER_COL).to_numpy()], D, np.inf)
+        part = partial_topk(D, ids, k)
+        out_d = np.take_along_axis(D, part, axis=0).T.ravel()
+        keep = np.isfinite(out_d) if b_member is not None else slice(None)
+        return [*(np.repeat(c, len(part))[keep] for c in b_cols),
+                ids[part.T].ravel()[keep], out_d[keep]]
 
-    partial = frame.mapInArrow(scan, schema=from_arrow_schema(schema))
+    partial = arrow_map(frame, scan, out, state=(cols, state, member))
     return topk_window(partial, k, qid=names, dist=dist).select(*names, "id", dist, "rank")
 
 

@@ -145,13 +145,13 @@ def ccnet_bins_report(
     train_filter: Column | None = None,
     train_mod: int = 7,
     n_bins: int = 3,
-    lang_col: str | None = None,
+    lang_col: str = "lang",
 ) -> DataFrame:
     """CCNet's final step (Wenzek et al. 2020): split each LANGUAGE bucket
     into head/middle/tail by LM score, so a pipeline can keep the
     most-reference-like slice per language instead of biasing the corpus
-    toward high-resource languages.  Composes lang_id + lm_score_report;
-    one row per (lang, bin):
+    toward high-resource languages.  Buckets by ``lang_col`` and composes
+    lm_score_report; one row per (lang, bin):
 
       (lang, bin, n_docs, n_tokens, mean_lik)
 
@@ -170,24 +170,11 @@ def ccnet_bins_report(
     from bigvectorbench_spark.functions import text as tx2
 
     sid = F.col(id_col)
-    # language per doc: a pre-classified column when the corpus has one
-    # (CCNet buckets on its fastText classifier's output, which in a
-    # warehouse IS a column), else the marker-n-gram lang_id heuristic
-    if lang_col is not None:
-        langs = df.select(
-            sid.alias(id_col), F.col(lang_col).alias("lang"),
-            tx2.token_count(F.col(text_col)).cast("bigint").alias("n_tok"))
-    else:
-        langs = df.select(
-            sid.alias(id_col),
-            tx2.tokens(F.col(text_col)).alias("_tk"),
-        ).select(
-            id_col,
-            tx2.lang_id_from_tokens(F.col("_tk"),
-                                    F.concat_ws("", F.col("_tk")))
-            .alias("lang"),
-            F.size("_tk").cast("bigint").alias("n_tok"),
-        )
+    # language per doc: a pre-classified column (CCNet buckets on its
+    # fastText classifier's output, which in a warehouse IS a column)
+    langs = df.select(
+        sid.alias(id_col), F.col(lang_col).alias("lang"),
+        tx2.token_count(F.col(text_col)).cast("bigint").alias("n_tok"))
     scores = lm_score_report(df, id_col=id_col, text_col=text_col,
                              train_filter=train_filter, train_mod=train_mod)
     j = langs.join(scores.select(id_col, "mean_cond_lik"), id_col)

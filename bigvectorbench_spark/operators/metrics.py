@@ -52,16 +52,6 @@ def latency_percentiles(
     return df.select(*cols)
 
 
-def best_search_time(per_run_times: DataFrame, run_col: str = "run",
-                     time_col: str = "latency") -> DataFrame:
-    """min over runs of mean per-query time (runner.py:61, 222-226)."""
-    return (
-        per_run_times.groupBy(run_col)
-        .agg(F.avg(time_col).alias("mean_time"))
-        .agg(F.min("mean_time").alias("best_search_time"))
-    )
-
-
 def pareto_frontier(points: DataFrame, x: str, y: str) -> DataFrame:
     """Pareto frontier (plotting/utils.py:16-38): sort by (−y, −x), keep a
     point iff its x strictly improves the running best.  Single window scan —

@@ -26,10 +26,8 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from bigvectorbench_spark.operators.knn import arrow_rows
+from bigvectorbench_spark.operators.knn import arrow_map, arrow_rows
 from bigvectorbench_spark.operators.pq import PQIndex
 from bigvectorbench_spark.operators.similarity import _kmeans_pp
 
@@ -112,10 +110,6 @@ class OPQIndex:
     R: np.ndarray
     pq: PQIndex
 
-    @property
-    def d(self) -> int:
-        return self.R.shape[0]
-
     @classmethod
     def fit(
         cls,
@@ -144,38 +138,6 @@ class OPQIndex:
                                  max_iter=max_iter)
         return cls(R=R, pq=PQIndex(codebooks=books))
 
-    # ---- persistence (index artifact, shareable across jobs) -------------
-    def save(self, spark, path: str) -> None:
-        """Persist rotation + codebooks in ONE parquet (the IVFIndex/
-        PQIndex save convention): kind='R' rows carry the rotation matrix
-        by row index, kind='CB' rows the per-subspace centroids.  Doubles
-        survive parquet exactly, so a reload reproduces codes bit-for-bit."""
-        rows = [("R", i, 0, [float(x) for x in self.R[i]], "")
-                for i in range(self.d)]
-        rows += [
-            ("CB", j, c, [float(x) for x in self.pq.codebooks[j, c]],
-             self.pq.metric)
-            for j in range(self.pq.m)
-            for c in range(self.pq.ksub)
-        ]
-        spark.createDataFrame(
-            rows, "kind string, i int, j int, vec array<double>, metric string"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "OPQIndex":
-        rows = spark.read.parquet(path).orderBy("kind", "i", "j").collect()
-        cb = [r for r in rows if r["kind"] == "CB"]
-        rot = [r for r in rows if r["kind"] == "R"]
-        if not cb or not rot:
-            raise ValueError(f"no OPQ artifact at {path}")
-        R = np.array([r["vec"] for r in rot], dtype=np.float64)
-        m = cb[-1]["i"] + 1
-        ksub = cb[-1]["j"] + 1
-        books = np.array([r["vec"] for r in cb], dtype=np.float64).reshape(
-            m, ksub, -1)
-        return cls(R=R, pq=PQIndex(codebooks=books, metric=cb[0]["metric"]))
-
     # ---- distributed rotation -------------------------------------------
     def rotate(
         self,
@@ -188,34 +150,13 @@ class OPQIndex:
         float64 GEMM per Arrow batch against the broadcast R.  All input
         columns are preserved (encode typically drops the original float
         column afterwards; refine re-reads it from the source table)."""
-        R = self.R
-        d = self.d
-        bc = df.sparkSession.sparkContext.broadcast(R)
         import pyarrow as pa
 
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(out_col, ArrayType(DoubleType()))])
-        vec_idx = df.columns.index(vec_col)
+        def rotate(batch, R):
+            return [np.round(arrow_rows(batch.column(vec_col)) @ R, ROUND_TO)]
 
-        def fn(batches):
-            Rl = bc.value
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                X = arrow_rows(batch.column(vec_idx))
-                XR = np.round(X @ Rl, ROUND_TO)
-                yield pa.RecordBatch.from_arrays(
-                    [*batch.columns,
-                     pa.FixedSizeListArray.from_arrays(
-                         pa.array(XR.ravel(), pa.float64()), d).cast(
-                         pa.list_(pa.float64()))],
-                    schema=pa.schema(
-                        [batch.schema.field(i) for i in range(batch.num_columns)]
-                        + [pa.field(out_col, pa.list_(pa.float64()))]),
-                )
-
-        return df.mapInArrow(fn, schema=out_schema)
+        return arrow_map(df, rotate, [(out_col, pa.list_(pa.float64()))],
+                         state=self.R, keep=df.columns)
 
     def encode(self, df: DataFrame, *, vec_col: str = "vec",
                out_col: str = "codes") -> DataFrame:

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 from bigvectorbench_spark.functions import text as tx
 
 __all__ = ["pack_blocks", "block_manifest", "chunk_documents", "chunk_report",
-           "shard_assign", "shard_manifest", "write_shards"]
+           "shard_assign", "shard_manifest"]
 
 
 def pack_blocks(
@@ -219,44 +219,6 @@ def shard_manifest(df: DataFrame, *, n_shards: int = 32, seed: int = 42,
             F.sum(F.length(text_col)).cast("bigint").alias("n_chars"),
         )
     )
-
-
-def write_shards(df: DataFrame, path: str, *, n_shards: int = 32,
-                 seed: int = 42, id_col: str = "doc_id",
-                 mode: str = "overwrite",
-                 max_records_per_file: int | None = None) -> None:
-    """Materialize the shard scatter as the loader-facing layout: one
-    ``shard=<k>/`` parquet directory per shard, rows within each shard in
-    a deterministic pseudo-random order (the seeded "o"-namespaced hash
-    of the id — a DIFFERENT hash than the shard assignment, so the
-    within-shard order is uncorrelated with shard membership).  A loader
-    streams any shard independently and sees a stable, reshuffled-once
-    document order; re-running the job byte-reproduces the layout.
-
-    Plan: assignment is map-only; ``repartition(n_shards, shard)`` is the
-    ONE hash exchange that co-locates each shard into a single task, and
-    ``sortWithinPartitions`` orders it without any further shuffle (a
-    global orderBy here would be a needless range exchange — order only
-    matters WITHIN a shard).  At 100 TB: n_shards ∝ cluster cores so a
-    shard fits a task, plus ``maxRecordsPerFile`` to split shard files."""
-    a = shard_assign(df, n_shards=n_shards, seed=seed, id_col=id_col)
-    okey = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"o{int(seed)}|"),
-                           F.col(id_col).cast("string"))), 1, 8),
-        16, 10).cast("bigint")
-    w = (
-        a.withColumn("order_key", okey)
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "order_key")
-        .write.mode(mode)
-    )
-    if max_records_per_file is not None:
-        # Splits a shard into order-contiguous files of bounded row count
-        # (the writer cuts the sorted task stream in order, so file k
-        # holds the shard's k-th order_key range).
-        w = w.option("maxRecordsPerFile", int(max_records_per_file))
-    w.partitionBy("shard").parquet(path)
 
 
 # ------------------------------------------------------------- RAG chunking

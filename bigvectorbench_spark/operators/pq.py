@@ -25,10 +25,10 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, ShortType, StructField, StructType
 
 from bigvectorbench_spark.operators.knn import (
-    CLUSTER_COL, _collect_queries, arrow_rows, topk_scan, topk_window, unit_rows)
+    CLUSTER_COL, _collect_queries, arrow_map, arrow_rows, topk_scan, topk_window,
+    unit_rows)
 from bigvectorbench_spark.operators.similarity import _kmeans_pp
 
 _OUT_SCHEMA = "qid bigint, id bigint, dist double, rank int"
@@ -104,34 +104,8 @@ class PQIndex:
         return self.codebooks.shape[0]
 
     @property
-    def ksub(self) -> int:
-        return self.codebooks.shape[1]
-
-    @property
     def dsub(self) -> int:
         return self.codebooks.shape[2]
-
-    # ---- persistence (index artifact, shareable across jobs) -------------
-    def save(self, spark: SparkSession, path: str) -> None:
-        rows = [
-            (j, c, [float(x) for x in self.codebooks[j, c]], self.metric)
-            for j in range(self.m)
-            for c in range(self.ksub)
-        ]
-        spark.createDataFrame(
-            rows, "subspace int, code int, centroid array<double>, metric string"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "PQIndex":
-        rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
-        if not rows:
-            raise ValueError(f"no codebooks at {path}")
-        m = rows[-1]["subspace"] + 1
-        ksub = rows[-1]["code"] + 1
-        books = np.array([r["centroid"] for r in rows], dtype=np.float64).reshape(
-            m, ksub, -1)
-        return cls(codebooks=books, metric=rows[0]["metric"])
 
     # ---- encode (index build: one narrow map, no shuffle) ----------------
     def encode(self, df: DataFrame, *, vec_col: str = "vec", out_col: str = "codes") -> DataFrame:
@@ -144,41 +118,23 @@ class PQIndex:
         books = self.codebooks
         metric = self.metric
         m, _, dsub = books.shape
-        bc = df.sparkSession.sparkContext.broadcast(books)
-        # StructType.add mutates in place — build a fresh StructType instead.
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(out_col, ArrayType(ShortType()))]
-        )
-        vec_idx = df.columns.index(vec_col)
 
-        def fn(batches):
-            b = bc.value
-            # ‖c‖² per subspace, precomputed once per task: (m, ksub)
-            c2 = (b * b).sum(axis=2)
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                X = arrow_rows(batch.column(vec_idx))
-                if metric == "angular":
-                    X = unit_rows(X)
-                X = X.reshape(n, m, dsub)
-                codes = np.empty((n, m), dtype=np.int16)
-                for j in range(m):
-                    S = X[:, j, :]
-                    d2 = (S * S).sum(1)[:, None] - 2.0 * (S @ b[j].T) + c2[j][None, :]
-                    codes[:, j] = d2.argmin(axis=1).astype(np.int16)
-                yield pa.RecordBatch.from_arrays(
-                    [*batch.columns,
-                     pa.FixedSizeListArray.from_arrays(
-                         pa.array(codes.ravel(), pa.int16()), m).cast(pa.list_(pa.int16()))],
-                    schema=pa.schema(
-                        [batch.schema.field(i) for i in range(batch.num_columns)]
-                        + [pa.field(out_col, pa.list_(pa.int16()))]
-                    ),
-                )
+        def encode(batch, st):
+            b, c2 = st
+            X = arrow_rows(batch.column(vec_col))
+            if metric == "angular":
+                X = unit_rows(X)
+            X = X.reshape(len(X), m, dsub)
+            codes = np.empty((len(X), m), dtype=np.int16)
+            for j in range(m):
+                S = X[:, j, :]
+                d2 = (S * S).sum(1)[:, None] - 2.0 * (S @ b[j].T) + c2[j][None, :]
+                codes[:, j] = d2.argmin(axis=1)
+            return [codes]
 
-        return df.mapInArrow(fn, schema=out_schema)
+        # ‖c‖² per subspace: (m, ksub)
+        return arrow_map(df, encode, [(out_col, pa.list_(pa.int16()))],
+                         state=(books, (books * books).sum(axis=2)), keep=df.columns)
 
     # ---- search (ADC) ----------------------------------------------------
     def search(

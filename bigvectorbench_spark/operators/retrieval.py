@@ -29,13 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import text as tx
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        return df.repartition(parallelism)
-    return df
+from bigvectorbench_spark.operators.dedup import _widen
 
 
 def postings(

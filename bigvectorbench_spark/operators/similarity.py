@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import distance as dist_fns
 from bigvectorbench_spark.operators.knn import (
-    CLUSTER_COL, _collect_queries, arrow_rows, gemm_scan, topk_window,
-    unit_rows)
+    CLUSTER_COL, _collect_queries, arrow_map, arrow_rows, gemm_scan,
+    topk_window, unit_rows)
 
 # auto_nprobe calibration (the hnsw.auto_ef / sparse.auto_m twin —
 # VERDICT r10 ask #5, completing the auto-knob trilogy).  Measured on the
@@ -138,23 +138,6 @@ class IVFIndex:
             X = unit_rows(X)
         return cls(centroids=_kmeans_pp(X, nlist, seed, max_iter), metric=metric)
 
-    def save(self, spark: SparkSession, path: str) -> None:
-        """Persist the index artifact (centroids + metric) as parquet — the
-        M2 'index build' output, shareable across jobs/sessions."""
-        rows = [(i, [float(x) for x in c], self.metric)
-                for i, c in enumerate(self.centroids)]
-        spark.createDataFrame(
-            rows, "cluster_id int, centroid array<double>, metric string"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "IVFIndex":
-        rows = spark.read.parquet(path).orderBy("cluster_id").collect()
-        if not rows:
-            raise ValueError(f"no centroids at {path}")
-        cents = np.array([r["centroid"] for r in rows], dtype=np.float64)
-        return cls(centroids=cents, metric=rows[0]["metric"])
-
     def assign(self, df: DataFrame, *, vec_col: str = "vec", method: str = "auto") -> DataFrame:
         """Add ``cluster_id`` = argmin centroid distance — a narrow map (no
         shuffle), safe at full corpus width.
@@ -187,37 +170,19 @@ class IVFIndex:
         input columns (cluster_id appended)."""
         import pyarrow as pa
 
-        C = self.centroids
         metric = self.metric
-        bc = df.sparkSession.sparkContext.broadcast(C)
-        from pyspark.sql.types import IntegerType, StructField, StructType
 
-        # StructType.add mutates in place — never call it on df.schema
-        out_schema = StructType(
-            list(df.schema.fields) + [StructField(CLUSTER_COL, IntegerType())]
-        )
-        vec_idx = df.columns.index(vec_col)
+        def assign(batch, st):
+            C, c2 = st
+            X = arrow_rows(batch.column(vec_col))
+            if metric == "angular":
+                X = unit_rows(X)
+            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + c2
+            return [d2.argmin(axis=1).astype(np.int32)]
 
-        def fn(batches):
-            b_C = bc.value
-            c2 = (b_C * b_C).sum(1)[None, :]
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                X = arrow_rows(batch.column(vec_idx))
-                if metric == "angular":
-                    X = unit_rows(X)
-                d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ b_C.T) + c2
-                cid = d2.argmin(axis=1).astype(np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [*batch.columns, pa.array(cid, pa.int32())],
-                    schema=pa.schema(
-                        [batch.schema.field(i) for i in range(batch.num_columns)]
-                        + [pa.field(CLUSTER_COL, pa.int32())]
-                    ),
-                )
-
-        return df.mapInArrow(fn, schema=out_schema)
+        C = self.centroids
+        return arrow_map(df, assign, [(CLUSTER_COL, pa.int32())],
+                         state=(C, (C * C).sum(1)[None, :]), keep=df.columns)
 
     def write_indexed(self, df: DataFrame, path: str, *, vec_col: str = "vec") -> None:
         """Materialize the index layout: parquet partitioned by cluster_id.

@@ -137,3 +137,42 @@ def test_normalize_strips_run_to_run_stage_numbering():
     assert "Arguments: coalesced" in bench.normalize(a)
     assert bench.normalize("MapPartitionsRDD[471] at applySchema") == (
         "MapPartitionsRDD[] at applySchema")
+
+
+def test_every_run_starts_with_an_empty_cache(spark):
+    """``run_query`` clears the cache after every run, so a frame one run
+    persists cannot make the next run warm, and ``persisted_rdds`` still
+    counts what run 1 left persisted."""
+    import bench
+
+    def frame():
+        return spark.range(100).selectExpr("id * 7 AS persisted_by_bench_test")
+
+    def cached():
+        lvl = frame().storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    cached_at_start = []
+
+    def build(spark, sf_dir):
+        cached_at_start.append(cached())
+        df = frame().persist()
+        df.count()
+        return df
+
+    class Stats:
+        def group(self, name):
+            return {"jobs": 0, "stages": 0, "tasks": 0, "task_s": 0.0,
+                    "intervals": [], "shuffle_mb": 0.0, "spill_mb": 0.0}
+
+        def persisted_rdds(self):
+            return int(cached())
+
+        def end_op(self):
+            pass
+
+    rec = bench.run_query(spark, Stats(), "persists", build, "", runs=3)
+    assert "error" not in rec, rec
+    assert cached_at_start == [False, False, False]
+    assert rec["persisted_rdds"] == 1
+    assert not cached()

@@ -141,18 +141,3 @@ def test_multichunk_build_is_byte_identical(spark, monkeypatch):
     assert many == one and len(many) == n_bytes
 
 
-def test_probe_accepts_broadcast_handle(spark):
-    """A pre-created Broadcast handle probes identically to raw bytes, so
-    a caller probing many frames broadcasts the bitmap once."""
-    df = spark.createDataFrame(
-        [(1, [10, 20]), (2, [30]), (3, [])], "id bigint, vs array<bigint>")
-    inv = spark.createDataFrame([(10,), (30,)], "wh bigint")
-    m_bits, k = bl.bloom_params(2, 1e-6)
-    bm = bl.bloom_build(inv, "wh", m_bits=m_bits, k=k)
-    bc = spark.sparkContext.broadcast(bm)
-    via_bytes = sorted(map(tuple, bl.bloom_probe_any(
-        df, "vs", bm, m_bits=m_bits, k=k).collect()))
-    via_handle = sorted(map(tuple, bl.bloom_probe_any(
-        df, "vs", bc, m_bits=m_bits, k=k).collect()))
-    assert via_bytes == via_handle
-    assert [r[-1] for r in via_handle] == [True, True, False]

@@ -233,21 +233,6 @@ def test_encode_kernel_matches_expr(spark):
         idx.encode(tdf, method="nope")
 
 
-def test_save_load_roundtrip(spark, tmp_path):
-    """Thresholds survive parquet exactly (doubles), so a reloaded index
-    packs byte-identical codes."""
-    X = make_blobs(80, 24, seed=9)
-    df = _vec_df(spark, X)
-    idx = BQIndex.fit(df, sort_col="id")
-    path = str(tmp_path / "bq")
-    idx.save(spark, path)
-    back = BQIndex.load(spark, path)
-    assert back.thresholds == idx.thresholds
-    a = idx.encode(df, keep=["id"]).orderBy("id").collect()
-    b = back.encode(df, keep=["id"]).orderBy("id").collect()
-    assert [r["words"] for r in a] == [r["words"] for r in b]
-
-
 def test_search_qblock_matches_collect_path(spark):
     """The r13 fused hybrid prelude pre-collects (qids, qmat) and passes it
     as ``qblock`` — the kernel must rank identically to collecting the

@@ -102,20 +102,6 @@ def test_gopher_report_partitions_docs(spark, sf_dir):
 # ------------------------------------------------------------ window hashing
 
 
-def test_window_hashes_match_reference(spark):
-    toks = ["w%d" % i for i in range(6)]
-    df = spark.createDataFrame([(1, toks)], "id long, tk array<string>")
-    got = df.select(cur.window_hashes(F.col("tk"), 4).alias("w")).collect()[0]["w"]
-    want = [_hash60(" ".join(toks[i:i + 4])) for i in range(3)]
-    assert got == want
-
-
-def test_window_hashes_short_doc_empty(spark):
-    df = spark.createDataFrame([(1, ["a", "b"])], "id long, tk array<string>")
-    got = df.select(cur.window_hashes(F.col("tk"), 4).alias("w")).collect()[0]["w"]
-    assert got == []
-
-
 # ------------------------------------------------------------ decontamination
 
 

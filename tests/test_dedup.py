@@ -29,11 +29,6 @@ def test_exact_dup_groups(docs):
     assert sum(groups.values()) == 6
 
 
-def test_exact_dedup_keeps_min_id(docs):
-    kept = sorted(r["doc_id"] for r in dd.exact_dedup(docs).collect())
-    assert kept == [0, 3, 4, 5]
-
-
 def _py_jaccard(a, b, n=3):
     def sh(t):
         tk = t.lower().split()
@@ -265,14 +260,6 @@ def test_dup_components_reverse_labels(spark):
     df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
     got = {r["id"]: r["component_id"] for r in dd.dup_components(df).collect()}
     assert got == {1: 1, 5: 1, 7: 1, 9: 1}
-
-
-def test_canonical_docs(docs, spark):
-    pairs = spark.createDataFrame([(0, 1), (1, 2), (3, 0)], "id_a bigint, id_b bigint")
-    comps = dd.dup_components(pairs)
-    kept = sorted(r["doc_id"] for r in dd.canonical_docs(docs, comps).collect())
-    # component {0,1,2,3} keeps 0; 4 and 5 were never paired
-    assert kept == [0, 4, 5]
 
 
 def test_dup_components_on_ngram_pairs(docs):

@@ -1,7 +1,6 @@
 """DSIR-style hashed-bigram importance selection (operators/dsir.py)."""
 
 import hashlib
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,28 +94,6 @@ def test_dsir_weights_match_python(spark):
             assert got[d]["keep"] is keep, d
     # target-heavy bigrams should weigh more than never-target ones
     assert got[17]["mean_weight"] > got[2]["mean_weight"]
-
-
-def test_dsir_log_mode_matches_math(spark):
-    corpus = {0: "alpha beta gamma", 1: "alpha beta delta",
-              2: "zeta eta theta"}
-    df = spark.createDataFrame(list(corpus.items()),
-                               "doc_id long, text string")
-    got = {r["doc_id"]: r
-           for r in dsir.dsir_weights(df, mode="log").collect()}
-    occ = [(d, b) for d, t in corpus.items() for b in _buckets(t)]
-    raw_c, tgt_c = {}, {}
-    for d, b in occ:
-        raw_c[b] = raw_c.get(b, 0) + 1
-        tgt_c[b] = tgt_c.get(b, 0) + (1 if d % 17 == 0 else 0)
-    t_raw, t_tgt = sum(raw_c.values()), sum(tgt_c.values())
-    for d, t in corpus.items():
-        bs = _buckets(t)
-        want = sum(
-            math.log(_round6_half_up(((tgt_c[b] + 1) / (t_tgt + 4096))
-                                     / ((raw_c[b] + 1) / (t_raw + 4096))))
-            for b in bs) / len(bs)
-        assert got[d]["log_weight_mean"] == pytest.approx(want, rel=1e-12)
 
 
 def test_dsir_report_partitions_docs(spark, sf_dir):

@@ -96,13 +96,6 @@ def test_qps_and_percentiles(spark):
     assert p["p9"] == pytest.approx(370.0)
 
 
-def test_best_search_time(spark):
-    df = spark.createDataFrame(
-        [(0, 0.2), (0, 0.4), (1, 0.1), (1, 0.2)], "run int, latency double"
-    )
-    assert M.best_search_time(df).collect()[0]["best_search_time"] == pytest.approx(0.15)
-
-
 def test_pareto_frontier(spark):
     # (recall, qps): the frontier keeps strictly-improving recall as qps falls
     pts = spark.createDataFrame(

@@ -136,9 +136,3 @@ def test_ccnet_bins_exact_partitions_and_order(spark):
     assert sum(r["n_docs"] for r in out) == 26
 
 
-def test_ccnet_bins_langid_fallback(spark):
-    df = _bins_corpus(spark).drop("lang")
-    out = lm.ccnet_bins_report(df).collect()
-    # the heuristic sees no markers -> everything lands in 'en' buckets
-    assert {r["lang"] for r in out} == {"en"}
-    assert sum(r["n_docs"] for r in out) == 26

@@ -129,22 +129,3 @@ def test_fit_validates(spark):
         opq_fit_numpy(X.astype(np.float64), m=5, ksub=4)
 
 
-def test_save_load_roundtrip(spark, tmp_path):
-    """R and codebooks survive parquet exactly (doubles), so a reloaded
-    index reproduces rotation, codes, and search output bit-for-bit."""
-    X = _correlated(300, d=16)
-    df = _vec_df(spark, X)
-    idx = OPQIndex.fit(df, m=4, ksub=8, iters=2, sort_col="id")
-    path = str(tmp_path / "opq")
-    idx.save(spark, path)
-    back = OPQIndex.load(spark, path)
-    assert np.array_equal(back.R, idx.R)
-    assert np.array_equal(back.pq.codebooks, idx.pq.codebooks)
-    assert back.pq.metric == idx.pq.metric
-    q = _vec_df(spark, X[:5], id_name="qid")
-    a = idx.search(idx.encode(df), q, k=5, refine_train=df).orderBy(
-        "qid", "rank").collect()
-    b = back.search(back.encode(df), q, k=5, refine_train=df).orderBy(
-        "qid", "rank").collect()
-    assert [(r["qid"], r["id"], r["rank"]) for r in a] == \
-           [(r["qid"], r["id"], r["rank"]) for r in b]

@@ -214,93 +214,3 @@ def test_mix_shards_separates_copies(spark):
     assert sum(r["count"] for r in m) == 1000
 
 
-def test_write_shards_layout_and_order(spark, tmp_path):
-    """The materialized layout is the loader contract: one shard=<k>/
-    directory per shard, every row in the right directory, rows inside
-    each shard file in order_key order, and the whole corpus conserved.
-    Re-writing reproduces the identical assignment and order."""
-    import pyarrow.parquet as pq_
-    from bigvectorbench_spark.operators.packing import (
-        shard_assign, write_shards)
-
-    df = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(300)],
-        "doc_id long, text string")
-    out = str(tmp_path / "shards")
-    write_shards(df, out, n_shards=8, seed=42)
-
-    dirs = sorted(p.name for p in (tmp_path / "shards").iterdir()
-                  if p.name.startswith("shard="))
-    assert dirs == [f"shard={k}" for k in range(8)]
-    want = {r["doc_id"]: r["shard"]
-            for r in shard_assign(df, n_shards=8, seed=42).collect()}
-    seen = {}
-    for d in dirs:
-        k = int(d.split("=")[1])
-        for f in (tmp_path / "shards" / d).glob("*.parquet"):
-            t = pq_.read_table(str(f)).to_pydict()
-            keys = t["order_key"]
-            assert keys == sorted(keys)  # within-file deterministic order
-            for i in t["doc_id"]:
-                assert want[i] == k
-                seen[i] = k
-    assert len(seen) == 300
-
-    # byte-level reproducibility of the layout decision: second write,
-    # same assignment and same per-shard order keys
-    out2 = str(tmp_path / "shards2")
-    write_shards(df, out2, n_shards=8, seed=42)
-    a = spark.read.parquet(out).select("doc_id", "shard", "order_key")
-    b = spark.read.parquet(out2).select("doc_id", "shard", "order_key")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_write_shards_incremental_append(spark, tmp_path):
-    """Because assignment is a pure function of (seed, id), an appended
-    batch extends the SAME layout: old files untouched, new docs land in
-    their hash-designated shard dirs, and the merged read equals a
-    from-scratch write of the union."""
-    from bigvectorbench_spark.operators.packing import write_shards
-
-    a = spark.createDataFrame([(i, f"t{i}") for i in range(100)],
-                              "doc_id long, text string")
-    b = spark.createDataFrame([(i, f"t{i}") for i in range(100, 160)],
-                              "doc_id long, text string")
-    out = str(tmp_path / "s")
-    write_shards(a, out, n_shards=4, seed=42)
-    before = {str(p) for p in (tmp_path / "s").rglob("*.parquet")}
-    write_shards(b, out, n_shards=4, seed=42, mode="append")
-    after = {str(p) for p in (tmp_path / "s").rglob("*.parquet")}
-    assert before <= after  # append never rewrites existing shard files
-
-    ref = str(tmp_path / "ref")
-    write_shards(a.unionByName(b), ref, n_shards=4, seed=42)
-    got = sorted(map(tuple, spark.read.parquet(out)
-                 .select("doc_id", "shard", "order_key").collect()))
-    want = sorted(map(tuple, spark.read.parquet(ref)
-                  .select("doc_id", "shard", "order_key").collect()))
-    assert got == want
-
-
-def test_write_shards_max_records_per_file(spark, tmp_path):
-    """File sizing: each shard splits into order-contiguous files of at
-    most N rows, and the multi-file shard still reads back complete and
-    identically ordered per file."""
-    import pyarrow.parquet as pq_
-    from bigvectorbench_spark.operators.packing import write_shards
-
-    df = spark.createDataFrame([(i, f"t{i}") for i in range(400)],
-                               "doc_id long, text string")
-    out = str(tmp_path / "s")
-    write_shards(df, out, n_shards=4, seed=42, max_records_per_file=30)
-    total = 0
-    for d in (tmp_path / "s").glob("shard=*"):
-        files = sorted(d.glob("*.parquet"))
-        assert len(files) >= 2  # ~100 rows/shard at 30/file must split
-        for f in files:
-            t = pq_.read_table(str(f))
-            assert t.num_rows <= 30
-            keys = t.column("order_key").to_pylist()
-            assert keys == sorted(keys)
-            total += t.num_rows
-    assert total == 400

@@ -180,3 +180,80 @@ def test_epoch_oversample_copy_count_property(spark, ppm, _seed):
         h = ((i * 2654435761) % 4294967296) % 1_000_000
         want = full + (1 if h < frac else 0)
         assert sorted(got.get(i, [])) == list(range(want))
+
+
+# ------------------------------------------------ the shared Arrow kernel
+# ``knn.arrow_map`` runs every Arrow batch kernel of the package and
+# ``knn.list_parts`` reads their list columns: any row count, partitioning
+# and batch size must give each surviving row exactly its own output.
+
+import pyarrow as pa
+from hypothesis import example
+
+from bigvectorbench_spark.operators.knn import arrow_map, list_parts
+from tests.conftest import arrow_batch_rows
+
+
+@given(st.integers(0, 40), st.integers(1, 4), st.integers(0, 40), st.integers(1, 7))
+@example(n=0, parts=2, cut=0, batch=3)     # a zero-row frame
+@example(n=12, parts=1, cut=12, batch=5)   # one partition
+@example(n=30, parts=4, cut=6, batch=4)    # slices 2-4 empty after the filter
+@settings(max_examples=6, deadline=None)
+def test_arrow_map_rows_keep_and_list_output(spark, n, parts, cut, batch):
+    def rows_x2(batch, scale):
+        # an (n × 2) float32 block, declared as a double list column
+        x = batch.column("x").to_numpy()
+        return [np.stack([x * scale, x + 1.0], axis=1).astype(np.float32)]
+
+    # consecutive slices of the ids, so the filter empties the last ones
+    rdd = spark.sparkContext.parallelize([(i, float(i), f"t{i}") for i in range(n)], parts)
+    df = spark.createDataFrame(rdd, "id bigint, x double, tag string").filter(F.col("id") < cut)
+    with arrow_batch_rows(spark, batch):
+        out = arrow_map(df, rows_x2, [("v", pa.list_(pa.float64()))],
+                        state=0.5, keep=["tag", "id"])
+        rows = out.collect()
+    assert out.columns == ["tag", "id", "v"]
+    assert out.schema["v"].dataType.simpleString() == "array<double>"
+    assert out.schema["tag"] == df.schema["tag"]
+    want = {i: (f"t{i}", [i * 0.5, i + 1.0]) for i in range(min(n, cut))}
+    assert {r["id"]: (r["tag"], r["v"]) for r in rows} == want
+    assert len(rows) == len(want)
+
+
+def test_arrow_map_new_rows_without_keep(spark):
+    """Without ``keep`` a kernel may emit any number of rows per batch,
+    zero included; its columns take their declared Arrow types."""
+    df = spark.range(0, 9, 1, 3)
+
+    def evens(batch, _):
+        ids = batch.column("id").to_numpy()
+        ids = ids[ids % 2 == 0]
+        return [np.repeat(ids, 2).astype(np.int32), np.tile([True, False], len(ids))]
+
+    out = arrow_map(df, evens, [("id", pa.int64()), ("first", pa.bool_())])
+    assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "boolean"]
+    assert sorted(map(tuple, out.collect())) == sorted(
+        (i, f) for i in range(0, 9, 2) for f in (True, False))
+
+
+@given(st.lists(st.one_of(st.none(), st.lists(st.integers(-2**63, 2**63 - 1), max_size=4)),
+                max_size=10), st.integers(0, 10))
+@example(rows=[], start=0)
+@example(rows=[[], [], []], start=0)
+@example(rows=[None, [5], None, []], start=1)
+@settings(**_SETTINGS)
+def test_list_parts_matches_python(rows, start):
+    col = pa.array(rows, pa.list_(pa.int64())).slice(min(start, len(rows)))
+    flat, offsets = list_parts(col)
+    want = [r or [] for r in rows[start:]]
+    assert flat.dtype == np.int64 and offsets[0] == 0 and len(offsets) == len(want) + 1
+    assert [flat[a:b].tolist() for a, b in zip(offsets[:-1], offsets[1:])] == want
+
+
+def test_list_parts_skips_values_behind_null_lists():
+    """A null list whose offsets span values reads as empty."""
+    col = pa.ListArray.from_arrays(pa.array([0, 2, 4, 5], pa.int32()),
+                                   pa.array([1, 2, 3, 4, 5], pa.int64()),
+                                   mask=pa.array([False, True, False]))
+    flat, offsets = list_parts(col, np.float64)
+    assert flat.tolist() == [1.0, 2.0, 5.0] and offsets.tolist() == [0, 2, 2, 3]

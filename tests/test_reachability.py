@@ -12,8 +12,10 @@ query bench (``bench.py``) and the benchmark (``vbench/*.py``):
   function or class is reached when a reached body names it (directly,
   through an import alias or as ``module.attr``), and a method when its
   class is reached and a reached body names it as an attribute (dunders
-  come with the class).  Re-exports in an ``__init__`` bind a name but do
-  not use it.
+  come with the class).  An attribute of a module outside the package
+  (``np.load``, ``json.load``) or of a DataFrame ``.read``/``.write``
+  chain (``df.write.save()``) names no package method.  Re-exports in an
+  ``__init__`` bind a name but do not use it.
 
 A definition only tests reach is code no query, oracle or benchmark runs:
 delete it, or declare the query that uses it.
@@ -44,17 +46,6 @@ EXEMPT_DEFS = {
     # Correctness checks tests run on reached operators' output.
     f"{PKG}.operators.groundtruth.verify_distances",
     f"{PKG}.operators.knn.assert_unique_candidates",
-    # Kept for now, though only tests reach them: deleting them with their
-    # 10 tests would take more tier-1 tests away in one change than one
-    # change may drop.  Delete them in the next change.
-    f"{PKG}.functions.text.char_ngrams",
-    f"{PKG}.operators.curation.window_hashes",
-    f"{PKG}.operators.dedup.canonical_docs",
-    f"{PKG}.operators.dedup.exact_dedup",
-    f"{PKG}.operators.metrics.best_search_time",
-    f"{PKG}.operators.packing.write_shards",
-    f"{PKG}.operators.sparse.load_index",
-    f"{PKG}.operators.sparse.save_index",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -163,6 +154,22 @@ class _Module:
                     self.binds[a.asname or a.name] = f"{base}.{a.name}"
 
 
+def _foreign(mod, node):
+    """True when the attribute ``node`` cannot be a package method: its
+    receiver is a module outside the package, or the chain it ends passes
+    through a DataFrame ``.read``/``.write``."""
+    v, called = node.value, False
+    while isinstance(v, (ast.Attribute, ast.Call)):
+        if isinstance(v, ast.Call):
+            v, called = v.func, True
+        elif v.attr in ("read", "write"):
+            return True
+        else:
+            v = v.value
+    return (not called and isinstance(v, ast.Name) and v.id in mod.binds
+            and not mod.binds[v.id].startswith(PKG))
+
+
 def reached_defs(root=ROOT, extra_roots=()):
     """(reached, all) sets of ``module.qualname`` for the package's
     top-level functions, classes and methods.  ``extra_roots`` are
@@ -236,7 +243,7 @@ def reached_defs(root=ROOT, extra_roots=()):
                         if hit and hit[0] == "mod":
                             load(hit[1])
                 elif isinstance(node, (ast.Name, ast.Attribute)):
-                    if isinstance(node, ast.Attribute):
+                    if isinstance(node, ast.Attribute) and not _foreign(mod, node):
                         attrs.add(node.attr)
                     hit = target(mod, node)
                     if hit and hit[0] == "mod":
@@ -320,7 +327,8 @@ def test_walk_resolves_relative_and_from_imports(tmp_path):
 def test_name_walk_follows_bodies_tables_and_methods(tmp_path):
     """The name walk: calls through aliases and ``module.attr``, functions
     named in a module-level table, methods named as attributes, and
-    re-exports that bind without using."""
+    re-exports that bind without using.  ``np.save`` and
+    ``df.write...save()`` do not reach ``Index.save``."""
     root = _tree(tmp_path, {
         f"{PKG}/__init__.py": "from .ops import dead, run\n",
         f"{PKG}/ops.py": (
@@ -333,14 +341,17 @@ def test_name_walk_follows_bodies_tables_and_methods(tmp_path):
             "    def __init__(self):\n        pass\n"
             "    def search(self):\n        return self._scan()\n"
             "    def _scan(self):\n        return 3\n"
-            "    def decode(self):\n        return 4\n"),
+            "    def decode(self):\n        return 4\n"
+            "    def save(self):\n        return 5\n"),
         f"{PKG}/util.py": "def helper():\n    return 0\n"
                           "def unused():\n    return 5\n",
         "__spark_entry__.py": (
-            f"import {PKG}.ops as o\nfrom {PKG} import run\n"
-            "def q():\n    run()\n    return o.Index().search()\n"),
+            f"import numpy as np\nimport {PKG}.ops as o\nfrom {PKG} import run\n"
+            "def q(df):\n    run()\n    np.save('x', 1)\n"
+            "    df.write.mode('overwrite').save()\n"
+            "    return o.Index().search()\n"),
     })
     reached, every = reached_defs(root)
     assert every - reached == {f"{PKG}.ops.dead", f"{PKG}.ops.Index.decode",
-                               f"{PKG}.util.unused"}
+                               f"{PKG}.ops.Index.save", f"{PKG}.util.unused"}
     assert f"{PKG}.ops._in_table" in reached

@@ -155,19 +155,6 @@ def test_ivf_filtered_search(ivf_data, spark):
     assert all(r["id"] % 3 == 0 for r in got.collect())
 
 
-def test_ivf_save_load_roundtrip(ivf_data, tmp_path, spark):
-    _, train, test, idx, indexed = ivf_data
-    idx.save(spark, str(tmp_path / "centroids"))
-    loaded = sim.IVFIndex.load(spark, str(tmp_path / "centroids"))
-    assert np.allclose(loaded.centroids, idx.centroids)
-    assert loaded.metric == idx.metric
-    a = [(r["qid"], r["id"]) for r in
-         idx.search(indexed, test, k=5, nprobe=2).orderBy("qid", "rank").collect()]
-    b = [(r["qid"], r["id"]) for r in
-         loaded.search(indexed, test, k=5, nprobe=2).orderBy("qid", "rank").collect()]
-    assert a == b
-
-
 def test_ivf_delta_report_accounting(spark):
     """Incremental maintenance: delta rows are assigned to EXISTING
     centroids (no refit — index identity pinned), and the per-cell report

@@ -215,22 +215,6 @@ def test_sparse_delta_report_matches_python(spark, docs):
     assert row["mean_idf_drift"] >= 0
 
 
-def test_index_save_load_roundtrip(spark, docs, tmp_path):
-    """The weighted index round-trips through parquet with identical rows
-    and identical search results (build once, serve across jobs)."""
-    wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs))
-    path = str(tmp_path / "sparse_idx")
-    sp.save_index(wpost, path)
-    back = sp.load_index(spark, path)
-    a = sorted(map(tuple, wpost.collect()))
-    b = sorted(map(tuple, back.select(*wpost.columns).collect()))
-    assert a == b
-    q = spark.createDataFrame([(0,), (3,)], "qid bigint")
-    r1 = sorted(map(tuple, sp.sparse_topk(docs, q, k=5, wpost=wpost).collect()))
-    r2 = sorted(map(tuple, sp.sparse_topk(docs, q, k=5, wpost=back).collect()))
-    assert r1 == r2
-
-
 def test_auto_m_rule():
     """auto_m is the calibrated linear rule (m = 0.04·n, floor 64) — the
     measured decade invariant: 50k→2000, 500k→20000

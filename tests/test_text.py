@@ -27,11 +27,6 @@ def test_word_shingles(spark):
     assert _eval(spark, tx.shingles_from_tokens(tx.tokens(F.col("t")), 3), "a b") == []
 
 
-def test_char_ngrams(spark):
-    got = _eval(spark, tx.char_ngrams(F.col("t"), 2), "abab")
-    assert sorted(got) == ["ab", "ba"]
-
-
 def test_ratios(spark):
     assert _eval(spark, tx.stopword_ratio_from_tokens(tx.tokens(F.col("t"))),
                  "the cat and dog") == pytest.approx(0.5)
