@@ -91,13 +91,18 @@ def knn(
     scan, which is the filter-ann fast path (SURVEY §2.2 Q4).
     """
     qvec = query_vec_col or vec_col
-    if metric != "jaccard":  # jaccard items are sets: variable length is legal
-        _check_dims(train, queries, vec_col, qvec)
-    if pre_filter is not None:
-        train = train.filter(F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)
     if method == "auto":
         method = "gemm" if metric in ("euclidean", "angular") else (
             "sparse" if metric == "jaccard" else "expr")
+    if method == "gemm" and metric not in ("euclidean", "angular", "hamming"):
+        method = "expr"  # jaccard is set-typed; GEMM does not apply
+    # jaccard items are sets: variable length is legal.  The GEMM path
+    # checks the train width against the query matrix it collects anyway.
+    t_dim = None if metric == "jaccard" else _first_dim(train, vec_col)
+    if method == "expr" and t_dim is not None:
+        _check_dims(t_dim, _first_dim(queries, qvec), vec_col)
+    if pre_filter is not None:
+        train = train.filter(F.expr(pre_filter) if isinstance(pre_filter, str) else pre_filter)
     if method == "sparse":
         if metric != "jaccard":
             raise ValueError("method='sparse' applies to metric='jaccard' only")
@@ -105,20 +110,23 @@ def knn(
     if method == "expr":
         return _knn_expr(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
     if method == "gemm":
-        return _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
+        return _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col, t_dim)
     raise ValueError(f"unknown method {method!r}")
 
 
-def _check_dims(train, queries, vec_col, qvec) -> None:
+def _first_dim(frame: DataFrame, col: str) -> Optional[int]:
+    row = frame.select(F.size(col)).first()
+    return None if row is None else row[0]
+
+
+def _check_dims(t_dim: Optional[int], q_dim: Optional[int], vec_col: str) -> None:
     """Fail fast on mismatched vector lengths: ``zip_with`` zips to the
     SHORTER array, so a 64-d train scored against 32-d queries would
     silently return wrong distances instead of erroring."""
-    t = train.select(F.size(vec_col).alias("d")).first()
-    q = queries.select(F.size(qvec).alias("d")).first()
-    if t is not None and q is not None and t["d"] != q["d"]:
+    if t_dim is not None and q_dim is not None and t_dim != q_dim:
         raise ValueError(
-            f"vector dimension mismatch: train {vec_col} has d={t['d']}, "
-            f"queries have d={q['d']}"
+            f"vector dimension mismatch: train {vec_col} has d={t_dim}, "
+            f"queries have d={q_dim}"
         )
 
 
@@ -225,24 +233,37 @@ def arrow_rows(column, dtype=np.float64) -> np.ndarray:
             .astype(dtype, copy=False).reshape(len(column), -1))
 
 
-def partial_topk(D: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
-    """Row indices (kk × n_cols) of each column's kk = min(k, n) smallest
-    rows of ``D`` by (D, id) — the global tie rule, so a per-batch
-    selection never drops a row the final window would rank.  One
-    argpartition at k-1 and k; only the columns whose k-th and (k+1)-th
-    values tie are re-picked by a (D, id) lexsort of their rows at or below
-    the k-th value.  A tie at +inf (fewer than k unmasked rows) needs no
-    re-pick: those rows are dropped by the caller."""
+def partial_topk(D: np.ndarray, ids: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Flat ``(rows, cols)`` indices into ``D`` of each column's k
+    smallest entries by (D, id), grouped by column — the global tie rule,
+    so a per-batch selection never drops a row the final window would
+    rank.  NaN and +inf entries (masked rows) are never returned, so a
+    column with fewer than k others returns all it has.
+
+    The candidates are bounded first: ``tau`` is a column's k-th smallest
+    row-block minimum, and k blocks each hold an entry ≤ ``tau``, so every
+    entry the (D, id) rule can rank in the top k, ties at the k-th value
+    included, is ≤ ``tau``.  One lexsort of the candidates by (column, D,
+    id) then keeps the first k of each column."""
     n = len(ids)
-    if k >= n:
-        return np.broadcast_to(np.arange(n)[:, None], D.shape)
-    part = np.argpartition(D, [k - 1, k], axis=0)
-    kth, nxt = np.take_along_axis(D, part[k - 1:k + 1], axis=0)
-    part = part[:k]
-    for c in np.flatnonzero((kth == nxt) & np.isfinite(kth)):
-        rows = np.flatnonzero(D[:, c] <= kth[c])
-        part[:, c] = rows[np.lexsort((ids[rows], D[rows, c]))[:k]]
-    return part
+    if k < n:
+        # n // B > k whole blocks, so the k-th block minimum exists
+        # without the tail rows
+        B = max(1, n // (8 * k))
+        mins = D[:n - n % B].reshape(n // B, B, -1).min(axis=1)
+        tau = np.partition(mins, k - 1, axis=0)[k - 1]
+        if D.dtype.kind == "f":
+            # fewer than k blocks with a finite minimum leave tau +inf or
+            # NaN: then every finite entry is a candidate
+            tau = np.fmin(tau, np.finfo(D.dtype).max)
+        flat = np.flatnonzero(D <= tau)
+    else:
+        flat = np.flatnonzero(D < np.inf)
+    rows, cols = np.divmod(flat, D.shape[1])
+    order = np.lexsort((ids[rows], D[rows, cols], cols))
+    rows, cols = rows[order], cols[order]
+    keep = np.arange(len(cols)) - np.searchsorted(cols, cols) < k
+    return rows[keep], cols[keep]
 
 
 def list_parts(column, dtype=np.int64) -> tuple[np.ndarray, np.ndarray]:
@@ -319,7 +340,9 @@ def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
     Each batch emits only its per-column partial top-k (``partial_topk``),
     so the shuffle carries O(q·k·batches) rows instead of O(q·n); a final
     window ranks them.  Returns ``(keys…, id, dist, rank)`` with rank 1..k
-    ordered by (dist, id) per key."""
+    ordered by (dist, id) per key.  A NaN or +inf distance is never
+    returned, masked or not, so a key with fewer than k other distances
+    gets fewer than k rows."""
     import pyarrow as pa
 
     names = list(keys)
@@ -333,11 +356,8 @@ def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
         D = score(batch, b_state)
         if b_member is not None:
             D = np.where(b_member[batch.column(CLUSTER_COL).to_numpy()], D, np.inf)
-        part = partial_topk(D, ids, k)
-        out_d = np.take_along_axis(D, part, axis=0).T.ravel()
-        keep = np.isfinite(out_d) if b_member is not None else slice(None)
-        return [*(np.repeat(c, len(part))[keep] for c in b_cols),
-                ids[part.T].ravel()[keep], out_d[keep]]
+        rows, cols = partial_topk(D, ids, k)
+        return [*(c[cols] for c in b_cols), ids[rows], D[rows, cols]]
 
     partial = arrow_map(frame, scan, out, state=(cols, state, member))
     return topk_window(partial, k, qid=names, dist=dist).select(*names, "id", dist, "rank")
@@ -355,8 +375,14 @@ def gemm_scan(frame: DataFrame, qids: np.ndarray, qmat: np.ndarray, k: int,
         X = arrow_rows(batch.column("vec"))
         if metric == "euclidean":
             # ‖t−q‖² = ‖t‖² − 2 t·q + ‖q‖²  (bruteforce/module.py:128-137)
+            # in place, bit-identical to x2 − 2g + q2: (−2)·g is exactly −(2·g)
             Q, q2 = st
-            return np.sqrt(np.maximum((X * X).sum(axis=1)[:, None] - 2.0 * (X @ Q.T) + q2, 0.0))
+            G = X @ Q.T
+            G *= -2.0
+            G += (X * X).sum(axis=1)[:, None]
+            G += q2
+            np.maximum(G, 0.0, out=G)
+            return np.sqrt(G, out=G)
         if metric == "angular":
             return 1.0 - unit_rows(X) @ st.T
         # hamming: mean of elementwise mismatch, floats ∈ {0,1}, in row
@@ -367,13 +393,11 @@ def gemm_scan(frame: DataFrame, qids: np.ndarray, qmat: np.ndarray, k: int,
     return topk_scan(frame, {"qid": qids}, k, score, state=state, member=member)
 
 
-def _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col) -> DataFrame:
-    if metric not in ("euclidean", "angular", "hamming"):
-        # jaccard is set-typed; GEMM does not apply (expr path handles it).
-        return _knn_expr(train, queries, k, metric, vec_col, qvec, id_col, qid_col)
+def _knn_gemm(train, queries, k, metric, vec_col, qvec, id_col, qid_col, t_dim) -> DataFrame:
     qids, qmat = _collect_queries(queries, qid_col, qvec)
     if len(qids) == 0:
         return train.sparkSession.createDataFrame([], _OUT_SCHEMA)
+    _check_dims(t_dim, qmat.shape[1], vec_col)
     t = train.select(F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec"))
     return gemm_scan(t, qids, qmat, k, metric)
 

@@ -193,6 +193,8 @@ def main() -> int:
         df = fn(spark, sf)
         cols = sorted(df.columns)
         sp_rows = normalize([r.asDict() for r in df.collect()], cols)
+        # each query builds its own persisted frames, as in bench.run_query
+        spark.catalog.clearCache()
         if name not in oracles:
             print(f"  {name:28s} rows-only: {len(sp_rows)} rows ✓(no oracle)")
             records[name] = {"status": "rows_only", "rows": len(sp_rows),

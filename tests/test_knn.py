@@ -107,6 +107,14 @@ def test_dim_mismatch_raises(spark):
         knn_ops.knn(t, q, k=1)
 
 
+def test_ragged_queries_raise(spark):
+    """The GEMM path checks widths on the query matrix it collects."""
+    t = spark.createDataFrame([(0, [1.0, 2.0])], "id bigint, vec array<float>")
+    q = spark.createDataFrame([(0, [1.0, 2.0]), (1, [1.0])], "qid bigint, vec array<float>")
+    with pytest.raises(ValueError):
+        knn_ops.knn(t, q, k=1)
+
+
 def test_uniqueness_assertion(data):
     _, _, train, test = data
     res = knn_ops.knn(train, test, k=5)

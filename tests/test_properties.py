@@ -257,3 +257,73 @@ def test_list_parts_skips_values_behind_null_lists():
                                    mask=pa.array([False, True, False]))
     flat, offsets = list_parts(col, np.float64)
     assert flat.tolist() == [1.0, 2.0, 5.0] and offsets.tolist() == [0, 2, 2, 3]
+
+
+# ------------------------------------------------ per-batch top-k selection
+# ``knn.partial_topk`` prunes with a block-minimum bound before it ranks;
+# it must return exactly what a plain (D, id) lexsort of each column's
+# finite entries returns, ties at the k-th value and masked columns included.
+
+from bigvectorbench_spark.operators.knn import partial_topk, topk_scan
+
+
+def _topk_truth(D, ids, k):
+    rows = [np.flatnonzero(np.isfinite(D[:, c])) for c in range(D.shape[1])]
+    rows = [r[np.lexsort((ids[r], D[r, c]))][:k] for c, r in enumerate(rows)]
+    return np.concatenate(rows), np.concatenate([np.full(len(r), c) for c, r in enumerate(rows)])
+
+
+def _selection_input(kind, n, m, rng):
+    if kind == "int":  # BQ hamming distances
+        return rng.integers(0, 65, (n, m))
+    if kind == "ties":  # a third of each column ties at every value
+        return rng.integers(0, 3, (n, m)).astype(np.float64)
+    D = rng.random((n, m))
+    if kind == "masked":  # IVF: per column none, most or all rows at +inf
+        D[rng.random((n, m)) < rng.choice([0.0, 0.8, 1.0], m)] = np.inf
+    elif kind == "nan":
+        D[rng.random((n, m)) < 0.7] = np.nan
+    return D
+
+
+@given(st.sampled_from(["float", "int", "ties", "masked", "nan"]), st.integers(1, 200),
+       st.integers(1, 4), st.integers(1, 12), st.integers(0, 2**32 - 1))
+@example(kind="float", n=3, m=2, k=5, seed=0)     # n < k
+@example(kind="ties", n=5, m=3, k=5, seed=0)      # n = k
+@example(kind="masked", n=6, m=4, k=5, seed=1)    # n = k + 1
+@example(kind="ties", n=101, m=3, k=3, seed=2)    # B = 4: a one-row tail block
+@example(kind="masked", n=50, m=3, k=10, seed=3)  # columns with < k finite rows
+@example(kind="int", n=200, m=2, k=12, seed=4)
+@settings(max_examples=60, deadline=None)
+def test_partial_topk_matches_lexsort(kind, n, m, k, seed):
+    rng = np.random.default_rng(seed)
+    D = _selection_input(kind, n, m, rng)
+    ids = rng.permutation(n).astype(np.int64) * 3 - 7
+    rows, cols = partial_topk(D, ids, k)
+    want_rows, want_cols = _topk_truth(D, ids, k)
+    assert np.array_equal(cols, want_cols) and np.array_equal(rows, want_rows)
+
+
+def test_topk_scan_ties_across_batches_and_drops_nan(spark):
+    """Duplicate values tie at the k-th distance across 3-row Arrow
+    batches: the kernel keeps the smallest ids, as the final window does.
+    A query whose every distance is NaN gets no row."""
+    rng = np.random.default_rng(7)
+    n, k = 40, 5
+    x = rng.integers(0, 3, n).astype(np.float64)
+    ids = rng.permutation(n) * 7
+    qs = np.array([0.0, 1.0, 2.5, np.nan])
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(list(zip(ids.tolist(), x.tolist())), 2),
+        "id bigint, x double")
+    res = topk_scan(df, {"qid": np.arange(len(qs))}, k,
+                    lambda batch, q: np.abs(batch.column("x").to_numpy()[:, None] - q),
+                    state=qs)
+    with arrow_batch_rows(spark, 3):
+        got = sorted(map(tuple, res.collect()))
+    want = []
+    for j, q in enumerate(qs[:3]):
+        d = np.abs(x - q)
+        want += [(j, int(ids[i]), float(d[i]), r + 1)
+                 for r, i in enumerate(np.lexsort((ids, d))[:k])]
+    assert got == sorted(want)
