@@ -1,11 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Every entry in ``queries()`` is an operator from SURVEY.md §2 (or the
-BASELINE.json extension surface) implemented by ``bigvectorbench_spark``;
-``oracle_sql()`` holds the equivalent ANSI SQL DuckDB runs on the same
-parquet tables.  Queries whose semantics are not SQL-expressible (KMeans
-IVF, MinHash/SimHash banding, over-fetch post-filtering) have no oracle
-entry and get the driver's rows-only check — noted inline.
+``entry()`` is the flagship query, ``queries()`` maps every declared query
+name to its builder and ``oracle_sql()`` maps each value-checked query to
+the DuckDB SQL that recomputes it from the same parquet tables.  Builders
+and oracles live side by side in ``bigvectorbench_spark.queries``, one
+module per query family; a query without an oracle gets the driver's
+rows-only check.
 
 Float-determinism conventions shared by both sides:
 - distance sums fold left-to-right in double precision and outputs are
@@ -20,6198 +20,167 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from bigvectorbench_spark.functions import distance as dx
-from bigvectorbench_spark.functions import text as tx
-from bigvectorbench_spark.operators import dedup as dd
-from bigvectorbench_spark.operators import metrics as mx
-from bigvectorbench_spark.operators import multivector as mv
-from bigvectorbench_spark.operators.filter_knn import (
-    filtered_ivf_knn, filtered_knn, postfilter_knn)
-from bigvectorbench_spark.operators.knn import knn, knn_hamming_packed
-from bigvectorbench_spark.operators import retrieval as rt
-from bigvectorbench_spark.operators.bq import BQIndex
-from bigvectorbench_spark.operators.pq import PQIndex
-from bigvectorbench_spark.operators.similarity import IVFIndex
-from bigvectorbench_spark.operators.temporal import sessionize, windowed_event_counts
-from bigvectorbench_spark.sources.tables import load_table
+from bigvectorbench_spark.queries import (
+    ann, dedup, dense, hybrid, metrics, mixing, relational, sparse, temporal,
+    text)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-# Embedding dimensionality of the synthetic workload (TESTDATA.md) — shared
-# between the Spark queries and the oracle SQL so neither side runs a
-# driver-blocking probe job inside a timed query path.
-EMB_DIM = 64
-
-# The driver's oracle harness runs at sf0.01 (TESTDATA.md contract); the
-# quality-gate thresholds below are calibrated there (scripts/
-# calibrate_gates.py).  At any other sf dir the recall distributions shift
-# (nlist=8/nprobe=4 partitions different data), so the gates relax to
-# defect-only floors rather than fail spuriously (ADVICE r3).
-_ORACLE_SF = "sf0.01"
-
-
-def _gate(sf: str, tight: tuple[float, float], floor: tuple[float, float]) -> tuple[float, float]:
-    return tight if _ORACLE_SF in str(sf) else floor
-
-
-def _recall_gate(approx: DataFrame, exact: DataFrame, mean_thr: float,
-                 min_thr: float, *extra, lead=(), col: str = "id") -> DataFrame:
-    """The one-row recall gate: per-query recall@k of ``approx`` against
-    ``exact`` (both (qid, ``col``) top-k rows), aggregated to n_queries,
-    the ``lead`` columns, the mean/min threshold booleans the oracle
-    asserts TRUE, and the ``extra`` columns."""
-    def neighbors(df):
-        return df.groupBy("qid").agg(F.collect_list(col).alias("neighbors"))
-
-    per_q = mx.recall_per_query(neighbors(approx), neighbors(exact))
-    return per_q.agg(
-        F.count("*").alias("n_queries"), *lead,
-        (F.avg("recall") >= mean_thr).alias("mean_recall_ok"),
-        (F.min("recall") >= min_thr).alias("min_recall_ok"), *extra)
-
-
-def _pinned_mean(n_rows: int):
-    """Mean recall to 2 dp, pinned by the oracle only on corpora of at most
-    500 rows (null elsewhere)."""
-    return (F.when(F.lit(n_rows <= 500), F.round(F.avg("recall"), 2))
-            .cast("double").alias("mean_recall_r2"))
-
-
-# --------------------------------------------------------------------- helpers
-
-def _train(spark, sf):
-    return load_table(spark, sf, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label"
-    )
-
-
-def _queries_mod(spark, sf, mod=0):
-    return load_table(spark, sf, "embeddings").filter(f"vec_id % 50 = {mod}").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("vec"), "label"
-    )
-
-
-def _r(col, n=4):
-    return F.round(col, n)
-
-
-# ------------------------------------------------------------ vector queries
-
-def q_knn_euclid(spark, sf):
-    """Q1/Q3/Q6: exact batch kNN, euclidean (expr path, Catalyst-visible)."""
-    res = knn(_train(spark, sf), _queries_mod(spark, sf), k=10, method="expr")
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_knn_euclid_gemm(spark, sf):
-    """Q1 via the GEMM mapInArrow scale path (ids/ranks; kernel distances
-    differ from the expr algebra at ~1e-8 so they are not emitted)."""
-    res = knn(_train(spark, sf), _queries_mod(spark, sf), k=10, method="gemm")
-    return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_knn_angular(spark, sf):
-    """Q1 with angular (cosine) distance (D2)."""
-    res = knn(_train(spark, sf), _queries_mod(spark, sf), k=10, metric="angular", method="expr")
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_knn_hamming(spark, sf):
-    """Q1 with hamming distance (D3) over sign-bits of the embeddings,
-    via the packed-bits plan: booleans pack into 64-bit words on the fly
-    and scoring is one popcount per word (bit_count(xor)) — the scan that
-    survives 100× data, at 1/64th the width of the dense boolean compare.
-    Values are identical to the dense form (popcount/d is the same exact
-    division), so the oracle is the ground-truth boolean semantics."""
-    t = _train(spark, sf).withColumn("vec", F.transform("vec", lambda x: x > 0))
-    q = _queries_mod(spark, sf).withColumn("vec", F.transform("vec", lambda x: x > 0))
-    res = knn_hamming_packed(t, q, k=10, bits_col="vec")
-    return res.select("qid", "id", F.round(F.col("dist"), 6).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_knn_hamming_packed(spark, sf):
-    """The packed-table form of q_knn_hamming: ARRAY<BIGINT> words are
-    materialized first (the M2 'index build' artifact a binary workload
-    would store — reference data.py:20-25 point_type='bit') and the search
-    reads ONLY the packed words (packed=True skips the boolean column
-    entirely).  Oracle: DuckDB packs the same sign-bits into a BIT string
-    and scores with bit_count(xor) — bit arithmetic on both engines."""
-    tp = _train(spark, sf).select(
-        "id", dx.pack_signs(F.col("vec"), EMB_DIM).alias("words"))
-    qp = _queries_mod(spark, sf).select(
-        "qid", dx.pack_signs(F.col("vec"), EMB_DIM).alias("words"))
-    res = knn_hamming_packed(tp, qp, k=10, bits_col="words", d=EMB_DIM, packed=True)
-    return res.select("qid", "id", F.round(F.col("dist"), 6).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hnsw_knn(spark, sf):
-    """§2.7 HNSW, re-expressed for Spark: partition-local HNSW graphs
-    (one artifact per shard, built in parallel) + broadcast-query beam
-    search + global top-k merge — the shard-and-merge architecture every
-    distributed ANN system ships (operators/hnsw.py module doc cites the
-    reference's five HNSW client wrappers).  Declared with ef >= shard
-    size, where beam search is provably EXACT (connectivity-repaired
-    graph), so the oracle is the exact kNN SQL — the approximate regime's
-    recall/ef curve is pinned in test_hnsw.  Emits ids/ranks (numpy vs
-    expression float folds differ ~1e-15, same convention as
-    knn_euclid_gemm).
-
-    Shard count derives from the corpus so SHARD SIZE stays bounded
-    (~500 rows ≤ ef) — the property the exactness claim rests on.  A
-    fixed shard count was the r5 scaling bench's one superlinear
-    outlier: at sf1 it put 5000 rows/shard, silently breaking
-    ef ≥ shard size and growing each task's Python insert loop 10×
-    (21× wall per decade).  At the oracle SF this derivation reproduces
-    the original 4-shard configuration exactly.  The row count comes
-    from the parquet FOOTER (table_rows — the statistic a cluster
-    catalog serves), not a ``count()`` action, so declaring the query
-    costs no corpus scan (VERDICT r5 ask #7).  This bounded-shard
-    config is the ORACLE-EXACTNESS declaration; the serving-scale
-    configuration (few large shards, ef ≪ shard size) is
-    ``q_hnsw_scale_search`` below."""
-    from bigvectorbench_spark.operators.hnsw import build_hnsw_shards, hnsw_search
-    from bigvectorbench_spark.sources.tables import table_rows
-
-    t = _train(spark, sf)
-    num_shards = max(4, -(-table_rows(sf, "embeddings") // 500))
-    shards = build_hnsw_shards(t, m=8, ef_construction=64,
-                               num_shards=num_shards, seed=3)
-    res = hnsw_search(shards, _queries_mod(spark, sf), k=10, ef=2048)
-    return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hnsw_delta_knn(spark, sf):
-    """Incremental HNSW maintenance (VERDICT-family completion: the
-    M3-inserts × M2-index composition ivf_delta_knn and
-    sparse_delta_report already pin for their families): the graph
-    shards build on the BASE corpus (90%, the ivf_delta split), a later
-    arrival batch (10%) absorbs as its OWN shard(s) via
-    hnsw.hnsw_delta_shards — no existing shard is read or re-linked
-    (a stored-artifact engine appends; rewriting neighbor lists across
-    a persisted graph is the in-memory serving systems' move) — and
-    search runs over base ∪ delta through the unchanged shard-and-merge
-    path.  Declared in the bounded-shard / ef ≥ shard-size regime, where
-    BOTH sides are provably exact, so absorb-then-search ≡ full rebuild
-    and the oracle is the exact kNN SQL (the hnsw_knn convention); the
-    zero-base-mutation property is pinned byte-level in test_hnsw."""
-    from bigvectorbench_spark.operators.hnsw import (
-        build_hnsw_shards, hnsw_delta_shards, hnsw_search)
-    from bigvectorbench_spark.sources.tables import table_rows
-
-    t = _train(spark, sf)
-    base, delta = t.filter("id % 10 != 0"), t.filter("id % 10 = 0")
-    n_rows = table_rows(sf, "embeddings")
-    num_shards = max(4, -(-(n_rows * 9 // 10) // 500))
-    # Persisted: the base artifact is read twice (delta sizing stats +
-    # the union search) — persisting IS the M2 contract (at scale this
-    # frame is the stored parquet artifact, metadata-cheap).
-    base_shards = build_hnsw_shards(base, m=8, ef_construction=64,
-                                    num_shards=num_shards, seed=3).persist()
-    delta_shards = hnsw_delta_shards(
-        delta, base_shards, m=8, ef_construction=64, seed=3,
-        n_delta=n_rows - n_rows * 9 // 10)
-    res = hnsw_search(base_shards.unionByName(delta_shards),
-                      _queries_mod(spark, sf), k=10, ef=2048)
-    return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hnsw_delta_report(spark, sf):
-    """The rebuild-on-evidence meter beside q_hnsw_delta_knn (VERDICT r10
-    ask #2 — the family convention ivf_delta_report and
-    sparse_delta_report already set): TWO consecutive arrival batches
-    (10% each) absorb as append-only shards against an 80% base, then
-    hnsw.hnsw_delta_report emits the search-work accounting — shard
-    counts, row occupancy, and work_growth = shards_total /
-    shards_rebuilt, the per-query beam-invocation multiplier the
-    append-only layout pays vs a same-sizing rebuild (search cost is
-    Σ per-shard beams, so shard count IS the work unit).  The second
-    absorb sizes against base ∪ first-delta — the real N-absorb usage,
-    so the meter reflects accumulated appends, not a single batch.
-    Value-oracled exactly: the report is pure shard-metadata arithmetic
-    (counts, integer division, one 6-dp round), and the shard-sizing
-    rules (max(4, ceil(rows/500)) base shards; delta shards at the
-    prior layout's rows-per-shard) replay in ANSI SQL from the same
-    row counts.  Reference analog: index build/rebuild cost accounting,
-    runner.py:446-489."""
-    from bigvectorbench_spark.operators.hnsw import (
-        build_hnsw_shards, hnsw_delta_shards, hnsw_delta_report)
-    from bigvectorbench_spark.sources.tables import table_rows
-
-    t = _train(spark, sf)
-    base = t.filter("id % 10 >= 2")
-    d1, d2 = t.filter("id % 10 = 0"), t.filter("id % 10 = 1")
-    n = table_rows(sf, "embeddings")
-    n_d1, n_d2 = (n + 9) // 10, (n + 8) // 10   # ids are 0..n-1 contiguous
-    n_base = n - n_d1 - n_d2
-    num_shards = max(4, -(-n_base // 500))
-    base_shards = build_hnsw_shards(base, m=8, ef_construction=64,
-                                    num_shards=num_shards, seed=3).persist()
-    s1 = hnsw_delta_shards(d1, base_shards, m=8, ef_construction=64,
-                           seed=3, n_delta=n_d1).persist()
-    s2 = hnsw_delta_shards(d2, base_shards.unionByName(s1), m=8,
-                           ef_construction=64, seed=3, n_delta=n_d2).persist()
-    # Non-empty-bucket guard (ADVICE r11): the oracle REPLAYS the shard
-    # sizing from raw row counts, which assumes every pmod(hash(id),
-    # num_shards) bucket produced an artifact row.  The shipped fixtures
-    # are dense, but a tiny delta or unlucky hashing at another fixture
-    # size could drop a bucket — fail HERE with a diagnosis instead of
-    # surfacing as an inscrutable oracle hash mismatch.  Replay uses the
-    # same arithmetic the oracle does (per-shard target from the PRIOR
-    # layout, ceil for the delta shard count).
-    per1 = max(1, n_base // num_shards)
-    nds1 = -(-n_d1 // per1)
-    per2 = max(1, (n_base + n_d1) // (num_shards + nds1))
-    nds2 = -(-n_d2 // per2)
-    # ONE guard job for all three layouts (r13, VERDICT r12 ask #6: a
-    # guard should not cost a job per frame): the union counts every
-    # shard frame in a single action — which also materializes the three
-    # persists the report consumes — instead of three sequential count()
-    # jobs.  Same counts, same assertion.
-    got = {r["nm"]: r["count"] for r in
-           base_shards.select(F.lit("base").alias("nm"))
-           .unionByName(s1.select(F.lit("delta1").alias("nm")))
-           .unionByName(s2.select(F.lit("delta2").alias("nm")))
-           .groupBy("nm").count().collect()}
-    for want, name in ((num_shards, "base"), (nds1, "delta1"),
-                       (nds2, "delta2")):
-        if got.get(name, 0) != want:
-            raise AssertionError(
-                f"hnsw_delta_report fixture: {name} produced "
-                f"{got.get(name, 0)} shard rows, sizing expects {want} — "
-                f"an empty hash bucket breaks the value oracle's sizing "
-                f"replay (build_hnsw_shards non-empty-bucket note)")
-    return hnsw_delta_report(base_shards, s1.unionByName(s2))
-
-
-def q_hnsw_recall(spark, sf):
-    """Driver-visible gate for HNSW's APPROXIMATE regime (VERDICT r4 ask
-    #2; same contract as ``q_ivf_recall``): recall of beam search at
-    ef=16 — far below the ~150-row shard size, so the exactness escape
-    hatch (hnsw.py ef >= n) never engages and the gate exercises the real
-    beam/neighbor-selection code paths — against the exact kNN, both in
-    Spark.  Measured at the oracle sf: mean 0.99 / min 0.90 (m=8,
-    ef_construction=64, 4 shards, seed 3; scripts/calibrate_gates.py),
-    identical at sf0.001.  Tight thresholds 0.95/0.8 sit just under the
-    floor so a partial graph-build or beam defect (0.99 → 0.93) fails;
-    off the oracle sf the gate relaxes to a defect-only floor 0.7/0.5.
-    ``mean_recall_r2`` additionally pins the rounded VALUE (deterministic:
-    seeded build, deterministic beam), the srp_recall tightening applied
-    here from the start.  The pin only holds where it was calibrated —
-    the clamped ≤500-row embeddings corpora (the shipped sf0.001/sf0.01
-    fixtures; the 0.99 constant is seed-dependent, calibrated on the
-    seed-42 driver tables) — so off them both sides emit NULL (at sf0.1
-    the same code measures 0.88: larger shards at fixed ef=16
-    legitimately lower recall; the ok booleans still gate against the
-    defect floor there).  The pin predicate is row-count ≤ 500 from the
-    parquet footer — the IDENTICAL predicate the DuckDB oracle evaluates
-    (``count(embeddings) <= 500``), so a renamed sf dir can't make the
-    two sides disagree (ADVICE r5)."""
-    from bigvectorbench_spark.operators.hnsw import build_hnsw_shards, hnsw_search
-    from bigvectorbench_spark.sources.tables import table_rows
-
-    mean_thr, min_thr = _gate(sf, tight=(0.95, 0.8), floor=(0.7, 0.5))
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    n_rows = table_rows(sf, "embeddings")
-    # Bounded ~125-row shards: the calibrated oracle-SF configuration was
-    # 4 shards over 500 rows, and recall at fixed ef depends on shard
-    # size — deriving the count keeps every SF in the calibrated regime
-    # (and build wall time flat per decade, see q_hnsw_knn).
-    num_shards = max(4, -(-n_rows // 125))
-    shards = build_hnsw_shards(t, m=8, ef_construction=64,
-                               num_shards=num_shards, seed=3)
-    return _recall_gate(
-        hnsw_search(shards, q, k=10, ef=16), knn(t, q, k=10, method="expr"),
-        mean_thr, min_thr, _pinned_mean(n_rows))
-
-
-# Serving-scale HNSW configuration (VERDICT r5 ask #2): shard count tracks
-# EXECUTORS (fixed 8 — local[32]/4, the contract every sharded ANN serving
-# system uses: milvus segments ∝ query nodes), NOT corpus size, so each
-# shard holds thousands-to-millions of rows and beam width ef ≪ shard size
-# does genuinely sublinear per-shard work.  The bounded-shard q_hnsw_knn
-# config above stays as the oracle-EXACTNESS declaration; this one is the
-# recall/QPS trade-off point the reference's Pareto output plots.
-_HNSW_SCALE_CFG = dict(m=8, ef_construction=64, num_shards=8, seed=3)
-# Beam width resolves PER SHARD from its row count (hnsw.auto_ef — VERDICT
-# r6 ask #4: ef ∝ n_shard^0.9 calibrated on the measured recall ladder).
-# On the ≤500-row oracle corpora this floors at 24 ≥ shard size → exact
-# search, so the gate's pin-1.0 regime is unchanged; at the 200k fixture it
-# resolves to ~382 and holds recall ≈0.88 where fixed ef=24 fell to 0.44.
-_HNSW_SCALE_EF = "auto"
-
-
-def _hnsw_scale_index(spark, sf):
-    """Load-or-build the persisted scale-mode index artifact for ``sf``.
-
-    Returns (shards DataFrame, corpus row count).  The cache key is the
-    sf dir basename + footer row count + footer-statistics fingerprint —
-    the fingerprint keeps a corpus REGENERATED with a new seed (same
-    shape, same count, often same byte size) from being served a stale
-    graph.  No count() action and no data read runs (r5 ask #7)."""
-    from bigvectorbench_spark.operators.hnsw import load_or_build_hnsw
-    from bigvectorbench_spark.sources.tables import table_fingerprint, table_rows
-
-    n = table_rows(sf, "embeddings")
-    key = (f"{_os.path.basename(str(sf).rstrip('/'))}_{n}"
-           f"_{table_fingerprint(sf, 'embeddings')}")
-    shards = load_or_build_hnsw(_train(spark, sf), cache_key=key,
-                                **_HNSW_SCALE_CFG)
-    return shards, n
-
-
-def _queries_block(spark, sf, n_rows, target=100):
-    """A fixed-size (~``target``) query block whatever the corpus size —
-    the serving workload shape: query volume is set by traffic, not by
-    corpus growth, so search-cost scaling isolates the per-query cost vs
-    corpus size (the claim an ANN index exists to make)."""
-    stride = max(1, n_rows // target)
-    return load_table(spark, sf, "embeddings").filter(
-        f"vec_id % {stride} = 0").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("vec"))
-
-
-def q_hnsw_scale_search(spark, sf):
-    """§2.7 HNSW at the SERVING-SCALE configuration: 8 executor-aligned
-    shards, beam ef='auto' (per-shard adaptive width, hnsw.auto_ef — holds
-    recall ≈0.885 as shards grow where fixed ef=24 decayed to 0.44; r6 ask
-    #4), search served from the persisted index artifact
-    (load_or_build_hnsw — built once, the M2 build/search cost split;
-    reference milvus/module.py:662-686).  Fixed ~100-query block
-    (traffic-shaped, not corpus-shaped).  Approximate by design →
-    rows-only correctness here; the recall at this exact configuration is
-    driver-gated by ``hnsw_scale_recall`` and the per-decade search work
-    is measured in SCALING.md (work FRACTION of brute falls 0.20 → 0.136
-    per decade at constant recall)."""
-    from bigvectorbench_spark.operators.hnsw import hnsw_search
-
-    shards, n = _hnsw_scale_index(spark, sf)
-    q = _queries_block(spark, sf, n)
-    res = hnsw_search(shards, q, k=10, ef=_HNSW_SCALE_EF)
-    return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hnsw_scale_recall(spark, sf):
-    """Driver-visible recall gate for the serving-scale HNSW config —
-    same contract as ``q_hnsw_recall`` but at the 8-fixed-shard / ef='auto'
-    configuration ``q_hnsw_scale_search`` serves (VERDICT r5 ask #2:
-    "hnsw_recall recalibrated at the large-shard config").  Calibrated at
-    the oracle sf (scripts/calibrate_gates.py): on the clamped 500-row
-    corpus the 8-shard union (8 × top-10 from 62-row shards at beam 24)
-    recovers the exact top-10 completely — mean = min = 1.0, so the pin
-    is 1.0 and any build/beam defect that costs even one neighbor per
-    query trips the 0.95/0.8 thresholds.  The approximate regime engages
-    above the clamp (sf0.1: mean 0.975, min 0.8; 250-row shards), where
-    the pin is NULL and the defect floor (0.7/0.5) gates — at sf1
-    (2500-row shards) the same code measures the genuine large-shard
-    recall reported in SCALING.md.  Pin predicate = footer row count
-    ≤ 500, identical to the oracle's count(embeddings) <= 500."""
-    from bigvectorbench_spark.operators.hnsw import hnsw_search
-
-    # Off-oracle floor 0.8/0.35 (raised from 0.7/0.3 with round 7's
-    # adaptive ef — VERDICT r6 ask #4): with ef='auto' the measured recall
-    # holds ~0.885 mean / ≥0.5 min at BOTH the 20k and 200k fixtures
-    # (SCALING.md third table) instead of decaying
-    # with shard size, so the defect floor tightens.  Still defect-only:
-    # a broken build/beam lands far below it.
-    mean_thr, min_thr = _gate(sf, tight=(0.95, 0.8), floor=(0.8, 0.35))
-    shards, n_rows = _hnsw_scale_index(spark, sf)
-    t = _train(spark, sf)
-    q = _queries_block(spark, sf, n_rows)
-    return _recall_gate(
-        hnsw_search(shards, q, k=10, ef=_HNSW_SCALE_EF),
-        knn(t, q, k=10, method="expr"), mean_thr, min_thr, _pinned_mean(n_rows))
-
-
-def q_knn_jaccard(spark, sf):
-    """Q1 with jaccard distance (D4) over document token sets, including the
-    validity rule (drop non-overlapping, distance.py:38)."""
-    docs = _docs_wide(spark, sf)
-    t = docs.select(F.col("doc_id").alias("id"),
-                    F.array_sort(F.array_distinct(tx.tokens(F.col("text")))).alias("vec"))
-    q = docs.filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"),
-        F.array_sort(F.array_distinct(tx.tokens(F.col("text")))).alias("vec"))
-    res = knn(t, q, k=5, metric="jaccard", method="sparse")
-    return res.select("qid", "id", F.round(F.col("dist"), 6).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_filter_knn_eq(spark, sf):
-    """Q4/Q5: per-query equality predicate, one broadcast-join job."""
-    res = filtered_knn(_train(spark, sf), _queries_mod(spark, sf), k=10,
-                       filter_template="label == {label}", query_param_cols=["label"])
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_filter_knn_range(spark, sf):
-    """G6: per-query BETWEEN range predicate."""
-    q = _queries_mod(spark, sf).withColumn("lo", F.col("label") - 2).withColumn(
-        "hi", F.col("label") + 2)
-    res = filtered_knn(_train(spark, sf), q, k=10,
-                       filter_template="label >= {lo} and label <= {hi}",
-                       query_param_cols=["lo", "hi"])
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_filter_knn_2label(spark, sf):
-    """The reference's TWO-filter configuration (its ``-2filter`` datasets,
-    create_artificial_datasets.py:151-285 / README.md:164-186 carry two
-    label columns per row and AND the per-query predicates): a second
-    deterministic label (vec_id mod 7) joins the stored one, and each
-    query constrains BOTH — an equality on label₁ AND a range on label₂ —
-    through the same single-broadcast-join plan as the 1-filter queries
-    (the conjunction rides in the join condition; no second join, no
-    second scan)."""
-    lbl2 = F.pmod(F.col("id"), F.lit(7)).cast("int")
-    qlbl2 = F.pmod(F.col("qid"), F.lit(7)).cast("int")
-    t = _train(spark, sf).withColumn("label2", lbl2)
-    q = (_queries_mod(spark, sf)
-         .withColumn("lo2", qlbl2 - 1).withColumn("hi2", qlbl2 + 1))
-    res = filtered_knn(
-        t, q, k=10,
-        filter_template="label == {label} and label2 >= {lo2} and label2 <= {hi2}",
-        query_param_cols=["label", "lo2", "hi2"])
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_postfilter_knn(spark, sf):
-    """G5 post-filter plan (over-fetch then label check) — approximate vs
-    true filtered kNN, but deterministic under the overfetch + tie rules,
-    so it gets a full SQL oracle."""
-    res = postfilter_knn(_train(spark, sf), _queries_mod(spark, sf), k=10,
-                         metric="euclidean", filter_template="label <= {label}",
-                         query_param_cols=["label"], selectivity=0.5)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_filter_ivf_knn(spark, sf):
-    """Q4/Q5 per-query predicates composed with §2.7 IVF cell pruning under
-    the G5 selectivity policy (VERDICT r6 ask #5; reference
-    create_artificial_datasets.py:151-285 applied to the index scan — its
-    amazon-5filter regime).  Equality predicate keeps ~10% of rows →
-    the policy picks the PRE branch: the predicate joins INSIDE the probed
-    cells, so only cells ∩ label survivors are scored (with the exact
-    expression fold → distances hash-match).  Value-oracled the ivf_knn
-    way: the seeded KMeans assignment + probe lists are recomputed at
-    oracle-generation time and embedded as SQL literals, with the label
-    equi-join added on top."""
-    t = _train(spark, sf)
-    idx = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    res = filtered_ivf_knn(
-        idx, idx.assign(t), _queries_mod(spark, sf), k=10,
-        filter_template="label == {label}", query_param_cols=["label"],
-        nprobe=4, strategy="auto", selectivity=0.1)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_filter_ivf_recall(spark, sf):
-    """Recall gate for the POST branch of the filtered-IVF composition
-    (range predicate keeps ~44% of rows → ANN-first: the masked-GEMM IVF
-    kernel over-fetches k·1.5/selectivity label-blind candidates, the
-    predicate checks ride on those rows only).  Same contract as
-    ``q_ivf_recall``: recall vs the EXACT filtered kNN at the identical
-    predicate, emitted as threshold booleans the oracle asserts TRUE.
-    Calibrated measurements (same protocol as scripts/calibrate_gates.py):
-    sf0.01 mean 0.78 / min 0.60; sf0.001 0.76/0.60; sf0.1 0.737/0.50 —
-    tight thresholds 0.7/0.45 sit just under the oracle-sf floor so a
-    partial degradation (probe ranking, mask, or predicate-join defect)
-    fails the gate; off-oracle the defect-only floor is 0.5/0.25, under
-    the worst measured healthy tail."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.45), floor=(0.5, 0.25))
-    t = _train(spark, sf)
-    q = (_queries_mod(spark, sf)
-         .withColumn("lo", F.col("label") - 2)
-         .withColumn("hi", F.col("label") + 2))
-    idx = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    approx = filtered_ivf_knn(
-        idx, idx.assign(t), q, k=10,
-        filter_template="label >= {lo} and label <= {hi}",
-        query_param_cols=["lo", "hi"], nprobe=4, strategy="auto",
-        selectivity=0.44)
-    exact = filtered_knn(
-        t, q, k=10, filter_template="label >= {lo} and label <= {hi}",
-        query_param_cols=["lo", "hi"])
-    return _recall_gate(approx, exact, mean_thr, min_thr)
-
-
-def q_mv_knn(spark, sf):
-    """Q7: multi-vector kNN, mean of per-position euclidean distances.
-    Entities = 4 consecutive embedding rows (vec_id div 4)."""
-    emb = load_table(spark, sf, "embeddings")
-    ent = (
-        emb.select(F.expr("vec_id div 4").alias("eid"),
-                   F.expr("vec_id % 4").alias("vi"), "embedding")
-        .groupBy("eid")
-        .agg(F.transform(F.sort_array(F.collect_list(F.struct("vi", "embedding"))),
-                         lambda s: s["embedding"]).alias("vecs"))
-    )
-    res = mv.mv_knn(ent.withColumnRenamed("eid", "id"),
-                    ent.filter("eid < 5").withColumnRenamed("eid", "qid"), k=5)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_mv_knn_fused(spark, sf):
-    """Q7 fusion variant (WeightedRanker analog, milvus/module.py:422-458):
-    per-position top-k subqueries fused by weighted similarity.  Approximate
-    vs exact mean-distance kNN, but deterministic given the tie rules, so it
-    gets a full SQL oracle."""
-    emb = load_table(spark, sf, "embeddings")
-    ent = (
-        emb.select(F.expr("vec_id div 4").alias("eid"),
-                   F.expr("vec_id % 4").alias("vi"), "embedding")
-        .groupBy("eid")
-        .agg(F.transform(F.sort_array(F.collect_list(F.struct("vi", "embedding"))),
-                         lambda s: s["embedding"]).alias("vecs"))
-    )
-    res = mv.mv_knn_fused(ent.withColumnRenamed("eid", "id"),
-                          ent.filter("eid < 5").withColumnRenamed("eid", "qid"),
-                          k=5, weights=[0.25, 0.25, 0.25, 0.25], num_vectors=4)
-    return res.select("qid", "id", F.round("score", 6).alias("score"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def _mv_entities(spark, sf):
-    """The shared mv-ann fixture: entities = 4 consecutive embedding rows
-    (vec_id div 4), positions ordered by vec_id % 4 — the webvid shape
-    (4 keyframe vectors per entity, reference README.md:220-227)."""
-    emb = load_table(spark, sf, "embeddings")
-    return (
-        emb.select(F.expr("vec_id div 4").alias("eid"),
-                   F.expr("vec_id % 4").alias("vi"), "embedding")
-        .groupBy("eid")
-        .agg(F.transform(F.sort_array(F.collect_list(F.struct("vi", "embedding"))),
-                         lambda s: s["embedding"]).alias("vecs"))
-    )
-
-
-def q_mv_scale(spark, sf):
-    """The mv-ann indexed scale twin (VERDICT r11 ask #1 — the last brute
-    anchor family gets its 100× form): per-position BQ candidate
-    generation (packed 1-bit codes, hamming pre-rank top-40, exact refine
-    to top-10 per position) + the SAME WeightedRanker fusion tail as
-    mv_knn_fused — one ANN subquery per vector field, the reference's
-    execution shape (milvus/module.py:422-458).  Fully value-oracled: the
-    deterministic per-position BQ candidate sets (id-sorted float64 mean
-    thresholds, (hamming, id) lexsort — the bq_knn convention) are
-    recomputed at oracle-generation time and embedded as literals; DuckDB
-    re-runs the exact-L2 refine, the 9-dp DECIMAL fusion ladder and the
-    rank-on-rounded-score window, so fused scores and ranks hash-match
-    end to end.  Queries: every 25th entity.  The entity aggregation is
-    persisted (the mv_scale_parity / corpus_curation stage-boundary
-    discipline, r12): the operator reads it for the fit collect, the
-    kernel scan, the refine join and the query block — without the
-    boundary each reference re-runs the groupBy collect_list from
-    parquet."""
-    ent = _mv_entities(spark, sf).persist()
-    res = mv.mv_indexed_fused(
-        ent.withColumnRenamed("eid", "id"),
-        ent.filter("eid % 25 = 0").withColumnRenamed("eid", "qid"),
-        k=5, weights=[0.25, 0.25, 0.25, 0.25], num_vectors=4,
-        per_vector_k=10, overfetch=4)
-    return res.select("qid", "id", "score",
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_mv_scale_parity(spark, sf):
-    """The gate closing q_mv_scale's approximation loop (the
-    hybrid_rrf_parity pattern): fuse the SAME per-position candidate
-    budget through the brute per-position legs (mv_knn_fused) and through
-    the BQ-indexed legs (mv_indexed_fused), and emit per-query top-5
-    overlap thresholds the oracle asserts TRUE.  Measured (this round,
-    before writing): mean 0.76 / min 0.6 at sf0.001, mean 0.88 / min 0.6
-    at sf0.01, mean 0.69 / min 0.4 at sf0.1 — the 1-bit/dim hamming
-    pre-rank genuinely reorders the fused tail (the same honest-knob
-    behavior bq_recall and hybrid_rrf_parity document), and overlap is
-    computed on the STRICT top-5, where a single displaced entity costs
-    0.2.  Tight thresholds 0.7/0.5 sit just under the oracle-sf floor so
-    a candidate-stage defect (not only a cratering bug) fails the driver
-    gate; off the oracle sfs the gate relaxes to a defect-only floor
-    0.5/0.2."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.5), floor=(0.5, 0.2))
-    ent = _mv_entities(spark, sf).persist()
-    t = ent.withColumnRenamed("eid", "id")
-    q = ent.filter("eid % 25 = 0").withColumnRenamed("eid", "qid")
-    brute = mv.mv_knn_fused(t, q, k=5, weights=[0.25] * 4, num_vectors=4,
-                            per_vector_k=10)
-    idxd = mv.mv_indexed_fused(t, q, k=5, weights=[0.25] * 4, num_vectors=4,
-                               per_vector_k=10, overfetch=4)
-    a = brute.groupBy("qid").agg(F.collect_list("id").alias("brute_ids"))
-    b = idxd.groupBy("qid").agg(F.collect_list("id").alias("idx_ids"))
-    per = a.join(b, "qid").select(
-        "qid",
-        (F.size(F.array_intersect("brute_ids", "idx_ids"))
-         / F.size("brute_ids")).alias("overlap"))
-    return per.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("overlap") >= mean_thr).alias("mean_overlap_ok"),
-        (F.min("overlap") >= min_thr).alias("min_overlap_ok"),
-    )
-
-
-def q_mm_knn(spark, sf):
-    """Q8: multi-modal kNN — identical operator, disjoint query table (the
-    'other modality' embedding set)."""
-    res = knn(_train(spark, sf), _queries_mod(spark, sf, mod=1), k=10, method="expr")
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"), F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_ivf_knn(spark, sf):
-    """M7: IVF (KMeans cluster-pruned) ANN at nprobe=4.  Value-oracled:
-    the deterministic driver-side KMeans (seeded kmeans++, fixed iteration
-    count) is recomputed in ``oracle_sql`` generation and the resulting
-    cell assignments / probe lists embedded as SQL literals, so DuckDB can
-    score the identical candidate sets.  Ids/ranks are emitted (not the
-    GEMM-kernel distances, which differ from the SQL fold at ~1e-8 —
-    same convention as knn_euclid_gemm)."""
-    t = _train(spark, sf)
-    idx = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    res = idx.search(idx.assign(t), _queries_mod(spark, sf), k=10, nprobe=4)
-    return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_pq_knn(spark, sf):
-    """§2.7 PQ: product-quantized ADC scan (reads ARRAY<SMALLINT> codes only,
-    never float vectors) + exact refine of the overfetched candidates.
-    Value-oracled: the deterministic codebook fit / encode / LUT-sum ADC is
-    recomputed at oracle-generation time and the per-query candidate sets
-    embedded as literals; the refine stage uses the expression fold on both
-    engines, so even distances hash-match (see _ann_oracles)."""
-    t = _train(spark, sf)
-    idx = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    res = idx.search(idx.encode(t), _queries_mod(spark, sf), k=10,
-                     refine_train=t, overfetch=4)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_ivfpq_knn(spark, sf):
-    """§2.7 IVF_PQ: cell pruning bounds which rows are scanned, ADC bounds
-    what is read per row; exact refine restores result quality.
-    Value-oracled via recomputed candidate sets (see _ann_oracles)."""
-    from bigvectorbench_spark.operators.pq import ivfpq_search
-    t = _train(spark, sf)
-    ivf = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    pq = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    table = ivf.assign(pq.encode(t))
-    res = ivfpq_search(ivf, pq, table, _queries_mod(spark, sf), k=10, nprobe=4,
-                       refine_train=t, overfetch=4)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_ivf_delta_knn(spark, sf):
-    """Incremental IVF maintenance (the M3-inserts × M2-index composition a
-    production deployment actually runs): the index is fit on the BASE
-    corpus (90%), a later delta batch (10%) is assigned to the EXISTING
-    centroids — a map-only operation, no refit, no reshuffle of the base —
-    and search runs over base ∪ delta.  Value-oracled like ivf_knn: the
-    base-only fit, the assignments of every resident row, and the probe
-    lists are recomputed at oracle-generation time and embedded."""
-    t = _train(spark, sf)
-    base, delta = t.filter("id % 10 != 0"), t.filter("id % 10 = 0")
-    idx = IVFIndex.fit(base, nlist=8, seed=1, max_iter=8, sort_col="id")
-    table = idx.assign(base).unionByName(idx.assign(delta))
-    res = idx.search(table, _queries_mod(spark, sf, mod=1), k=10, nprobe=4)
-    return res.select("qid", "id", F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_ivf_delta_report(spark, sf):
-    """The maintenance meter beside q_ivf_delta_knn: per-cell occupancy
-    (base vs delta rows) and mean centroid distance — the drift signal that
-    decides when re-clustering pays.  Value-oracled: DuckDB recomputes the
-    distances from the embedded centroid literals with the same L2 fold,
-    DECIMAL accumulation and rounding."""
-    from bigvectorbench_spark.operators.similarity import ivf_delta_report
-
-    t = _train(spark, sf)
-    base, delta = t.filter("id % 10 != 0"), t.filter("id % 10 = 0")
-    idx = IVFIndex.fit(base, nlist=8, seed=1, max_iter=8, sort_col="id")
-    return ivf_delta_report(idx, idx.assign(base), idx.assign(delta)).select(
-        F.col("cluster_id").cast("bigint").alias("cluster_id"),
-        "n_base", "n_delta", "mean_dist")
-
-
-def q_pq_delta_report(spark, sf):
-    """Incremental PQ maintenance meter (round 11 — completes the
-    M2×M3 maintenance story across every core ANN family: IVF has
-    ivf_delta_knn/_report, sparse has sparse_delta_report/_parity, HNSW
-    has hnsw_delta_knn/_report): codebooks fit on the BASE corpus (90%),
-    the arrival batch (10%) encodes with the FROZEN books — map-only,
-    no refit, no reshuffle of the stored codes — and pq.pq_delta_report
-    meters the drift quantity that decides a codebook re-fit: mean
-    squared reconstruction error per side and their ratio.  Value-
-    oracled like ivf_delta_report: the base-only fit and every row's
-    codes are recomputed at oracle-generation time and embedded; DuckDB
-    recomputes each reconstruction error from the embedded codebook
-    literals with the same DECIMAL accumulation and rounding, so a
-    drifted fit, a wrong encode, or broken accounting all mismatch."""
-    from bigvectorbench_spark.operators.pq import pq_delta_report
-
-    t = _train(spark, sf)
-    base, delta = t.filter("id % 10 != 0"), t.filter("id % 10 = 0")
-    idx = PQIndex.fit(base, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    return pq_delta_report(idx, idx.encode(base), idx.encode(delta))
-
-
-def q_opq_knn(spark, sf):
-    """§2.7 OPQ (Ge et al. 2013): an orthogonal rotation learned by
-    alternating codebook fit / Procrustes solve is applied before the PQ
-    split, aligning variance with the subspace cuts; ADC runs in the
-    rotated space, the exact refine in the ORIGINAL space (orthogonal R
-    preserves L2).  Rotated coordinates round to 6 dp (the jl_knn
-    discipline) so the batched Arrow rotation kernel and any external
-    full-matrix recomputation agree bit-for-bit.  Value-oracled: the
-    deterministic fit (shared numpy path ``opq_fit_numpy``), rotation,
-    encode and ADC candidate selection are recomputed at oracle-generation
-    time; refine distances hash-match via the expression fold (the pq_knn
-    convention)."""
-    from bigvectorbench_spark.operators.opq import OPQIndex
-
-    t = _train(spark, sf)
-    idx = OPQIndex.fit(t, m=8, ksub=16, iters=3, seed=1, max_iter=8,
-                       sort_col="id")
-    enc = idx.encode(t).select("id", "codes")
-    res = idx.search(enc, _queries_mod(spark, sf), k=10,
-                     refine_train=t, overfetch=4)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_opq_recall(spark, sf):
-    """Recall gate for the OPQ path (the ivf/pq/bq_recall contract):
-    threshold booleans vs exact kNN.  Measured at sf0.01: mean 0.72 /
-    min 0.5 — 0.13 recall ABOVE plain PQ (0.59/0.4, pq_recall docstring)
-    at the identical m=8/ksub=16/overfetch=4 budget: the learned rotation
-    is worth a third more recall on this corpus, the Ge et al. result
-    reproduced end-to-end.  Tight thresholds 0.65/0.4 sit just under the
-    measured floor; off the oracle sf the gate relaxes to 0.4/0.1
-    (measured sf0.1: mean 0.497 / min 0.2 — the same published density
-    decay at a fixed code budget pq_recall documents)."""
-    mean_thr, min_thr = _gate(sf, tight=(0.65, 0.4), floor=(0.4, 0.1))
-    from bigvectorbench_spark.operators.opq import OPQIndex
-
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    idx = OPQIndex.fit(t, m=8, ksub=16, iters=3, seed=1, max_iter=8,
-                       sort_col="id")
-    enc = idx.encode(t).select("id", "codes")
-    approx = idx.search(enc, q, k=10, refine_train=t, overfetch=4)
-    return _recall_gate(approx, knn(t, q, k=10, method="expr"),
-                        mean_thr, min_thr)
-
-
-def q_jl_knn(spark, sf):
-    """Johnson-Lindenstrauss compressed search: embeddings projected
-    64→16 dims (seeded Gaussian matrix, 4× bandwidth/FLOP cut), exact
-    kNN in the reduced space.  Projected coordinates round to 6 dp before
-    ranking so the whole pipeline — projection fold included — is
-    engine-stable and value-oracled."""
-    from bigvectorbench_spark.operators import projection as pj
-
-    emb = load_table(spark, sf, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    proj = pj.project(emb, out_dim=16, in_dim=64, seed=1, round_to=6)
-    q = proj.filter("id % 50 = 0").select(F.col("id").alias("qid"), "vec")
-    res = knn(proj, q, k=10, method="expr")
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_bq_knn(spark, sf):
-    """§2.7 BQ (binary quantization): every dimension collapses to one sign
-    bit around its learned per-dimension mean, the packed 64-bit words are
-    scanned with XOR+popcount (1/64th the read width of the float column,
-    pure whole-stage codegen), and the hamming pre-rank's k·overfetch
-    survivors are re-ranked exactly.  The reference carries binary codes as
-    a first-class point type (datasets.py:348-352 point_type='bit'); BQ is
-    the float→binary compression every production store added on top.
-    Value-oracled: the deterministic driver-side fit (float64 mean over the
-    id-sorted sample) and the integer hamming candidate selection are
-    recomputed at oracle-generation time and the candidate sets embedded as
-    literals; the refine uses the expression L2 fold on both engines, so
-    distances hash-match (the pq_knn convention)."""
-    t = _train(spark, sf)
-    idx = BQIndex.fit(t, sort_col="id")
-    codes = idx.encode(t, keep=["id"])
-    # method default = the Arrow byte-LUT kernel (per-batch partial top-n
-    # with the (hamming, id) tie rule — pinned equal to the expr/global
-    # form in test_bq, so the embedded oracle candidates check either path)
-    res = idx.search(codes, _queries_mod(spark, sf), k=10,
-                     refine_train=t, overfetch=4)
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_bq_recall(spark, sf):
-    """Closes the BQ oracle self-reference the same way ivf_recall/pq_recall
-    do: recall of the BQ hamming-prerank+refine path against the EXACT kNN,
-    both computed in Spark, emitted as oracle-asserted threshold booleans.
-    Measured at sf0.01: mean 0.68 / min 0.4 (1-bit/dim codes, overfetch=4);
-    tight thresholds 0.6/0.3 sit just under that floor so a partial
-    packing/threshold degradation fails the gate, not only a cratering bug.
-    Off the oracle sf the gate relaxes to a defect-only floor 0.35/0.05:
-    measured at sf0.1 the same path yields mean 0.465 / min 0.1 — recall at
-    a fixed 1-bit/dim budget genuinely falls as corpus density grows (the
-    same published behavior pq_recall documents), so the floor sits under
-    the healthy-at-scale tail."""
-    mean_thr, min_thr = _gate(sf, tight=(0.6, 0.3), floor=(0.35, 0.05))
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    idx = BQIndex.fit(t, sort_col="id")
-    approx = idx.search(idx.encode(t, keep=["id"]), q, k=10,
-                        refine_train=t, overfetch=4)
-    return _recall_gate(approx, knn(t, q, k=10, method="expr"),
-                        mean_thr, min_thr)
-
-
-def q_sq8_knn(spark, sf):
-    """§2.7 IVF_SQ8's scalar-quantization stage (milvus/module.py:595-620)
-    as a declared, fully value-oracled query: per-vector symmetric int8
-    codes (scale = max|v|/127, float32), dequantize inside the scan
-    projection (narrow, whole-stage codegen), exact L2 ranking over the
-    4×-smaller stored column — queries stay full precision, matching the
-    reference's SQ8 semantics.  Unlike pq/bq there is no candidate stage to
-    embed: the oracle replays the ENTIRE quantize→dequantize→rank pipeline
-    in SQL (float32 casts at the same three points, double fold), so codes,
-    scales, distances, and ranks are all independently recomputed."""
-    from bigvectorbench_spark.operators.quantize import knn_quantized, quantize_table
-
-    t = _train(spark, sf)
-    tq = quantize_table(t, vec_col="vec", out_col="qvec").select("id", "qvec")
-    res = knn_quantized(tq, _queries_mod(spark, sf), k=10, method="expr")
-    return res.select("qid", "id", _r(F.col("dist")).alias("dist"),
-                      F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_sq8_recall(spark, sf):
-    """Closes the SQ8 loop the ivf_recall/pq_recall way: recall of the
-    dequantized ranking against the EXACT full-precision kNN, emitted as
-    oracle-asserted threshold booleans.  SQ8 error is bounded by the
-    per-dimension quantization step, so recall is near-perfect by
-    construction (measured 1.0/1.0 at sf0.001 and sf0.01,
-    scripts/calibrate_gates.py convention); the tight gate 0.97/0.9 trips
-    on any scale/sign/rounding defect while tolerating a rare boundary
-    swap.  Off the oracle sfs it relaxes to a defect-only 0.9/0.7 floor."""
-    mean_thr, min_thr = _gate(sf, tight=(0.97, 0.9), floor=(0.9, 0.7))
-    from bigvectorbench_spark.operators.quantize import knn_quantized, quantize_table
-
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    tq = quantize_table(t, vec_col="vec", out_col="qvec").select("id", "qvec")
-    return _recall_gate(knn_quantized(tq, q, k=10, method="expr"),
-                        knn(t, q, k=10, method="expr"), mean_thr, min_thr)
-
-
-def q_ivf_recall(spark, sf):
-    """Closes the IVF oracle self-reference (the ivf_knn oracle embeds the
-    recomputed probe lists, so a bug corrupting both sides identically
-    would pass): recall of the IVF path against the EXACT kNN, both
-    computed in Spark, emitted as threshold booleans the oracle asserts
-    TRUE.  Measured recall at sf0.01 is mean 0.79 / min 0.6 (nlist=8,
-    nprobe=4; scripts/calibrate_gates.py); the tight thresholds 0.7/0.45
-    sit just under the measured floor, so even a *partial* index
-    degradation (e.g. mean 0.79 → 0.62 from a probe-ranking defect) now
-    fails the driver gate — not only a cratering bug.  Off the oracle sf
-    the distribution shifts (measured min 0.5 at sf0.001), so the gate
-    relaxes to a defect-only floor of 0.4/0.2 (ADVICE r3)."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.45), floor=(0.4, 0.2))
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    idx = IVFIndex.fit(t, nlist=8, seed=1, max_iter=8, sort_col="id")
-    return _recall_gate(idx.search(idx.assign(t), q, k=10, nprobe=4),
-                        knn(t, q, k=10, method="expr"), mean_thr, min_thr)
-
-
-def q_ivf_auto_recall(spark, sf):
-    """Driver gate for IVF's ``nprobe="auto"`` mode (VERDICT r10 ask #5 —
-    the auto-knob trilogy's IVF member beside hnsw.auto_ef and
-    sparse.auto_m): the index builds under the classic nlist ≈ sqrt(n)
-    rule and searches with the calibrated recall-holding probe count
-    auto_nprobe(nlist) = ceil(0.0934·nlist^0.6215) (measured decade
-    ladder: recall 0.954–0.998 across 20k→632k where a fixed nprobe=4
-    decays 0.997→0.813).  Emits the RESOLVED
-    auto_nprobe as a value column — the oracle recomputes the ceil
-    formula in SQL from the same row count, so a drifted coefficient,
-    a broken resolution path, or a wrong nlist derivation all
-    hash-mismatch.  Regime note, measured: the clamped sf fixtures
-    (500–2000 near-unclustered rows, cells of ~sqrt(n)) sit far below
-    the calibrated regime and auto resolves to nprobe=1 with mean
-    recall 0.27/0.34 (sf0.001/0.01) and 0.2225 (sf0.1) — the recall
-    booleans here are DEFECT floors (0.2/0.05 tight, 0.15/0.05 off the
-    oracle sfs), not the ≥0.9 operating claim; that claim lives in the
-    scale artifact where the regime exists."""
-    import math
-    from bigvectorbench_spark.operators.similarity import auto_nprobe
-    from bigvectorbench_spark.sources.tables import table_rows
-
-    mean_thr, min_thr = _gate(sf, tight=(0.2, 0.05), floor=(0.15, 0.05))
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    n = table_rows(sf, "embeddings")
-    nlist = max(8, round(math.sqrt(n)))
-    idx = IVFIndex.fit(t, nlist=nlist, seed=1, max_iter=8, sort_col="id")
-    return _recall_gate(
-        idx.search(idx.assign(t), q, k=10, nprobe="auto"),
-        knn(t, q, k=10, method="expr"), mean_thr, min_thr,
-        lead=[F.lit(auto_nprobe(nlist)).cast("bigint").alias("auto_nprobe")])
-
-
-def q_pq_recall(spark, sf):
-    """Same contract for the PQ path (codebook fit, encode, ADC scan,
-    refine): recall vs exact kNN as oracle-asserted booleans.  Measured at
-    sf0.01: mean 0.59 / min 0.4 (m=8, ksub=16, overfetch=4;
-    scripts/calibrate_gates.py); tight thresholds 0.5/0.3 catch partial
-    codebook/ADC degradation, not just cratering bugs.  Off the oracle sf
-    the gate relaxes to the defect-only floor 0.3/0.05 (ADVICE r3):
-    measured at sf0.1 the same code path yields mean 0.45 / min 0.10 /
-    p1 0.14 — recall at a fixed 4-bit/subspace code budget genuinely
-    falls as corpus density grows (the published PQ behavior), so the
-    floor must sit under the healthy-at-scale tail, not the oracle-sf
-    one."""
-    mean_thr, min_thr = _gate(sf, tight=(0.5, 0.3), floor=(0.3, 0.05))
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    idx = PQIndex.fit(t, m=8, ksub=16, seed=1, max_iter=8, sort_col="id")
-    approx = idx.search(idx.encode(t), q, k=10, refine_train=t, overfetch=4)
-    return _recall_gate(approx, knn(t, q, k=10, method="expr"),
-                        mean_thr, min_thr)
-
-
-def q_recall_lowdim_vs_full(spark, sf):
-    """A6 recall metric as a first-class query: run = kNN on the first 32
-    dims, truth = kNN on all 64; per-query recall@10 then the mean."""
-    t, q = _train(spark, sf), _queries_mod(spark, sf)
-    t32 = t.withColumn("vec", F.slice("vec", 1, 32))
-    q32 = q.withColumn("vec", F.slice("vec", 1, 32))
-    truth = knn(t, q, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    run = knn(t32, q32, k=10, method="expr").groupBy("qid").agg(
-        F.collect_list("id").alias("neighbors"))
-    per_q = mx.recall_per_query(run, truth)
-    return per_q.select("qid", F.round("recall", 6).alias("recall"))
-
-
-def q_groundtruth_pack(spark, sf):
-    """G2/S5: packed filtered ground truth with the reference's padding
-    convention — k=60 under a label-equality filter leaves most queries with
-    ~50 qualifying rows, so neighbors pad with −1 and distances with +inf
-    (results.py:85-86).  Declared in exploded (qid, pos, neighbor, dist)
-    form: the packed arrays stay the storage format (tests cover them), but
-    the driver's value hash needs scalar columns."""
-    from bigvectorbench_spark.operators.groundtruth import build_groundtruth
-
-    packed = build_groundtruth(
-        _train(spark, sf), _queries_mod(spark, sf), k=60,
-        filter_template="label == {label}", query_param_cols=["label"],
-    )
-    return packed.select(
-        "qid",
-        F.posexplode(F.arrays_zip("neighbors", "distances")).alias("pos0", "z"),
-    ).select(
-        "qid",
-        (F.col("pos0") + 1).cast("bigint").alias("pos"),
-        F.col("z.neighbors").cast("bigint").alias("neighbor"),
-        F.round(F.col("z.distances").cast("double"), 4).alias("dist"),
-    )
-
-
-def q_recall_summary(spark, sf):
-    """A6 summary form: mean ± population-std of per-query recall@10 of the
-    32-dim run against the 64-dim truth."""
-    per_q = q_recall_lowdim_vs_full(spark, sf)
-    return per_q.agg(
-        F.round(F.avg("recall"), 6).alias("mean_recall"),
-        F.round(F.coalesce(F.stddev_pop("recall"), F.lit(0.0)), 6).alias("std_recall"),
-        F.count("*").alias("n_queries"),
-    )
-
-
-def q_best_search_time(spark, sf):
-    """A3 best-of-runs: min over runs of mean per-query time
-    (runner.py:222-226), with event_type as the run key and value as the
-    per-query latency."""
-    ev = load_table(spark, sf, "events")
-    per_run = ev.groupBy("event_type").agg(
-        (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 6).cast("double")
-         / F.count("*")).alias("mean_time"))
-    return per_run.agg(F.round(F.min("mean_time"), 6).alias("best_search_time"))
-
-
-def q_train_test_split(spark, sf):
-    """A11 deterministic split: hash-free arithmetic bucketing (engine-
-    portable) — 80/20 by (id·2654435761 mod 100) — with per-split counts and
-    id checksums proving the same rows landed on the same side."""
-    emb = load_table(spark, sf, "embeddings")
-    bucket = F.pmod(F.col("vec_id") * F.lit(2654435761), F.lit(100))
-    tagged = emb.select(
-        F.when(bucket < 80, "train").otherwise("test").alias("split"), "vec_id")
-    return tagged.groupBy("split").agg(
-        F.count("*").alias("n_rows"), F.sum("vec_id").alias("id_sum"))
-
-
-# -------------------------------------------------- relational / metrics layer
-
-def q_topk_per_group(spark, sf):
-    """A1: per-group top-k window — top-3 orders by totalprice per customer."""
-    o = load_table(spark, sf, "orders")
-    from pyspark.sql import Window
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        o.withColumn("rn", F.row_number().over(w)).filter("rn <= 3")
-        .select("o_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice"),
-                F.col("rn").cast("bigint").alias("rn"))
-    )
-
-
-def q_pricing_summary(spark, sf):
-    """A3: the TPC-H Q1-style aggregation; DECIMAL accumulation for
-    order-independent exactness, cast to DOUBLE after rounding."""
-    li = load_table(spark, sf, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")
-    disc_price = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(dec("l_quantity")), 2).cast("double").alias("sum_qty"),
-            F.round(F.sum(dec("l_extendedprice")), 2).cast("double").alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q_revenue_by_nation(spark, sf):
-    """Join chain lineitem⨝orders⨝customer⨝nation (small dims broadcast)."""
-    li = load_table(spark, sf, "lineitem")
-    o = load_table(spark, sf, "orders")
-    c = load_table(spark, sf, "customer")
-    n = load_table(spark, sf, "nation")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"),
-             F.count("*").alias("n_items"))
-    )
-
-
-def q_customers_semi_returns(spark, sf):
-    """Semi-join chain (EXISTS): customers with ≥1 returned high-quantity
-    item.  LEFT SEMI keeps the probe side narrow — no payload duplication,
-    and Catalyst pushes both filters to the scans."""
-    c = load_table(spark, sf, "customer")
-    o = load_table(spark, sf, "orders")
-    li = load_table(spark, sf, "lineitem")
-    ret_orders = li.filter("l_returnflag = 'R' and l_quantity >= 45").select("l_orderkey")
-    qual = o.join(ret_orders, o.o_orderkey == ret_orders.l_orderkey, "left_semi")
-    return c.join(qual, c.c_custkey == qual.o_custkey, "left_semi").select(
-        "c_custkey", "c_name")
-
-
-def q_customers_anti_urgent(spark, sf):
-    """Anti-join (NOT EXISTS): customers with no urgent-priority order —
-    the skip-if-done / exclusion pattern (A12) as a declared query."""
-    c = load_table(spark, sf, "customer")
-    o = load_table(spark, sf, "orders")
-    urgent = o.filter("o_orderpriority = '1-URGENT'")
-    return c.join(urgent, c.c_custkey == urgent.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", "c_mktsegment")
-
-
-def q_corpus_rollup(spark, sf):
-    """Multi-level aggregation: ROLLUP(source, lang) — per-(source, lang),
-    per-source subtotals, and the grand total in one pass."""
-    docs = load_table(spark, sf, "documents")
-    return docs.rollup("source", "lang").agg(
-        F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-
-
-def q_top_revenue_orders(spark, sf):
-    """TPC-H Q3 shape: date-filtered join + agg + global top-10 — the
-    ORDER BY/LIMIT plans as TakeOrderedAndProject (no full sort)."""
-    li = load_table(spark, sf, "lineitem")
-    o = load_table(spark, sf, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-    )
-
-
-def q_user_gap_stats(spark, sf):
-    """lag() family: per-user inter-event gap statistics (mean/max gap in
-    seconds) — the cadence profiling behind sessionization thresholds."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = ev.select(
-        "user_id",
-        (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))).alias("gap_us"),
-    ).filter(F.col("gap_us").isNotNull())
-    # Integer µs end-to-end: sums are exact and the mean is a floor
-    # division, so the result is engine-exact at every sf.  (The earlier
-    # round(seconds, 6) form hit a half-ulp round boundary on 1/1500
-    # users at sf0.1 — Spark's BigDecimal HALF_UP vs DuckDB's double
-    # rounding disagree on values epsilon from a .5 digit.)
-    return gaps.groupBy("user_id").agg(
-        F.count("*").alias("n_gaps"),
-        F.expr("sum(gap_us) div count(*)").alias("mean_gap_us"),
-        F.max("gap_us").alias("max_gap_us"),
-    )
-
-
-def q_revenue_running(spark, sf):
-    """Cumulative window aggregation: per-priority daily order totals with
-    a running sum over days.  Partitioned by priority so no global-order
-    window exists at scale; DECIMAL accumulation keeps the running values
-    order-independent."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf, "orders")
-    daily = o.groupBy("o_orderpriority", F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("day_total"))
-    w = Window.partitionBy("o_orderpriority").orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    return daily.select(
-        "o_orderpriority",
-        F.col("day").cast("timestamp").alias("day"),
-        F.round("day_total", 2).cast("double").alias("day_total"),
-        F.round(F.sum("day_total").over(w), 2).cast("double").alias("running_total"),
-    )
-
-
-def q_lang_pivot(spark, sf):
-    """PIVOT: doc counts per source × language as a wide table (fixed
-    column set so the plan is a single pass of conditional aggregates)."""
-    docs = load_table(spark, sf, "documents")
-    return (
-        docs.groupBy("source")
-        .pivot("lang", ["de", "en", "es", "fr", "zh"])
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-    )
-
-
-def q_quality_deciles(spark, sf):
-    """ntile quality bucketing: the decile assignment a pipeline uses for
-    quality-threshold filtering; deterministic under (quality, doc_id)
-    ordering. Output: per-decile count + mean quality.
-
-    Scale note: exact equal-size deciles require a global ordering (one
-    window partition) — fine for the aggregate report here, but to *tag*
-    100 TB of rows with deciles the plan is
-    ``metrics.approx_quantile_buckets`` (percentile_approx thresholds +
-    broadcast comparison, no global sort) — declared as
-    ``quality_tags_approx`` and pinned to this ntile form in tests."""
-    from pyspark.sql import Window
-
-    tokenized = _docs_wide(spark, sf).select(
-        "doc_id", F.col("text"), tx.tokens(F.col("text")).alias("tk"))
-    scored = tokenized.select(
-        "doc_id",
-        F.round(tx.quality_score_from_tokens(F.col("tk"), F.col("text")), 6).alias("q"))
-    w = Window.orderBy(F.col("q"), F.col("doc_id"))
-    return (
-        scored.withColumn("decile", F.ntile(10).over(w).cast("bigint"))
-        .groupBy("decile")
-        .agg(
-            F.count("*").alias("n_docs"),
-            (F.round(F.sum(F.col("q").cast("decimal(18,6)")), 6).cast("double")
-             / F.count("*")).alias("mean_q"),
-        )
-    )
-
-
-def q_peak_events(spark, sf):
-    """arg-max per group: the highest-value event per type (max_by with a
-    deterministic (value, event_id) tie rule via struct ordering)."""
-    ev = load_table(spark, sf, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(F.max(F.struct(F.col("value"), F.col("event_id"))).alias("m"))
-        .select(
-            "event_type",
-            F.col("m.event_id").alias("event_id"),
-            F.round("m.value", 6).alias("peak_value"),
-        )
-    )
-
-
-def q_events_hourly(spark, sf):
-    """Streaming-shape tumbling window counts (batch mode of the streaming
-    operator, so the oracle can check the same semantics)."""
-    ev = load_table(spark, sf, "events")
-    return windowed_event_counts(ev, window_duration="1 hour")
-
-
-def q_sessionize(spark, sf):
-    """Session windows (30 min gap) per user via Spark session_window."""
-    ev = load_table(spark, sf, "events")
-    return sessionize(ev, gap="30 minutes")
-
-
-def q_asof_clicks(spark, sf):
-    """As-of join: for each purchase event, the same user's latest prior
-    click within 1 hour.  Union + one keyed window sweep — O(|L|+|R|) rows,
-    never a range-join explosion.  Right side pre-deduplicated per
-    (user, ts) so tie semantics are engine-independent."""
-    from pyspark.sql import Window
-    from bigvectorbench_spark.operators.temporal import asof_join
-
-    ev = load_table(spark, sf, "events")
-    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    clicks = (
-        ev.filter("event_type = 'click'")
-        .withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-        .select("user_id", "ts", "event_id", "value")
-    )
-    purchases = ev.filter("event_type = 'purchase'").select("event_id", "user_id", "ts")
-    res = asof_join(purchases, clicks, on="user_id",
-                    right_cols=["event_id", "value"],
-                    tolerance="1 hour", prefix="click_")
-    return res.select(
-        "event_id", "user_id", "ts", "click_ts", "click_event_id",
-        F.round("click_value", 6).alias("click_value"),
-    )
-
-
-def q_interval_clicks(spark, sf):
-    """Interval join: every (purchase, click) pair of the same user within
-    ±15 minutes — bucketized (key, time-bucket) equi-join + exact BETWEEN
-    refinement, so the intermediate is O(candidates in ±1 bucket), never
-    the per-user L×R product a theta join would build."""
-    from bigvectorbench_spark.operators.temporal import interval_join
-
-    ev = load_table(spark, sf, "events")
-    purchases = ev.filter("event_type = 'purchase'").select("event_id", "user_id", "ts")
-    clicks = ev.filter("event_type = 'click'").select(
-        "user_id", "ts", F.col("event_id").alias("click_id"))
-    out = interval_join(purchases, clicks, on="user_id",
-                        before="15 minutes", after="15 minutes",
-                        right_cols=["click_id"], prefix="m_")
-    return out.select("event_id", "user_id", "ts", "m_ts", "m_click_id")
-
-
-def q_clicks_before_purchase(spark, sf):
-    """Event-time RANGE-frame window: clicks by the same user in the 30
-    minutes before each purchase.  The union of both event types shuffles
-    once on user_id and a range frame over microsecond epochs does the
-    counting — no join, no per-row probing."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf, "events").filter(
-        "event_type in ('click', 'purchase')"
-    ).select(
-        "event_id", "user_id", "ts", "event_type",
-        F.when(F.col("event_type") == "click", 1).otherwise(0).alias("is_click"),
-        F.unix_micros("ts").alias("us"),
-    )
-    w = Window.partitionBy("user_id").orderBy("us").rangeBetween(-1_800_000_000, 0)
-    return (
-        ev.withColumn("n_clicks", F.sum("is_click").over(w))
-        .filter("event_type = 'purchase'")
-        .select("event_id", "user_id", "ts", "n_clicks")
-    )
-
-
-def q_doclen_percentiles(spark, sf):
-    """A4 grouped form: exact per-source document-length percentiles."""
-    docs = load_table(spark, sf, "documents")
-    return docs.groupBy("source").agg(
-        F.round(F.expr("percentile(n_chars, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(n_chars, 0.9)"), 6).alias("p90"),
-        F.round(F.expr("percentile(n_chars, 0.99)"), 6).alias("p99"),
-    )
-
-
-def q_corpus_stats_approx(spark, sf):
-    """Sketch-based corpus profiling — HLL++ distinct counts and KLL-style
-    approximate quantiles, the O(1)-memory form that replaces exact
-    distinct/percentile at 100 TB.  Sketch values are engine-specific so
-    this stays rows-only; the in-window ``sketch_bounds`` gate asserts the
-    same sketches sit within published error bounds of the exact answers,
-    making a sketch defect driver-visible."""
-    docs = load_table(spark, sf, "documents")
-    return docs.groupBy("source").agg(
-        F.approx_count_distinct("text", 0.01).alias("n_distinct_texts_approx"),
-        F.percentile_approx("n_chars", 0.5, 10000).alias("p50_chars_approx"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-def q_quality_tags_approx(spark, sf):
-    """The 100 TB decile-tagging plan (quality_deciles' scale twin): KLL
-    quantile thresholds + broadcast comparison tag every row with no
-    global sort.  Threshold values are sketch-dependent → rows-only; the
-    ntile agreement is pinned in test_groundtruth_metrics."""
-    tokenized = _docs_wide(spark, sf).select(
-        "doc_id", F.col("text"), tx.tokens(F.col("text")).alias("tk"))
-    scored = tokenized.select(
-        "doc_id",
-        F.round(tx.quality_score_from_tokens(F.col("tk"), F.col("text")), 6).alias("q"))
-    tagged = mx.approx_quantile_buckets(scored, "q", n_buckets=10, out_col="decile")
-    return tagged.groupBy("decile").agg(
-        F.count("*").alias("n_docs"),
-        (F.round(F.sum(F.col("q").cast("decimal(18,6)")), 6).cast("double")
-         / F.count("*")).alias("mean_q"),
-    )
-
-
-def _q_iud(spark, sf, op: str, n_ops: int = 200):
-    """M3/M4/M5 per-op latency as a first-class timed workload (reference
-    runner.py:245-335 runs the same sequential sweep as a benchmark case,
-    results.py:121-158 records per-op latencies).  Sequential by the
-    reference's own protocol: each op is one client call against the
-    log-structured table (mutation.py), so the sweep is driver-side by
-    design — the timed DataFrame then resolves the post-sweep snapshot
-    (log merge + tombstone drop), which is the distributed cost of making
-    the ops visible.  Timings are machine-dependent → rows-only."""
-    from bigvectorbench_spark.operators.mutation import VectorTable
-
-    emb = _train(spark, sf)
-    table = VectorTable(spark, emb)
-    rows = [r.asDict() for r in emb.limit(n_ops).collect()]
-    lats = []
-    for i, r in enumerate(rows):
-        if op == "insert":
-            lats.append(table.insert({"vec": r["vec"], "label": r["label"]}))
-        elif op == "update":
-            lats.append(table.update(r["id"], {"vec": r["vec"],
-                                               "label": r["label"]}))
-        else:
-            lats.append(table.delete(r["id"]))
-    lats.sort()
-    mean_ms = 1000.0 * sum(lats) / len(lats)
-    p95_ms = 1000.0 * lats[int(0.95 * (len(lats) - 1))]
-    stats = spark.createDataFrame(
-        [(op, len(lats), float(mean_ms), float(p95_ms))],
-        "op string, n_ops bigint, mean_ms double, p95_ms double")
-    after = table.snapshot().agg(F.count("*").alias("rows_after"))
-    return stats.crossJoin(after)
-
-
-def q_insert_latency(spark, sf):
-    """M3 sequential insert sweep + snapshot visibility cost (BENCH)."""
-    return _q_iud(spark, sf, "insert")
-
-
-def q_update_latency(spark, sf):
-    """M4 sequential upsert-by-id sweep + snapshot visibility cost."""
-    return _q_iud(spark, sf, "update")
-
-
-def q_delete_latency(spark, sf):
-    """M5 sequential delete-by-id sweep + snapshot visibility cost."""
-    return _q_iud(spark, sf, "delete")
-
-
-def q_latency_percentiles(spark, sf):
-    """A4: exact p50/p90/p95/p99 (×1000) over events.value as latencies."""
-    ev = load_table(spark, sf, "events")
-    df = mx.latency_percentiles(ev.select(F.col("value").alias("latency")),
-                                percentiles=(0.5, 0.9, 0.95, 0.99))
-    return df.select(*[F.round(c, 6).alias(c) for c in df.columns])
-
-
-def q_qps_by_type(spark, sf):
-    """A5: QPS = 1/mean(latency), per event type."""
-    ev = load_table(spark, sf, "events")
-    dec_sum = F.sum(F.col("value").cast("decimal(18,6)"))
-    return (
-        ev.groupBy("event_type")
-        .agg(F.round(F.lit(1.0) / (F.round(dec_sum, 6).cast("double") / F.count("*")), 6).alias("qps"))
-    )
-
-
-def q_pareto_frontier(spark, sf):
-    """A9: Pareto frontier over per-event-type (x=avg value, y=count)."""
-    ev = load_table(spark, sf, "events")
-    pts = ev.groupBy("event_type").agg(
-        (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 6).cast("double")
-         / F.count("*")).alias("x"),
-        F.count("*").alias("y"),
-    )
-    out = mx.pareto_frontier(pts, x="x", y="y")
-    return out.select("event_type", F.round("x", 6).alias("x"), "y")
-
-
-# ------------------------------------------------------------- text / dedup
-
-def q_corpus_stats(spark, sf):
-    """Corpus profiling: exact distinct counts and totals per source — the
-    A3/A7-style aggregates a pipeline runs before dedup decisions."""
-    docs = load_table(spark, sf, "documents")
-    return docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.min("doc_id").alias("min_doc_id"),
-        F.max("doc_id").alias("max_doc_id"),
-    )
-
-
-def q_dedup_exact(spark, sf):
-    """Exact dedup groups: md5 of normalized text, count + canonical id."""
-    docs = load_table(spark, sf, "documents")
-    return dd.exact_dup_groups(docs)
-
-
-def q_ngram_jaccard_dups(spark, sf):
-    """Near-dup pairs by exact 3-gram shingle Jaccard ≥ 0.5 (inverted-index
-    co-occurrence plan, no cross join)."""
-    docs = load_table(spark, sf, "documents")
-    out = dd.ngram_jaccard_pairs(docs, threshold=0.5)
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_minhash_dups(spark, sf):
-    """MinHash-LSH near-dup pairs with the portable md5-60bit shingle hash:
-    signatures, band collisions, and the exact-Jaccard verification are all
-    reproducible outside Spark, so the full pipeline value-oracles
-    (signature math checked bit-for-bit against DuckDB)."""
-    docs = load_table(spark, sf, "documents")
-    out = dd.minhash_lsh_pairs(docs, threshold=0.5, hash="md5")
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_simhash_dups(spark, sf):
-    """SimHash near-dup pairs (hamming ≤ 3) with the portable hash — the
-    60-bit signatures and band blocking reproduce exactly in DuckDB, full
-    value oracle."""
-    docs = load_table(spark, sf, "documents")
-    out = dd.simhash_pairs(docs, max_hamming=3, hash="md5")
-    return out.select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
-
-
-def q_embedding_cosine_dups(spark, sf):
-    """Embedding near-dup pairs, exact brute-force cosine ≥ 0.4."""
-    emb = load_table(spark, sf, "embeddings")
-    out = dd.embedding_dup_pairs(emb, threshold=0.4, method="brute")
-    return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def _perturbed_corpus(spark, sf):
-    """embeddings ∪ deterministically perturbed twins (id + 10^6): every
-    original has a true near-duplicate at cosine ≈0.998, and the nearest
-    NON-twin pair sits at cosine ≈0.53 — so the 0.95 threshold has a huge
-    margin on both engines (no borderline-rounding pairs)."""
-    emb = load_table(spark, sf, "embeddings")
-    pert = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x, i: x + F.when(i % 7 == 0, F.lit(0.02)).otherwise(F.lit(0.0))).alias("embedding"),
-        "label",
-    )
-    return emb.unionByName(pert)
-
-
-def q_embedding_cosine_dups_srp(spark, sf):
-    """SRP-blocked near-dup at a realistic threshold (0.95): the corpus is
-    the embeddings table unioned with deterministically perturbed copies
-    (id + 10^6), so true near-dup pairs exist and the 8-bit band blocking
-    has the collision probability it is designed for.  Rows-only here; the
-    in-window ``srp_recall`` gate value-checks this exact pipeline."""
-    from bigvectorbench_spark.sources.tables import table_dim
-
-    out = dd.embedding_dup_pairs(_perturbed_corpus(spark, sf),
-                                 threshold=0.95,
-                                 method="srp", num_planes=32, bands=4,
-                                 dim=table_dim(sf, "embeddings", "embedding"))
-    return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-
-
-def q_srp_recall(spark, sf):
-    """Driver-visible gate for the SRP scale path (VERDICT r3 ask #1,
-    same contract as ``q_ivf_recall``): blocking recall of the SRP
-    pipeline's pairs against the exact brute pairs, both computed in Spark
-    on the perturbed corpus.  ``n_true_pairs`` is recomputed independently
-    by the DuckDB oracle (value-checked), and ``recall_ok`` is asserted
-    TRUE.  Measured recall is 1.0 at sf0.001/0.01 (twin pairs collide in
-    ≥1 of 4 bands w.p. ≈0.9995; scripts/calibrate_gates.py); threshold 0.9
-    so any banding/signature defect — which craters recall toward 0 —
-    fails the driver gate.  The exact side runs the broadcast-GEMM method
-    (same pair set as the expression brute — pinned in test_dedup — at a
-    fraction of the cost; pair classification is rounding-safe because no
-    pair sits within 0.4 of the threshold)."""
-    # ONE shared frame for both legs (r12).  NOT persisted: the corpus is
-    # a map-only union+transform of the parquet scan, and the interleaved
-    # persist-on/off A/B read off FASTER on both SRP queries (5.27 vs
-    # 6.02 s, 3.12 vs 4.18 s mins) — caching float-array rows costs more
-    # than recomputing a columnar scan, here and at scale (guide §5.4).
-    corpus = _perturbed_corpus(spark, sf)
-    brute = dd.embedding_dup_pairs(corpus, threshold=0.95, method="gemm").select(
-        "id_a", "id_b")
-    from bigvectorbench_spark.sources.tables import table_dim
-
-    srp = dd.embedding_dup_pairs(corpus, threshold=0.95, method="srp",
-                                 num_planes=32, bands=4,
-                                 dim=table_dim(sf, "embeddings", "embedding")
-                                 ).select(
-        "id_a", "id_b", F.lit(1).alias("_hit"))
-    j = brute.join(srp, ["id_a", "id_b"], "left")
-    rec = F.sum(F.coalesce("_hit", F.lit(0))) / F.count("*")
-    # recall_r2 hashes the *value* (rounded to 2 dp), not just the
-    # threshold boolean: a partial banding degradation (1.0 → 0.93) that
-    # would still clear the 0.9 floor now mismatches the oracle's pinned
-    # 1.00 and fails the driver gate (VERDICT r4 ask #6, the same
-    # tightening ivf/pq corridors got in r4).  Deterministic: seeded SRP
-    # planes on a deterministic corpus.
-    return j.agg(
-        F.count("*").alias("n_true_pairs"),
-        (rec >= 0.9).alias("recall_ok"),
-        F.round(rec, 2).alias("recall_r2"),
-    )
-
-
-def q_sketch_bounds(spark, sf):
-    """Driver-visible error-bound gate for the sketch path (VERDICT r3 ask
-    #1): per-source HLL++ distinct-count estimates must sit within 5%
-    relative error of the exact countDistinct (rsd is 0.01, so 5σ), and
-    percentile_approx(0.5, accuracy=10000) must land between the exact
-    0.49/0.51 quantiles (rank tolerance ≫ n/accuracy).  Both asserted as
-    booleans; ``n_sources``/``n_docs`` are recomputed by the oracle.
-    Measured error at sf0.001–0.01 is exactly 0 (scripts/
-    calibrate_gates.py) — the corridor exists for larger n only."""
-    # The sketches and the exact countDistinct are SEPARATE aggregations
-    # joined on source (r13).  Mixed in one agg, Spark's single-distinct
-    # rewrite keys the FIRST partial aggregate by (source, text) — so the
-    # 16 KB HLL register block and both exact-percentile buffers were
-    # built and merged once per DISTINCT DOCUMENT, not per source
-    # (the plan showed partial_approx_count_distinct under
-    # Keys [source, text]), ~80 MB of agg state for a 5k-doc corpus
-    # squeezed through 5 tasks — the measured one-core serialization
-    # (job_stats: n_tasks=5, 6.6 s executor CPU; scaling ratio 0.77).
-    # Split, the sketch agg holds one buffer per source per partition and
-    # the distinct-count dedup is a lightweight codegen HashAggregate;
-    # both parallelize (guide §2.3 partial aggregation).  Results are
-    # bit-identical: HLL registers are max-merged (dedup- and order-
-    # insensitive), exact percentiles aggregate value counts, and
-    # percentile_approx at accuracy=10000 never compresses below 10k rows
-    # per source (above that, pct_ok's rank tolerance absorbs it).
-    docs = _docs_wide(spark, sf)
-    sketches = docs.groupBy("source").agg(
-        F.approx_count_distinct("text", 0.01).alias("hll"),
-        F.percentile_approx("n_chars", 0.5, 10000).alias("p50a"),
-        F.expr("percentile(n_chars, 0.49)").alias("p49"),
-        F.expr("percentile(n_chars, 0.51)").alias("p51"),
-        F.count("*").alias("n"),
-    )
-    exact = docs.groupBy("source").agg(
-        F.countDistinct("text").alias("exact"))
-    per_src = sketches.join(exact, "source")
-    return per_src.agg(
-        F.count("*").alias("n_sources"),
-        F.sum("n").cast("bigint").alias("n_docs"),
-        F.every(
-            F.abs(F.col("hll") - F.col("exact"))
-            <= F.greatest(F.ceil(F.col("exact") * 0.05), F.lit(1))
-        ).alias("hll_ok"),
-        F.every(
-            (F.col("p49") <= F.col("p50a")) & (F.col("p50a") <= F.col("p51"))
-        ).alias("pct_ok"),
-    )
-
-
-def _docs_wide(spark, sf):
-    """documents, spread across cores: the table arrives as ONE parquet file
-    (one scan partition), which would run every per-doc text pipeline on a
-    single thread.  The shuffle moves only the raw text once — cheap — and
-    every downstream stage then uses the full cluster, as wide as the
-    session's ``defaultParallelism``.  (At 100 TB the source would already
-    be many files and this becomes a no-op.)"""
-    return dd._widen(load_table(spark, sf, "documents"))
-
-
-def q_token_stats(spark, sf):
-    """Token counting + ratios per document.  Two-phase projection: ``tk``
-    is referenced four times downstream, which keeps CollapseProject from
-    re-inlining the tokenizer (one tokenize per doc, not four)."""
-    tokenized = _docs_wide(spark, sf).select(
-        "doc_id", F.col("text"), tx.tokens(F.col("text")).alias("tk"))
-    return tokenized.select(
-        "doc_id",
-        F.size("tk").cast("bigint").alias("n_tokens"),
-        tx.char_count(F.col("text")).cast("bigint").alias("n_chars"),
-        F.round(tx.avg_token_len_from_tokens(F.col("tk")), 6).alias("avg_token_len"),
-        F.round(tx.stopword_ratio_from_tokens(F.col("tk")), 6).alias("stop_ratio"),
-    )
-
-
-def q_quality_scores(spark, sf):
-    """Quality scoring.  Tokens materialized once (see q_token_stats)."""
-    tokenized = _docs_wide(spark, sf).select(
-        "doc_id", F.col("text"), tx.tokens(F.col("text")).alias("tk"))
-    return tokenized.select(
-        "doc_id",
-        F.round(tx.quality_score_from_tokens(F.col("tk"), F.col("text")), 6).alias("quality"))
-
-
-def q_lang_id(spark, sf):
-    """Language-ID heuristic (marker n-grams)."""
-    tokenized = _docs_wide(spark, sf).select(
-        "doc_id", tx.tokens(F.col("text")).alias("tk"))
-    with_joined = tokenized.withColumn("joined", F.concat_ws("", "tk"))
-    return with_joined.select(
-        "doc_id",
-        tx.lang_id_from_tokens(F.col("tk"), F.col("joined")).alias("pred_lang"))
-
-
-def q_media_pipeline(spark, sf):
-    """Multimodal column pipeline on a deterministic media table derived
-    from documents: opaque BINARY payloads + typed metadata.  The declared
-    outputs are the oracle-able stages — payload plumbing (byte length,
-    md5 over the binary column) and the metadata-only planners
-    (aspect-preserving resize plan, every-nth frame sampling work-list).
-    The decode/feature kernels are oracled by q_audio_features and
-    q_video_features."""
-    from bigvectorbench_spark.operators import multimodal as mmx
-
-    docs = load_table(spark, sf, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                     (F.col("doc_id") % 3 + 1).cast("int")).alias("kind"),
-        F.encode("text", "UTF-8").alias("content"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            (F.col("n_chars") % 512 + 64).cast("int").alias("width"),
-            (F.col("n_chars") % 256 + 48).cast("int").alias("height"),
-            F.lit(16000).alias("sample_rate"),
-            (F.col("n_chars") % 100 + 1).cast("int").alias("n_frames"),
-            F.lit(1.0).cast("float").alias("duration_s"),
-        ).alias("meta"),
-    )
-    planned = mmx.resize_meta(media, max_side=256)
-    frames = (
-        mmx.sample_frames(media.filter(F.col("kind") == "video"), every_n=10)
-        .groupBy("media_id").agg(F.count("*").alias("n_sampled"))
-    )
-    return (
-        planned.join(frames, "media_id", "left")
-        .select(
-            "media_id", "kind",
-            F.length("content").cast("bigint").alias("n_bytes"),
-            F.md5("content").alias("payload_md5"),
-            F.col("target_width").cast("bigint").alias("target_width"),
-            F.col("target_height").cast("bigint").alias("target_height"),
-            F.coalesce("n_sampled", F.lit(0)).cast("bigint").alias("n_sampled"),
-        )
-    )
-
-
-def q_audio_features(spark, sf):
-    """Audio tier of the multimodal pipeline, VALUE-oracled end-to-end
-    through the real pure-Python WAV codec (VERDICT r5 "What's missing
-    #1"): synthesize integer-sawtooth PCM clips keyed by doc_id →
-    ``wav_encode`` → real RIFF/WAVE bytes → ``audio_features`` (an
-    undecodable payload raises, so a codec regression fails loudly) →
-    energy features.  The waveform is
-    pure integer arithmetic (multimodal.sawtooth_pcm), so DuckDB
-    recomputes the exact samples closed-form and the rms/zcr/peak values
-    match bit-for-bit — the encode→decode→feature path has a genuine
-    value oracle, not a roundtrip self-check.  dominant_freq_hz (the one
-    float-order-dependent feature) is pinned in test_multimodal instead."""
-    import pandas as pd
-    from bigvectorbench_spark.operators import multimodal as mmx
-
-    docs = load_table(spark, sf, "documents").filter("doc_id % 5 = 0").select("doc_id")
-
-    def _synth(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, contents, metas = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 1600 + (d % 4) * 400
-                contents.append(mmx.wav_encode(
-                    mmx.sawtooth_pcm(50 + (d % 40) * 10, 8000, n,
-                                     8192 + (d % 8) * 1024), 8000))
-                metas.append({"mime": "audio/wav", "width": None,
-                              "height": None, "sample_rate": 8000,
-                              "n_frames": None, "duration_s": n / 8000.0})
-                ids.append(d)
-            yield pd.DataFrame({"media_id": ids,
-                                "kind": ["audio"] * len(ids),
-                                "content": contents, "meta": metas})
-
-    media = docs.mapInPandas(_synth, schema=mmx.MEDIA_SCHEMA)
-    feats = mmx.audio_features(media)
-    return feats.select(
-        "media_id",
-        F.col("n_samples").cast("bigint").alias("n_samples"),
-        F.col("sample_rate").cast("bigint").alias("sample_rate"),
-        F.round("rms", 6).alias("rms"),
-        F.col("zero_crossings").cast("bigint").alias("zero_crossings"),
-        F.round("peak", 6).alias("peak"),
-    )
-
-
-def q_video_features(spark, sf):
-    """Video tier of the multimodal pipeline, VALUE-oracled end-to-end
-    through the real pure-Python uncompressed-AVI codec (the RIFF/DIB
-    twin of ``q_audio_features``): synthesize integer-gradient frames
-    keyed by doc_id → ``avi_encode`` → real AVI bytes →
-    ``video_features`` (an undecodable payload raises) →
-    clip features.  Frames are pure integer arithmetic
-    (multimodal.gradient_frames: pixel = (3x+5y+7f) mod 256), so DuckDB
-    recomputes the exact stored bytes closed-form and mean_luma8/motion
-    match bit-for-bit — the encode→decode→feature path has a genuine
-    value oracle covering DIB row order, padding, and BGR layout (any
-    byte misplaced shifts the sums)."""
-    import pandas as pd
-    from bigvectorbench_spark.operators import multimodal as mmx
-
-    docs = load_table(spark, sf, "documents").filter("doc_id % 10 = 0").select("doc_id")
-
-    def _synth(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, contents, metas = [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n, h, w = 4 + d % 4, 8 + (d % 3) * 4, 12 + (d % 4) * 4
-                contents.append(mmx.avi_encode(mmx.gradient_frames(n, h, w),
-                                               fps=10))
-                metas.append({"mime": "video/x-msvideo", "width": w,
-                              "height": h, "sample_rate": None,
-                              "n_frames": n, "duration_s": n / 10.0})
-                ids.append(d)
-            yield pd.DataFrame({"media_id": ids,
-                                "kind": ["video"] * len(ids),
-                                "content": contents, "meta": metas})
-
-    media = docs.mapInPandas(_synth, schema=mmx.MEDIA_SCHEMA)
-    feats = mmx.video_features(media)
-    return feats.select(
-        "media_id",
-        F.col("n_frames").cast("bigint").alias("n_frames"),
-        F.col("height").cast("bigint").alias("height"),
-        F.col("width").cast("bigint").alias("width"),
-        F.round("fps", 6).alias("fps"),
-        F.round("mean_luma8", 6).alias("mean_luma8"),
-        F.round("motion", 6).alias("motion"),
-    )
-
-
-def _docs_pii(spark, sf):
-    """documents with deterministic PII planted in-query: a corpus-derived
-    email / phone / IPv4 appended to the docs where doc_id hits the 7/11/13
-    residue classes.  The fixture construction is explicit and mirrored
-    verbatim in the oracle SQL — the operator under test is the detection/
-    redaction pipeline (curation.pii_scrub_report), not the planting."""
-    d = _docs_wide(spark, sf)
-    email = F.concat(F.lit(" contact user"), F.col("doc_id").cast("string"),
-                     F.lit("@example.com now"))
-    phone = F.concat(F.lit(" call +1-555-"),
-                     F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                     F.lit(" today"))
-    ip = F.concat(F.lit(" from 192.168."),
-                  (F.col("doc_id") % 256).cast("string"), F.lit("."),
-                  ((F.col("doc_id") * 7) % 256).cast("string"))
-    return d.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 7 == 0, email).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0, phone).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 13 == 0, ip).otherwise(F.lit("")),
-        ),
-    )
-
-
-def q_pii_scrub(spark, sf):
-    """PII detection + redaction accounting per source (curation stage:
-    scrub before training).  Stateless regexp scan in whole-stage codegen;
-    the only shuffle is the per-source rollup.  Regexes are Java-regex/RE2
-    portable, so DuckDB reproduces the exact matches."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.pii_scrub_report(_docs_pii(spark, sf)).orderBy("source")
-
-
-def q_gopher_quality(spark, sf):
-    """Gopher-style quality-filter breakdown per source: token-count
-    bounds, mean-word-length bounds, stopword presence, and the
-    max-token-frequency repetition rule — shuffle-free up to the rollup.
-    Runs the default Arrow-batched kernel (5.5× the codegen-fold form at
-    500k docs, flags pinned identical by
-    test_gopher_quality_arrow_matches_expr); the expression form
-    (sorted-array run-length folds, curation.max_token_run) remains the
-    declared engine-portable shape."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.gopher_quality_report(_docs_wide(spark, sf)).orderBy("source")
-
-
-def q_gopher_repetition(spark, sf):
-    """The FULL Gopher repetition rule family (Rae et al. 2021 Table A1):
-    top-2/3/4-gram and duplicate-5..10-gram character fractions, nine
-    rules per doc, zero shuffles before the per-source rollup.  Runs the
-    default Arrow-batched numpy kernel (9× the codegen fold form at 500k
-    docs; bit-identical flags, pinned by test_gopher_arrow_matches_expr —
-    the expression fold remains the declared engine-portable shape).
-    Fractions are exact integer char masses over one double division,
-    compared unrounded to the published thresholds; the oracle regenerates
-    every n-gram statistic via unnest + groupBy."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.gopher_repetition_report(_docs_wide(spark, sf)).orderBy("source")
-
-
-def _docs_lines(spark, sf):
-    """documents with deterministic LINE structure planted in-query (the
-    corpus text has no newlines): tokens chunk into 6-word lines, each
-    line gets a cycling terminal-or-missing punctuation mark, the
-    (doc_id + line) % 13 == 7 residue injects 'javascript', and the
-    doc_id % 89 / % 97 residue classes append page-level 'lorem ipsum' /
-    curly-brace footers.  The construction is explicit and mirrored
-    verbatim in the oracle SQL (the _docs_pii pattern) — the operator
-    under test is the C4 rule evaluation, not the planting."""
-    d = _docs_wide(spark, sf).select(
-        "doc_id", "source", tx.tokens(F.col("text")).alias("tk"))
-    nl = F.ceil(F.size("tk") / F.lit(6.0)).cast("int")
-    idx = F.when(nl >= 1, F.sequence(F.lit(0), nl - 1)
-                 ).otherwise(F.lit([]).cast("array<int>"))
-    punct = F.array(F.lit("."), F.lit(""), F.lit("!"), F.lit("?"), F.lit(""))
-
-    def mk(i):
-        base = F.concat_ws(" ", F.slice(F.col("tk"), i * 6 + 1, 6))
-        js = F.when(F.pmod(F.col("doc_id") + i, 13) == 7,
-                    F.lit(" javascript embedded here")).otherwise(F.lit(""))
-        p = F.element_at(punct, (F.pmod(F.col("doc_id") + i, 5) + 1).cast("int"))
-        return F.concat(base, js, p)
-
-    lorem = F.when(F.col("doc_id") % 89 == 0,
-                   F.lit("\nthis page quotes lorem ipsum boilerplate.")
-                   ).otherwise(F.lit(""))
-    brace = F.when(F.col("doc_id") % 97 == 0,
-                   F.lit("\nfunction f() { return 1; }")).otherwise(F.lit(""))
-    return d.select(
-        "doc_id", "source",
-        F.concat(F.array_join(F.transform(idx, mk), "\n"), lorem, brace)
-        .alias("text"))
-
-
-def q_c4_line_filter(spark, sf):
-    """C4 cleaning rules (Raffel et al. 2020 §2.2 — the Colossal Clean
-    Crawled Corpus recipe) over a line-structured corpus: keep lines that
-    end in terminal punctuation, have >= 5 words, and don't mention
-    javascript; drop pages with 'lorem ipsum', a '{', or < 3 surviving
-    lines.  Per-source disposition + line + character accounting.  The
-    rule evaluation is entirely row-local (split / rlike / higher-order
-    filter inside whole-stage codegen) — ZERO data-dependent shuffles
-    before the final per-source rollup, the ideal 100 TB map-only shape."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.c4_line_filter_report(_docs_lines(spark, sf)).orderBy("source")
-
-
-def _docs_paras(spark, sf):
-    """documents with deterministic PARAGRAPH structure planted in-query:
-    tokens chunk into 8-word paragraphs joined by newlines.  The corpus's
-    planted exact/near-duplicate documents then share whole paragraphs —
-    exactly the cross-document redundancy paragraph dedup removes."""
-    d = _docs_wide(spark, sf).select(
-        "doc_id", "source", tx.tokens(F.col("text")).alias("tk"))
-    nl = F.ceil(F.size("tk") / F.lit(8.0)).cast("int")
-    idx = F.when(nl >= 1, F.sequence(F.lit(0), nl - 1)
-                 ).otherwise(F.lit([]).cast("array<int>"))
-    paras = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(F.col("tk"), i * 8 + 1, 8)))
-    return d.select("doc_id", "source",
-                    F.array_join(paras, "\n").alias("text"))
-
-
-def q_paragraph_dedup(spark, sf):
-    """Corpus-wide keep-first exact paragraph deduplication (the
-    MassiveText / RefinedWeb stage: every repeated paragraph keeps only
-    its first (doc_id, position) occurrence), per-source accounting.
-    Shuffles carry (8-byte md5-derived hash, 8-byte packed occurrence
-    key, 4-byte length) per paragraph — paragraph TEXT never moves; the
-    keep decision is a map-side-combined min per hash and the rewrite is
-    a row-local indexed filter."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.paragraph_dedup_report(_docs_paras(spark, sf)).orderBy("source")
-
-
-def q_hashed_embed_knn(spark, sf):
-    """documents -> vectors -> ANN entirely inside the engine: 64-d
-    feature-hashing embeddings (signed bucket counts — EXACT INTEGERS)
-    derived from the text column, then brute cosine top-10 from the
-    doc_id % 250 = 0 query docs.  The dot product and squared norms are
-    integer arithmetic; cosine is 4 IEEE ops (2 sqrt, 1 mul, 1 div) in
-    the same order both engines, so even the emitted distances
-    hash-match.  Plan: query embeddings broadcast, corpus scanned once,
-    WindowGroupLimit applies k before the rank shuffle (the knn_* plan
-    family)."""
-    from bigvectorbench_spark.functions import embed as em
-
-    # each stage MATERIALIZED in its own select: the d-wide embedding
-    # fold references the hash array once per component, and the norm
-    # references the vector — non-materialized inputs re-run every md5
-    # dim times (measured 19.1s -> 3.2s at sf0.1 for this query)
-    base = (_docs_wide(spark, sf)
-            .select("doc_id", tx.tokens(F.col("text")).alias("tk"))
-            .select("doc_id", em.token_hashes(F.col("tk")).alias("th"))
-            .select("doc_id", em.hashed_embedding(F.col("th")).alias("v"))
-            .withColumn(
-                "nsq",
-                F.aggregate("v", F.lit(0).cast("bigint"),
-                            lambda a, x: a + x * x))
-            .filter(F.col("nsq") > 0))
-    q = (base.filter(F.pmod(F.col("doc_id"), F.lit(250)) == 0)
-         .select(F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
-                 F.col("nsq").alias("qn")))
-    t = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                    F.col("nsq").alias("tn"))
-    dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                      F.lit(0).cast("bigint"), lambda a, x: a + x)
-    joined = t.crossJoin(F.broadcast(q)).select(
-        "qid", "id",
-        (F.lit(1.0) - dot.cast("double")
-         / (F.sqrt(F.col("qn").cast("double"))
-            * F.sqrt(F.col("tn").cast("double")))).alias("d"))
-    from pyspark.sql import Window
-    w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("id"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10)
-            .select("qid", "id", F.round("d", 6).alias("dist"), "rank"))
-
-
-def q_incremental_dedup(spark, sf):
-    """Corpus-delta exact dedup (the periodic-crawl operation): a
-    Knuth-hash-selected 10% slice arrives as a NEW batch and dedups against the
-    existing corpus (distinct 16-byte keys — the only thing the corpus
-    contributes to the join) and within itself (keep-first by id), with
-    corpus-copy precedence so the three dispositions partition the
-    batch."""
-    from bigvectorbench_spark.operators import dedup as dd2
-    docs = _docs_wide(spark, sf)
-    # hash-select the batch: source is doc_id-modular in the generator,
-    # so a plain mod slice would hit only 2 of 20 sources
-    h = F.pmod(F.pmod(F.col("doc_id") * 2654435761, F.lit(4294967296)),
-               F.lit(10))
-    batch = docs.filter(h == 9)
-    corpus = docs.filter(h != 9)
-    return (dd2.incremental_dedup_report(batch, corpus)
-            .orderBy("source"))
-
-
-def q_doc_chunks(spark, sf):
-    """Sliding-window document chunking (RAG / embedding-model context
-    preparation): 32-token windows, stride 24 (8-token overlap), short
-    tail chunk kept so every token is covered; per-source chunk
-    accounting.  Entirely row-local — one tokenizer pass, one transform,
-    one explode, the map-only 100 TB scan shape (c4_clean family)."""
-    from bigvectorbench_spark.operators import packing as pk
-    return (pk.chunk_report(_docs_wide(spark, sf), size=32, stride=24)
-            .orderBy("source"))
-
-
-_MORPH_SFX = ["", "ing", "ed", "ly", "er", "est", "s", "ness"]
-
-
-def _docs_morph(spark, sf):
-    """documents with deterministic MORPHOLOGICAL structure planted
-    in-query: every token gets a cycling suffix from _MORPH_SFX keyed by
-    (doc_id + position) % 8, turning the generator vocabulary into
-    stem x suffix families — exactly the structure BPE exists to exploit
-    (merges learn the stems and the suffixes).  Mirrored verbatim in the
-    oracle (the _docs_pii / _docs_lines pattern)."""
-    d = _docs_wide(spark, sf).select(
-        "doc_id", "source", tx.tokens(F.col("text")).alias("tk"))
-    sfx = F.array(*[F.lit(s) for s in _MORPH_SFX])
-    aug = F.transform(
-        F.col("tk"),
-        lambda w, i: F.concat(
-            w, F.element_at(
-                sfx, (F.pmod(F.col("doc_id") + i, 8) + 1).cast("int"))))
-    return d.select("doc_id", "source",
-                    F.array_join(aug, " ").alias("text"))
-
-
-def q_bpe_train(spark, sf):
-    """BPE vocabulary training + application over the morph-planted
-    corpus: learn 100 merges from the distributed word histogram
-    (driver-side fit on the vocabulary-bounded counts — the PQ/IVF
-    bounded-fit convention), segment the vocabulary distributedly, and
-    account pieces-per-token per source through a broadcast join.  The
-    oracle learns the SAME merge table with an independent
-    implementation (Sennrich apply-in-order segmentation vs the GPT-2
-    lowest-rank-first loop) and embeds its word -> piece-count map as
-    SQL literals — hash equality proves histogram, merge order, and
-    segmentation all agree."""
-    from bigvectorbench_spark.operators import bpe
-    return (bpe.bpe_train_report(_docs_morph(spark, sf), num_merges=100)
-            .orderBy("source"))
-
-
-def q_ccnet_bins(spark, sf):
-    """CCNet's per-language head/middle/tail split (Wenzek et al. 2020):
-    lang_id buckets x bigram-LM fluency terciles, exact-rank form with
-    the deterministic (score desc, doc_id) tie-break; 'unscored' bin for
-    docs with no in-vocabulary bigram so the report partitions the
-    corpus.  Buckets use the
-    corpus's pre-classified lang column (CCNet buckets on its fastText
-    output, which in a warehouse IS a column)."""
-    from bigvectorbench_spark.operators import lm
-    return (lm.ccnet_bins_report(_docs_wide(spark, sf), lang_col="lang")
-            .orderBy("lang", "bin"))
-
-
-def q_temperature_sample(spark, sf):
-    """Temperature-scaled mixture sampling (mT5/Gopher domain weighting,
-    alpha = 0.5): per-source keep rates proportional to sqrt(n_s),
-    targeting half the corpus; deterministic ppm-resolution hash keep.
-    Exact integer arithmetic after one correctly-rounded IEEE sqrt per
-    source — every emitted value hash-identical across engines.  The
-    corpus never shuffles: one count agg, a 20-row broadcast, a
-    partition-local filter."""
-    from bigvectorbench_spark.operators import curation as cur
-    return (cur.temperature_sample_report(load_table(spark, sf, "documents"))
-            .orderBy("source"))
-
-
-def q_llm_data_mix(spark, sf):
-    """End-to-end RefinedWeb-style training-mix assembly, composed from
-    this round's stages and value-oracled through ALL of them: C4
-    line/page cleaning -> corpus-wide keep-first exact LINE dedup (the
-    paragraph_dedup operator at line granularity, RefinedWeb's exact
-    line dedup) -> DSIR importance selection over the REWRITTEN text ->
-    per-source accounting (docs surviving each stage, duplicate lines
-    cut, tokens entering the final mix, mean importance ratio).
-
-    Composition stays cheap because each stage's expensive decision
-    travels as fixed-width keys: the C4 stage is a zero-shuffle scan,
-    the line-dedup stage shuffles (hash, packed key, length) triples,
-    DSIR broadcasts a 4096-row ratio table, and the three per-source
-    rollups join on the 20-row source dimension.  tokens_kept falls out
-    of the DSIR bigram count (tokens = bigrams + 1 for scored docs) —
-    no extra tokenize-and-join pass over the corpus."""
-    from bigvectorbench_spark.operators import curation as cur
-    from bigvectorbench_spark.operators import dsir
-
-    # Stage boundaries are MATERIALIZATION points: each intermediate
-    # corpus is consumed by more than one downstream pass (the C4 output
-    # by the stage-1 rollup and the dedup; the rewritten corpus by the
-    # DSIR distribution fit, the weight join, and the empties sweep).
-    # At 100 TB these would be parquet checkpoints between jobs; locally
-    # persist() plays that role (bench.py clears the cache per query).
-    # The boundaries are
-    # load-bearing, not advisory: executing this plan with them stripped
-    # re-runs every upstream stage once per downstream reference — the
-    # planted-lines construction alone is recomputed ~10x — measured
-    # 241s vs 22s at 500k Zipf docs.  That is exactly why the
-    # cluster-scale analog is a DURABLE checkpoint (parquet between
-    # jobs), not best-effort executor caching: at 100 TB an evicted
-    # cache silently turns a 3-stage pipeline into a ~10x recomputation
-    # storm, while a written boundary caps each stage at one
-    # materialization.
-    #
-    # Boundary mechanism, MEASURED both ways in r13 (VERDICT r12 ask #3:
-    # cut this composition's 4.4 s cold Catalyst tree): lazy
-    # localCheckpoint boundaries DO cut the per-run cold cost (same-
-    # session 3-way A/B at sf0.1: persist 5.0-6.9 s, eager checkpoint
-    # 5.0-5.3 s, lazy 4.3-4.8 s per cold run) — but they LOSE under the
-    # bench's best-of-N protocol (interleaved tree A/B: 1.31x), because
-    # persist's runs 2..N re-match run 1's still-registered cache entries
-    # by plan identity while checkpointed RDDs are new objects every run.
-    # persist stays; the checkpoint variant is the right shape only for
-    # single-shot cold execution.
-    lines = _docs_lines(spark, sf)
-    c4 = cur.c4_clean(lines, extra_cols=("source",)).persist()
-    s1 = c4.groupBy("source").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum((F.col("status") == "kept").cast("int")).cast("bigint")
-        .alias("n_c4_kept"))
-    kept = (c4.filter(F.col("status") == "kept")
-            .select("doc_id", "source",
-                    F.col("text_clean").alias("text")))
-    dd = cur.paragraph_dedup(kept, extra_cols=("source",))
-    s2 = dd.groupBy("source").agg(
-        F.sum("n_dup_removed").cast("bigint").alias("n_line_dups_removed"))
-    final = dd.select("doc_id", "source",
-                      F.col("text_clean").alias("text")).persist()
-    w = dsir.dsir_weights(final, extra_cols=("source",))
-    s3 = w.groupBy("source").agg(
-        F.sum(F.col("keep").cast("int")).cast("bigint").alias("n_dsir_kept"),
-        F.sum(F.when(F.col("keep"), F.col("n_bigrams") + 1)
-              .otherwise(F.lit(0))).cast("bigint").alias("tokens_kept"),
-        F.round(F.sum("weight_sum").cast("double") / F.sum("n_bigrams"), 6)
-        .alias("mean_weight"))
-    return (s1.join(s2, "source", "left").join(s3, "source", "left")
-            .select(
-                "source", "n_docs", "n_c4_kept",
-                F.coalesce("n_line_dups_removed", F.lit(0)).cast("bigint")
-                .alias("n_line_dups_removed"),
-                F.coalesce("n_dsir_kept", F.lit(0)).cast("bigint")
-                .alias("n_dsir_kept"),
-                F.coalesce("tokens_kept", F.lit(0)).cast("bigint")
-                .alias("tokens_kept"),
-                "mean_weight")
-            .orderBy("source"))
-
-
-def q_dsir_select(spark, sf):
-    """DSIR-style data selection (Xie et al. 2023): hashed-bigram
-    importance ratios of a planted target slice (doc_id % 17 = 0) vs the
-    raw pool, per-source disposition accounting.  Exact-arithmetic oracle
-    form: each of the 4096 bucket ratios is one identically-ordered IEEE
-    double expression rounded once to 6 dp, per-doc sums accumulate in
-    DECIMAL, and the keep rule (mean ratio >= 1) is a decimal-vs-integer
-    compare — no float boundary can flip a disposition between engines.
-    Scale shape: the distribution fit shuffles <= 4096 rows per
-    partition, the ratio table broadcasts, the per-doc rollup is
-    map-side combined; document text never moves."""
-    from bigvectorbench_spark.operators import dsir
-    return dsir.dsir_report(_docs_wide(spark, sf)).orderBy("source")
-
-
-def q_decontaminate(spark, sf):
-    """Eval-set decontamination: train docs sharing any 8-token window
-    with the held-out slice (doc_id % 97 = 0).  The eval shingle
-    inventory is fixed-size → broadcast semi-join; the train corpus is
-    scanned, never shuffled."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.decontaminate_report(_docs_wide(spark, sf)).orderBy("source")
-
-
-def q_sparse_delta_report(spark, sf):
-    """Incremental maintenance for the sparse index — the ivf_delta twin:
-    a 10% arrival batch (doc_id % 10 = 7) absorbs with FROZEN base
-    statistics (stale idf, map-side append, zero existing postings
-    touched), and this one-row report meters the price: posting/vocab
-    volumes plus the mean |idf drift| over base terms the delta touched —
-    the rebuild-on-evidence signal.  Fully value-oracled (the drift
-    arithmetic replays in SQL with the 9-dp/DECIMAL/6-dp ladder)."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    # One tokenize for both sides (r12): postings are per-document local,
-    # so filtering the shared corpus-wide postings frame is row-identical
-    # to tokenizing each filtered slice separately.  NOT persisted: all
-    # consumers sit in one action and reference the identical aggregation
-    # subtree, so ReusedExchange dedups the shuffle for free — the
-    # interleaved A/B read persist at 4.79 s vs 2.97 s without (the cache
-    # write+read of exploded postings costs more than it saves).
-    all_post = sp.lexical_postings(docs)
-    base_post = all_post.filter("doc_id % 10 != 7")
-    delta_post = all_post.filter("doc_id % 10 = 7")
-    return sp.sparse_delta_report(base_post, delta_post)
-
-
-def q_sparse_delta_parity(spark, sf):
-    """Closes the stale-idf loop the hybrid_rrf_parity way: the same
-    queries search the absorbed index (base weights + stale-weight delta
-    postings union) AND a full rebuild over base+delta; top-10 overlap is
-    emitted as oracle-asserted threshold booleans.  Measured 0.96/0.9 at
-    sf0.001 and 0.92/0.7 at sf0.01 (a 10% arrival barely moves idf);
-    tight gate 0.85/0.6, off-sf floor 0.5/0.2."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    mean_thr, min_thr = _gate(sf, tight=(0.85, 0.6), floor=(0.5, 0.2))
-    docs = _docs_wide(spark, sf)
-    base = docs.filter("doc_id % 10 != 7")
-    delta = docs.filter("doc_id % 10 = 7")
-    # One tokenize for base, delta AND rebuild (r12, was three full
-    # tokenize→postings pipelines): postings are per-document local, so
-    # slicing the shared corpus-wide frame is row-identical.  all_post is
-    # NOT persisted (ReusedExchange dedups the identical aggregation
-    # subtree within the absorbed/rebuilt materializations; the A/B read
-    # persist-off faster) — absorbed/rebuilt stay persisted because
-    # sparse_topk consumes each through three non-identical subtrees
-    # (query weights, query vocab, postings probe).
-    all_post = sp.lexical_postings(docs)
-    base_post = all_post.filter("doc_id % 10 != 7")
-    absorbed = sp.sparse_postings(base, post=base_post).unionByName(
-        sp.stale_weight_postings(delta, base_post,
-                                 post=all_post.filter("doc_id % 10 = 7"))
-    ).persist()
-    rebuilt = sp.sparse_postings(docs, post=all_post).persist()
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"))
-    return _recall_gate(sp.sparse_topk(docs, queries, k=10, wpost=absorbed),
-                        sp.sparse_topk(docs, queries, k=10, wpost=rebuilt),
-                        mean_thr, min_thr, col="doc_id")
-
-
-def q_bloom_decontaminate(spark, sf):
-    """Bloom-filter decontamination (the third memory regime beside the
-    broadcast semi-join and the sorted-array kernel: ~3.6 bytes per
-    eval window hash at fp=1e-6, so billion-window eval inventories still
-    broadcast).  Exact per-group counts are independently recomputed by
-    the oracle; the booleans assert the filter's defining one-sided-error
-    contract — superset_ok (NO false negative: every exact hit flagged)
-    and fp_extra_ok (false-positive excess within the design bound)."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.bloom_decontaminate_report(_docs_wide(spark, sf)).orderBy("source")
-
-
-def q_cm_heavy_hitters(spark, sf):
-    """Count-Min watchlist counts (the third sketch family beside the
-    HLL/KLL pair sketch_bounds gates): corpus-wide frequencies for the
-    exact top-10 tokens from ONE mergeable count_min_sketch aggregate —
-    no token-stream shuffle at estimate time, O(ln(1/δ)/ε) sketch bytes
-    at any corpus size.  The oracle re-derives the watchlist and exact
-    counts in SQL and asserts the CM contract booleans: never
-    undercounts, overshoots ≤ ε·N (deterministic at the fixed seed)."""
-    return mx.cm_watchlist_report(_docs_wide(spark, sf))
-
-
-def q_weighted_sample(spark, sf):
-    """Exact-size weighted sampling without replacement (Efraimidis-
-    Spirakis exponential keys): 100 documents drawn ∝ token count.  The
-    Bernoulli mixers (domain_mix, temperature_sample) only hit their size
-    in expectation; a training-data budget wants exactly n.  Plans as
-    TakeOrderedAndProject — per-partition top-n heaps, no global sort
-    materialization (test_sampling pins the plan).  Fully value-oracled:
-    u = portable md5 hash on a 2⁴⁰ grid, keys rounded 9 dp pre-rank."""
-    from bigvectorbench_spark.operators import sampling as smp
-
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id", F.size(tx.tokens(F.col("text"))).cast("double").alias("w"))
-    return smp.weighted_sample(docs, n=100, weight_col="w").select(
-        "doc_id", "skey")
-
-
-def q_stratified_sample(spark, sf):
-    """Exact per-group quotas: 5 uniformly-chosen docs per source (seeded
-    portable hash — same sample on any engine/partitioning).
-    WindowGroupLimit bounds each group's shipped rows pre-exchange
-    (test_sampling pins the plan)."""
-    from bigvectorbench_spark.operators import sampling as smp
-
-    docs = load_table(spark, sf, "documents").select("doc_id", "source")
-    return smp.stratified_sample(docs, group_col="source", quota=5).select(
-        "doc_id", "source", "srank")
-
-
-def q_substring_dedup(spark, sf):
-    """Repeated 15-token-window detection corpus-wide (the distributed
-    analog of exact substring dedup, Lee et al. 2022).  Shuffles 8-byte
-    portable window hashes, never window text."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.substring_dedup_report(_docs_wide(spark, sf)).orderBy("source")
-
-
-def q_domain_mix(spark, sf):
-    """Deterministic stratified domain mixing: multiplicative-hash
-    Bernoulli keep decision per doc against a per-source target rate.
-    Zero-shuffle filter; only the acceptance report aggregates."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.domain_mix_report(load_table(spark, sf, "documents")).orderBy("source")
-
-
-def q_substring_spans(spark, sf):
-    """Merged repeated-span extraction (the full Lee-et-al exact-substring
-    output): maximal token spans covered by 15-token windows that occur
-    more than once corpus-wide — the cut-list a span-removal rewrite
-    consumes.  Islands merged JVM-side in a fold, no second shuffle."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.substring_spans(_docs_wide(spark, sf)).orderBy(
-        "doc_id", "span_start")
-
-
-def q_substring_rewrite(spark, sf):
-    """The exact-substring cut-list APPLIED (Lee et al.'s second half):
-    every repeated 15-token window is removed except its canonical
-    (minimum (doc_id, pos)) occurrence, and the rewritten token stream is
-    emitted per document.  The oracle rebuilds the identical strings in
-    SQL, so the rewrite is hash-checked character-for-character."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.substring_rewrite(_docs_wide(spark, sf))
-
-
-def q_bpe_token_stats(spark, sf):
-    """Token accounting with a BPE-ish regex pre-tokenizer (GPT-2 pattern
-    family, ASCII-portable subset — functions/text.py::BPE_RE) next to the
-    whitespace count: the LLM-cost estimate a training pipeline budgets
-    with.  Runs over the PII-augmented corpus so emails/phones/IPs give
-    the two counters genuinely different answers (punctuation runs split
-    into their own pre-tokens).  Whole pipeline is one codegen scan."""
-    d = _docs_pii(spark, sf)
-    return d.select(
-        "doc_id",
-        tx.token_count(F.col("text")).cast("bigint").alias("n_ws_tokens"),
-        tx.bpe_token_count(F.col("text")).cast("bigint").alias("n_bpe_tokens"),
-    )
-
-
-def q_semantic_dups(spark, sf):
-    """SemDeDup-style semantic dedup: k-means (the IVF build — nlist=8,
-    seed=1) partitions the embedding space; exact unit-vector cosine pairs
-    are generated WITHIN clusters only, turning the O(n²) cross join into
-    one equi-join keyed on cluster_id (pair work n²/k).  The oracle embeds
-    the independently recomputed assignment and re-derives every
-    within-cluster pair with the same cosine fold, so the partition AND
-    the scores hash-check.  Boundary-straddling pairs are the published
-    recall trade-off; the brute twin (embedding_cosine_dups, same 0.4
-    threshold) bounds what this path can see."""
-    emb = load_table(spark, sf, "embeddings")
-    # the cosine fold's term order is engine-reproducible, so the 6-dp
-    # round agrees with DuckDB's
-    out = dd.semantic_dup_pairs(emb, threshold=0.4, nlist=8, seed=1,
-                                max_iter=8)
-    return out.select("id_a", "id_b", "cluster_id",
-                      F.round("cosine", 6).alias("cosine"))
-
-
-def q_lm_fluency(spark, sf):
-    """Bigram-LM fluency scoring (the CCNet perplexity-filter stage in its
-    exact-arithmetic form): LM fit on the doc_id % 7 = 0 reference slice,
-    every doc scored — OOV-pair count, LM hit-rate, and the mean MLE
-    conditional likelihood of seen pairs (6-dp-rounded terms accumulated
-    in DECIMAL, so both engines sum identical exact values)."""
-    from bigvectorbench_spark.operators import lm
-    return lm.lm_score_report(_docs_wide(spark, sf))
-
-
-def q_pack_blocks(spark, sf):
-    """Concat-and-split sequence packing (GPT-style pretraining loader
-    prep): every doc gets its token span in the virtual corpus
-    concatenation, cut into 512-token training blocks.  The global prefix
-    sum runs as a distributed two-pass (range buckets → per-bucket window
-    cumsum → broadcast bucket offsets) instead of the single-task
-    ORDER-BY-all window — the oracle IS that single window, so the
-    equivalence is hash-checked row by row (exact integer arithmetic)."""
-    from bigvectorbench_spark.operators import packing as pk
-    return pk.pack_blocks(_docs_wide(spark, sf), block_size=512)
-
-
-def q_block_manifest(spark, sf):
-    """Per-training-block composition from the packing spans: docs
-    contributing to each 512-token block and the slots they fill (every
-    non-final block exactly full — the loader invariant).  Explode is
-    bounded (docs touch ⌈n/512⌉+1 blocks); one map-side-combined groupBy."""
-    from bigvectorbench_spark.operators import packing as pk
-    packed = pk.pack_blocks(_docs_wide(spark, sf), block_size=512)
-    return pk.block_manifest(packed, block_size=512)
-
-
-def q_epoch_mix(spark, sf):
-    """Fractional-epoch oversampling audit — the UPsampling complement of
-    domain_mix: each source runs 1.0/1.5/2.0/2.5 epochs (ppm factor from
-    its numeric suffix), a doc's extra copy decided by the deterministic
-    mix-hash Bernoulli, and the report returns exact integer counts
-    (n_docs, n_emitted, n_extra) per source.  The replication itself is a
-    map-only bounded explode (pytest pins the row stream); this audit
-    aggregates the pre-explode scan, so the oracle checks the copy-count
-    arithmetic bit-for-bit without materializing copies."""
-    from bigvectorbench_spark.operators import curation as cur
-    return cur.epoch_mix_report(_docs_wide(spark, sf))
-
-
-def q_lsh_dedup(spark, sf):
-    """Pairless LSH dedup — every MinHash band bucket elects its min id
-    as canonical; a doc drops iff any of its buckets elects a smaller
-    id.  No pair list is materialized, so cost is linear in docs x bands
-    no matter how dense the duplicate structure — the formulation that
-    survived the 5M-doc corpus where the exact pair operators exhausted
-    heap then disk (SCALING.md).  Same portable md5-60bit signature
-    math as minhash_dups, so the oracle recomputes the buckets and the
-    election bit-for-bit."""
-    docs = load_table(spark, sf, "documents")
-    return dd.lsh_dedup_report(docs, hash="md5")
-
-
-def q_mix_shards(spark, sf):
-    """Composed mixture-to-loader step: fractional-epoch oversampling
-    materialized as a copy stream, each (doc, copy) scattered to a shard
-    by the seeded hash on the COMBINED key — so the extra copies of an
-    upweighted document land in different shards (a loader never sees
-    the same doc twice in one shard pass), which is the property that
-    distinguishes this from sharding then replicating.  Per-shard
-    manifest: emitted rows, distinct docs, token mass.  Tokens are
-    counted once per document BEFORE the explode (the copy stream
-    carries a precomputed n_tok long, not re-tokenized text).  Plan:
-    map-only explode -> one shard-keyed rollup; the distinct-doc count
-    is the only two-phase aggregate."""
-    from bigvectorbench_spark.operators import curation as cur
-    from bigvectorbench_spark.operators import packing as pk
-    from bigvectorbench_spark.functions import text as tx
-
-    docs = _docs_wide(spark, sf).select(
-        "doc_id", "source",
-        tx.token_count(F.col("text")).cast("bigint").alias("n_tok"))
-    over = cur.epoch_oversample(docs)
-    keyed = over.withColumn(
-        "_sid", F.concat(F.col("doc_id").cast("string"), F.lit("#"),
-                         F.col("copy_id").cast("string")))
-    a = pk.shard_assign(keyed, n_shards=16, seed=42, id_col="_sid")
-    return (
-        a.groupBy("shard")
-        .agg(F.count("*").cast("bigint").alias("n_rows"),
-             F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
-             F.sum("n_tok").cast("bigint").alias("n_tokens"))
-    )
-
-
-def q_corpus_curation_scale(spark, sf):
-    """corpus_curation's production-scale twin: the SAME quality gate,
-    disposition precedence, and (source, lang) accounting, with the dup
-    stage swapped from exact-pair components to the pairless LSH
-    bucket-min election (q_lsh_dedup) — the formulation that completes
-    the 5M-doc corpus where exact pair generation exhausts heap then
-    disk (SCALING.md).  Dup semantics differ only in linkage: bucket-hop
-    election vs transitive closure over verified Jaccard pairs; both
-    drop non-canonical members and keep the minimum id."""
-    from bigvectorbench_spark.functions import text as tx
-    # One tokenize for the LSH shingles AND quality scoring (r12).  Not
-    # persisted: tokenize is a map-only projection, and the interleaved
-    # persist-on/off A/B read off at parity-or-better — caching text +
-    # token arrays costs more than recomputing them (guide §5.4).
-    docs = (_docs_wide(spark, sf)
-            .withColumn("tk", tx.tokens(F.col("text"))))
-    drops = (dd.lsh_keepers(docs, hash="md5",
-                            tk=docs.select(F.col("doc_id").alias("id"), "tk"))
-             .filter(F.col("keeper") != F.col("id"))
-             .select(F.col("id").alias("doc_id"), F.lit(True).alias("is_dup")))
-    scored = (
-        docs.join(drops, "doc_id", "left")
-        .withColumn("quality_raw",
-                    tx.quality_score_from_tokens(F.col("tk"), F.col("text")))
-        .withColumn("quality", F.round(F.col("quality_raw"), 6))
-        .withColumn("status",
-                    F.when(F.col("is_dup"), F.lit("dup"))
-                    .when(F.col("quality_raw") < 0.8, F.lit("low_quality"))
-                    .otherwise(F.lit("kept")))
-    )
-    kept = F.col("status") == "kept"
-    qdec = F.col("quality").cast("decimal(18,6)")
-    return (
-        scored.groupBy("source", "lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum(F.when(F.col("status") == "dup", 1).otherwise(0))
-             .cast("bigint").alias("n_dropped_dup"),
-            F.sum(F.when(F.col("status") == "low_quality", 1).otherwise(0))
-             .cast("bigint").alias("n_dropped_quality"),
-            F.sum(F.when(kept, 1).otherwise(0)).cast("bigint").alias("n_kept"),
-            F.sum(F.when(kept, F.size("tk")).otherwise(0))
-             .cast("bigint").alias("tokens_kept"),
-            F.when(F.sum(F.when(kept, 1).otherwise(0)) > 0,
-                   F.round(F.sum(F.when(kept, qdec)).cast("double")
-                           / F.sum(F.when(kept, 1).otherwise(0)), 6))
-             .cast("double").alias("mean_kept_quality"),
-        )
-    )
-
-
-def q_training_shards(spark, sf):
-    """Deterministic training-shard scatter + per-shard balance manifest —
-    the last mile of the curation pipeline (WebDataset-style shard prep).
-    Assignment is a seeded md5-prefix hash-mod (a pure column function:
-    task retries and job re-runs land every doc in the SAME shard, which
-    rand() cannot guarantee), so the oracle recomputes it bit-for-bit.
-    Map-only assignment + one map-side-combined groupBy; ≤ n_shards rows
-    out regardless of corpus size."""
-    from bigvectorbench_spark.operators import packing as pk
-    return pk.shard_manifest(_docs_wide(spark, sf), n_shards=32, seed=42)
-
-
-def q_dedup_components(spark, sf):
-    """Transitive closure of the near-dup pair list: connected components
-    via iterative min-label propagation (one shuffle join per round).
-    Turns pairwise matches into keep/drop groups — the step between pair
-    generation and canonical selection in a dedup pipeline."""
-    docs = load_table(spark, sf, "documents")
-    pairs = dd.ngram_jaccard_pairs(docs, threshold=0.5)
-    return dd.dup_components(pairs)
-
-
-def q_corpus_curation(spark, sf):
-    """End-to-end training-corpus curation — the composed form of the
-    pipeline the individual dedup/quality queries cover stage-by-stage:
-
-      near-dup pairs (exact 3-gram Jaccard ≥ 0.5; exact copies are
-      jaccard = 1.0, so exact dedup is subsumed) → connected components →
-      canonical keep-list (min-id per duplicate group) → quality gate
-      (score ≥ 0.8) → per (source, lang) disposition + token accounting.
-
-    One row per (source, lang): docs in, docs dropped as duplicates, docs
-    dropped by the quality gate, docs kept, tokens kept, mean kept quality
-    (DECIMAL-accumulated for engine-stable 6-dp rounding).  Dup status
-    takes precedence: a non-canonical duplicate counts as 'dup' whatever
-    its quality; the canonical member still faces the quality gate.
-    Scale shape: candidate generation is the PPJoin prefix-filter plan,
-    components shuffle (id, label) pairs only, and document payloads move
-    once — into the final source×lang aggregation."""
-    # One tokenize for shingling AND quality scoring (r12): the corpus
-    # carries its token column through the whole pipeline.  Not persisted
-    # (map-only projection; the persist-on/off A/B read off faster,
-    # 5.59 vs 6.51 s mins — guide §5.4).
-    docs = (_docs_wide(spark, sf)
-            .withColumn("tk", tx.tokens(F.col("text"))))
-    pairs = dd.ngram_jaccard_pairs(
-        docs, threshold=0.5,
-        tk=docs.select(F.col("doc_id").alias("id"), "tk"))
-    drops = (dd.dup_components(pairs)
-             .filter(F.col("id") != F.col("component_id"))
-             .select(F.col("id").alias("doc_id"), F.lit(True).alias("is_dup")))
-    scored = (
-        docs.join(drops, "doc_id", "left")
-        # The keep/drop gate compares the UNROUNDED score to 0.8: a
-        # round(double, 6) before a threshold reintroduces the half-ulp
-        # cross-engine divergence class user_gap_stats hit (a score within
-        # half an ulp of a 6-dp boundary could round differently in Spark's
-        # BigDecimal HALF_UP vs DuckDB and flip a doc's integer counts —
-        # ADVICE r5).  Rounding applies only to the emitted mean.
-        .withColumn("quality_raw",
-                    tx.quality_score_from_tokens(F.col("tk"), F.col("text")))
-        .withColumn("quality", F.round(F.col("quality_raw"), 6))
-        .withColumn("status",
-                    F.when(F.col("is_dup"), F.lit("dup"))
-                    .when(F.col("quality_raw") < 0.8, F.lit("low_quality"))
-                    .otherwise(F.lit("kept")))
-    )
-    kept = F.col("status") == "kept"
-    qdec = F.col("quality").cast("decimal(18,6)")
-    return (
-        scored.groupBy("source", "lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum(F.when(F.col("status") == "dup", 1).otherwise(0))
-             .cast("bigint").alias("n_dropped_dup"),
-            F.sum(F.when(F.col("status") == "low_quality", 1).otherwise(0))
-             .cast("bigint").alias("n_dropped_quality"),
-            F.sum(F.when(kept, 1).otherwise(0)).cast("bigint").alias("n_kept"),
-            F.sum(F.when(kept, F.size("tk")).otherwise(0))
-             .cast("bigint").alias("tokens_kept"),
-            # DECIMAL-exact sum → one double division → 6-dp round: the
-            # only order-dependent float op is removed, so both engines
-            # divide the identical exact numerator by the same count.
-            F.when(F.sum(F.when(kept, 1).otherwise(0)) > 0,
-                   F.round(F.sum(F.when(kept, qdec)).cast("double")
-                           / F.sum(F.when(kept, 1).otherwise(0)), 6))
-             .cast("double").alias("mean_kept_quality"),
-        )
-    )
-
-
-def q_bm25_topk(spark, sf):
-    """Inverted-index BM25 top-10: postings semi-joined to the broadcast
-    query-term set before scoring, DECIMAL-accumulated per-term scores for
-    engine-stable ranks.  Queries = every 500th doc, terms = its 3
-    alphabetically-first distinct tokens."""
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 500 = 0").select(
-        F.col("doc_id").alias("qid"),
-        F.slice(F.array_sort(F.array_distinct(tx.tokens(F.col("text")))), 1, 3).alias("terms"),
-    )
-    return rt.bm25_topk(docs, queries, k=10)
-
-
-def q_top_terms_per_source(spark, sf):
-    """Vocabulary heavy hitters: exact top-10 terms per source slice
-    (explode → map-side-combined count → per-group top-n window)."""
-    return rt.top_terms(_docs_wide(spark, sf), group_col="source", n=10)
-
-
-def q_sparse_knn(spark, sf):
-    """Sparse-vector inner-product top-10 (the Milvus SPARSE_FLOAT_VECTOR
-    field type, milvus/module.py:142, served IP-only): documents become
-    SMART-ltn TF-IDF sparse vectors over unigram+bigram features and every
-    100th document queries the corpus through ONE inverted-index term
-    equi-join — scored rows are O(postings in the query vocabulary), never
-    O(docs × queries).  Fully value-oracled: weights (6 dp), per-term
-    products (9 dp, DECIMAL sum), final score (6 dp before ranking) follow
-    the bm25_topk engine-stability ladder, so scores and ranks hash-match.
-    The weighted index persists across its three consumers (query weights,
-    query vocabulary, hits) — without the stage boundary the full
-    tokenize→postings→df lineage recomputes 3× (measured 9.0s → 2.9s at
-    sf0.1); at scale this boundary is the stored index itself."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"))
-    wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    return sp.sparse_topk(docs, queries, k=10, wpost=wpost)
-
-
-def q_sparse_prune_recall(spark, sf):
-    """Closes the sparse scale path the ivf_recall way: the impact-ordered
-    pruned index (per-term posting lists truncated to the top-``auto_m``
-    documents by weight — the knob that caps stopword-term join cost at
-    100 TB) serves the same queries with FULL query-side vectors, and its
-    top-10 recall against the exact join is emitted as oracle-asserted
-    threshold booleans.  m resolves via sparse.auto_m (VERDICT r8 ask #2 —
-    the hnsw auto_ef twin: m ∝ corpus holds the cut fraction ≈14% and
-    recall ≈constant across decades); at the
-    500-doc oracle corpora the floor gives m=64, which removes 26-28% of
-    all postings (every cut from the high-df unigram head, whose idf≈0.25
-    weights carry little score mass; the df≈28 bigram tail survives whole)
-    at measured recall mean 0.96/min 0.9 (sf0.001) and 0.98/0.9 (sf0.01).
-    Tight gate 0.9/0.8 trips on a pruning-order defect; the off-sf floor
-    0.6/0.3 only on a cratering bug."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    mean_thr, min_thr = _gate(sf, tight=(0.9, 0.8), floor=(0.6, 0.3))
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"))
-    wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
-    pruned = sp.sparse_topk(
-        docs, queries, k=10,
-        wpost=sp.prune_postings(wpost, m="auto",
-                                n_docs=load_table(spark, sf, "documents").count()),
-        qwpost=wpost)
-    return _recall_gate(pruned, exact, mean_thr, min_thr, col="doc_id")
-
-
-def q_sparse_filter_knn(spark, sf):
-    """Filtered sparse search — the sparse twin of Q4's filtered kNN (the
-    Milvus form: SPARSE_FLOAT_VECTOR ANN under a scalar filter
-    expression, milvus/module.py:142 + the search-expr path): candidates
-    restrict to lang = 'en' documents (~40% selective here) BEFORE
-    scoring via a posting-side semi-join, while weights keep whole-corpus
-    statistics — so ranks equal post-filtering the exact search and the
-    join cost is O(allowed postings).  Fully value-oracled: the SQL twin
-    applies the same candidate restriction at the scoring join on top of
-    the corpus-global weight ladder, so scores and ranks hash-match."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"))
-    wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    return sp.filtered_sparse_topk(
-        docs, queries, predicate="lang = 'en'", k=10, wpost=wpost)
-
-
-def q_sparse_filter_adaptive(spark, sf):
-    """Filtered sparse search at high selectivity — the G5 pre/post-filter
-    policy for the sparse family (reference policy
-    create_artificial_datasets.py:165-283 + the pgvector filtered-search
-    SQL, pgvector/module.py:90-102): the predicate here keeps ~85% of
-    documents (lang <> 'zh'), where the reference would post-filter.
-    Here both authorings return identical rows (weights are corpus-global)
-    AND converge physically — Catalyst sinks a postfilter semi-join below
-    the score aggregate, and a 500k-doc sweep measured them equal at every
-    selectivity — so the one prefilter plan serves every selectivity.
-    Fully value-oracled by the same filtered SQL form as
-    sparse_filter_knn."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"))
-    wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    return sp.filtered_sparse_topk(
-        docs, queries, predicate="lang <> 'zh'", k=10, wpost=wpost)
-
-
-def q_sparse_quantile_recall(spark, sf):
-    """The spectrum-general auto_m gate (VERDICT r9 ask #4): ``m`` is
-    resolved by sparse.auto_m_spectrum — a bounded df-spectrum aggregate
-    holding the postings CUT FRACTION at the Zipf-decade operating point
-    (≈14.2%) on ANY term-frequency shape, where the
-    0.04·n fast path assumes Zipf.  Same gate shape as
-    sparse_prune_recall: the spectrum-pruned index serves the queries
-    with full query-side vectors, and top-10 recall vs the exact join is
-    emitted as oracle-asserted threshold booleans.  Holding the cut at
-    ≈14% prunes LESS than the 500-doc floor m=64 (which cuts 26-28%
-    here), so recall sits at/above prune_recall's 0.96-0.98 floor; tight
-    gate 0.9/0.8, off-sf floor 0.6/0.3.  Both spectra validated at the
-    500k regime (Zipf + uniform-df)."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    mean_thr, min_thr = _gate(sf, tight=(0.9, 0.8), floor=(0.6, 0.3))
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"))
-    wpost = sp.sparse_postings(docs, post=sp.lexical_postings(docs)).persist()
-    exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
-    pruned = sp.sparse_topk(docs, queries, k=10,
-                            wpost=sp.prune_postings(wpost, m="spectrum"),
-                            qwpost=wpost)
-    return _recall_gate(pruned, exact, mean_thr, min_thr, col="doc_id")
-
-
-def q_hybrid_rrf_topk(spark, sf):
-    """Hybrid search: the SAME query documents retrieve through BOTH
-    modalities — BM25 over their 3 alphabetically-first terms AND cosine
-    over their derived hashed embedding — and Reciprocal Rank Fusion
-    merges the two top-20 lists into one top-10 (Milvus's RRFRanker
-    beside the reference's WeightedRanker, milvus/module.py:422-458; RRF
-    fuses ranks, so BM25's unbounded scores and cosine distances need no
-    calibration).  Value-oracled end to end: both constituent pipelines
-    are the hash-matched bm25_topk / hashed_embed_knn twins, and the
-    fusion arithmetic (1/(60+rank) rounded 9 dp, DECIMAL sum, 6-dp fused
-    score, (score desc, id) rank) is engine-exact.  The brute vector leg
-    is the size-enveloped ``_brute_vec_leg`` — retained AS the oracle
-    anchor; past 200k corpus rows it refuses fast and points at
-    hybrid_rrf_scale (VERDICT r8 "what's wrong" #1).  Both legs derive
-    from one shared tokenized corpus (r12 — was: three tokenize
-    passes across postings/stats/embeddings)."""
-    tkf = _doc_tokens(spark, sf)
-    lex = _lex_leg(spark, sf, k=20, tk=tkf)
-    vec = _brute_vec_leg(
-        spark, sf, out_k=20, twin="hybrid_rrf_scale",
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
-        "qid", "doc_id", "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hybrid_sparse_rrf(spark, sf):
-    """Milvus 2.4's sparse+dense hybrid (SPARSE_FLOAT_VECTOR field + dense
-    field, per-field subqueries merged by RRFRanker — the reference
-    backend's multi-vector hybrid form, milvus/module.py:142,422-458):
-    the lexical leg is the sparse TF-IDF inner-product top-20
-    (operators/sparse.py — full query-document vectors, not the 3-term
-    BM25 bag q_hybrid_rrf_topk uses), the dense leg the hashed-embed
-    cosine top-20, fused 1/(60+rank) with the engine-exact rounding
-    ladder.  Value-oracled end to end: both legs' pipelines and the
-    fusion arithmetic are replayed in SQL.
-
-    100× forms of both legs are separately declared: the sparse leg's is
-    the impact-pruned index (sparse_prune_recall gates it), the dense
-    leg's is the BQ-indexed candidate stage hybrid_rrf_scale already runs
-    through the same rrf_fuse — this
-    query pins the multi-FIELD composition semantics at oracle scale.
-    The dense leg rides the size-enveloped ``_brute_vec_leg`` anchor."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    qids = load_table(spark, sf, "documents").filter("doc_id % 250 = 0").select(
-        F.col("doc_id").alias("qid"))
-    tkf = _doc_tokens(spark, sf)
-    wpost = sp.sparse_postings(
-        docs, post=sp.lexical_postings(docs, tk=tkf)).persist()
-    lex = sp.sparse_topk(docs, qids, k=20, wpost=wpost).select(
-        "qid", "doc_id", "rank")
-    vec = _brute_vec_leg(
-        spark, sf, out_k=20, twin="hybrid_sparse_scale",
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
-        "qid", "doc_id", "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hybrid_sparse_scale(spark, sf):
-    """The 100× form of q_hybrid_sparse_rrf — the multi-FIELD Milvus 2.4
-    hybrid with BOTH legs indexed: the sparse leg serves from the auto_m
-    impact-pruned inverted index (query-side vectors stay FULL, the
-    sparse_prune_recall-gated configuration), the dense leg from the BQ
-    candidate scan + exact integer-cosine refine (the hybrid_rrf_scale
-    leg), fused by the engine-exact RRF tail.  Fully value-oracled: the
-    pruning is deterministic SQL (row_number over (w desc, doc_id) per
-    term at the auto_m cap, recomputed by DuckDB), the BQ candidate sets
-    are recomputed at oracle-generation time and embedded as literals
-    (the hybrid_rrf_scale convention), and the fusion ladder replays —
-    so the 100× multi-field plan is hash-checked end to end, not just
-    overlap-gated."""
-    from bigvectorbench_spark.operators import sparse as sp
-
-    docs = _docs_wide(spark, sf)
-    qids = load_table(spark, sf, "documents").filter("doc_id % 250 = 0").select(
-        F.col("doc_id").alias("qid"))
-    tkf = _doc_tokens(spark, sf)
-    wpost = sp.sparse_postings(
-        docs, post=sp.lexical_postings(docs, tk=tkf)).persist()
-    # n_docs from the parquet footer (table_rows) — the same exact count
-    # load_table(...).count() ran as a full-table job (r13; the statistic
-    # a cluster catalog serves, the table_rows convention).
-    from bigvectorbench_spark.sources.tables import table_rows
-
-    lex = sp.sparse_topk(
-        docs, qids, k=20,
-        wpost=sp.prune_postings(
-            wpost, n_docs=table_rows(sf, "documents")),
-        qwpost=wpost).select("qid", "doc_id", "rank")
-    vec = _bq_vec_leg(
-        spark, sf, out_k=20,
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
-        "qid", F.col("id").alias("doc_id"), "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_mmr_rerank(spark, sf):
-    """Diversity-aware re-ranking (Carbonell & Goldstein's Maximal
-    Marginal Relevance — the standard RAG diversity stage): the
-    hashed-embed cosine top-30 per query is re-ranked greedily by
-    λ·relevance − (1−λ)·max-similarity-to-selected (λ=0.5), so the final
-    10 cover the query's neighborhood facets instead of repeating the top
-    hit.  Deterministic end to end: relevance = round(1 − cosine, 6) from
-    the hash-matched hashed-embed pipeline, pairwise cosines over EXACT
-    INTEGER vectors rounded to 6 dp, ascending-id tie-break.  The oracle
-    re-derives candidates+vectors in DuckDB and runs the SAME numpy greedy
-    (mmr_select_numpy, shared code), embedding the selections — the
-    ivf_knn independent-recomputation pattern.  Candidates come from the
-    size-enveloped ``_brute_vec_leg`` anchor — past 200k corpus rows it
-    refuses fast and points at mmr_scale."""
-    cand = _brute_vec_leg(spark, sf, out_k=30, twin="mmr_scale").select(
-        "qid", "doc_id",
-        F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
-        F.col("tv").alias("vec"))
-    return rt.mmr_rerank(cand, k=10, lamb=0.5)
-
-
-def _doc_tokens(spark, sf):
-    """The shared ``(doc_id, tk)`` tokenized-corpus frame (r12): hybrid
-    queries run a lexical leg (postings + corpus stats) AND a dense leg
-    (hashed embeddings) over the same tokens — pass THIS frame to both so
-    every consumer derives from one subtree.  Tokenization is
-    per-document local, so every derivation is row-identical to
-    tokenizing inline.  Deliberately NOT persisted: it is a map-only
-    projection (recompute is a columnar scan + tokenizer, cheaper than a
-    cache write+read of token arrays — the interleaved persist-on/off
-    A/B read off faster on 4 of the 5 hybrids), and its expensive
-    consumers (the weighted-postings index, the hashed base) persist
-    their own post-shuffle outputs."""
-    return _docs_wide(spark, sf).select(
-        "doc_id", tx.tokens(F.col("text")).alias("tk"))
-
-
-def _hashed_base_int(spark, sf, *, persist: bool = False, tk=None):
-    """The derived hashed-embedding corpus (EXACT-INTEGER vectors) shared
-    by the hybrid/MMR declarations: (doc_id, v, nsq) with zero-norm rows
-    dropped.  Each stage materializes in its own select (the
-    q_hashed_embed_knn fold-reuse discipline).
-
-    ``persist=True`` marks the corpus a stage boundary (the
-    corpus_curation/retrieval_eval discipline): the BQ leg references it
-    four times (fit collect, encode scan, query block, refine scan), and
-    without the boundary each reference re-runs the md5 embedding fold —
-    measured 20.4s → 11.5s for hybrid_rrf_scale at 50k Zipf docs /
-    200 queries, flipping it from 1.5× OVER the brute twin to 1.8×
-    under.
-
-    ``tk``: the shared ``(doc_id, tk)`` frame from ``_doc_tokens`` —
-    derives the embedding from the same tokens without re-tokenizing."""
-    from bigvectorbench_spark.functions import embed as em
-
-    src = tk if tk is not None else _docs_wide(spark, sf).select(
-        "doc_id", tx.tokens(F.col("text")).alias("tk"))
-    base = (src
-            .select("doc_id", em.token_hashes(F.col("tk")).alias("th"))
-            .select("doc_id", em.hashed_embedding(F.col("th")).alias("v"))
-            .withColumn("nsq", F.aggregate("v", F.lit(0).cast("bigint"),
-                                           lambda a, x: a + x * x))
-            .filter(F.col("nsq") > 0))
-    return base.persist() if persist else base
-
-
-def _dense_leg_ctx(base):
-    """ONE driver job shared by a hybrid query's dense legs (r13, guide
-    §2.4/§4.5 — the mv_indexed_fused job-fusion pattern applied to the
-    hybrid family per VERDICT r12 ask #1): collect the hashed-embedding
-    corpus id-sorted once, bounded by the BQ fit-sample envelope.  The
-    brute leg's quadratic-envelope row count (``len(ids)``), the BQ
-    per-dimension thresholds (float64 numpy mean over the id-sorted
-    matrix — bit-identical to ``BQIndex.fit(sort_col="id")``, which
-    collects the same rows in the same order and casts bigint→float64
-    exactly as np.array does) and the kernel query block (the
-    ``doc_id % 250 == 0`` slice, scored per-qid so block order is
-    immaterial) all derive from it — replacing three sequential driver
-    jobs (envelope count, fit collect, query-block collect) with one.
-
-    The collect is bounded by the BQ fit-sample cap.  The query block must
-    be complete, so a corpus past the cap raises instead of silently
-    dropping the queries beyond it."""
-    import numpy as np
-
-    from bigvectorbench_spark.operators.bq import MAX_FIT_SAMPLE_ROWS
-
-    rows = (base.select("doc_id", "v").orderBy("doc_id")
-            .limit(MAX_FIT_SAMPLE_ROWS + 1).collect())
-    if not rows:
-        raise ValueError("cannot fit BQIndex on an empty table")
-    if len(rows) > MAX_FIT_SAMPLE_ROWS:
-        raise ValueError(
-            f"hybrid dense legs collect the whole corpus on the driver; it "
-            f"has more than MAX_FIT_SAMPLE_ROWS={MAX_FIT_SAMPLE_ROWS} rows, "
-            "so the query block past the cap would be lost")
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-    return ids, V
-
-
-def _brute_vec_leg(spark, sf, *, out_k: int, mod: int = 250, base=None,
-                   twin: str = "hybrid_rrf_scale / mmr_scale",
-                   n_rows: int | None = None):
-    """The BRUTE exact-cosine vector leg shared by the hybrid/MMR oracle
-    anchors: every (query, doc) pair scored — O(docs × queries) by
-    construction, so it wears the dedup.py ALL_PAIRS_MAX_ROWS envelope
-    (VERDICT r8 "what's wrong" #1): a corpus past the envelope refuses
-    fast with a pointer at the declared indexed twins (q_hybrid_rrf_scale
-    / q_mmr_scale run the same fusion/MMR tails over _bq_vec_leg's BQ
-    candidate scan + exact integer refine) instead of silently launching
-    the quadratic job.  Within the envelope it is the full value-oracle
-    anchor: exact integer dot/norms, 4-IEEE-op cosine distance, (d, id)
-    rank — identical arithmetic to the inline forms it replaced.
-
-    ``twin`` names the declared indexed counterpart of the CALLER so the
-    refusal steers users at the right scale path per call site (ADVICE
-    r9 #1 — q_hybrid_sparse_rrf's twin is hybrid_sparse_scale, not the
-    dense pair).
-
-    ``n_rows``: the base corpus row count when the caller already holds it
-    (the ``_dense_leg_ctx`` fused prelude) — skips the envelope count job.
-
-    Returns (qid, doc_id, tv, d, rank) with rank <= out_k."""
-    if base is None:
-        base = _hashed_base_int(spark, sf, persist=True)
-    if n_rows is None:
-        n_rows = base.count()
-    if n_rows > dd.ALL_PAIRS_MAX_ROWS:
-        raise ValueError(
-            f"brute hybrid/MMR vector leg is O(docs × queries) "
-            f"({n_rows} rows > {dd.ALL_PAIRS_MAX_ROWS}) — use the indexed "
-            f"twin ({twin}: BQ candidate scan + "
-            "exact integer refine) at this size")
-    qv = (base.filter(F.pmod(F.col("doc_id"), F.lit(mod)) == 0)
-          .select(F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
-                  F.col("nsq").alias("qn")))
-    tv = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                     F.col("nsq").alias("tn"))
-    dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                      F.lit(0).cast("bigint"), lambda a, x: a + x)
-    joined = tv.crossJoin(F.broadcast(qv)).select(
-        "qid", F.col("id").alias("doc_id"), "tv",
-        (F.lit(1.0) - dot.cast("double")
-         / (F.sqrt(F.col("qn").cast("double"))
-            * F.sqrt(F.col("tn").cast("double")))).alias("d"))
-    from pyspark.sql import Window
-    w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("doc_id"))
-    return (joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= out_k))
-
-
-def _bq_vec_leg(spark, sf, *, out_k: int, overfetch: int = 8, base=None,
-                ctx=None):
-    """The INDEXED vector leg of the scale-path hybrid (VERDICT r7 #2 —
-    the reference's hybrid is per-field ANN subqueries, not brute:
-    milvus/module.py:422-458): BQ hamming pre-rank over the derived
-    hashed embeddings (1-bit/dim codes — 1/64th the scan width of the
-    integer vectors), then an EXACT-INTEGER cosine re-rank of the
-    k·overfetch survivors.  This replaces q_hybrid_rrf_topk's brute
-    crossJoin (O(n·q) per run) with O(n·q/64) candidate scan + O(q·k·
-    overfetch) refine — measured 1.6× under brute at 500k rows and
-    2.9×/decade vs 4.1×.
-
-    Deterministic end to end: the BQ fit is the id-sorted float64 mean
-    (BQIndex.fit contract), the hamming pre-rank breaks ties by ascending
-    id (pinned kernel==expr==lexsort in test_bq), and the refine is the
-    integer-exact cosine of q_hashed_embed_knn — so the leg takes a FULL
-    value oracle (candidates recomputed at oracle-gen time and re-scored
-    by DuckDB with the same integer folds).
-
-    ``ctx``: the ``_dense_leg_ctx`` (ids, V) pair when the caller shares
-    it across legs (hybrid_rrf_parity); built here otherwise — either
-    way the fit thresholds and the kernel query block ride ONE driver
-    collect instead of two sequential jobs (r13, VERDICT r12 ask #1).
-
-    Returns (qid, id, tv, d, rank) with rank ≤ out_k."""
-    import numpy as np
-
-    if base is None:
-        base = _hashed_base_int(spark, sf, persist=True)
-    if ctx is None:
-        ctx = _dense_leg_ctx(base)
-    ids, V = ctx
-    fvec = base.select(F.col("doc_id").alias("id"),
-                       F.col("v").cast("array<double>").alias("vec"))
-    # Identical thresholds to BQIndex.fit(fvec, sort_col="id"): the ctx
-    # matrix IS the id-sorted float64 cast of the same rows.
-    bq = BQIndex(thresholds=[float(x) for x in V.mean(axis=0)])
-    codes = bq.encode(fvec, keep=["id"])
-    qv_int = base.filter(F.pmod(F.col("doc_id"), F.lit(250)) == 0).select(
-        F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
-        F.col("nsq").alias("qn"))
-    qmask = np.mod(ids, 250) == 0
-    cand = bq.search(codes, None, k=out_k * overfetch,
-                     qblock=(ids[qmask], V[qmask])).select("qid", "id")
-    tv = base.select(F.col("doc_id").alias("id"), F.col("v").alias("tv"),
-                     F.col("nsq").alias("tn"))
-    dot = F.aggregate(F.zip_with("qv", "tv", lambda a, b: a * b),
-                      F.lit(0).cast("bigint"), lambda a, x: a + x)
-    refined = (F.broadcast(cand).join(tv, "id")
-               .join(F.broadcast(qv_int), "qid")
-               .select("qid", "id", "tv",
-                       (F.lit(1.0) - dot.cast("double")
-                        / (F.sqrt(F.col("qn").cast("double"))
-                           * F.sqrt(F.col("tn").cast("double")))).alias("d")))
-    from pyspark.sql import Window
-    w = Window.partitionBy("qid").orderBy(F.col("d"), F.col("id"))
-    return (refined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= out_k))
-
-
-def _lex_leg(spark, sf, k: int = 20, tk=None):
-    """The shared BM25 lexical leg of the hybrid declarations.
-
-    ``tk``: the shared ``(doc_id, tk)`` frame from ``_doc_tokens`` — the
-    postings, the corpus stats AND the query term slices all derive from
-    it, so the leg adds ZERO tokenize passes to a hybrid query that
-    already tokenized for its dense leg (was: one for postings + one for
-    corpus_stats + one for the query slice)."""
-    docs = _docs_wide(spark, sf)
-    if tk is None:
-        queries_lex = load_table(spark, sf, "documents").filter(
-            "doc_id % 250 = 0").select(
-            F.col("doc_id").alias("qid"),
-            F.slice(F.array_sort(F.array_distinct(tx.tokens(F.col("text")))),
-                    1, 3).alias("terms"))
-        return rt.bm25_topk(docs, queries_lex, k=k).select(
-            "qid", "doc_id", "rank")
-    queries_lex = tk.filter("doc_id % 250 = 0").select(
-        F.col("doc_id").alias("qid"),
-        F.slice(F.array_sort(F.array_distinct(F.col("tk"))), 1, 3)
-        .alias("terms"))
-    return rt.bm25_topk(docs, queries_lex, k=k, post=rt.postings(docs, tk=tk),
-                        stats=rt.corpus_stats(docs, tk=tk)).select(
-        "qid", "doc_id", "rank")
-
-
-def q_hybrid_rrf_scale(spark, sf):
-    """The 100× form of q_hybrid_rrf_topk: the SAME BM25 lexical leg and
-    RRF fusion tail, with the vector candidate leg served by the BQ index
-    instead of the brute corpus-wide crossJoin (VERDICT r7 #2).  Fully
-    value-oracled: the deterministic BQ candidate sets are recomputed at
-    oracle-generation time (id-sorted mean fit + (hamming, id) lexsort —
-    the bq_knn convention) and embedded as literals; DuckDB re-runs the
-    integer-cosine refine, the BM25 CTEs and the RRF rounding ladder on
-    top, so fused scores and ranks hash-match end to end.  Both legs
-    derive from one shared tokenized corpus (r12)."""
-    tkf = _doc_tokens(spark, sf)
-    lex = _lex_leg(spark, sf, k=20, tk=tkf)
-    vec = _bq_vec_leg(
-        spark, sf, out_k=20,
-        base=_hashed_base_int(spark, sf, persist=True, tk=tkf)).select(
-        "qid", F.col("id").alias("doc_id"), "rank")
-    fused = rt.rrf_fuse([lex, vec], k=10, k0=60)
-    return fused.select("qid", "doc_id", "score",
-                        F.col("rank").cast("bigint").alias("rank"))
-
-
-def q_hybrid_rrf_parity(spark, sf):
-    """The gate closing q_hybrid_rrf_scale's approximation loop (the
-    srp_recall pattern): fuse the SAME lexical leg with the brute vector
-    leg and with the BQ-indexed vector leg, and emit per-query top-10
-    overlap thresholds the oracle asserts TRUE.  Measured (scripted
-    calibration, this file's history): mean 0.75 / min 0.6 at sf0.001 AND
-    sf0.01, mean 0.68 / min 0.6 at sf0.1 — the 1-bit/dim pre-rank
-    genuinely reorders the fused tail, the same honest-knob behavior
-    bq_recall documents.  Tight thresholds 0.7/0.5 sit just under the
-    oracle-sf floor so a candidate-stage defect (not only a cratering
-    bug) fails the driver gate; off the oracle sf the gate relaxes to a
-    defect-only floor 0.4/0.1."""
-    mean_thr, min_thr = _gate(sf, tight=(0.7, 0.5), floor=(0.4, 0.1))
-    tkf = _doc_tokens(spark, sf)
-    lex = _lex_leg(spark, sf, k=20, tk=tkf)
-
-    base = _hashed_base_int(spark, sf, persist=True, tk=tkf)
-    # One driver collect for BOTH legs (r13): envelope count, BQ fit and
-    # kernel query block all derive from _dense_leg_ctx (was 3 jobs).
-    ids, V = _dense_leg_ctx(base)
-    brute_vec = _brute_vec_leg(spark, sf, out_k=20, base=base,
-                               twin="hybrid_rrf_scale",
-                               n_rows=len(ids)).select(
-        "qid", "doc_id", "rank")
-    bq_vec = _bq_vec_leg(spark, sf, out_k=20, base=base,
-                         ctx=(ids, V)).select(
-        "qid", F.col("id").alias("doc_id"), "rank")
-
-    fused_brute = rt.rrf_fuse([lex, brute_vec], k=10, k0=60)
-    fused_bq = rt.rrf_fuse([lex, bq_vec], k=10, k0=60)
-    a = fused_brute.groupBy("qid").agg(
-        F.collect_list("doc_id").alias("brute_ids"))
-    b = fused_bq.groupBy("qid").agg(F.collect_list("doc_id").alias("bq_ids"))
-    per = a.join(b, "qid").select(
-        "qid",
-        (F.size(F.array_intersect("brute_ids", "bq_ids"))
-         / F.size("brute_ids")).alias("overlap"))
-    return per.agg(
-        F.count("*").alias("n_queries"),
-        (F.avg("overlap") >= mean_thr).alias("mean_overlap_ok"),
-        (F.min("overlap") >= min_thr).alias("min_overlap_ok"),
-    )
-
-
-def q_mmr_scale(spark, sf):
-    """The 100× form of q_mmr_rerank: the SAME greedy MMR tail
-    (mmr_select_numpy, value-oracled) re-ranking the BQ-indexed leg's
-    top-30 instead of the brute crossJoin's — the candidate stage
-    q_hybrid_rrf_scale declares, reused (VERDICT r7 #2).  Fully
-    value-oracled: the oracle recomputes the BQ candidates + integer
-    cosine re-rank in DuckDB and runs the SAME numpy greedy, embedding
-    the selections."""
-    cand = _bq_vec_leg(spark, sf, out_k=30).select(
-        "qid", F.col("id").alias("doc_id"),
-        F.round(F.lit(1.0) - F.col("d"), 6).alias("rel"),
-        F.col("tv").alias("vec"))
-    return rt.mmr_rerank(cand, k=10, lamb=0.5)
-
-
-def q_iud_final_state(spark, sf):
-    """Value-oracles the M3-M5 mutation END STATE (VERDICT r7 #4): the
-    scripted sequential IUD sweep of the reference runner (runner.py:
-    245-335 — insert a fresh row, upsert an existing id, delete a sampled
-    id) is deterministic here (first-100 ids in ascending order; insert
-    copies row i with label+1000 at id max+1+i; update sets label+500;
-    every third id deletes), so the post-sweep snapshot — the log-merge
-    view with tombstones dropped — reduces to hash-checkable per-bucket
-    aggregates.  The latency twins (insert/update/delete_latency) stay
-    rows-only by nature; this row proves the DML semantics."""
-    from bigvectorbench_spark.operators.mutation import VectorTable
-
-    emb = _train(spark, sf)
-    table = VectorTable(spark, emb)
-    rows = [r.asDict() for r in emb.orderBy("id").limit(100).collect()]
-    for i, r in enumerate(rows):
-        table.insert({"vec": r["vec"], "label": r["label"] + 1000})
-        table.update(r["id"], {"vec": r["vec"], "label": r["label"] + 500})
-        if i % 3 == 0:
-            table.delete(r["id"])
-    snap = table.snapshot()
-    return (snap.groupBy(F.pmod(F.col("id"), F.lit(7)).alias("bucket"))
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum("id").alias("sum_id"),
-                 F.sum("label").cast("bigint").alias("sum_label"),
-                 F.round(F.sum(F.round(F.element_at(
-                     F.col("vec").cast("array<double>"), 1), 4)
-                     .cast("decimal(28,6)")), 4).cast("double")
-                 .alias("vec_checksum")))
-
-
-def q_quality_classifier(spark, sf):
-    """Weak-supervision quality classifier (the CCNet/fastText pattern):
-    quality_score ≥ 0.8 (the corpus_curation gate) labels the doc_id%3!=0
-    training slice, a deterministic full-batch logistic fit runs on the
-    driver over EXACT-INTEGER hashed_embedding features, and the fitted
-    literal weights score every document with one Column dot fold + one
-    sigmoid (6-dp round).  Fully value-oracled: oracle generation derives
-    the identical feature/label matrix from the parquet via DuckDB (the
-    hashed_embed/quality SQL twins), runs the SAME numpy fit
-    (fit_logistic_numpy, shared code), and embeds the resulting weights
-    into the scoring SQL — weights, probabilities and decisions all
-    hash-match."""
-    from bigvectorbench_spark.operators.classifier import QualityClassifier
-
-    docs = _docs_wide(spark, sf)
-    clf = QualityClassifier.fit(docs, dim=64, quality_threshold=0.8,
-                                train_filter="_id % 3 != 0")
-    return clf.score(docs)
-
-
-def q_retrieval_eval(spark, sf):
-    """Ranked-list quality of the BM25 run — recall@10 / MRR@10 / nDCG@10
-    per query against deterministic lexical-overlap qrels (rel = number of
-    the query's 3 terms present in the doc).  This is the metrics half a
-    retrieval/RAG pipeline adds on top of the reference's set-recall
-    scoring (plotting/metrics.py): same engine-stability discipline as
-    bm25_topk itself — integer gains × shared literal discounts, 9-dp
-    per-term rounding, DECIMAL accumulation, 6-dp final ratios — so every
-    metric value hash-matches the DuckDB recomputation."""
-    docs = _docs_wide(spark, sf)
-    queries = load_table(spark, sf, "documents").filter("doc_id % 100 = 0").select(
-        F.col("doc_id").alias("qid"),
-        F.slice(F.array_sort(F.array_distinct(tx.tokens(F.col("text")))), 1, 3).alias("terms"),
-    )
-    # One corpus tokenize serves the run, the qrels and the corpus stats
-    # (persisted stage boundary, the corpus_curation discipline).
-    post = rt.postings(docs).persist()
-    run = rt.bm25_topk(docs, queries, k=10, post=post,
-                       stats=rt.stats_from_postings(post)).select(
-        "qid", "doc_id", "rank")
-    qrels = rt.term_overlap_qrels(docs, queries, post=post)
-    return rt.retrieval_eval(run, qrels, k=10)
-
-
-def q_doc_fingerprints(spark, sf):
-    """Winnowing fingerprints with the portable md5-derived 60-bit hash,
-    so the fingerprint values themselves oracle-check (the xxhash64 fast
-    path is the library default; this query declares the portable mode)."""
-    tokenized = _docs_wide(spark, sf).select(
-        "doc_id", tx.tokens(F.col("text")).alias("tk"))
-    # comma-joined BIGINTs: integer-to-string formatting is engine-identical,
-    # and the driver's value hash needs scalar (non-list) columns.
-    return tokenized.select(
-        "doc_id",
-        F.concat_ws(",", tx.fingerprint_from_tokens(F.col("tk"), hash="md5")
-                    .cast("array<string>")).alias("fingerprint"))
-
-
-# -------------------------------------------------------------------- contract
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: exact batch kNN on sf0.001 embeddings."""
-    return q_knn_euclid(spark, SF_SMOKE)
+    return dense.q_knn_euclid(spark, SF_SMOKE)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering note: the driver's correctness gate checks queries in dict
-    # order (observed cap: 50 per round).  AGE POLICY (amended per VERDICT
-    # r9 ask #1 — the registry outgrew the original ≤2-round rule at 132
-    # oracled queries / 50 slots ≈ a 2.6-round cycle): every oracled query
-    # is DRIVER-checked at least once every 3 rounds via window rotation,
-    # AND sweep-checked by scripts/check_oracle.py at BOTH oracle sfs
-    # EVERY round (ORACLE_SWEEP_pr{N}.json + _sf0.01) — the sweep is the
-    # per-round correctness net; the driver window re-validates through
-    # the driver's own harness on the ≤3-round cadence.  New declarations
-    # always lead their first window; queries whose CODE changed in-round
-    # re-enter the window regardless of age.  (Past windows: r11 ordering
-    # in the r11 tree, r12 ordering in commit 52bdc36 — both pure dict
-    # reorderings, like this one.)
+    # The driver's correctness gate checks the first 50 queries in this
+    # order each round; rotating the order covers every oracled query.
     return {
-        # ---- ROUND-13 WINDOW (50 slots, VERDICT r12 ask #7) ----
-        # 12 queries whose round-13 optimizations changed the executed
-        # plan or job structure (sketch_bounds distinct-agg split;
-        # sparse_topk qvocab-join removal across the sparse family and
-        # both sparse hybrids; the fused dense-leg driver collect in
-        # hybrid_rrf_scale; dup_components lazy-checkpoint loop in
-        # dedup_components/corpus_curation) lead; hybrid_rrf_parity /
-        # mmr_scale / srp_recall / hnsw_delta_report / corpus_curation_scale
-        # changed too but their end plans or values are re-covered by the
-        # in-window twins + the dual-sf sweep (zero no-oracle rows spent).
-        "sketch_bounds": q_sketch_bounds,
-        "sparse_knn": q_sparse_knn,
-        "sparse_filter_knn": q_sparse_filter_knn,
-        "sparse_filter_adaptive": q_sparse_filter_adaptive,
-        "sparse_prune_recall": q_sparse_prune_recall,
-        "sparse_quantile_recall": q_sparse_quantile_recall,
-        "sparse_delta_parity": q_sparse_delta_parity,
-        "hybrid_sparse_rrf": q_hybrid_sparse_rrf,
-        "hybrid_sparse_scale": q_hybrid_sparse_scale,
-        "hybrid_rrf_scale": q_hybrid_rrf_scale,
-        "dedup_components": q_dedup_components,
-        "corpus_curation": q_corpus_curation,
-        # The full 38-query age-2 r10-green block (video_features ..
-        # knn_jaccard — due this round under the <=3-round policy).
-        "video_features": q_video_features,
-        "pack_blocks": q_pack_blocks,
-        "block_manifest": q_block_manifest,
-        "llm_data_mix": q_llm_data_mix,
-        "temperature_sample": q_temperature_sample,
-        "ccnet_bins": q_ccnet_bins,
-        "doc_chunks": q_doc_chunks,
-        "training_shards": q_training_shards,
-        "epoch_mix": q_epoch_mix,
-        "mix_shards": q_mix_shards,
-        "hashed_embed_knn": q_hashed_embed_knn,
-        "revenue_running": q_revenue_running,
-        "sessionize": q_sessionize,
-        "clicks_before_purchase": q_clicks_before_purchase,
-        "qps_by_type": q_qps_by_type,
-        "pareto_frontier": q_pareto_frontier,
-        "interval_clicks": q_interval_clicks,
-        "best_search_time": q_best_search_time,
-        "train_test_split": q_train_test_split,
-        "customers_semi_returns": q_customers_semi_returns,
-        "customers_anti_urgent": q_customers_anti_urgent,
-        "lang_pivot": q_lang_pivot,
-        "peak_events": q_peak_events,
-        "top_revenue_orders": q_top_revenue_orders,
-        "mmr_rerank": q_mmr_rerank,
-        "bq_knn": q_bq_knn,
-        "bq_recall": q_bq_recall,
-        "opq_knn": q_opq_knn,
-        "opq_recall": q_opq_recall,
-        "ivf_delta_report": q_ivf_delta_report,
-        "retrieval_eval": q_retrieval_eval,
-        "quality_classifier": q_quality_classifier,
-        "filter_knn_2label": q_filter_knn_2label,
-        "iud_final_state": q_iud_final_state,
-        "knn_euclid": q_knn_euclid,
-        "knn_euclid_gemm": q_knn_euclid_gemm,
-        "knn_hamming_packed": q_knn_hamming_packed,
-        "knn_jaccard": q_knn_jaccard,
-        # ---- below the window: age 1 (r11/r12-green), due r14 ----
-        # ROUND-14 HEAD-OF-WINDOW: the r11-green block below (marked)
-        # reaches age 2 after this round and must lead the round-14
-        # window, then the r12-green block at age 1.
-        "mv_scale": q_mv_scale,
-        "mv_scale_parity": q_mv_scale_parity,
-        "hnsw_delta_report": q_hnsw_delta_report,
-        "hybrid_rrf_topk": q_hybrid_rrf_topk,
-        "hybrid_rrf_parity": q_hybrid_rrf_parity,
-        "mmr_scale": q_mmr_scale,
-        "sparse_delta_report": q_sparse_delta_report,
-        "corpus_curation_scale": q_corpus_curation_scale,
-        "embedding_cosine_dups_srp": q_embedding_cosine_dups_srp,
-        "cm_heavy_hitters": q_cm_heavy_hitters,
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "corpus_rollup": q_corpus_rollup,
-        "user_gap_stats": q_user_gap_stats,
-        "quality_deciles": q_quality_deciles,
-        "topk_per_group": q_topk_per_group,
-        "events_hourly": q_events_hourly,
-        "latency_percentiles": q_latency_percentiles,
-        "recall_summary": q_recall_summary,
-        "doclen_percentiles": q_doclen_percentiles,
-        "corpus_stats": q_corpus_stats,
-        "knn_angular": q_knn_angular,
-        "knn_hamming": q_knn_hamming,
-        "mv_knn_fused": q_mv_knn_fused,
-        "jl_knn": q_jl_knn,
-        "mm_knn": q_mm_knn,
-        "filter_knn_range": q_filter_knn_range,
-        "srp_recall": q_srp_recall,
-        "hnsw_scale_recall": q_hnsw_scale_recall,
-        "embedding_cosine_dups": q_embedding_cosine_dups,
-        "ngram_jaccard_dups": q_ngram_jaccard_dups,
-        "lsh_dedup": q_lsh_dedup,
-        "semantic_dups": q_semantic_dups,
-        "incremental_dedup": q_incremental_dedup,
-        "substring_spans": q_substring_spans,
-        "substring_rewrite": q_substring_rewrite,
-        "paragraph_dedup": q_paragraph_dedup,
-        "c4_line_filter": q_c4_line_filter,
-        "gopher_repetition": q_gopher_repetition,
-        "bpe_train": q_bpe_train,
-        "bpe_token_stats": q_bpe_token_stats,
-        "lm_fluency": q_lm_fluency,
-        "dsir_select": q_dsir_select,
-        "ivf_auto_recall": q_ivf_auto_recall,
-        "pq_delta_report": q_pq_delta_report,
-        "hnsw_delta_knn": q_hnsw_delta_knn,
-        "ivf_delta_knn": q_ivf_delta_knn,
-        "ivfpq_knn": q_ivfpq_knn,
-        "filter_ivf_knn": q_filter_ivf_knn,
-        "filter_ivf_recall": q_filter_ivf_recall,
-        "hnsw_knn": q_hnsw_knn,
-        "hnsw_recall": q_hnsw_recall,
-        "filter_knn_eq": q_filter_knn_eq,
-        "postfilter_knn": q_postfilter_knn,
-        "mv_knn": q_mv_knn,
-        "groundtruth_pack": q_groundtruth_pack,
-        "ivf_knn": q_ivf_knn,
-        "pq_knn": q_pq_knn,
-        "ivf_recall": q_ivf_recall,
-        "pq_recall": q_pq_recall,
-        "asof_clicks": q_asof_clicks,
-        "audio_features": q_audio_features,
-        "bm25_topk": q_bm25_topk,
-        "decontaminate": q_decontaminate,
-        "dedup_exact": q_dedup_exact,
-        "doc_fingerprints": q_doc_fingerprints,
-        "domain_mix": q_domain_mix,
-        "gopher_quality": q_gopher_quality,
-        "lang_id": q_lang_id,
-        "media_pipeline": q_media_pipeline,
-        "minhash_dups": q_minhash_dups,
-        "pii_scrub": q_pii_scrub,
-        "quality_scores": q_quality_scores,
-        "recall_lowdim_vs_full": q_recall_lowdim_vs_full,
-        "simhash_dups": q_simhash_dups,
-        "substring_dedup": q_substring_dedup,
-        "token_stats": q_token_stats,
-        "top_terms_per_source": q_top_terms_per_source,
-        "sq8_knn": q_sq8_knn,
-        "sq8_recall": q_sq8_recall,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "weighted_sample": q_weighted_sample,
-        "stratified_sample": q_stratified_sample,
-        "hnsw_scale_search": q_hnsw_scale_search,
-        "corpus_stats_approx": q_corpus_stats_approx,
-        "quality_tags_approx": q_quality_tags_approx,
-        "insert_latency": q_insert_latency,
-        "update_latency": q_update_latency,
-        "delete_latency": q_delete_latency,
+        "sketch_bounds": relational.q_sketch_bounds,
+        "sparse_knn": sparse.q_sparse_knn,
+        "sparse_filter_knn": sparse.q_sparse_filter_knn,
+        "sparse_filter_adaptive": sparse.q_sparse_filter_adaptive,
+        "sparse_prune_recall": sparse.q_sparse_prune_recall,
+        "sparse_quantile_recall": sparse.q_sparse_quantile_recall,
+        "sparse_delta_parity": sparse.q_sparse_delta_parity,
+        "hybrid_sparse_rrf": hybrid.q_hybrid_sparse_rrf,
+        "hybrid_sparse_scale": hybrid.q_hybrid_sparse_scale,
+        "hybrid_rrf_scale": hybrid.q_hybrid_rrf_scale,
+        "dedup_components": dedup.q_dedup_components,
+        "corpus_curation": dedup.q_corpus_curation,
+        "video_features": text.q_video_features,
+        "pack_blocks": mixing.q_pack_blocks,
+        "block_manifest": mixing.q_block_manifest,
+        "llm_data_mix": mixing.q_llm_data_mix,
+        "temperature_sample": mixing.q_temperature_sample,
+        "ccnet_bins": text.q_ccnet_bins,
+        "doc_chunks": mixing.q_doc_chunks,
+        "training_shards": mixing.q_training_shards,
+        "epoch_mix": mixing.q_epoch_mix,
+        "mix_shards": mixing.q_mix_shards,
+        "hashed_embed_knn": hybrid.q_hashed_embed_knn,
+        "revenue_running": relational.q_revenue_running,
+        "sessionize": temporal.q_sessionize,
+        "clicks_before_purchase": temporal.q_clicks_before_purchase,
+        "qps_by_type": metrics.q_qps_by_type,
+        "pareto_frontier": metrics.q_pareto_frontier,
+        "interval_clicks": temporal.q_interval_clicks,
+        "best_search_time": metrics.q_best_search_time,
+        "train_test_split": metrics.q_train_test_split,
+        "customers_semi_returns": relational.q_customers_semi_returns,
+        "customers_anti_urgent": relational.q_customers_anti_urgent,
+        "lang_pivot": relational.q_lang_pivot,
+        "peak_events": temporal.q_peak_events,
+        "top_revenue_orders": relational.q_top_revenue_orders,
+        "mmr_rerank": hybrid.q_mmr_rerank,
+        "bq_knn": ann.q_bq_knn,
+        "bq_recall": ann.q_bq_recall,
+        "opq_knn": ann.q_opq_knn,
+        "opq_recall": ann.q_opq_recall,
+        "ivf_delta_report": ann.q_ivf_delta_report,
+        "retrieval_eval": sparse.q_retrieval_eval,
+        "quality_classifier": text.q_quality_classifier,
+        "filter_knn_2label": dense.q_filter_knn_2label,
+        "iud_final_state": temporal.q_iud_final_state,
+        "knn_euclid": dense.q_knn_euclid,
+        "knn_euclid_gemm": dense.q_knn_euclid_gemm,
+        "knn_hamming_packed": dense.q_knn_hamming_packed,
+        "knn_jaccard": dense.q_knn_jaccard,
+        "mv_scale": dense.q_mv_scale,
+        "mv_scale_parity": dense.q_mv_scale_parity,
+        "hnsw_delta_report": ann.q_hnsw_delta_report,
+        "hybrid_rrf_topk": hybrid.q_hybrid_rrf_topk,
+        "hybrid_rrf_parity": hybrid.q_hybrid_rrf_parity,
+        "mmr_scale": hybrid.q_mmr_scale,
+        "sparse_delta_report": sparse.q_sparse_delta_report,
+        "corpus_curation_scale": dedup.q_corpus_curation_scale,
+        "embedding_cosine_dups_srp": dedup.q_embedding_cosine_dups_srp,
+        "cm_heavy_hitters": relational.q_cm_heavy_hitters,
+        "pricing_summary": relational.q_pricing_summary,
+        "revenue_by_nation": relational.q_revenue_by_nation,
+        "corpus_rollup": relational.q_corpus_rollup,
+        "user_gap_stats": relational.q_user_gap_stats,
+        "quality_deciles": relational.q_quality_deciles,
+        "topk_per_group": relational.q_topk_per_group,
+        "events_hourly": temporal.q_events_hourly,
+        "latency_percentiles": metrics.q_latency_percentiles,
+        "recall_summary": metrics.q_recall_summary,
+        "doclen_percentiles": relational.q_doclen_percentiles,
+        "corpus_stats": relational.q_corpus_stats,
+        "knn_angular": dense.q_knn_angular,
+        "knn_hamming": dense.q_knn_hamming,
+        "mv_knn_fused": dense.q_mv_knn_fused,
+        "jl_knn": ann.q_jl_knn,
+        "mm_knn": dense.q_mm_knn,
+        "filter_knn_range": dense.q_filter_knn_range,
+        "srp_recall": dedup.q_srp_recall,
+        "hnsw_scale_recall": ann.q_hnsw_scale_recall,
+        "embedding_cosine_dups": dedup.q_embedding_cosine_dups,
+        "ngram_jaccard_dups": dedup.q_ngram_jaccard_dups,
+        "lsh_dedup": dedup.q_lsh_dedup,
+        "semantic_dups": ann.q_semantic_dups,
+        "incremental_dedup": dedup.q_incremental_dedup,
+        "substring_spans": dedup.q_substring_spans,
+        "substring_rewrite": dedup.q_substring_rewrite,
+        "paragraph_dedup": dedup.q_paragraph_dedup,
+        "c4_line_filter": text.q_c4_line_filter,
+        "gopher_repetition": text.q_gopher_repetition,
+        "bpe_train": text.q_bpe_train,
+        "bpe_token_stats": text.q_bpe_token_stats,
+        "lm_fluency": text.q_lm_fluency,
+        "dsir_select": mixing.q_dsir_select,
+        "ivf_auto_recall": ann.q_ivf_auto_recall,
+        "pq_delta_report": ann.q_pq_delta_report,
+        "hnsw_delta_knn": ann.q_hnsw_delta_knn,
+        "ivf_delta_knn": ann.q_ivf_delta_knn,
+        "ivfpq_knn": ann.q_ivfpq_knn,
+        "filter_ivf_knn": ann.q_filter_ivf_knn,
+        "filter_ivf_recall": ann.q_filter_ivf_recall,
+        "hnsw_knn": ann.q_hnsw_knn,
+        "hnsw_recall": ann.q_hnsw_recall,
+        "filter_knn_eq": dense.q_filter_knn_eq,
+        "postfilter_knn": dense.q_postfilter_knn,
+        "mv_knn": dense.q_mv_knn,
+        "groundtruth_pack": metrics.q_groundtruth_pack,
+        "ivf_knn": ann.q_ivf_knn,
+        "pq_knn": ann.q_pq_knn,
+        "ivf_recall": ann.q_ivf_recall,
+        "pq_recall": ann.q_pq_recall,
+        "asof_clicks": temporal.q_asof_clicks,
+        "audio_features": text.q_audio_features,
+        "bm25_topk": sparse.q_bm25_topk,
+        "decontaminate": dedup.q_decontaminate,
+        "dedup_exact": dedup.q_dedup_exact,
+        "doc_fingerprints": dedup.q_doc_fingerprints,
+        "domain_mix": mixing.q_domain_mix,
+        "gopher_quality": text.q_gopher_quality,
+        "lang_id": text.q_lang_id,
+        "media_pipeline": text.q_media_pipeline,
+        "minhash_dups": dedup.q_minhash_dups,
+        "pii_scrub": text.q_pii_scrub,
+        "quality_scores": text.q_quality_scores,
+        "recall_lowdim_vs_full": metrics.q_recall_lowdim_vs_full,
+        "simhash_dups": dedup.q_simhash_dups,
+        "substring_dedup": dedup.q_substring_dedup,
+        "token_stats": text.q_token_stats,
+        "top_terms_per_source": sparse.q_top_terms_per_source,
+        "sq8_knn": ann.q_sq8_knn,
+        "sq8_recall": ann.q_sq8_recall,
+        "bloom_decontaminate": dedup.q_bloom_decontaminate,
+        "weighted_sample": mixing.q_weighted_sample,
+        "stratified_sample": mixing.q_stratified_sample,
+        "hnsw_scale_search": ann.q_hnsw_scale_search,
+        "corpus_stats_approx": relational.q_corpus_stats_approx,
+        "quality_tags_approx": relational.q_quality_tags_approx,
+        "insert_latency": temporal.q_insert_latency,
+        "update_latency": temporal.q_update_latency,
+        "delete_latency": temporal.q_delete_latency,
     }
-
-
-# SQL building blocks shared by several oracles.
-_TOKENS = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x != '')"
-_L2 = ("sqrt(list_sum(list_transform(list_zip({a}, {b}), "
-       "x -> (x[1]-x[2])*(x[1]-x[2]))))")
-_SHINGLES = (
-    "list_distinct(list_transform(range(1, greatest(len(tk)-1, 1)), "
-    "i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))"
-)
-
-
-def _ndcg_w_literal(k: int = 10) -> str:
-    """The nDCG rank-discount literals, shared verbatim with the Spark
-    operator (retrieval.ndcg_weights) so neither engine's log2 is in play."""
-    from bigvectorbench_spark.operators.retrieval import ndcg_weights
-
-    return "[" + ", ".join(repr(w) for w in ndcg_weights(k)) + "]"
-
-
-_NDCG_W = _ndcg_w_literal(10)
-
-
-def _knn_oracle(*, where_q: str, dist: str, join: str = "CROSS JOIN", cond: str = "",
-                k: int = 10, round_n: int = 4, cols: str = "qid, id, dist, rank",
-                train_extra: str = "", q_extra: str = "") -> str:
-    # ``+ 0.0`` normalizes IEEE -0.0 to +0.0: Spark's round() goes through
-    # BigDecimal (never signs zero) while DuckDB's keeps the sign, and the
-    # driver's value hash distinguishes the two bit patterns.
-    return f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label{train_extra} FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v, label{q_extra} FROM embeddings WHERE {where_q}),
-s AS (SELECT q.qid, t.id, {dist} AS d FROM q {join} t {cond}),
-r AS (SELECT qid, id, round(d, {round_n}) + 0.0 AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank
-      FROM s)
-SELECT {cols} FROM r WHERE rank <= {k}
-"""
-
-
-_PHASH = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
-
-# Rolling window hashes (curation.py token_hashes/rolling_window_hashes,
-# constants mirrored verbatim): per-token 40-bit md5-derived hashes, window
-# hash = seeded fold acc·4093 + x (mod 2^41) — list_reduce seeds with the
-# first element, exactly the Spark aggregate's seed.
-_TH = ("list_transform(tk, w -> "
-       "('0x' || substr(md5(w), 1, 15))::BIGINT % 1099511627776)")
-
-
-def _rwh(i: str, n: int) -> str:
-    return (f"list_reduce(th[{i}:{i}+{n - 1}], "
-            f"(a, b) -> (a * 4093 + b) % 2199023255552)")
-
-# The PII-planting fixture (mirrors _docs_pii verbatim), shared by the
-# pii_scrub and bpe_token_stats oracles.
-_PII_AUG = """text
-  || CASE WHEN doc_id % 7 = 0
-          THEN ' contact user' || doc_id::VARCHAR || '@example.com now' ELSE '' END
-  || CASE WHEN doc_id % 11 = 0
-          THEN ' call +1-555-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') || ' today' ELSE '' END
-  || CASE WHEN doc_id % 13 = 0
-          THEN ' from 192.168.' || (doc_id % 256)::VARCHAR || '.' || ((doc_id * 7) % 256)::VARCHAR
-          ELSE '' END"""
-
-# The driver evaluates oracles at sf0.01 (TESTDATA.md contract); the ANN
-# oracles recompute the deterministic index builds on that table.  The
-# directory is env-overridable so an evaluation at another sf can point the
-# embedded literals at the right table instead of failing spuriously.
-import os as _os
-
-_ORACLE_SF_DIR = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
-def _gopher_repetition_sql() -> str:
-    """Oracle for the nine Gopher repetition rules: one unnest+groupBy CTE
-    per n regenerating the per-doc character masses the Spark folds
-    compute, thresholds emitted from the SAME constants (repr gives both
-    engines the identical double literal)."""
-    from bigvectorbench_spark.operators.curation import (
-        GOPHER_DUP_NGRAM_MAX, GOPHER_TOP_NGRAM_MAX)
-
-    ctes, joins, flag_cols, all_flags = [], [], [], []
-
-    def gram_cte(n: int, stat: str) -> str:
-        # Windows are identified by the SAME packed (rolling hash << 22 |
-        # char mass) bigint the Spark folds group on (window_stat_packed),
-        # so even a hash collision is mirrored.  range() is empty when the
-        # doc has fewer than n tokens.
-        win = f"{_rwh('i', n)} * 4194304 + list_sum(lens[i:i+{n - 1}])"
-        per_win = (f"SELECT doc_id, unnest(list_transform("
-                   f"range(1, len(th) - {n - 2}), i -> {win})) AS pw "
-                   f"FROM tkh")
-        grouped = (f"SELECT doc_id, pw, count(*) AS cnt FROM ({per_win}) "
-                   f"GROUP BY doc_id, pw")
-        chars = "(pw % 4194304)"
-        agg = (f"max(cnt * {chars})" if stat == "top"
-               else f"sum(CASE WHEN cnt >= 2 THEN cnt * {chars} ELSE 0 END)")
-        return (f"a{stat}{n} AS (SELECT doc_id, {agg} AS v "
-                f"FROM ({grouped}) GROUP BY doc_id)")
-
-    for stat, rules in (("top", GOPHER_TOP_NGRAM_MAX),
-                        ("dup", GOPHER_DUP_NGRAM_MAX)):
-        for n, thr in rules.items():
-            ctes.append(gram_cte(n, stat))
-            joins.append(
-                f"LEFT JOIN a{stat}{n} ON a{stat}{n}.doc_id = base.doc_id")
-            flag_cols.append(
-                f"CASE WHEN tot > 0 AND "
-                f"coalesce(a{stat}{n}.v, 0)::DOUBLE / tot > {thr!r} "
-                f"THEN 1 ELSE 0 END AS fail_{stat}{n}")
-            all_flags.append(f"fail_{stat}{n}")
-
-    nl = ",\n"
-    cte_block = nl.join(ctes)
-    flag_block = (nl + "  ").join(flag_cols)
-    join_block = " ".join(joins)
-    any_fail = " + ".join(all_flags)
-    sum_cols = (nl + "  ").join(
-        f"sum({fl})::BIGINT AS n_{fl}" for fl in all_flags)
-    return f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, {_TH} AS th,
-        list_transform(tk, w -> length(w)) AS lens FROM tk),
-base AS (SELECT doc_id, source,
-         coalesce(list_sum(lens), 0) AS tot FROM tkh),
-{cte_block},
-f AS (SELECT source,
-  {flag_block}
-  FROM base {join_block})
-SELECT source, count(*)::BIGINT AS n_docs,
-  sum(CASE WHEN {any_fail} = 0 THEN 1 ELSE 0 END)::BIGINT AS n_pass,
-  {sum_cols}
-FROM f GROUP BY source
-"""
-
-
-def _ann_oracles() -> dict[str, str]:
-    """Full value oracles for the ANN index families (ivf_knn, pq_knn,
-    ivfpq_knn): rerun the seeded, deterministic index builds with the SAME
-    numpy code paths the Spark operators use (fit on collected sample,
-    norm-expansion argmin assignment/encode, LUT-sum ADC), then embed the
-    data-dependent artifacts — IVF cell assignments + probe lists, PQ ADC
-    candidate sets — as SQL literals.  DuckDB re-scores the identical
-    candidate rows with the exact L2 fold, so the index-controlled part
-    (which rows are scanned) is hash-checked end to end.  For PQ/IVFPQ the
-    Spark refine stage also uses the expression fold, so even the emitted
-    distances hash-match; IVF's GEMM kernel distances differ at ~1e-8, so
-    that oracle checks ids/ranks (knn_euclid_gemm convention)."""
-    import os
-
-    path = f"{_ORACLE_SF_DIR}/embeddings.parquet"
-    if not os.path.exists(path):
-        import sys
-        print(f"[oracle] {path} missing: ANN queries degrade to rows-only",
-              file=sys.stderr, flush=True)
-        return {}
-    import numpy as np
-    import pyarrow.parquet as pq_
-
-    from bigvectorbench_spark.operators.similarity import _kmeans_pp
-
-    tbl = pq_.read_table(path, columns=["vec_id", "embedding"])
-    ids = tbl.column("vec_id").to_numpy()
-    X = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
-    # Pin the fit-sample order to vec_id: the Spark operators fit with
-    # sort_col="id" and kmeans++ seeding is row-order dependent, so both
-    # sides must index the same matrix (parquet row order is NOT part of
-    # either contract).
-    order = np.argsort(ids, kind="stable")
-    ids, X = ids[order], X[order]
-    qmask = ids % 50 == 0
-    qids_, Q = ids[qmask], X[qmask]
-    l2 = _L2.format(a="t.v", b="q.v")
-
-    # ---- IVF (nlist=8, seed=1, max_iter=8, nprobe=4) ---------------------
-    C = _kmeans_pp(X, 8, seed=1, max_iter=8)
-    # assignment: identical expansion to IVFIndex._assign_gemm
-    d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
-    cid = d2.argmin(axis=1)
-    # probe lists: identical to IVFIndex.probe_lists
-    dq = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    probes = np.argpartition(dq, 3, axis=1)[:, :4]
-    assign_vals = ", ".join(f"({int(i)},{int(c)})" for i, c in zip(ids, cid))
-    probe_vals = ", ".join(
-        f"({int(q)},{int(c)})" for qi, q in enumerate(qids_) for c in probes[qi])
-    ivf_sql = f"""
-WITH assign(id, cell) AS (VALUES {assign_vals}),
-probe(qid, cell) AS (VALUES {probe_vals}),
-t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
-s AS (SELECT q.qid, t.id, {l2} AS d
-      FROM q JOIN probe ON probe.qid = q.qid
-      JOIN assign ON assign.cell = probe.cell
-      JOIN t ON t.id = assign.id),
-r AS (SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, rank FROM r WHERE rank <= 10
-"""
-
-    # ---- filtered IVF, PRE branch (same build; label equi-join inside the
-    # probed cells — filter_knn.filtered_ivf_knn strategy='pre').  The Spark
-    # side scores survivors with the exact expression fold, so distances
-    # hash-match at the usual round-4.
-    filter_ivf_sql = f"""
-WITH assign(id, cell) AS (VALUES {assign_vals}),
-probe(qid, cell) AS (VALUES {probe_vals}),
-t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v, label FROM embeddings WHERE vec_id % 50 = 0),
-s AS (SELECT q.qid, t.id, {l2} AS d
-      FROM q JOIN probe ON probe.qid = q.qid
-      JOIN assign ON assign.cell = probe.cell
-      JOIN t ON t.id = assign.id AND t.label = q.label),
-r AS (SELECT qid, id, round(d, 4) + 0.0 AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 10
-"""
-
-    # ---- PQ (m=8, ksub=16, seed=1, max_iter=8, overfetch=4) --------------
-    m, ksub, k_adc = 8, 16, 40
-    dsub = X.shape[1] // m
-    books = np.stack([
-        _kmeans_pp(X[:, j * dsub:(j + 1) * dsub], ksub, 1 + j, 8) for j in range(m)
-    ])
-    # encode: identical expansion to PQIndex.encode
-    c2 = (books * books).sum(axis=2)
-    codes = np.empty((len(X), m), dtype=np.int64)
-    Xs = X.reshape(len(X), m, dsub)
-    for j in range(m):
-        S = Xs[:, j, :]
-        codes[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books[j].T)
-                       + c2[j][None, :]).argmin(axis=1)
-    # ADC: identical LUT build + accumulation order to PQIndex.search
-    Qs = Q.reshape(len(qids_), m, dsub)
-    lut = np.stack([
-        ((books[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
-        for j in range(m)
-    ])  # (m, ksub, nq)
-    acc = np.zeros((len(X), len(qids_)), dtype=np.float64)
-    for j in range(m):
-        acc += lut[j][codes[:, j], :]
-    D = np.sqrt(np.maximum(acc, 0.0))
-
-    def _adc_topk(D_col, row_ids):
-        order = np.lexsort((row_ids, D_col))
-        return row_ids[order[:k_adc]]
-
-    def _cand_sql(cand_pairs: str) -> str:
-        return f"""
-WITH cand(qid, id) AS (VALUES {cand_pairs}),
-t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
-s AS (SELECT q.qid, t.id, {l2} AS d
-      FROM cand JOIN q ON q.qid = cand.qid JOIN t ON t.id = cand.id),
-r AS (SELECT qid, id, round(d, 4) + 0.0 AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 10
-"""
-
-    pq_pairs = ", ".join(
-        f"({int(q)},{int(i)})"
-        for qi, q in enumerate(qids_) for i in _adc_topk(D[:, qi], ids))
-    pq_sql = _cand_sql(pq_pairs)
-
-    # ---- IVFPQ (IVF mask over the same ADC scores) -----------------------
-    member = np.zeros((8, len(qids_)), dtype=bool)
-    for qi in range(len(qids_)):
-        member[probes[qi], qi] = True
-    D_masked = np.where(member[cid], D, np.inf)
-    ivfpq_pairs = []
-    for qi, q in enumerate(qids_):
-        col = D_masked[:, qi]
-        finite = np.isfinite(col)
-        top = _adc_topk(col[finite], ids[finite])
-        ivfpq_pairs.extend(f"({int(q)},{int(i)})" for i in top)
-    ivfpq_sql = _cand_sql(", ".join(ivfpq_pairs))
-
-    # ---- SemDeDup (same IVF build: nlist=8, seed=1, max_iter=8) ----------
-    # The cluster partition is the IVF assignment above, embedded verbatim;
-    # DuckDB re-derives every within-cluster pair with the exact unit-vector
-    # cosine fold, so both the partition (which pairs are candidates) and
-    # the scores are hash-checked.
-    semantic_sql = f"""
-WITH assign(id, cell) AS (VALUES {assign_vals}),
-u AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT id, list_transform(v, x -> x / sqrt(list_sum(list_transform(v, y -> y*y)))) AS u
-      FROM u),
-j AS (SELECT n.id, u, cell FROM n JOIN assign ON assign.id = n.id),
-p AS (SELECT a.id AS id_a, b.id AS id_b, a.cell::INT AS cluster_id,
-             list_sum(list_transform(list_zip(a.u, b.u), x -> x[1]*x[2])) AS cosine
-      FROM j a JOIN j b ON a.cell = b.cell AND a.id < b.id)
-SELECT id_a, id_b, cluster_id, round(cosine, 6) AS cosine FROM p
-WHERE cosine >= 0.4
-"""
-
-    # ---- OPQ (m=8, ksub=16, iters=3, overfetch=4) ------------------------
-    # Identical arithmetic to OPQIndex: shared numpy fit (opq_fit_numpy),
-    # rotation rounded to 6 dp, norm-expansion encode, LUT-sum ADC, then
-    # (D, id) lexsort — the pq_knn oracle with rotated inputs.
-    from bigvectorbench_spark.operators.opq import opq_fit_numpy
-
-    R_o, books_o = opq_fit_numpy(X, m=8, ksub=16, iters=3, seed=1, max_iter=8)
-    XR = np.round(X @ R_o, 6)
-    QR = XR[qmask]
-    c2o = (books_o * books_o).sum(axis=2)
-    codes_o = np.empty((len(X), 8), dtype=np.int64)
-    XRs = XR.reshape(len(X), 8, dsub)
-    for j in range(8):
-        S = XRs[:, j, :]
-        codes_o[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books_o[j].T)
-                         + c2o[j][None, :]).argmin(axis=1)
-    QRs = QR.reshape(len(qids_), 8, dsub)
-    lut_o = np.stack([
-        ((books_o[j][:, None, :] - QRs[None, :, j, :]) ** 2).sum(axis=2)
-        for j in range(8)
-    ])
-    acc_o = np.zeros((len(X), len(qids_)), dtype=np.float64)
-    for j in range(8):
-        acc_o += lut_o[j][codes_o[:, j], :]
-    D_o = np.sqrt(np.maximum(acc_o, 0.0))
-    opq_pairs = ", ".join(
-        f"({int(q)},{int(i)})"
-        for qi, q in enumerate(qids_) for i in _adc_topk(D_o[:, qi], ids))
-    opq_sql = _cand_sql(opq_pairs)
-
-    # ---- BQ (mean thresholds, overfetch=4 → 40 hamming candidates) -------
-    # Identical arithmetic to BQIndex: float64 mean over the id-sorted
-    # matrix, bit = (x > mean), integer hamming, (hamming, id) lexsort.
-    means = X.mean(axis=0)
-    bits = X > means[None, :]
-    qbits = bits[qmask]
-    bq_pairs = []
-    for qi, q in enumerate(qids_):
-        ham = (bits != qbits[qi][None, :]).sum(axis=1)
-        top = ids[np.lexsort((ids, ham))[:40]]
-        bq_pairs.extend(f"({int(q)},{int(i)})" for i in top)
-    bq_sql = _cand_sql(", ".join(bq_pairs))
-
-    # ---- incremental IVF (fit on BASE ids%10!=0; delta assigned, no refit)
-    base_mask = ids % 10 != 0
-    Cd = _kmeans_pp(X[base_mask], 8, seed=1, max_iter=8)
-    d2d = (X * X).sum(1)[:, None] - 2.0 * (X @ Cd.T) + (Cd * Cd).sum(1)[None, :]
-    cidd = d2d.argmin(axis=1)
-    q1 = ids % 50 == 1
-    dqd = ((X[q1][:, None, :] - Cd[None, :, :]) ** 2).sum(axis=2)
-    probesd = np.argpartition(dqd, 3, axis=1)[:, :4]
-    assignd_vals = ", ".join(f"({int(i)},{int(c)})" for i, c in zip(ids, cidd))
-    probed_vals = ", ".join(
-        f"({int(qv)},{int(c)})"
-        for qi, qv in enumerate(ids[q1]) for c in probesd[qi])
-    ivf_delta_sql = f"""
-WITH assign(id, cell) AS (VALUES {assignd_vals}),
-probe(qid, cell) AS (VALUES {probed_vals}),
-t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 1),
-s AS (SELECT q.qid, t.id, {l2} AS d
-      FROM q JOIN probe ON probe.qid = q.qid
-      JOIN assign ON assign.cell = probe.cell
-      JOIN t ON t.id = assign.id),
-r AS (SELECT qid, id, row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, rank FROM r WHERE rank <= 10
-"""
-    cents_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(float(x)) for x in c) + "]" for c in Cd) + "]"
-    ivf_delta_report_sql = f"""
-WITH assign(id, cell) AS (VALUES {assignd_vals}),
-cents AS (SELECT {cents_lit} AS cl),
-t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v,
-             CASE WHEN vec_id % 10 != 0 THEN 1 ELSE 0 END AS is_base
-      FROM embeddings),
-j AS (SELECT a.cell, t.is_base,
-             sqrt(list_sum(list_transform(list_zip(t.v, cl[a.cell + 1]),
-                 x -> (x[1]-x[2])*(x[1]-x[2])))) AS d
-      FROM t JOIN assign a ON a.id = t.id CROSS JOIN cents)
-SELECT cell::BIGINT AS cluster_id,
-       sum(is_base)::BIGINT AS n_base,
-       (count(*) - sum(is_base))::BIGINT AS n_delta,
-       round(sum(round(d, 9)::DECIMAL(28,10))::DOUBLE / count(*)::DOUBLE, 6)
-           AS mean_dist
-FROM j GROUP BY cell
-"""
-
-    # ---- PQ delta report (base-only fit, frozen-book encode of ALL rows;
-    # the ivf_delta_report convention: embed the argmins — codes — and let
-    # SQL recompute every reconstruction error from codebook literals) ----
-    mask_b = ids % 10 != 0
-    Xb = X[mask_b]
-    books_pd = np.stack([
-        _kmeans_pp(Xb[:, j * dsub:(j + 1) * dsub], ksub, 1 + j, 8)
-        for j in range(m)
-    ])
-    c2_pd = (books_pd * books_pd).sum(axis=2)
-    codes_pd = np.empty((len(X), m), dtype=np.int64)
-    for j in range(m):
-        S = Xs[:, j, :]
-        codes_pd[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books_pd[j].T)
-                          + c2_pd[j][None, :]).argmin(axis=1)
-    code_vals = ", ".join(
-        f"({int(i)},{j},{int(codes_pd[r, j])})"
-        for r, i in enumerate(ids) for j in range(m))
-    book_vals = ", ".join(
-        "({},{},[{}])".format(
-            j, c, ", ".join(repr(float(x)) for x in books_pd[j, c]))
-        for j in range(m) for c in range(ksub))
-    pq_delta_report_sql = f"""
-WITH codes(id, j, code) AS (VALUES {code_vals}),
-books(j, code, bv) AS (VALUES {book_vals}),
-t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v,
-             CASE WHEN vec_id % 10 != 0 THEN 1 ELSE 0 END AS is_base
-      FROM embeddings),
-e AS (SELECT t.id, t.is_base,
-             sum(list_sum(list_transform(
-                 list_zip(t.v[c.j*{dsub}+1:(c.j+1)*{dsub}], b.bv),
-                 x -> (x[1]-x[2])*(x[1]-x[2])))) AS err
-      FROM t JOIN codes c ON c.id = t.id
-      JOIN books b ON b.j = c.j AND b.code = c.code
-      GROUP BY t.id, t.is_base),
-d AS (SELECT is_base, round(err, 9)::DECIMAL(28,10) AS e FROM e),
-agg AS (SELECT sum(is_base)::BIGINT AS n_base,
-               (count(*) - sum(is_base))::BIGINT AS n_delta,
-               round(sum(CASE WHEN is_base = 1 THEN e END)::DOUBLE
-                     / sum(is_base)::DOUBLE, 6) AS mean_qerr_base,
-               round(sum(CASE WHEN is_base = 0 THEN e END)::DOUBLE
-                     / (count(*) - sum(is_base))::DOUBLE, 6)
-                   AS mean_qerr_delta
-        FROM d)
-SELECT n_base, n_delta, mean_qerr_base, mean_qerr_delta,
-       round(mean_qerr_delta / mean_qerr_base, 6) AS qerr_drift
-FROM agg
-"""
-
-    return {"ivf_knn": ivf_sql, "pq_knn": pq_sql, "ivfpq_knn": ivfpq_sql,
-            "filter_ivf_knn": filter_ivf_sql, "semantic_dups": semantic_sql,
-            "bq_knn": bq_sql, "opq_knn": opq_sql,
-            "ivf_delta_knn": ivf_delta_sql,
-            "ivf_delta_report": ivf_delta_report_sql,
-            "pq_delta_report": pq_delta_report_sql}
-
-
-# ivf_recall / pq_recall: the Spark side computes recall of the approximate
-# path against exact kNN and emits threshold booleans; the oracle asserts
-# they are TRUE (and checks the query count).  No index artifacts are
-# embedded, so this check CANNOT be fooled by a bug that corrupts the Spark
-# build and the oracle recomputation identically.
-_RECALL_GATE_SQL = """
-SELECT count(*) AS n_queries, TRUE AS mean_recall_ok, TRUE AS min_recall_ok
-FROM embeddings WHERE vec_id % 50 = 0
-"""
-
-# sq8_knn: the oracle replays the whole SQ8 pipeline — per-vector float32
-# scale (= max|v|/127, the Spark when/otherwise zero guard included), int8
-# codes via round(x/scale) in double, dequantize as float32 code·scale, then
-# the exact double L2 fold and (dist, id) ranking.  Float32 casts sit at the
-# same three points as quantize_vec/dequantize_vec (operators/quantize.py),
-# so every intermediate is bit-identical across engines.
-_SQ8_KNN_SQL = f"""
-WITH t0 AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-ts AS (SELECT id, v,
-              (CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-                    THEN list_max(list_transform(v, x -> abs(x)))::DOUBLE
-                    ELSE 1.0::DOUBLE END / 127.0::DOUBLE)::FLOAT AS scale
-       FROM t0),
-t AS (SELECT id,
-             list_transform(v, x ->
-                 ((round(x::DOUBLE / scale::DOUBLE)::TINYINT)::FLOAT
-                  * scale)::FLOAT)::DOUBLE[] AS v
-      FROM ts),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings
-      WHERE vec_id % 50 = 0),
-s AS (SELECT q.qid, t.id, {_L2.format(a="t.v", b="q.v")} AS d
-      FROM q CROSS JOIN t),
-r AS (SELECT qid, id, round(d, 4) + 0.0 AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank
-      FROM s)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 10
-"""
-
-# sparse_knn: the whole sparse TF-IDF pipeline re-derived — tokenize,
-# unigram+bigram features (WITH duplicates: tf matters), postings,
-# corpus-wide df, SMART-ltn weights (6 dp), per-term products (9 dp →
-# DECIMAL sum), 6-dp score before (score desc, doc asc) ranking —
-# operators/sparse.py's exact ladder, so scores and ranks hash-match.
-# n counts docs WITH >=1 feature (len(tk) > 0) — the stats_from_postings
-# convention (a zero-token doc contributes no posting row, so it must not
-# shift idf here either); the delta-report oracle counts the same way.
-# doc_where (the filtered form): candidate docs restrict AT SCORING —
-# weights/df/idf stay corpus-global, exactly filtered_sparse_topk's
-# prefilter ≡ postfilter semantics.
-def _sparse_knn_sql(doc_where: str = "") -> str:
-    cand = (f" WHERE w.doc_id IN (SELECT doc_id FROM documents"
-            f" WHERE {doc_where})" if doc_where else "")
-    return f"""
-WITH tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-tk AS (SELECT doc_id,
-              list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
-                  i -> tk[i] || ' ' || tk[i+1])) AS tk
-       FROM tk0),
-stats AS (SELECT count(*)::DOUBLE AS n FROM tk WHERE len(tk) > 0),
-post AS (SELECT doc_id, unnest(tk) AS term FROM tk),
-tfs AS (SELECT term, doc_id, count(*) AS tf FROM post GROUP BY term, doc_id),
-dfr AS (SELECT term, count(*) AS df FROM tfs GROUP BY term),
-w AS (SELECT t.term, t.doc_id,
-             round((1.0 + ln(t.tf::DOUBLE)) * ln(s.n / dfr.df::DOUBLE), 6) AS w
-      FROM tfs t JOIN dfr ON t.term = dfr.term CROSS JOIN stats s),
-qw AS (SELECT doc_id AS qid, term, w AS qwv FROM w WHERE doc_id % 100 = 0),
-sc AS (SELECT qw.qid, w.doc_id, round(w.w * qw.qwv, 9)::DECIMAL(28,10) AS c
-       FROM w JOIN qw ON w.term = qw.term{cand}),
-agg AS (SELECT qid, doc_id, CAST(round(sum(c), 6) AS DOUBLE) AS score
-        FROM sc GROUP BY qid, doc_id),
-r AS (SELECT qid, doc_id, score,
-             row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-      FROM agg)
-SELECT qid, doc_id, score, rank FROM r WHERE rank <= 10
-"""
-
-
-_SPARSE_KNN_SQL = _sparse_knn_sql()
-_SPARSE_FILTER_KNN_SQL = _sparse_knn_sql("lang = 'en'")
-# sparse_filter_adaptive: same corpus-global-weights filtered form at ~85%
-# selectivity; prefilter ≡ postfilter by construction, so one SQL oracles
-# either authoring.
-_SPARSE_FILTER_ADAPTIVE_SQL = _sparse_knn_sql("lang <> 'zh'")
-
-# n_queries restricts to docs with >=1 token: the Spark gates derive the
-# query count from the truth side of recall_per_query, and a zero-token
-# query document has no sparse vector (no posting rows), so it never
-# reaches the truth frame — the oracle must not count it either.
-_SPARSE_GATE_SQL = f"""
-SELECT count(*) AS n_queries, TRUE AS mean_recall_ok, TRUE AS min_recall_ok
-FROM documents WHERE doc_id % 100 = 0 AND len({_TOKENS}) > 0
-"""
-
-# srp_recall: DuckDB independently recomputes the exact brute-force pair
-# count on the same perturbed corpus (value-checked), and asserts the
-# Spark-side blocking-recall boolean.  Margins are wide by construction:
-# twin pairs sit at cosine ≈0.998, the nearest non-twin at ≈0.53, so no
-# pair is within rounding distance of the 0.95 threshold on either engine.
-_SRP_RECALL_SQL = """
-WITH base AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-pert AS (SELECT id + 1000000 AS id,
-                list_transform(range(1, len(v)+1),
-                    i -> v[i] + CASE WHEN (i-1) % 7 = 0 THEN 0.02 ELSE 0.0 END) AS v
-         FROM base),
-c AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
-n AS (SELECT id, list_transform(v, x -> x / sqrt(list_sum(list_transform(v, y -> y*y)))) AS u
-      FROM c),
-p AS (SELECT a.id AS id_a, b.id AS id_b,
-             list_sum(list_transform(list_zip(a.u, b.u), x -> x[1]*x[2])) AS cosine
-      FROM n a JOIN n b ON a.id < b.id)
-SELECT count(*) AS n_true_pairs, TRUE AS recall_ok,
-       CAST(1.0 AS DOUBLE) AS recall_r2
-FROM p WHERE cosine >= 0.95
-"""
-
-# hnsw_recall: the oracle recomputes the query count and asserts the
-# Spark-side threshold booleans plus the PINNED rounded mean recall
-# (0.99 at the oracle sf — scripts/calibrate_gates.py; deterministic:
-# seeded shard assignment + seeded level draws + deterministic beam).
-# The pin is calibrated on the clamped 500-row embeddings corpus
-# (sf0.001/sf0.01); at larger SFs both sides emit NULL and only the
-# defect-floor booleans gate (q_hnsw_recall mirrors this branch).
-_HNSW_RECALL_SQL = """
-SELECT count(*) AS n_queries, TRUE AS mean_recall_ok, TRUE AS min_recall_ok,
-       CASE WHEN (SELECT count(*) FROM embeddings) <= 500
-            THEN CAST(0.99 AS DOUBLE) END AS mean_recall_r2
-FROM embeddings WHERE vec_id % 50 = 0
-"""
-
-# hnsw_scale_recall: same contract at the serving-scale (8 fixed shards,
-# ef=24) configuration.  The fixed ~100-query block's stride is
-# greatest(1, n // 100) on both sides; the pinned mean on the clamped
-# ≤500-row corpora is exactly 1.0 (the 8-shard top-10 union recovers the
-# exact top-10 — scripts/calibrate_gates.py).
-_HNSW_SCALE_RECALL_SQL = """
-SELECT count(*) AS n_queries, TRUE AS mean_recall_ok, TRUE AS min_recall_ok,
-       CASE WHEN (SELECT count(*) FROM embeddings) <= 500
-            THEN CAST(1.0 AS DOUBLE) END AS mean_recall_r2
-FROM embeddings
-WHERE vec_id % greatest(1, (SELECT count(*) FROM embeddings) // 100) = 0
-"""
-
-# ivf_auto_recall: the resolved auto_nprobe is deterministic arithmetic on
-# the corpus row count (nlist = max(8, round(sqrt(n))), then the calibrated
-# ceil power law).  The knob is derived ONCE here in Python — the same
-# round()/math.ceil the Spark query resolves through — and embedded as an
-# integer literal (the centroid/codebook literal convention; ADVICE r11:
-# replaying round()/CEIL(POW(...)) in DuckDB risks banker's-rounding and
-# 1-ulp pow divergence at future row counts).  The recall booleans are
-# defect floors (see q_ivf_auto_recall's regime note).
-def _ivf_auto_recall_sql() -> str:
-    import math
-    import os
-
-    from bigvectorbench_spark.operators.similarity import auto_nprobe
-
-    path = f"{_ORACLE_SF_DIR}/embeddings.parquet"
-    if not os.path.exists(path):
-        # No table to derive from (rows-only degradation mirrors
-        # _ann_oracles); emit a count-only oracle so the key stays present.
-        return """
-SELECT (SELECT count(*) FROM embeddings WHERE vec_id % 50 = 0) AS n_queries,
-       CAST(NULL AS BIGINT) AS auto_nprobe,
-       TRUE AS mean_recall_ok, TRUE AS min_recall_ok
-"""
-    import pyarrow.parquet as pq_
-
-    n = pq_.ParquetFile(path).metadata.num_rows
-    nlist = max(8, round(math.sqrt(n)))
-    return f"""
-SELECT (SELECT count(*) FROM embeddings WHERE vec_id % 50 = 0) AS n_queries,
-       CAST({auto_nprobe(nlist)} AS BIGINT) AS auto_nprobe,
-       TRUE AS mean_recall_ok, TRUE AS min_recall_ok
-"""
-
-# hnsw_delta_report: the report is pure shard-metadata arithmetic, so the
-# oracle REPLAYS the sizing rules from the raw row counts — base shards
-# max(4, ceil(rows_base/500)) (the q_hnsw_knn bounded-shard derivation),
-# first absorb sized at the base's rows/shard, second absorb at the
-# base∪first layout's rows/shard, rebuild at the base's rows/shard — and
-# recomputes every column including the 6-dp work_growth ratio.  A sizing
-# bug on the Spark side (wrong per-shard target, off-by-one ceil, offset
-# arithmetic dropping a shard) breaks the match.
-_HNSW_DELTA_REPORT_SQL = """
-WITH c AS (SELECT count(*) AS n,
-                  count(*) FILTER (WHERE vec_id % 10 = 0) AS nd1,
-                  count(*) FILTER (WHERE vec_id % 10 = 1) AS nd2
-           FROM embeddings),
-p AS (SELECT n - nd1 - nd2 AS rows_base, nd1, nd2,
-             GREATEST(4, CAST(CEIL((n - nd1 - nd2) / 500.0) AS BIGINT)) AS nbs
-      FROM c),
-s1 AS (SELECT *, CAST(CEIL(nd1::DOUBLE /
-                GREATEST(1, rows_base // nbs)) AS BIGINT) AS nds1 FROM p),
-s2 AS (SELECT *, CAST(CEIL(nd2::DOUBLE /
-                GREATEST(1, (rows_base + nd1) // (nbs + nds1))) AS BIGINT)
-                AS nds2 FROM s1),
-f AS (SELECT nbs, nds1 + nds2 AS nds, rows_base, nd1 + nd2 AS rows_delta,
-             GREATEST(1, rows_base // nbs) AS per FROM s2)
-SELECT nbs AS n_base_shards, nds AS n_delta_shards, rows_base, rows_delta,
-       nbs + nds AS shards_total,
-       (rows_base + rows_delta + per - 1) // per AS shards_rebuilt,
-       round((nbs + nds)::DOUBLE /
-             ((rows_base + rows_delta + per - 1) // per)::DOUBLE, 6)
-           AS work_growth
-FROM f
-"""
-
-# sketch_bounds: the oracle recomputes the exact corpus shape (sources,
-# docs) and asserts the Spark-side HLL++/percentile_approx error-bound
-# booleans.
-_SKETCH_BOUNDS_SQL = """
-SELECT count(DISTINCT source) AS n_sources, count(*) AS n_docs,
-       TRUE AS hll_ok, TRUE AS pct_ok
-FROM documents
-"""
-
-# hybrid_rrf_parity: the oracle recomputes the fused-query universe (every
-# %250 doc with at least one token retrieves itself through the lexical
-# leg, so the fused qid set is exactly that) and asserts the Spark-side
-# brute-vs-BQ fused-top-10 overlap booleans — the srp_recall pattern: no
-# index artifacts embedded, so a bug corrupting both legs identically
-# cannot slip through via this gate alone (and the hybrid_rrf_scale value
-# oracle pins the BQ leg's exact output besides).
-_HYBRID_PARITY_SQL = f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents)
-SELECT count(*) AS n_queries, TRUE AS mean_overlap_ok, TRUE AS min_overlap_ok
-FROM tk WHERE doc_id % 250 = 0 AND len(tk) > 0
-"""
-
-# iud_final_state: DuckDB replays the deterministic IUD sweep relationally
-# — first-100 ids (ascending) each insert a label+1000 copy at max_id+1+i,
-# upsert label+500 in place, and every third id tombstones — and aggregates
-# the identical per-bucket end state the Spark log-merge snapshot resolves.
-_IUD_FINAL_STATE_SQL = """
-WITH base AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
-m AS (SELECT max(id) AS mx FROM base),
-f AS (SELECT id, v, label, row_number() OVER (ORDER BY id) - 1 AS i
-      FROM base QUALIFY row_number() OVER (ORDER BY id) <= 100),
-kept AS (SELECT b.id, b.v,
-                CASE WHEN f.id IS NOT NULL THEN b.label + 500 ELSE b.label END AS label
-         FROM base b LEFT JOIN f ON f.id = b.id
-         WHERE f.id IS NULL OR f.i % 3 != 0),
-ins AS (SELECT m.mx + 1 + f.i AS id, f.v, f.label + 1000 AS label
-        FROM f CROSS JOIN m),
-fin AS (SELECT * FROM kept UNION ALL SELECT * FROM ins)
-SELECT (id % 7)::BIGINT AS bucket, count(*) AS n_rows,
-       sum(id)::BIGINT AS sum_id, sum(label)::BIGINT AS sum_label,
-       round(sum(round(v[1], 4)::DECIMAL(28,6)), 4)::DOUBLE AS vec_checksum
-FROM fin GROUP BY bucket
-"""
-
-
-def _bpe_oracle() -> dict[str, str]:
-    """Independent BPE oracle: recompute the morph-augmented word
-    histogram in DuckDB, learn the merge table with a SECOND
-    implementation (naive recount + Sennrich-style apply-merges-in-order
-    segmentation, vs the module's GPT-2-style lowest-rank loop), and
-    embed the (word, n_pieces) map as SQL literals.  The SQL then
-    re-derives the augmented token stream and joins — so the distributed
-    histogram, the deterministic merge order, AND the segmentation
-    equivalence are all hash-checked."""
-    import os
-
-    path = f"{_ORACLE_SF_DIR}/documents.parquet"
-    if not os.path.exists(path):
-        import sys
-        print(f"[oracle] {path} missing: bpe_train degrades to rows-only",
-              file=sys.stderr, flush=True)
-        return {}
-    import duckdb
-
-    sfx = "(['', 'ing', 'ed', 'ly', 'er', 'est', 's', 'ness'])"
-    aug = (f"list_transform(range(1, len(tk) + 1), i -> "
-           f"tk[CAST(i AS INT)] || {sfx}[CAST((doc_id + i - 1) % 8 AS INT) + 1])")
-    con = duckdb.connect()
-    hist = con.execute(f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM read_parquet('{path}')),
-a AS (SELECT unnest({aug}) AS w FROM tk)
-SELECT w, count(*) FROM a GROUP BY w ORDER BY w""").fetchall()
-    con.close()
-
-    def apply_merge(seq, pair):
-        a, b = pair
-        out, i = [], 0
-        while i < len(seq):
-            if i + 1 < len(seq) and seq[i] == a and seq[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(seq[i])
-                i += 1
-        return out
-
-    vocab = {}
-    for w, c in hist:
-        s = tuple(w) + ("</w>",)
-        vocab[s] = vocab.get(s, 0) + c
-    merges = []
-    for _ in range(100):
-        cnt = {}
-        for s, c in vocab.items():
-            for j in range(len(s) - 1):
-                p = (s[j], s[j + 1])
-                cnt[p] = cnt.get(p, 0) + c
-        if not cnt:
-            break
-        best = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-        merges.append(best)
-        nv = {}
-        for s, c in vocab.items():
-            t = tuple(apply_merge(list(s), best))
-            nv[t] = nv.get(t, 0) + c
-        vocab = nv
-
-    def segment(w):
-        seq = list(w) + ["</w>"]
-        for m in merges:
-            seq = apply_merge(seq, m)
-        return seq
-
-    vals = ", ".join(
-        "('" + w.replace("'", "''") + "', " + str(len(segment(w))) + ")"
-        for w, _c in hist)
-    return {"bpe_train": f"""
-WITH wmap(word, n_pieces) AS (VALUES {vals}),
-tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-a AS (SELECT doc_id, source, unnest({aug}) AS word FROM tk),
-j AS (SELECT source, n_pieces FROM a JOIN wmap USING (word))
-SELECT source, count(*)::BIGINT AS n_tokens,
-  sum(n_pieces)::BIGINT AS n_pieces,
-  round(sum(n_pieces)::DOUBLE / count(*), 6) AS pieces_per_token
-FROM j GROUP BY source ORDER BY source
-"""}
-
-
-def _classifier_oracle() -> dict[str, str]:
-    """Full value oracle for the weak-supervision quality classifier: the
-    feature/label matrix is re-derived from the parquet via DuckDB (the
-    hashed_embedding and quality_score SQL twins — exact integers and the
-    unrounded 0.8 comparison), the SAME numpy fit runs on it
-    (classifier.fit_logistic_numpy, shared code), and the resulting
-    weights embed into the scoring SQL as literals."""
-    import os
-
-    path = f"{_ORACLE_SF_DIR}/documents.parquet"
-    if not os.path.exists(path):
-        return {}
-    import duckdb
-    import numpy as np
-
-    from bigvectorbench_spark.operators.classifier import fit_logistic_numpy
-
-    feats = f"""
-WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk
-            FROM read_parquet('{path}')),
-th AS (SELECT doc_id, text, tk, {_TH} AS th FROM tk),
-v AS (SELECT doc_id, text, tk, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM th),
-q AS (SELECT doc_id, v,
-             len(tk)::DOUBLE AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM v)
-SELECT doc_id, v,
-       CASE WHEN 0.3 * least(ntok / 64.0, 1.0)
-           + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-           + 0.2 * least(swr * 4.0, 1.0)
-           + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0) >= 0.8
-       THEN 1 ELSE 0 END AS y
-FROM q WHERE doc_id % 3 != 0 ORDER BY doc_id
-"""
-    rows = duckdb.connect().execute(feats).fetchall()
-    X = np.array([r[1] for r in rows], dtype=np.int64)
-    y = np.array([r[2] for r in rows], dtype=np.int64)
-    w, b = fit_logistic_numpy(X, y)
-    w_lit = "[" + ", ".join(repr(float(x)) for x in w) + "]"
-    score_sql = f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-th AS (SELECT doc_id, {_TH} AS th FROM tk),
-v AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM th),
-z AS (SELECT doc_id,
-             {b!r} + list_sum(list_transform(list_zip(v, {w_lit}),
-                 p -> p[1] * p[2])) AS z FROM v),
-p AS (SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS quality_prob FROM z)
-SELECT doc_id, quality_prob,
-       CASE WHEN quality_prob >= 0.5 THEN 1 ELSE 0 END AS predicted
-FROM p
-"""
-    return {"quality_classifier": score_sql}
-
-
-def _mmr_oracle() -> dict[str, str]:
-    """Independent recomputation of q_mmr_rerank: DuckDB derives the
-    hashed-embed top-30 candidates (rounded relevance + integer vectors),
-    the SAME numpy greedy (retrieval.mmr_select_numpy) runs on them, and
-    the selections embed as literals — the ivf_knn candidate-embedding
-    pattern."""
-    import os
-
-    path = f"{_ORACLE_SF_DIR}/documents.parquet"
-    if not os.path.exists(path):
-        return {}
-    import duckdb
-
-    from bigvectorbench_spark.operators.retrieval import mmr_select_numpy
-
-    cand_sql = f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM read_parquet('{path}')),
-th AS (SELECT doc_id, {_TH} AS th FROM tk),
-v AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM th),
-n AS (SELECT doc_id, v, list_sum(list_transform(v, x -> x * x)) AS nsq FROM v),
-base AS (SELECT doc_id, v, nsq FROM n WHERE nsq > 0),
-q AS (SELECT doc_id AS qid, v AS qv, nsq AS qn FROM base WHERE doc_id % 250 = 0),
-s AS (SELECT q.qid, b.doc_id, b.v,
-   1.0 - list_sum(list_transform(list_zip(q.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(q.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS d
-   FROM base b, q),
-r AS (SELECT qid, doc_id, v, round(1.0 - d, 6) AS rel,
-             row_number() OVER (PARTITION BY qid ORDER BY d, doc_id) AS rank
-      FROM s)
-SELECT qid, doc_id, rel, v FROM r WHERE rank <= 30 ORDER BY qid, doc_id
-"""
-    rows = duckdb.connect().execute(cand_sql).fetchall()
-    by_q: dict[int, list] = {}
-    for qid, doc_id, rel, v in rows:
-        by_q.setdefault(int(qid), []).append((int(doc_id), float(rel), v))
-    vals = []
-    for qid in sorted(by_q):
-        ids = [t[0] for t in by_q[qid]]
-        rel = [t[1] for t in by_q[qid]]
-        V = [t[2] for t in by_q[qid]]
-        chosen, objs = mmr_select_numpy(ids, rel, V, k=10, lamb=0.5)
-        for rnk, (d, o) in enumerate(zip(chosen, objs), 1):
-            vals.append(f"({qid},{d},{o!r},{rnk})")
-    sql = f"""
-WITH m(qid, doc_id, objective, rank) AS (VALUES {", ".join(vals)})
-SELECT qid, doc_id, objective, rank FROM m
-"""
-    return {"mmr_rerank": sql}
-
-
-def _hybrid_scale_oracles() -> dict[str, str]:
-    """Full value oracles for the BQ-indexed hybrid/MMR scale twins
-    (q_hybrid_rrf_scale / q_mmr_scale): the deterministic BQ candidate
-    stage is recomputed at oracle-generation time with the SAME arithmetic
-    as BQIndex (float64 mean over the id-sorted nsq>0 matrix, bit =
-    x > mean, (hamming, id) lexsort — the bq_knn convention), the
-    candidate sets embed as literals, and DuckDB re-runs the
-    integer-cosine refine — plus, for the hybrid, the BM25 CTEs and the
-    RRF rounding ladder — on top.  The index-controlled part (WHICH rows
-    are refined) is therefore hash-checked end to end."""
-    import os
-
-    path = f"{_ORACLE_SF_DIR}/documents.parquet"
-    if not os.path.exists(path):
-        return {}
-    import duckdb
-    import numpy as np
-
-    from bigvectorbench_spark.operators.retrieval import mmr_select_numpy
-
-    base_sql = f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM read_parquet('{path}')),
-th AS (SELECT doc_id, {_TH} AS th FROM tk),
-v AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM th),
-n AS (SELECT doc_id, v, list_sum(list_transform(v, x -> x * x)) AS nsq FROM v)
-SELECT doc_id, v FROM n WHERE nsq > 0 ORDER BY doc_id
-"""
-    rows = duckdb.connect().execute(base_sql).fetchall()
-    if not rows:
-        return {}
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    means = X.mean(axis=0)            # BQIndex.fit: id-sorted float64 mean
-    bits = X > means[None, :]
-    qmask = ids % 250 == 0
-    qids_, qbits = ids[qmask], bits[qmask]
-
-    def _cand_pairs(n_cand: int) -> str:
-        out = []
-        for qi, q in enumerate(qids_):
-            ham = (bits != qbits[qi][None, :]).sum(axis=1)
-            top = ids[np.lexsort((ids, ham))[:n_cand]]
-            out.extend(f"({int(q)},{int(i)})" for i in top)
-        return ", ".join(out)
-
-    # Shared hashed-embedding CTE text (the mmr_rerank oracle's), built on
-    # the registered `documents` view for the final oracle SQL.
-    emb_ctes = f"""
-vtk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-vth AS (SELECT doc_id, {_TH} AS th FROM vtk),
-vv AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM vth),
-vn AS (SELECT doc_id, v, list_sum(list_transform(v, x -> x * x)) AS nsq FROM vv),
-vbase AS (SELECT doc_id, v, nsq FROM vn WHERE nsq > 0),
-vq AS (SELECT doc_id AS qid, v AS qv, nsq AS qn FROM vbase WHERE doc_id % 250 = 0)"""
-
-    hybrid_sql = f"""
-WITH cand(qid, doc_id) AS (VALUES {_cand_pairs(160)}),
-tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-d AS (SELECT doc_id, tk, len(tk) AS dl FROM tk),
-stats AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE / count(*) AS avgdl FROM d),
-q AS (SELECT doc_id AS qid, list_sort(list_distinct(tk))[1:3] AS terms FROM tk
-      WHERE doc_id % 250 = 0),
-qt AS (SELECT DISTINCT qid, unnest(terms) AS term FROM q),
-post AS (SELECT doc_id, dl, unnest(tk) AS term FROM d),
-tfs AS (SELECT term, doc_id, dl, count(*) AS tf FROM post GROUP BY term, doc_id, dl),
-hits AS (SELECT t.* FROM tfs t WHERE term IN (SELECT term FROM qt)),
-dfr AS (SELECT term, count(*) AS df FROM hits GROUP BY term),
-sc AS (SELECT qt.qid, h.doc_id,
-              round(ln(1.0 + (s.n - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                    (h.tf::DOUBLE * (1.2 + 1.0)) /
-                    (h.tf::DOUBLE + 1.2 * (1.0 - 0.75 + 0.75 * h.dl::DOUBLE / s.avgdl)),
-                    9)::DECIMAL(28,10) AS term_score
-       FROM hits h JOIN qt ON h.term = qt.term
-       JOIN dfr ON h.term = dfr.term CROSS JOIN stats s),
-agg AS (SELECT qid, doc_id, CAST(round(sum(term_score), 6) AS DOUBLE) AS score
-        FROM sc GROUP BY qid, doc_id),
-lexr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-         FROM agg QUALIFY rank <= 20),
-{emb_ctes},
-vs AS (SELECT c.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM cand c JOIN vbase b ON b.doc_id = c.doc_id JOIN vq ON vq.qid = c.qid),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
-rr AS (SELECT qid, doc_id, score,
-              row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-       FROM f)
-SELECT qid, doc_id, score, rank FROM rr WHERE rank <= 10
-"""
-
-    # mmr_scale: refine the embedded BQ top-240 candidates to the cosine
-    # top-30 in DuckDB (rounded relevance + integer vectors), then the
-    # SAME numpy greedy — the mmr_rerank oracle with indexed candidates.
-    mmr_cand_sql = f"""
-WITH cand(qid, doc_id) AS (VALUES {_cand_pairs(240)}),
-tk AS (SELECT doc_id, {_TOKENS} AS tk FROM read_parquet('{path}')),
-th AS (SELECT doc_id, {_TH} AS th FROM tk),
-v AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM th),
-n AS (SELECT doc_id, v, list_sum(list_transform(v, x -> x * x)) AS nsq FROM v),
-base AS (SELECT doc_id, v, nsq FROM n WHERE nsq > 0),
-q AS (SELECT doc_id AS qid, v AS qv, nsq AS qn FROM base WHERE doc_id % 250 = 0),
-s AS (SELECT c.qid, b.doc_id, b.v,
-   1.0 - list_sum(list_transform(list_zip(q.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(q.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS d
-   FROM cand c JOIN base b ON b.doc_id = c.doc_id JOIN q ON q.qid = c.qid),
-r AS (SELECT qid, doc_id, v, round(1.0 - d, 6) AS rel,
-             row_number() OVER (PARTITION BY qid ORDER BY d, doc_id) AS rank
-      FROM s)
-SELECT qid, doc_id, rel, v FROM r WHERE rank <= 30 ORDER BY qid, doc_id
-"""
-    mrows = duckdb.connect().execute(mmr_cand_sql).fetchall()
-    by_q: dict[int, list] = {}
-    for qid, doc_id, rel, v in mrows:
-        by_q.setdefault(int(qid), []).append((int(doc_id), float(rel), v))
-    vals = []
-    for qid in sorted(by_q):
-        cids = [t[0] for t in by_q[qid]]
-        rel = [t[1] for t in by_q[qid]]
-        V = [t[2] for t in by_q[qid]]
-        chosen, objs = mmr_select_numpy(cids, rel, V, k=10, lamb=0.5)
-        for rnk, (dd, o) in enumerate(zip(chosen, objs), 1):
-            vals.append(f"({qid},{dd},{o!r},{rnk})")
-    mmr_scale_sql = f"""
-WITH m(qid, doc_id, objective, rank) AS (VALUES {", ".join(vals)})
-SELECT qid, doc_id, objective, rank FROM m
-"""
-    # hybrid_sparse_scale: BOTH legs indexed — the sparse leg replays the
-    # full weight ladder PLUS the impact-pruning row_number cut at the
-    # auto_m cap (deterministic SQL: w is 6-dp rounded, ties by doc_id,
-    # so both engines cut identical keep-sets); the dense leg reuses the
-    # embedded BQ candidates + integer-cosine refine; the RRF tail is the
-    # hybrid_sparse_rrf ladder.  m resolves via sparse.auto_m over the
-    # documents row count — the same n_docs the declared queries pass
-    # (a metadata-only parquet count; the 0.04 coefficient carries enough
-    # slack that all-docs vs tokenized-docs never moves m materially,
-    # and at the oracle corpora both land on the floor).
-    from bigvectorbench_spark.operators.sparse import auto_m
-
-    n_rows = duckdb.connect().execute(
-        f"SELECT count(*) FROM read_parquet('{path}')").fetchone()[0]
-    m_auto = auto_m(int(n_rows))
-    hybrid_sparse_sql = f"""
-WITH cand(qid, doc_id) AS (VALUES {_cand_pairs(160)}),
-tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-ftk AS (SELECT doc_id,
-               list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS ft
-        FROM tk0),
-sstats AS (SELECT count(*)::DOUBLE AS n FROM ftk WHERE len(ft) > 0),
-spost AS (SELECT doc_id, unnest(ft) AS term FROM ftk),
-stfs AS (SELECT term, doc_id, count(*) AS tf FROM spost GROUP BY term, doc_id),
-sdfr AS (SELECT term, count(*) AS df FROM stfs GROUP BY term),
-sw AS (SELECT t.term, t.doc_id,
-              round((1.0 + ln(t.tf::DOUBLE)) * ln(s.n / sdfr.df::DOUBLE), 6) AS w
-       FROM stfs t JOIN sdfr ON t.term = sdfr.term CROSS JOIN sstats s),
-swp AS (SELECT term, doc_id, w FROM (
-            SELECT term, doc_id, w,
-                   row_number() OVER (PARTITION BY term
-                                      ORDER BY w DESC, doc_id) AS pr
-            FROM sw) WHERE pr <= {m_auto}),
-sqw AS (SELECT doc_id AS qid, term, w AS qwv FROM sw WHERE doc_id % 250 = 0),
-ssc AS (SELECT sqw.qid, swp.doc_id, round(swp.w * sqw.qwv, 9)::DECIMAL(28,10) AS c
-        FROM swp JOIN sqw ON swp.term = sqw.term),
-sagg AS (SELECT qid, doc_id, CAST(round(sum(c), 6) AS DOUBLE) AS score
-         FROM ssc GROUP BY qid, doc_id),
-lexr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)
-                AS rank
-         FROM sagg QUALIFY rank <= 20),
-{emb_ctes},
-vs AS (SELECT c.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM cand c JOIN vbase b ON b.doc_id = c.doc_id JOIN vq ON vq.qid = c.qid),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
-rr AS (SELECT qid, doc_id, score,
-              row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)
-              AS rank
-       FROM f)
-SELECT qid, doc_id, score, rank FROM rr WHERE rank <= 10
-"""
-    return {"hybrid_rrf_scale": hybrid_sql, "mmr_scale": mmr_scale_sql,
-            "hybrid_sparse_scale": hybrid_sparse_sql}
-
-
-def _mv_scale_oracles() -> dict[str, str]:
-    """Value oracle for the mv-ann indexed scale twin (q_mv_scale): the
-    per-position BQ candidate stage is recomputed at oracle-generation
-    time with the SAME arithmetic as BQIndex (float64 mean thresholds
-    over the entity-id-sorted position matrix, bit = x > mean,
-    (hamming, id) lexsort top-40 — the bq_knn / _hybrid_scale_oracles
-    convention), the candidate sets embed as (qid, id, position)
-    literals, and DuckDB re-runs the exact-L2 refine (top-10 per
-    position by raw fold distance, ties by id), the 9-dp DECIMAL
-    WeightedRanker ladder, and the rank-on-rounded-score window.  The
-    index-controlled part — WHICH entities each position refines — is
-    therefore hash-checked end to end.  The parity gate's oracle
-    recomputes only the query universe (the hybrid_rrf_parity shape):
-    the overlap booleans are Spark-measured and asserted TRUE."""
-    import os
-
-    path = f"{_ORACLE_SF_DIR}/embeddings.parquet"
-    if not os.path.exists(path):
-        return {}
-    import numpy as np
-    import pyarrow.parquet as pq_
-
-    tbl = pq_.read_table(path, columns=["vec_id", "embedding"])
-    ids = tbl.column("vec_id").to_numpy()
-    X = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
-    order = np.argsort(ids, kind="stable")
-    ids, X = ids[order], X[order]
-    eids = ids // 4
-    fetch, n_cand = 10, 40                 # per_vector_k=10, overfetch=4
-    vals = []
-    for j in range(4):
-        pmask = ids % 4 == j
-        e_j, X_j = eids[pmask], X[pmask]   # entity-id-sorted by construction
-        thr = X_j.mean(axis=0)             # BQIndex.fit: id-sorted f64 mean
-        bits = X_j > thr[None, :]
-        qmask = e_j % 25 == 0
-        for qe, qb in zip(e_j[qmask], bits[qmask]):
-            ham = (bits != qb[None, :]).sum(axis=1)
-            top = e_j[np.lexsort((e_j, ham))[:n_cand]]
-            vals.extend(f"({int(qe)},{int(i)},{j})" for i in top)
-    l2_pos = _L2.format(a="t.v", b="q.v")
-    mv_scale_sql = f"""
-WITH cand(qid, id, j) AS (VALUES {", ".join(vals)}),
-e AS (SELECT vec_id // 4 AS eid, vec_id % 4 AS vi, embedding::DOUBLE[] AS v
-      FROM embeddings),
-s AS (SELECT c.qid, c.id, c.j, {l2_pos} AS d
-      FROM cand c JOIN e t ON t.eid = c.id AND t.vi = c.j
-                  JOIN e q ON q.eid = c.qid AND q.vi = c.j),
-top AS (SELECT qid, id, j, d,
-               row_number() OVER (PARTITION BY qid, j ORDER BY d, id) AS rn
-        FROM s),
-contrib AS (SELECT qid, id,
-                   round(0.25 / (1.0 + round(d, 4)), 9)::DECIMAL(28,10) AS c
-            FROM top WHERE rn <= {fetch}),
-fused AS (SELECT qid, id, CAST(round(sum(c), 6) AS DOUBLE) AS score
-          FROM contrib GROUP BY qid, id),
-r AS (SELECT qid, id, score,
-             row_number() OVER (PARTITION BY qid ORDER BY score DESC, id)
-                 AS rank
-      FROM fused)
-SELECT qid, id, score, rank FROM r WHERE rank <= 5
-"""
-    parity_sql = """
-SELECT count(*) AS n_queries, TRUE AS mean_overlap_ok, TRUE AS min_overlap_ok
-FROM (SELECT DISTINCT vec_id // 4 AS eid FROM embeddings) WHERE eid % 25 = 0
-"""
-    return {"mv_scale": mv_scale_sql, "mv_scale_parity": parity_sql}
 
 
 def oracle_sql() -> dict[str, str]:
-    l2 = _L2.format(a="t.v", b="q.v")
-    p = dd._MERSENNE
-    perms = "[" + ", ".join(f"[{a}, {b}]" for a, b in dd._perm_params(64)) + "]"
-    from bigvectorbench_spark.operators.projection import projection_matrix
-    jl_mat = "[" + ", ".join(
-        "[" + ", ".join(repr(float(x)) for x in row) + "]"
-        for row in projection_matrix(64, 16, seed=1)
-    ) + "]"
-    return (_ann_oracles() | _bpe_oracle() | _classifier_oracle()
-            | _mmr_oracle() | _hybrid_scale_oracles()
-            | _mv_scale_oracles()) | {
-        "hybrid_rrf_parity": _HYBRID_PARITY_SQL,
-        "iud_final_state": _IUD_FINAL_STATE_SQL,
-        "ivf_recall": _RECALL_GATE_SQL,
-        "ivf_auto_recall": _ivf_auto_recall_sql(),
-        "filter_ivf_recall": _RECALL_GATE_SQL,
-        "pq_recall": _RECALL_GATE_SQL,
-        "bq_recall": _RECALL_GATE_SQL,
-        "sq8_knn": _SQ8_KNN_SQL,
-        "sq8_recall": _RECALL_GATE_SQL,
-        "sparse_knn": _SPARSE_KNN_SQL,
-        "sparse_filter_knn": _SPARSE_FILTER_KNN_SQL,
-        "sparse_filter_adaptive": _SPARSE_FILTER_ADAPTIVE_SQL,
-        "sparse_prune_recall": _SPARSE_GATE_SQL,
-        "sparse_quantile_recall": _SPARSE_GATE_SQL,
-        "opq_recall": _RECALL_GATE_SQL,
-        "srp_recall": _SRP_RECALL_SQL,
-        "hnsw_recall": _HNSW_RECALL_SQL,
-        "hnsw_delta_report": _HNSW_DELTA_REPORT_SQL,
-        "hnsw_scale_recall": _HNSW_SCALE_RECALL_SQL,
-        "sketch_bounds": _SKETCH_BOUNDS_SQL,
-        "knn_euclid": _knn_oracle(where_q="vec_id % 50 = 0", dist=l2),
-        "knn_euclid_gemm": _knn_oracle(where_q="vec_id % 50 = 0", dist=l2,
-                                       cols="qid, id, rank"),
-        # hnsw at ef >= shard size is exact (connectivity-repaired graph,
-        # hnsw.py) — the oracle is the exact kNN ranking
-        "hnsw_knn": _knn_oracle(where_q="vec_id % 50 = 0", dist=l2,
-                                cols="qid, id, rank"),
-        # delta absorb at ef >= shard size: base and arrival shards are
-        # BOTH exact, so absorb-then-search == the exact kNN ranking
-        "hnsw_delta_knn": _knn_oracle(where_q="vec_id % 50 = 0", dist=l2,
-                                      cols="qid, id, rank"),
-        "knn_angular": _knn_oracle(
-            where_q="vec_id % 50 = 0",
-            dist=("1.0 - list_sum(list_transform(list_zip(t.v, q.v), x -> x[1]*x[2])) / "
-                  "(sqrt(list_sum(list_transform(t.v, x -> x*x))) * "
-                  "sqrt(list_sum(list_transform(q.v, x -> x*x))))"),
-        ),
-        "knn_hamming": _knn_oracle(
-            where_q="vec_id % 50 = 0",
-            dist=("list_sum(list_transform(list_zip(t.v, q.v), "
-                  "x -> CASE WHEN (x[1] > 0) = (x[2] > 0) THEN 0.0 ELSE 1.0 END)) / len(t.v)"),
-            round_n=6,
-        ),
-        # Packed form: DuckDB builds the same sign-bit string as a BIT value
-        # and scores with bit_count(xor) — genuine bit arithmetic mirroring
-        # Spark's ARRAY<BIGINT> popcount words.
-        "knn_hamming_packed": """
-WITH t AS (SELECT vec_id AS id,
-           list_aggregate(list_transform(embedding::DOUBLE[],
-               x -> CASE WHEN x > 0 THEN '1' ELSE '0' END), 'string_agg', '')::BIT AS b
-           FROM embeddings),
-q AS (SELECT id AS qid, b FROM t WHERE id % 50 = 0),
-s AS (SELECT q.qid, t.id,
-             bit_count(xor(t.b, q.b))::DOUBLE / bit_length(t.b) AS d
-      FROM q CROSS JOIN t),
-r AS (SELECT qid, id, round(d, 6) + 0.0 AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 10
-""",
-        "knn_jaccard": f"""
-WITH d AS (SELECT doc_id, list_sort(list_distinct({_TOKENS})) AS items FROM documents),
-q AS (SELECT doc_id AS qid, items FROM d WHERE doc_id % 100 = 0),
-s AS (SELECT q.qid, d.doc_id AS id,
-             1.0 - len(list_intersect(d.items, q.items))::DOUBLE /
-                   len(list_distinct(list_concat(d.items, q.items))) AS dist
-      FROM q CROSS JOIN d),
-v AS (SELECT * FROM s WHERE dist < 1.0 - 1e-5),
-r AS (SELECT qid, id, round(dist, 6) AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY dist, id) AS rank FROM v)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 5
-""",
-        "filter_knn_eq": _knn_oracle(where_q="vec_id % 50 = 0", dist=l2,
-                                     join="JOIN", cond="ON t.label = q.label"),
-        "filter_knn_range": _knn_oracle(
-            where_q="vec_id % 50 = 0", dist=l2, join="JOIN",
-            cond="ON t.label >= q.label - 2 AND t.label <= q.label + 2"),
-        # two-filter conjunction: equality on label AND range on the
-        # derived second label (id mod 7), both inside the one join
-        "filter_knn_2label": _knn_oracle(
-            where_q="vec_id % 50 = 0", dist=l2, join="JOIN",
-            cond=("ON t.label = q.label AND t.id % 7 >= q.qid % 7 - 1 "
-                  "AND t.id % 7 <= q.qid % 7 + 1")),
-        "mv_knn": f"""
-WITH e AS (SELECT vec_id // 4 AS eid, vec_id % 4 AS vi, embedding::DOUBLE[] AS v FROM embeddings),
-ent AS (SELECT eid, array_agg(v ORDER BY vi) AS vs FROM e GROUP BY eid),
-q AS (SELECT eid AS qid, vs AS qv FROM ent WHERE eid < 5),
-s AS (SELECT q.qid, ent.eid AS id,
-             list_sum(list_transform(list_zip(ent.vs, q.qv),
-                 p -> {_L2.format(a="p[1]", b="p[2]")})) / 4.0 AS d
-      FROM q CROSS JOIN ent),
-r AS (SELECT qid, id, round(d, 4) AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 5
-""",
-        # The post-filter plan is approximate vs true filtered kNN but
-        # deterministic given the overfetch rule: top-30 by (dist, id)
-        # (fetch = k·1.5/selectivity), predicate check, re-rank top-10.
-        "postfilter_knn": f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v, label AS qlabel FROM embeddings
-      WHERE vec_id % 50 = 0),
-s AS (SELECT q.qid, t.id, {_L2.format(a="t.v", b="q.v")} AS d, t.label, q.qlabel
-      FROM q CROSS JOIN t),
-over_f AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rn FROM s),
-kept AS (SELECT qid, id, d FROM over_f WHERE rn <= 30 AND label <= qlabel),
-r AS (SELECT qid, id, round(d, 4) AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM kept)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 10
-""",
-        # WeightedRanker fusion is deterministic given the per-position
-        # top-``fetch`` candidate sets (ties broken by ascending id at both
-        # levels), so it oracles exactly: per-(qid, position) top-10, score
-        # w/(1+dist), sum per (qid, id), final top-5 by score desc.
-        "mv_knn_fused": f"""
-WITH e AS (SELECT vec_id // 4 AS eid, vec_id % 4 AS vi, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT eid AS qid, vi AS j, v AS qv FROM e WHERE eid < 5),
-s AS (SELECT q.qid, e.eid AS id, q.j, {_L2.format(a="e.v", b="q.qv")} AS d
-      FROM q JOIN e ON e.vi = q.j),
-top AS (SELECT qid, id, j, d,
-               row_number() OVER (PARTITION BY qid, j ORDER BY d, id) AS rn FROM s),
-fused AS (SELECT qid, id, sum(0.25 / (1.0 + d)) AS score
-          FROM top WHERE rn <= 10 GROUP BY qid, id),
-r AS (SELECT qid, id, round(score, 6) AS score,
-             row_number() OVER (PARTITION BY qid ORDER BY score DESC, id) AS rank FROM fused)
-SELECT qid, id, score, rank FROM r WHERE rank <= 5
-""",
-        "mm_knn": _knn_oracle(where_q="vec_id % 50 = 1", dist=l2),
-        "groundtruth_pack": f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v, label FROM embeddings WHERE vec_id % 50 = 0),
-s AS (SELECT q.qid, t.id, {l2} AS d FROM q JOIN t ON t.label = q.label),
-r AS (SELECT qid, id, d, row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rn FROM s),
-c AS (SELECT q.qid, coalesce(k.c, 0) AS c
-      FROM q LEFT JOIN (SELECT qid, count(*) AS c FROM r WHERE rn <= 60 GROUP BY qid) k
-      ON q.qid = k.qid)
-SELECT qid, rn AS pos, id AS neighbor, round(d, 4) AS dist FROM r WHERE rn <= 60
-UNION ALL
-SELECT c.qid, t.i AS pos, (-1)::BIGINT AS neighbor, 'inf'::DOUBLE AS dist
-FROM c CROSS JOIN range(1, 61) t(i) WHERE t.i > c.c
-""",
-        # JL projection: the seeded 16×64 matrix is embedded as a literal;
-        # the same left-to-right double fold computes each coordinate,
-        # rounded to 6 dp before distance ranking on both engines.
-        "jl_knn": f"""
-WITH t0 AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-pr AS (SELECT id, list_transform({jl_mat}::DOUBLE[][], row ->
-           round(list_sum(list_transform(list_zip(v, row), x -> x[1]*x[2])), 6)) AS v
-       FROM t0),
-q AS (SELECT id AS qid, v FROM pr WHERE id % 50 = 0),
-s AS (SELECT q.qid, pr.id, {_L2.format(a="pr.v", b="q.v")} AS d FROM q CROSS JOIN pr),
-r AS (SELECT qid, id, round(d, 4) AS dist,
-             row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, dist, rank FROM r WHERE rank <= 10
-""",
-        "recall_summary": f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
-full_r AS (SELECT q.qid, t.id,
-                  row_number() OVER (PARTITION BY q.qid ORDER BY {l2}, t.id) AS rn
-           FROM q CROSS JOIN t),
-lo AS (SELECT qid, v[1:32] AS v FROM q),
-lot AS (SELECT id, v[1:32] AS v FROM t),
-low_r AS (SELECT lo.qid, lot.id,
-                 row_number() OVER (PARTITION BY lo.qid ORDER BY {_L2.format(a="lot.v", b="lo.v")}, lot.id) AS rn
-          FROM lo CROSS JOIN lot),
-tt AS (SELECT qid, id FROM full_r WHERE rn <= 10),
-rr AS (SELECT qid, id FROM low_r WHERE rn <= 10),
-pq AS (SELECT tt.qid, round(count(rr.id)::DOUBLE / 10.0, 6) AS recall
-       FROM tt LEFT JOIN rr ON tt.qid = rr.qid AND tt.id = rr.id GROUP BY tt.qid)
-SELECT round(avg(recall), 6) AS mean_recall,
-       round(coalesce(stddev_pop(recall), 0.0), 6) AS std_recall,
-       count(*) AS n_queries
-FROM pq
-""",
-        "best_search_time": """
-WITH per_run AS (
-  SELECT event_type,
-         CAST(round(sum(CAST(value AS DECIMAL(18,6))), 6) AS DOUBLE) / count(*) AS mean_time
-  FROM events GROUP BY event_type)
-SELECT round(min(mean_time), 6) AS best_search_time FROM per_run
-""",
-        "train_test_split": """
-SELECT CASE WHEN (vec_id * 2654435761) % 100 < 80 THEN 'train' ELSE 'test' END AS split,
-       count(*) AS n_rows, CAST(sum(vec_id) AS BIGINT) AS id_sum
-FROM embeddings GROUP BY 1
-""",
-        "recall_lowdim_vs_full": f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
-full_r AS (SELECT q.qid, t.id,
-                  row_number() OVER (PARTITION BY q.qid ORDER BY {l2}, t.id) AS rn
-           FROM q CROSS JOIN t),
-lo AS (SELECT qid, v[1:32] AS v FROM q),
-lot AS (SELECT id, v[1:32] AS v FROM t),
-low_r AS (SELECT lo.qid, lot.id,
-                 row_number() OVER (PARTITION BY lo.qid ORDER BY {_L2.format(a="lot.v", b="lo.v")}, lot.id) AS rn
-          FROM lo CROSS JOIN lot),
-tt AS (SELECT qid, id FROM full_r WHERE rn <= 10),
-rr AS (SELECT qid, id FROM low_r WHERE rn <= 10)
-SELECT tt.qid, round(count(rr.id)::DOUBLE / 10.0, 6) AS recall
-FROM tt LEFT JOIN rr ON tt.qid = rr.qid AND tt.id = rr.id
-GROUP BY tt.qid
-""",
-        "topk_per_group": """
-WITH r AS (SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS o_totalprice,
-                  row_number() OVER (PARTITION BY o_custkey
-                                     ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders)
-SELECT o_custkey, o_orderkey, o_totalprice, rn FROM r WHERE rn <= 3
-""",
-        "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_base_price,
-       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-""",
-        "revenue_by_nation": """
-SELECT n_name,
-       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-""",
-        "customers_semi_returns": """
-SELECT c_custkey, c_name FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-              WHERE o.o_custkey = c.c_custkey
-                AND l.l_returnflag = 'R' AND l.l_quantity >= 45)
-""",
-        "customers_anti_urgent": """
-SELECT c_custkey, c_name, c_mktsegment FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-""",
-        "corpus_rollup": """
-SELECT source, lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents GROUP BY ROLLUP(source, lang)
-""",
-        "user_gap_stats": """
-WITH g AS (SELECT user_id,
-                  epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id
-                                                        ORDER BY ts, event_id)) AS gap_us
-           FROM events),
-f AS (SELECT * FROM g WHERE gap_us IS NOT NULL)
-SELECT user_id, count(*) AS n_gaps,
-       sum(gap_us)::BIGINT // count(*) AS mean_gap_us,
-       max(gap_us) AS max_gap_us
-FROM f GROUP BY user_id
-""",
-        "revenue_running": """
-WITH daily AS (SELECT o_orderpriority, date_trunc('day', o_orderdate)::TIMESTAMP AS day,
-                      sum(o_totalprice::DECIMAL(18,2)) AS day_total
-               FROM orders GROUP BY 1, 2)
-SELECT o_orderpriority, day,
-       CAST(round(day_total, 2) AS DOUBLE) AS day_total,
-       CAST(round(sum(day_total) OVER (PARTITION BY o_orderpriority ORDER BY day
-                ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS running_total
-FROM daily
-""",
-        "lang_pivot": """
-SELECT source,
-       count(*) FILTER (lang = 'de') AS de,
-       count(*) FILTER (lang = 'en') AS en,
-       count(*) FILTER (lang = 'es') AS es,
-       count(*) FILTER (lang = 'fr') AS fr,
-       count(*) FILTER (lang = 'zh') AS zh
-FROM documents GROUP BY source
-""",
-        "quality_deciles": f"""
-WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk FROM documents),
-s AS (SELECT doc_id,
-             len(tk)::DOUBLE AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM tk),
-q AS (SELECT doc_id,
-             round(0.3 * least(ntok / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS q
-      FROM s),
-d AS (SELECT q, ntile(10) OVER (ORDER BY q, doc_id) AS decile FROM q)
-SELECT decile::BIGINT AS decile, count(*) AS n_docs,
-       CAST(round(sum(q::DECIMAL(18,6)), 6) AS DOUBLE) / count(*) AS mean_q
-FROM d GROUP BY decile
-""",
-        # Spark's max(struct(value, event_id)) = max value then max id;
-        # mirrored as (value DESC, event_id DESC) row_number.
-        "peak_events": """
-WITH r AS (SELECT event_type, event_id, value,
-                  row_number() OVER (PARTITION BY event_type
-                                     ORDER BY value DESC, event_id DESC) AS rn
-           FROM events)
-SELECT event_type, event_id, round(value, 6) AS peak_value FROM r WHERE rn = 1
-""",
-        "top_revenue_orders": """
-WITH r AS (
-  SELECT o_orderkey, o_orderdate,
-         CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderdate >= TIMESTAMP '2000-01-01'
-  GROUP BY o_orderkey, o_orderdate)
-SELECT o_orderkey, o_orderdate, revenue FROM r ORDER BY revenue DESC, o_orderkey LIMIT 10
-""",
-        "events_hourly": """
-SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n_events
-FROM events GROUP BY 1, 2
-""",
-        "sessionize": """
-WITH o AS (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev FROM events),
-m AS (SELECT user_id, ts,
-             CASE WHEN prev IS NULL OR ts - prev >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS brk
-      FROM o),
-g AS (SELECT user_id, ts,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS grp
-      FROM m)
-SELECT user_id, min(ts) AS session_start, max(ts) + INTERVAL 30 MINUTE AS session_end,
-       count(*) AS n_events
-FROM g GROUP BY user_id, grp
-""",
-        "asof_clicks": """
-WITH c0 AS (SELECT user_id, ts, event_id, value,
-                   row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-            FROM events WHERE event_type = 'click'),
-c AS (SELECT user_id, ts, event_id, value FROM c0 WHERE rn = 1),
-p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-j AS (SELECT p.event_id, p.user_id, p.ts,
-             c.ts AS m_ts, c.event_id AS m_eid, c.value AS m_val
-      FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts)
-SELECT event_id, user_id, ts,
-       CASE WHEN m_ts >= ts - INTERVAL 1 HOUR THEN m_ts END AS click_ts,
-       CASE WHEN m_ts >= ts - INTERVAL 1 HOUR THEN m_eid END AS click_event_id,
-       CASE WHEN m_ts >= ts - INTERVAL 1 HOUR THEN round(m_val, 6) END AS click_value
-FROM j
-""",
-        "interval_clicks": """
-SELECT p.event_id, p.user_id, p.ts, c.ts AS m_ts, c.event_id AS m_click_id
-FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
-JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-  ON p.user_id = c.user_id
- AND c.ts >= p.ts - INTERVAL 15 MINUTE
- AND c.ts <= p.ts + INTERVAL 15 MINUTE
-""",
-        "clicks_before_purchase": """
-WITH e AS (SELECT event_id, user_id, ts, event_type,
-                  CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-                  epoch_us(ts) AS us
-           FROM events WHERE event_type IN ('click', 'purchase')),
-w AS (SELECT *, sum(is_click) OVER (PARTITION BY user_id ORDER BY us
-          RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW) AS n_clicks
-      FROM e)
-SELECT event_id, user_id, ts, n_clicks::BIGINT AS n_clicks
-FROM w WHERE event_type = 'purchase'
-""",
-        "doclen_percentiles": """
-SELECT source,
-       round(quantile_cont(n_chars, 0.5), 6) AS p50,
-       round(quantile_cont(n_chars, 0.9), 6) AS p90,
-       round(quantile_cont(n_chars, 0.99), 6) AS p99
-FROM documents GROUP BY source
-""",
-        "latency_percentiles": """
-SELECT round(quantile_cont(value, 0.5) * 1000, 6) AS p5,
-       round(quantile_cont(value, 0.9) * 1000, 6) AS p9,
-       round(quantile_cont(value, 0.95) * 1000, 6) AS p95,
-       round(quantile_cont(value, 0.99) * 1000, 6) AS p99
-FROM events
-""",
-        "qps_by_type": """
-SELECT event_type,
-       round(1.0 / (CAST(round(sum(CAST(value AS DECIMAL(18,6))), 6) AS DOUBLE) / count(*)), 6) AS qps
-FROM events GROUP BY event_type
-""",
-        "pareto_frontier": """
-WITH pts AS (SELECT event_type,
-                    CAST(round(sum(CAST(value AS DECIMAL(18,6))), 6) AS DOUBLE) / count(*) AS x,
-                    count(*) AS y
-             FROM events GROUP BY event_type),
-s AS (SELECT *, max(x) OVER (ORDER BY y DESC, x DESC
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS best
-      FROM pts)
-SELECT event_type, round(x, 6) AS x, y FROM s WHERE best IS NULL OR x > best
-""",
-        "corpus_stats": """
-SELECT source, count(*) AS n_docs, count(DISTINCT lang) AS n_langs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-FROM documents GROUP BY source
-""",
-        "dedup_exact": f"""
-WITH k AS (SELECT doc_id, md5(array_to_string({_TOKENS}, ' ')) AS text_key FROM documents)
-SELECT text_key, count(*) AS n_docs, min(doc_id) AS canonical_id FROM k GROUP BY text_key
-""",
-        "ngram_jaccard_dups": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES} AS s FROM tk WHERE len(tk) >= 3),
-p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             len(list_intersect(a.s, b.s))::DOUBLE /
-             (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM p WHERE jaccard >= 0.5
-""",
-        "media_pipeline": """
-WITH m AS (SELECT doc_id AS media_id,
-                  ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-                  text,
-                  (n_chars % 512 + 64)::INT AS w,
-                  (n_chars % 256 + 48)::INT AS h,
-                  (n_chars % 100 + 1)::INT AS n_frames
-           FROM documents),
-s AS (SELECT *, least(1.0, 256 / greatest(w, h)::DOUBLE) AS scale FROM m)
-SELECT media_id, kind,
-       octet_length(encode(text)) AS n_bytes,
-       md5(text) AS payload_md5,
-       ceil(w * scale)::BIGINT AS target_width,
-       ceil(h * scale)::BIGINT AS target_height,
-       CASE WHEN kind = 'video' THEN ((n_frames - 1) // 10 + 1)::BIGINT
-            ELSE 0 END AS n_sampled
-FROM s
-""",
-        # Audio: recompute the integer sawtooth samples closed-form (the
-        # exact int16 values wav_encode wrote and wav_decode recovered —
-        # pure integer arithmetic, engine-identical), then the same exact
-        # dyadic-rational feature arithmetic as audio_features: squares
-        # ≤30 bits accumulated in double are exact, sqrt is IEEE
-        # correctly-rounded, so rms/zcr/peak match bit-for-bit.
-        "audio_features": """
-WITH ids AS (SELECT doc_id, 50 + (doc_id % 40) * 10 AS f,
-                    1600 + (doc_id % 4) * 400 AS n,
-                    8192 + (doc_id % 8) * 1024 AS a
-             FROM documents WHERE doc_id % 5 = 0),
-s AS (SELECT doc_id, n,
-             list_transform(range(0, n),
-                            t -> ((t * f) % 8000) * (2 * a) // 8000 - a) AS smp
-      FROM ids)
-SELECT doc_id AS media_id, n::BIGINT AS n_samples, 8000::BIGINT AS sample_rate,
-       round(sqrt(list_sum(list_transform(smp,
-             v -> (v / 32768.0) * (v / 32768.0))) / n), 6) AS rms,
-       list_sum(list_transform(range(2, n + 1),
-             i -> CASE WHEN smp[i-1] * smp[i] < 0 THEN 1 ELSE 0 END))::BIGINT
-           AS zero_crossings,
-       round(list_max(list_transform(smp, v -> abs(v))) / 32768.0, 6) AS peak
-FROM s
-""",
-        # Video: recompute the integer gradient frames closed-form (the
-        # exact bytes avi_encode wrote into the DIB rows and avi_decode
-        # recovered), then the same exact integer-sum feature arithmetic
-        # as video_features.  Byte sums are invariant to the BGR
-        # triplication (3 identical channels), so summing the formula
-        # values matches summing the stored bytes.
-        "video_features": """
-WITH ids AS (SELECT doc_id, 4 + doc_id % 4 AS n, 8 + (doc_id % 3) * 4 AS h,
-                    12 + (doc_id % 4) * 4 AS w
-             FROM documents WHERE doc_id % 10 = 0)
-SELECT doc_id AS media_id, n::BIGINT AS n_frames, h::BIGINT AS height,
-       w::BIGINT AS width, CAST(10.0 AS DOUBLE) AS fps,
-       round(list_sum(list_transform(range(0, n * h * w), i ->
-             ((i % w) * 3 + ((i // w) % h) * 5 + (i // (w * h)) * 7) % 256))
-             / (n * h * w) / 255.0, 6) AS mean_luma8,
-       round(list_sum(list_transform(range(0, (n - 1) * h * w), i ->
-             abs((((i % w) * 3 + ((i // w) % h) * 5 + (i // (w * h) + 1) * 7) % 256)
-               - (((i % w) * 3 + ((i // w) % h) * 5 + (i // (w * h)) * 7) % 256))))
-             / ((n - 1) * h * w) / 255.0, 6) AS motion
-FROM ids
-""",
-        # MinHash: portable shingle hashes → 64-perm signatures (identical
-        # universal-hash params embedded below) → 16 bands × 4 rows → bucket
-        # collisions → exact-Jaccard verification.  Spark hashes the band
-        # string with xxhash64 purely as a bucket key; grouping is identical
-        # to grouping on the string itself, which the oracle uses directly.
-        "minhash_dups": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
-       FROM tk WHERE len(tk) >= 3),
-sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
-            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
-        FROM sh),
-bands AS (SELECT doc_id, t.b AS band,
-                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
-          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b)),
-cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM bands a JOIN bands b
-           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-v AS (SELECT c.id_a, c.id_b,
-             len(list_intersect(x.s, y.s))::DOUBLE /
-             (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) AS jaccard
-      FROM cand c JOIN sh x ON x.doc_id = c.id_a JOIN sh y ON y.doc_id = c.id_b)
-SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM v WHERE jaccard >= 0.5
-""",
-        # lsh_dedup: the same signature/band pipeline as minhash_dups,
-        # but instead of emitting pairs, each (band, bucket) elects
-        # min(doc_id) and a doc keeps iff it wins every bucket it
-        # occupies.  Docs too short to shingle have no bands -> kept.
-        "lsh_dedup": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
-       FROM tk WHERE len(tk) >= 3),
-sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
-            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
-        FROM sh),
-bands AS (SELECT doc_id, t.b AS band,
-                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
-          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b)),
-mins AS (SELECT band, bucket, min(doc_id) AS m FROM bands
-         GROUP BY band, bucket),
-keep AS (SELECT b.doc_id, min(m.m) AS keeper
-         FROM bands b JOIN mins m USING (band, bucket) GROUP BY b.doc_id)
-SELECT t.source, count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN k.keeper IS NULL OR k.keeper = t.doc_id
-                THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       sum(CASE WHEN k.keeper IS NOT NULL AND k.keeper != t.doc_id
-                THEN 1 ELSE 0 END)::BIGINT AS n_dropped
-FROM tk t LEFT JOIN keep k ON t.doc_id = k.doc_id
-GROUP BY t.source
-""",
-        # corpus_curation_scale: the lsh_dedup election CTEs feeding the
-        # corpus_curation quality/rollup CTEs — dup stage swapped, all
-        # downstream arithmetic identical (unrounded threshold, DECIMAL
-        # mean).
-        "corpus_curation_scale": f"""
-WITH tk AS (SELECT doc_id, source, lang, text, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
-       FROM tk WHERE len(tk) >= 3),
-sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
-            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
-        FROM sh),
-bands AS (SELECT doc_id, t.b AS band,
-                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
-          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b)),
-mins AS (SELECT band, bucket, min(doc_id) AS m FROM bands
-         GROUP BY band, bucket),
-keep AS (SELECT b.doc_id, min(m.m) AS keeper
-         FROM bands b JOIN mins m USING (band, bucket) GROUP BY b.doc_id),
-drops AS (SELECT doc_id AS id FROM keep WHERE keeper != doc_id),
-feat AS (SELECT doc_id, len(tk) AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM tk),
-q AS (SELECT doc_id, ntok,
-             0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0) AS quality_raw,
-             round(0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS quality
-      FROM feat),
-st AS (SELECT t.source, t.lang, q.ntok, q.quality,
-              CASE WHEN t.doc_id IN (SELECT id FROM drops) THEN 'dup'
-                   WHEN q.quality_raw < 0.8 THEN 'low_quality'
-                   ELSE 'kept' END AS status
-       FROM tk t JOIN q ON t.doc_id = q.doc_id)
-SELECT source, lang, count(*) AS n_docs,
-       sum(CASE WHEN status = 'dup' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_dup,
-       sum(CASE WHEN status = 'low_quality' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_quality,
-       sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       sum(CASE WHEN status = 'kept' THEN ntok ELSE 0 END)::BIGINT AS tokens_kept,
-       CASE WHEN sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END) > 0
-            THEN round(sum(CASE WHEN status = 'kept'
-                                THEN quality::DECIMAL(18,6) END)::DOUBLE
-                       / sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END), 6)
-       END::DOUBLE AS mean_kept_quality
-FROM st GROUP BY source, lang
-""",
-        # SimHash: per-token portable hashes → per-bit majority votes →
-        # 60-bit signature → 4 × 16-bit bands (pigeonhole complete for
-        # hamming ≤ 3) → bit_count(xor) verification.
-        "simhash_dups": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-hs AS (SELECT doc_id, list_transform(tk, x -> {_PHASH.format(x='x')}) AS hs FROM tk),
-sim AS (SELECT doc_id, list_sum(list_transform(range(0, 60), b ->
-            CASE WHEN coalesce(list_sum(list_transform(hs, h ->
-                     CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)), 0) > 0
-                 THEN (1::BIGINT << b) ELSE 0 END)) AS simhash
-        FROM hs),
-bands AS (SELECT doc_id, simhash, t.b AS band,
-                 (simhash >> (16 * t.b)) & 65535 AS chunk
-          FROM sim CROSS JOIN unnest(range(0, 4)) AS t(b)),
-cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-                a.simhash AS sa, b.simhash AS sb
-         FROM bands a JOIN bands b
-           ON a.band = b.band AND a.chunk = b.chunk AND a.doc_id < b.doc_id)
-SELECT id_a, id_b, bit_count(xor(sa, sb))::BIGINT AS hamming
-FROM cand WHERE bit_count(xor(sa, sb)) <= 3
-""",
-        "dedup_components": f"""
-WITH RECURSIVE tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES} AS s FROM tk WHERE len(tk) >= 3),
-p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-            (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-e AS (SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p),
-reach AS (SELECT a, b FROM e
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a WHERE e.b != r.a)
-SELECT a AS id, least(a, min(b)) AS component_id FROM reach GROUP BY a
-""",
-        # End-to-end curation: all-pairs jaccard >= 0.5 (exact copies are
-        # jaccard = 1.0) -> recursive-CTE components -> min-id keep-list ->
-        # quality gate at 0.8 -> source x lang disposition accounting.
-        "corpus_curation": f"""
-WITH RECURSIVE tk AS (SELECT doc_id, source, lang, text, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES} AS s FROM tk WHERE len(tk) >= 3),
-p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-            (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5),
-e AS (SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p),
-reach AS (SELECT a, b FROM e
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a WHERE e.b != r.a),
-comp AS (SELECT a AS id, least(a, min(b)) AS component_id FROM reach GROUP BY a),
-drops AS (SELECT id FROM comp WHERE id != component_id),
-feat AS (SELECT doc_id, len(tk) AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM tk),
-q AS (SELECT doc_id, ntok,
-             0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0) AS quality_raw,
-             round(0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS quality
-      FROM feat),
--- the keep/drop threshold reads the UNROUNDED score (half-ulp 6-dp
--- boundary rounding must not flip integer counts — ADVICE r5); the
--- rounded value feeds only the emitted mean
-st AS (SELECT t.source, t.lang, q.ntok, q.quality,
-              CASE WHEN t.doc_id IN (SELECT id FROM drops) THEN 'dup'
-                   WHEN q.quality_raw < 0.8 THEN 'low_quality'
-                   ELSE 'kept' END AS status
-       FROM tk t JOIN q ON t.doc_id = q.doc_id)
-SELECT source, lang, count(*) AS n_docs,
-       sum(CASE WHEN status = 'dup' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_dup,
-       sum(CASE WHEN status = 'low_quality' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_quality,
-       sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       coalesce(sum(CASE WHEN status = 'kept' THEN ntok END), 0)::BIGINT AS tokens_kept,
-       CASE WHEN sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END) > 0
-            THEN CAST(round(CAST(sum(CASE WHEN status = 'kept'
-                                     THEN quality::DECIMAL(18,6) END) AS DOUBLE)
-                          / sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END), 6) AS DOUBLE)
-       END AS mean_kept_quality
-FROM st GROUP BY source, lang
-""",
-        "bm25_topk": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-d AS (SELECT doc_id, tk, len(tk) AS dl FROM tk),
-stats AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE / count(*) AS avgdl FROM d),
-q AS (SELECT doc_id AS qid, list_sort(list_distinct(tk))[1:3] AS terms FROM tk
-      WHERE doc_id % 500 = 0),
-qt AS (SELECT DISTINCT qid, unnest(terms) AS term FROM q),
-post AS (SELECT doc_id, dl, unnest(tk) AS term FROM d),
-tfs AS (SELECT term, doc_id, dl, count(*) AS tf FROM post GROUP BY term, doc_id, dl),
-hits AS (SELECT t.* FROM tfs t WHERE term IN (SELECT term FROM qt)),
-dfr AS (SELECT term, count(*) AS df FROM hits GROUP BY term),
-sc AS (SELECT qt.qid, h.doc_id,
-              round(ln(1.0 + (s.n - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                    (h.tf::DOUBLE * (1.2 + 1.0)) /
-                    (h.tf::DOUBLE + 1.2 * (1.0 - 0.75 + 0.75 * h.dl::DOUBLE / s.avgdl)),
-                    9)::DECIMAL(28,10) AS term_score
-       FROM hits h JOIN qt ON h.term = qt.term
-       JOIN dfr ON h.term = dfr.term CROSS JOIN stats s),
-agg AS (SELECT qid, doc_id, CAST(round(sum(term_score), 6) AS DOUBLE) AS score
-        FROM sc GROUP BY qid, doc_id),
-r AS (SELECT qid, doc_id, score,
-             row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-      FROM agg)
-SELECT qid, doc_id, score, rank FROM r WHERE rank <= 10
-""",
-        # hybrid_rrf_topk: BOTH constituent pipelines re-derived (the bm25
-        # CTEs at %250/top-20 and the hashed-embed cosine CTEs at top-20),
-        # then the RRF tail with the identical rounding ladder.
-        "hybrid_rrf_topk": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-d AS (SELECT doc_id, tk, len(tk) AS dl FROM tk),
-stats AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE / count(*) AS avgdl FROM d),
-q AS (SELECT doc_id AS qid, list_sort(list_distinct(tk))[1:3] AS terms FROM tk
-      WHERE doc_id % 250 = 0),
-qt AS (SELECT DISTINCT qid, unnest(terms) AS term FROM q),
-post AS (SELECT doc_id, dl, unnest(tk) AS term FROM d),
-tfs AS (SELECT term, doc_id, dl, count(*) AS tf FROM post GROUP BY term, doc_id, dl),
-hits AS (SELECT t.* FROM tfs t WHERE term IN (SELECT term FROM qt)),
-dfr AS (SELECT term, count(*) AS df FROM hits GROUP BY term),
-sc AS (SELECT qt.qid, h.doc_id,
-              round(ln(1.0 + (s.n - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                    (h.tf::DOUBLE * (1.2 + 1.0)) /
-                    (h.tf::DOUBLE + 1.2 * (1.0 - 0.75 + 0.75 * h.dl::DOUBLE / s.avgdl)),
-                    9)::DECIMAL(28,10) AS term_score
-       FROM hits h JOIN qt ON h.term = qt.term
-       JOIN dfr ON h.term = dfr.term CROSS JOIN stats s),
-agg AS (SELECT qid, doc_id, CAST(round(sum(term_score), 6) AS DOUBLE) AS score
-        FROM sc GROUP BY qid, doc_id),
-lexr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-         FROM agg QUALIFY rank <= 20),
-vth AS (SELECT doc_id, {_TH} AS th FROM tk),
-vv AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM vth),
-vn AS (SELECT doc_id, v, list_sum(list_transform(v, x -> x * x)) AS nsq FROM vv),
-vbase AS (SELECT doc_id, v, nsq FROM vn WHERE nsq > 0),
-vq AS (SELECT doc_id AS qid, v AS qv, nsq AS qn FROM vbase WHERE doc_id % 250 = 0),
-vs AS (SELECT vq.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM vbase b, vq),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
-rr AS (SELECT qid, doc_id, score,
-              row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-       FROM f)
-SELECT qid, doc_id, score, rank FROM rr WHERE rank <= 10
-""",
-        # retrieval_eval: the full bm25 pipeline re-derived, then qrels
-        # (distinct-term overlap counts on the same semi-joined postings)
-        # and the three ranked-list metrics.  The nDCG discount weights are
-        # the SAME Python-computed literals the Spark operator folds in
-        # (retrieval.ndcg_weights), so no engine's log2 enters either plan;
-        # gains/discount products round to 9 dp and accumulate in DECIMAL
-        # exactly as retrieval_eval does.
-        "retrieval_eval": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-d AS (SELECT doc_id, tk, len(tk) AS dl FROM tk),
-stats AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE / count(*) AS avgdl FROM d),
-q AS (SELECT doc_id AS qid, list_sort(list_distinct(tk))[1:3] AS terms FROM tk
-      WHERE doc_id % 100 = 0),
-qt AS (SELECT DISTINCT qid, unnest(terms) AS term FROM q),
-post AS (SELECT doc_id, dl, unnest(tk) AS term FROM d),
-tfs AS (SELECT term, doc_id, dl, count(*) AS tf FROM post GROUP BY term, doc_id, dl),
-hits AS (SELECT t.* FROM tfs t WHERE term IN (SELECT term FROM qt)),
-dfr AS (SELECT term, count(*) AS df FROM hits GROUP BY term),
-sc AS (SELECT qt.qid, h.doc_id,
-              round(ln(1.0 + (s.n - dfr.df + 0.5) / (dfr.df + 0.5)) *
-                    (h.tf::DOUBLE * (1.2 + 1.0)) /
-                    (h.tf::DOUBLE + 1.2 * (1.0 - 0.75 + 0.75 * h.dl::DOUBLE / s.avgdl)),
-                    9)::DECIMAL(28,10) AS term_score
-       FROM hits h JOIN qt ON h.term = qt.term
-       JOIN dfr ON h.term = dfr.term CROSS JOIN stats s),
-agg AS (SELECT qid, doc_id, CAST(round(sum(term_score), 6) AS DOUBLE) AS score
-        FROM sc GROUP BY qid, doc_id),
-r AS (SELECT qid, doc_id,
-             row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
-      FROM agg),
-wt AS (SELECT {_NDCG_W} AS wl),
-qr AS (SELECT qt.qid, h.doc_id, count(*)::INT AS rel
-       FROM hits h JOIN qt ON h.term = qt.term GROUP BY qt.qid, h.doc_id),
-ret AS (SELECT r.qid, r.doc_id, r.rank, coalesce(qr.rel, 0) AS rel
-        FROM r LEFT JOIN qr ON qr.qid = r.qid AND qr.doc_id = r.doc_id
-        WHERE r.rank <= 10),
-perq AS (SELECT qid, count(*) AS n_retrieved,
-                sum(CAST(round((power(2.0, rel) - 1.0) * wl[rank], 9)
-                         AS DECIMAL(28,10))) AS dcg,
-                sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS hits,
-                min(CASE WHEN rel > 0 THEN rank END) AS frank
-         FROM ret CROSS JOIN wt GROUP BY qid),
-ideal AS (SELECT qid, sum(CAST(round((power(2.0, rel) - 1.0) * wl[irank], 9)
-                              AS DECIMAL(28,10))) AS idcg
-          FROM (SELECT qid, doc_id, rel,
-                       row_number() OVER (PARTITION BY qid ORDER BY rel DESC, doc_id) AS irank
-                FROM qr) CROSS JOIN wt
-          WHERE irank <= 10 GROUP BY qid),
-nrel AS (SELECT qid, count(*) AS n_relevant FROM qr GROUP BY qid)
-SELECT p.qid, p.n_retrieved, coalesce(n.n_relevant, 0) AS n_relevant,
-       CASE WHEN coalesce(n.n_relevant, 0) > 0
-            THEN round(p.hits::DOUBLE / n.n_relevant::DOUBLE, 6) ELSE 0.0
-       END AS recall_at_10,
-       CASE WHEN p.frank IS NOT NULL
-            THEN round(1.0 / p.frank::DOUBLE, 6) ELSE 0.0 END AS mrr_at_10,
-       CASE WHEN i.idcg IS NOT NULL AND i.idcg > 0
-            THEN round(p.dcg::DOUBLE / i.idcg::DOUBLE, 6) ELSE 0.0
-       END AS ndcg_at_10
-FROM perq p LEFT JOIN nrel n USING (qid) LEFT JOIN ideal i USING (qid)
-""",
-        "top_terms_per_source": f"""
-WITH tk AS (SELECT source, {_TOKENS} AS tk FROM documents),
-e AS (SELECT source, unnest(tk) AS term FROM tk),
-c AS (SELECT source, term, count(*) AS n_occurrences FROM e GROUP BY source, term),
-r AS (SELECT source, term, n_occurrences,
-             row_number() OVER (PARTITION BY source ORDER BY n_occurrences DESC, term) AS rank
-      FROM c)
-SELECT source, term, n_occurrences, rank FROM r WHERE rank <= 10
-""",
-        "embedding_cosine_dups": """
-WITH u AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT id, list_transform(v, x -> x / sqrt(list_sum(list_transform(v, y -> y*y)))) AS u
-      FROM u),
-p AS (SELECT a.id AS id_a, b.id AS id_b,
-             list_sum(list_transform(list_zip(a.u, b.u), x -> x[1]*x[2])) AS cosine
-      FROM n a JOIN n b ON a.id < b.id)
-SELECT id_a, id_b, round(cosine, 6) AS cosine FROM p WHERE cosine >= 0.4
-""",
-        "doc_fingerprints": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, {_SHINGLES} AS s FROM tk),
-h AS (SELECT doc_id,
-             list_sort(list_distinct(list_transform(s,
-                 x -> ('0x' || substr(md5(x), 1, 15))::BIGINT))) AS hs
-      FROM sh)
-SELECT doc_id, array_to_string(hs[1:8], ',') AS fingerprint FROM h
-""",
-        "token_stats": f"""
-WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk FROM documents)
-SELECT doc_id, len(tk) AS n_tokens, length(text) AS n_chars,
-       round(CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END, 6)
-           AS avg_token_len,
-       round(CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END, 6)
-           AS stop_ratio
-FROM tk
-""",
-        # quality/lang-id: the documents corpus is lowercase word soup (no
-        # punctuation/digits/CJK), so the engine-specific regex character
-        # classes agree exactly and the heuristics are SQL-expressible.
-        "quality_scores": f"""
-WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk FROM documents),
-s AS (SELECT doc_id,
-             len(tk)::DOUBLE AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM tk)
-SELECT doc_id,
-       round(0.3 * least(ntok / 64.0, 1.0)
-           + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-           + 0.2 * least(swr * 4.0, 1.0)
-           + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS quality
-FROM s
-""",
-        "lang_id": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-j AS (SELECT doc_id, tk, list_aggregate(tk, 'string_agg', '') AS joined FROM tk),
-h AS (SELECT doc_id,
-  len(list_filter(tk, w -> list_contains(['der','die','und','das','ist','ein','nicht','mit'], w))) AS h_de,
-  len(list_filter(tk, w -> list_contains(['the','and','of','to','is','a','in','that'], w))) AS h_en,
-  len(list_filter(tk, w -> list_contains(['el','los','las','es','una','que','por','con'], w))) AS h_es,
-  len(list_filter(tk, w -> list_contains(['le','la','et','les','des','est','une','dans'], w))) AS h_fr,
-  coalesce((SELECT sum(length(joined) - length(replace(joined, m, '')))
-   FROM unnest(['的','是','了','在','和','有','我','不']) AS t(m)), 0) AS h_zh
-  FROM j),
-b AS (SELECT doc_id, list_sort([
-        {{'n': -h_de, 'l': 'de'}}, {{'n': -h_en, 'l': 'en'}}, {{'n': -h_es, 'l': 'es'}},
-        {{'n': -h_fr, 'l': 'fr'}}, {{'n': -h_zh::BIGINT, 'l': 'zh'}}])[1] AS best
-      FROM h)
-SELECT doc_id, CASE WHEN best.n < 0 THEN best.l ELSE 'en' END AS pred_lang FROM b
-""",
-        # --- curation family (round 6).  The PII fixture construction is
-        # mirrored verbatim from _docs_pii; regexes are Java-regex/RE2
-        # portable (no lookaround/backrefs) and DuckDB's regexp_replace
-        # needs the 'g' flag to match Spark's replace-all semantics.
-        # NOT an f-string: the regex quantifiers {2,}/{4}/{1,3} would be
-        # eaten as format fields — the fixture expression is spliced in
-        # with .replace instead.
-        "pii_scrub": """
-WITH aug AS (SELECT source, @PII_AUG@ AS text FROM documents),
-s AS (SELECT source,
-  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS n_email,
-  len(regexp_extract_all(text, '\\+1-555-[0-9]{4}')) AS n_phone,
-  len(regexp_extract_all(text, '([0-9]{1,3}\\.){3}[0-9]{1,3}')) AS n_ip,
-  length(text) - length(
-    regexp_replace(regexp_replace(regexp_replace(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-      '\\+1-555-[0-9]{4}', '[PHONE]', 'g'),
-      '([0-9]{1,3}\\.){3}[0-9]{1,3}', '[IP]', 'g')) AS delta
-  FROM aug)
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(n_email)::BIGINT AS n_emails,
-       sum(n_phone)::BIGINT AS n_phones,
-       sum(n_ip)::BIGINT AS n_ips,
-       sum(CASE WHEN n_email + n_phone + n_ip > 0 THEN 1 ELSE 0 END)::BIGINT AS n_docs_with_pii,
-       sum(delta)::BIGINT AS chars_redacted
-FROM s GROUP BY source
-""".replace("@PII_AUG@", _PII_AUG),
-        "gopher_quality": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-mf AS (SELECT doc_id, max(c) AS maxrun FROM (
-         SELECT doc_id, count(*) AS c FROM (
-           SELECT doc_id, unnest(tk) AS w FROM tk) GROUP BY doc_id, w)
-       GROUP BY doc_id),
-s AS (SELECT t.doc_id, source, len(tk) AS n,
-  CASE WHEN len(tk) = 0 THEN 0.0
-       ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-  len(list_intersect(list_distinct(tk),
-      ['the','and','of','to','is','a','in','that'])) AS nstop,
-  CASE WHEN len(tk) = 0 THEN 1.0
-       ELSE coalesce(maxrun, 0)::DOUBLE / len(tk) END AS rep
-  FROM tk t LEFT JOIN mf USING (doc_id)),
-f AS (SELECT source,
-  CASE WHEN n < 50 OR n > 100000 THEN 1 ELSE 0 END AS fail_len,
-  CASE WHEN awl < 3.0 OR awl > 10.0 THEN 1 ELSE 0 END AS fail_wordlen,
-  CASE WHEN nstop < 2 THEN 1 ELSE 0 END AS fail_stop,
-  CASE WHEN rep > 0.2 THEN 1 ELSE 0 END AS fail_rep
-  FROM s)
-SELECT source, count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN fail_len + fail_wordlen + fail_stop + fail_rep = 0
-                THEN 1 ELSE 0 END)::BIGINT AS n_pass,
-       sum(fail_len)::BIGINT AS n_fail_len,
-       sum(fail_wordlen)::BIGINT AS n_fail_wordlen,
-       sum(fail_stop)::BIGINT AS n_fail_stop,
-       sum(fail_rep)::BIGINT AS n_fail_rep
-FROM f GROUP BY source
-""",
-        "decontaminate": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, source, doc_id % 97 = 0 AS is_eval,
-             list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-                 i -> {_rwh("i", 8)})) AS whs
-      FROM tkh),
-e AS (SELECT DISTINCT unnest(whs) AS wh FROM w WHERE is_eval),
-t AS (SELECT doc_id, source, whs FROM w WHERE NOT is_eval),
-c AS (SELECT DISTINCT doc_id FROM
-        (SELECT doc_id, unnest(whs) AS wh FROM t) x JOIN e USING (wh))
-SELECT source, count(*)::BIGINT AS n_train,
-       count(c.doc_id)::BIGINT AS n_contaminated
-FROM t LEFT JOIN c USING (doc_id) GROUP BY source
-""",
-        # cm_heavy_hitters: watchlist + exact counts re-derived; the CM
-        # contract booleans (no undercount, ≤ ε·N overshoot) asserted.
-        "cm_heavy_hitters": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-t AS (SELECT unnest(tk) AS term FROM tk),
-c AS (SELECT term, count(*) AS exact_count FROM t GROUP BY term
-      ORDER BY exact_count DESC, term LIMIT 10)
-SELECT term, exact_count::BIGINT AS exact_count,
-       TRUE AS overcount_ok, TRUE AS within_eps_ok
-FROM c
-""",
-        # weighted_sample / stratified_sample: the sampling pipelines
-        # replayed end-to-end — portable md5 u on the 2^40 grid, A-ES key
-        # -ln(u)/w rounded 9 dp, (key, id) / (u, id) ranking.
-        "weighted_sample": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-w AS (SELECT doc_id, len(tk)::DOUBLE AS w FROM tk WHERE len(tk) > 0),
-u AS (SELECT doc_id, w,
-             (({_PHASH.format(x="doc_id::VARCHAR || ':1'")}) % 1099511627776
-              + 1)::DOUBLE / 1099511627776.0::DOUBLE AS u
-      FROM w)
-SELECT doc_id, round(-ln(u) / w, 9) AS skey
-FROM u ORDER BY skey, doc_id LIMIT 100
-""",
-        "stratified_sample": f"""
-WITH u AS (SELECT doc_id, source,
-                  (({_PHASH.format(x="doc_id::VARCHAR || ':1'")})
-                   % 1099511627776 + 1)::DOUBLE
-                  / 1099511627776.0::DOUBLE AS u
-           FROM documents),
-r AS (SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source ORDER BY u, doc_id)
-             AS srank
-      FROM u)
-SELECT doc_id, source, srank FROM r WHERE srank <= 5
-""",
-        # sparse_delta_report: base/delta unigram+bigram postings, df
-        # tables, and the idf-drift arithmetic replayed — 9-dp per-term
-        # drift, DECIMAL sum, double division, 6-dp mean.
-        "sparse_delta_report": f"""
-WITH tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-ftk AS (SELECT doc_id,
-               list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS ft
-        FROM tk0),
-bt AS (SELECT DISTINCT doc_id, unnest(ft) AS term FROM ftk
-       WHERE doc_id % 10 != 7),
-dt AS (SELECT DISTINCT doc_id, unnest(ft) AS term FROM ftk
-       WHERE doc_id % 10 = 7),
-df0 AS (SELECT term, count(*) AS df0 FROM bt GROUP BY term),
-dfd AS (SELECT term, count(*) AS dfd FROM dt GROUP BY term),
-s AS (SELECT (SELECT count(DISTINCT doc_id) FROM bt) AS n0,
-             (SELECT count(DISTINCT doc_id) FROM dt) AS nd),
-touched AS (SELECT df0.df0, dfd.dfd, s.n0, s.nd
-            FROM df0 JOIN dfd USING (term) CROSS JOIN s),
-dr AS (SELECT round(abs(ln(n0::DOUBLE / df0::DOUBLE)
-                      - ln((n0 + nd)::DOUBLE / (df0 + dfd)::DOUBLE)),
-               9)::DECIMAL(28,10) AS d
-       FROM touched)
-SELECT s.n0::BIGINT AS n_base_docs, s.nd::BIGINT AS n_delta_docs,
-       (SELECT count(*) FROM df0)::BIGINT AS vocab_base,
-       (SELECT count(*) FROM dfd WHERE term NOT IN (SELECT term FROM df0))
-           ::BIGINT AS vocab_new,
-       (SELECT sum(df0) FROM df0)::BIGINT AS postings_base,
-       (SELECT sum(dfd) FROM dfd)::BIGINT AS postings_delta,
-       (SELECT count(*) FROM dr)::BIGINT AS terms_touched,
-       (SELECT round(CAST(sum(d) AS DOUBLE) / count(*), 6) FROM dr)
-           AS mean_idf_drift
-FROM s
-""",
-        "sparse_delta_parity": _SPARSE_GATE_SQL,
-        # hybrid_sparse_rrf: the sparse-IP leg (unigram+bigram TF-IDF,
-        # %250 queries, top-20) + the hashed-embed cosine leg + the RRF
-        # tail — every stage the rounding-ladder twin of its Spark form.
-        "hybrid_sparse_rrf": f"""
-WITH tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-ftk AS (SELECT doc_id,
-               list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS ft
-        FROM tk0),
-sstats AS (SELECT count(*)::DOUBLE AS n FROM ftk WHERE len(ft) > 0),
-spost AS (SELECT doc_id, unnest(ft) AS term FROM ftk),
-stfs AS (SELECT term, doc_id, count(*) AS tf FROM spost GROUP BY term, doc_id),
-sdfr AS (SELECT term, count(*) AS df FROM stfs GROUP BY term),
-sw AS (SELECT t.term, t.doc_id,
-              round((1.0 + ln(t.tf::DOUBLE)) * ln(s.n / sdfr.df::DOUBLE), 6) AS w
-       FROM stfs t JOIN sdfr ON t.term = sdfr.term CROSS JOIN sstats s),
-sqw AS (SELECT doc_id AS qid, term, w AS qwv FROM sw WHERE doc_id % 250 = 0),
-ssc AS (SELECT sqw.qid, sw.doc_id, round(sw.w * sqw.qwv, 9)::DECIMAL(28,10) AS c
-        FROM sw JOIN sqw ON sw.term = sqw.term),
-sagg AS (SELECT qid, doc_id, CAST(round(sum(c), 6) AS DOUBLE) AS score
-         FROM ssc GROUP BY qid, doc_id),
-lexr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)
-                AS rank
-         FROM sagg QUALIFY rank <= 20),
-vth AS (SELECT doc_id, {_TH} AS th FROM tk0),
-vv AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM vth),
-vn AS (SELECT doc_id, v, list_sum(list_transform(v, x -> x * x)) AS nsq FROM vv),
-vbase AS (SELECT doc_id, v, nsq FROM vn WHERE nsq > 0),
-vq AS (SELECT doc_id AS qid, v AS qv, nsq AS qn FROM vbase WHERE doc_id % 250 = 0),
-vs AS (SELECT vq.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM vbase b, vq),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
-rr AS (SELECT qid, doc_id, score,
-              row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)
-              AS rank
-       FROM f)
-SELECT qid, doc_id, score, rank FROM rr WHERE rank <= 10
-""",
-        # bloom_decontaminate: the exact counts are the decontaminate CTEs
-        # verbatim (independently recomputed); the booleans assert the
-        # Bloom contract — superset (no false negatives) and the fp bound.
-        "bloom_decontaminate": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, source, doc_id % 97 = 0 AS is_eval,
-             list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-                 i -> {_rwh("i", 8)})) AS whs
-      FROM tkh),
-e AS (SELECT DISTINCT unnest(whs) AS wh FROM w WHERE is_eval),
-t AS (SELECT doc_id, source, whs FROM w WHERE NOT is_eval),
-c AS (SELECT DISTINCT doc_id FROM
-        (SELECT doc_id, unnest(whs) AS wh FROM t) x JOIN e USING (wh))
-SELECT source, count(*)::BIGINT AS n_train,
-       count(c.doc_id)::BIGINT AS n_contaminated,
-       TRUE AS superset_ok, TRUE AS fp_extra_ok
-FROM t LEFT JOIN c USING (doc_id) GROUP BY source
-""",
-        "substring_dedup": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, source,
-             unnest(list_transform(range(1, greatest(len(tk) - 13, 1)),
-                 i -> {_rwh("i", 15)})) AS wh
-      FROM tkh),
-cnt AS (SELECT wh, count(*) AS n_occ FROM w GROUP BY wh),
-d AS (SELECT doc_id, count(*) AS nd
-      FROM w JOIN cnt USING (wh) WHERE n_occ > 1 GROUP BY doc_id)
-SELECT docs.source, count(*)::BIGINT AS n_docs,
-       count(d.doc_id)::BIGINT AS n_dup_docs,
-       coalesce(sum(nd), 0)::BIGINT AS n_dup_occurrences
-FROM (SELECT doc_id, source FROM documents) docs
-LEFT JOIN d USING (doc_id) GROUP BY docs.source
-""",
-        "bpe_token_stats": f"""
-WITH aug AS (SELECT doc_id, {_PII_AUG} AS text FROM documents)
-SELECT doc_id, len({_TOKENS}) AS n_ws_tokens,
-       len(list_filter(regexp_extract_all(text, '{tx.BPE_RE.replace(chr(39), chr(39) * 2)}'),
-           t -> trim(t) != '')) AS n_bpe_tokens
-FROM aug
-""",
-        "substring_spans": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 13, 1)),
-             i -> {{'pos': i, 'wh': {_rwh("i", 15)}}})) AS u
-      FROM tkh),
-p AS (SELECT doc_id, u.pos AS pos, u.wh AS wh FROM w),
-cnt AS (SELECT wh, count(*) AS n FROM p GROUP BY wh),
-d AS (SELECT doc_id, pos FROM p JOIN cnt USING (wh) WHERE n > 1),
-isl AS (SELECT doc_id, pos,
-               pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        FROM d)
-SELECT doc_id, min(pos)::BIGINT AS span_start,
-       (max(pos) - min(pos) + 15)::BIGINT AS span_len
-FROM isl GROUP BY doc_id, g
-""",
-        "lm_fluency": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-pr AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-           i -> {{'w1': tk[i], 'w2': tk[i+1]}})) AS u FROM tk),
-p AS (SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM pr),
-bg AS (SELECT w1, w2, count(*)::BIGINT AS c_bg FROM p
-       WHERE doc_id % 7 = 0 GROUP BY w1, w2),
-ctx AS (SELECT w1, sum(c_bg)::BIGINT AS c_ctx FROM bg GROUP BY w1),
-s AS (SELECT p.doc_id, l.c_bg, l.c_ctx FROM p LEFT JOIN
-        (SELECT w1, w2, c_bg, c_ctx FROM bg JOIN ctx USING (w1)) l
-        USING (w1, w2)),
-r AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-        sum(CASE WHEN c_bg IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-        sum(CASE WHEN c_bg IS NOT NULL
-                 THEN round(c_bg::DOUBLE / c_ctx, 6)::DECIMAL(18,6) END)
-            AS lik_sum
-      FROM s GROUP BY doc_id)
-SELECT doc_id, n_bigrams, n_oov,
-   CASE WHEN n_bigrams > 0
-        THEN round((n_bigrams - n_oov)::DOUBLE / n_bigrams, 6) END AS hit_rate,
-   CASE WHEN n_bigrams - n_oov > 0
-        THEN round(lik_sum::DOUBLE / (n_bigrams - n_oov), 6) END
-       AS mean_cond_lik
-FROM r
-UNION ALL
-SELECT doc_id, 0::BIGINT, 0::BIGINT, NULL::DOUBLE, NULL::DOUBLE
-FROM tk WHERE len(tk) < 2
-""",
-        # The oracle for pack_blocks is the SINGLE global window the Spark
-        # side deliberately avoids (one task at scale) — hash equality
-        # proves the two-pass distributed prefix sum computes the same
-        # stream offsets for every document.
-        "pack_blocks": f"""
-WITH tk AS (SELECT doc_id, len({_TOKENS}) AS n FROM documents),
-c AS (SELECT doc_id, n, (sum(n) OVER (ORDER BY doc_id) - n)::BIGINT AS s FROM tk)
-SELECT doc_id, n::BIGINT AS n_tokens, s AS start_off, (s + n)::BIGINT AS end_off,
-       (s // 512)::BIGINT AS first_block,
-       (CASE WHEN n > 0 THEN (s + n - 1) // 512 - s // 512 + 1
-             ELSE 0 END)::BIGINT AS n_blocks
-FROM c
-""",
-        # epoch_mix recomputes the ppm epoch factor and the Knuth-hash
-        # Bernoulli in exact integer arithmetic — the same machinery the
-        # domain_mix oracle already mirrors, extended with the
-        # full-copies + fractional-extra split.
-        "epoch_mix": """
-WITH a AS (
-  SELECT source,
-         1000000 + (regexp_extract(source, '([0-9]+)$', 1)::BIGINT % 4)
-                   * 500000 AS epochs_ppm,
-         CASE WHEN ((doc_id * 2654435761) % 4294967296) % 1000000 <
-                   (1000000 + (regexp_extract(source, '([0-9]+)$', 1)::BIGINT
-                    % 4) * 500000) % 1000000
-              THEN 1 ELSE 0 END AS x
-  FROM documents)
-SELECT source, epochs_ppm::BIGINT AS epochs_ppm, count(*)::BIGINT AS n_docs,
-       sum(epochs_ppm // 1000000 + x)::BIGINT AS n_emitted,
-       sum(x)::BIGINT AS n_extra
-FROM a GROUP BY source, epochs_ppm
-""",
-        # mix_shards materializes the oversampled copy stream (unnest ==
-        # explode) and recomputes the combined-key shard hash, so the
-        # hash check proves copy-level scatter parity end to end.
-        "mix_shards": f"""
-WITH t AS (SELECT doc_id, source, len({_TOKENS}) AS n FROM documents),
-e AS (SELECT doc_id, n,
-        1000000 + (regexp_extract(source, '([0-9]+)$', 1)::BIGINT % 4)
-                  * 500000 AS ep,
-        ((doc_id * 2654435761) % 4294967296) % 1000000 AS h
-      FROM t),
-c AS (SELECT doc_id, n,
-        ep // 1000000 + CASE WHEN h < ep % 1000000 THEN 1 ELSE 0 END AS nc
-      FROM e),
-x AS (SELECT doc_id, n, unnest(range(0, nc)) AS copy_id FROM c),
-s AS (SELECT doc_id, n,
-        (('0x' || substring(md5('42|' || doc_id::VARCHAR || '#'
-                                 || copy_id::VARCHAR), 1, 8))::BIGINT
-         % 16)::INT AS shard
-      FROM x)
-SELECT shard, count(*)::BIGINT AS n_rows,
-       count(DISTINCT doc_id)::BIGINT AS n_docs,
-       sum(n)::BIGINT AS n_tokens
-FROM s GROUP BY shard
-""",
-        # training_shards recomputes the seeded md5-prefix shard hash
-        # bit-for-bit (32-bit hex prefix → bigint, mod 32), so the hash
-        # check proves assignment parity, not just aggregate shape.
-        "training_shards": f"""
-WITH a AS (
-  SELECT doc_id, text, len({_TOKENS}) AS n,
-         (('0x' || substring(md5('42|' || doc_id::VARCHAR), 1, 8))::BIGINT
-          % 32)::INT AS shard
-  FROM documents)
-SELECT shard, count(*)::BIGINT AS n_docs, sum(n)::BIGINT AS n_tokens,
-       sum(length(text))::BIGINT AS n_chars
-FROM a GROUP BY shard
-""",
-        "block_manifest": f"""
-WITH tk AS (SELECT doc_id, len({_TOKENS}) AS n FROM documents),
-c AS (SELECT doc_id, n, (sum(n) OVER (ORDER BY doc_id) - n)::BIGINT AS s FROM tk),
-d AS (SELECT doc_id, s, s + n AS e, s // 512 AS fb, (s + n - 1) // 512 AS lb
-      FROM c WHERE n > 0),
-x AS (SELECT doc_id, s, e, unnest(range(fb, lb + 1)) AS block_id FROM d)
-SELECT block_id::BIGINT AS block_id, count(*)::BIGINT AS n_docs,
-       sum(least(e, (block_id + 1) * 512) - greatest(s, block_id * 512))::BIGINT
-           AS n_tokens
-FROM x GROUP BY block_id
-""",
-        "gopher_repetition": _gopher_repetition_sql(),
-        "substring_rewrite": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 13, 1)),
-             i -> {{'pos': i, 'wh': {_rwh("i", 15)}}})) AS u
-      FROM tkh),
-p AS (SELECT doc_id, u.pos AS pos, u.wh AS wh,
-             doc_id * 1048576 + u.pos AS key FROM w),
-cnt AS (SELECT wh, count(*) AS n, min(key) AS mk FROM p GROUP BY wh),
-cut AS (SELECT doc_id, unnest(range(pos, pos + 15)) AS cp
-        FROM p JOIN cnt USING (wh) WHERE n > 1 AND key != mk),
-cs AS (SELECT doc_id, list_sort(list_distinct(list(cp))) AS cps
-       FROM cut GROUP BY doc_id)
-SELECT t.doc_id, len(tk)::BIGINT AS n_tokens,
-       coalesce(len(cps), 0)::BIGINT AS n_cut,
-       coalesce(array_to_string(
-         list_transform(
-           list_filter(list_transform(range(1, len(tk) + 1),
-                                      i -> {{'p': i, 'w': tk[i]}}),
-                       s -> NOT list_contains(coalesce(cps, []), s.p)),
-           s -> s.w), ' '), '') AS text_clean
-FROM tk t LEFT JOIN cs USING (doc_id)
-""",
-        "domain_mix": """
-SELECT source,
-       ((regexp_extract(source, '([0-9]+)$', 1)::BIGINT % 4) + 1) * 250 AS target_permille,
-       count(*)::BIGINT AS n_docs,
-       sum(CASE WHEN ((doc_id * 2654435761) % 4294967296) % 1000 <
-                     ((regexp_extract(source, '([0-9]+)$', 1)::BIGINT % 4) + 1) * 250
-                THEN 1 ELSE 0 END)::BIGINT AS n_kept
-FROM documents GROUP BY source
-""",
-        # the line/page construction mirrors _docs_lines verbatim; the
-        # C4 rules themselves are re-derived with DuckDB list/regexp ops
-        "c4_line_filter": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-lines AS (SELECT doc_id, source,
-  list_transform(range(0, CAST(ceil(len(tk) / 6.0) AS BIGINT)), i ->
-    array_to_string(tk[CAST(i*6+1 AS INT) : CAST(i*6+6 AS INT)], ' ')
-    || CASE WHEN (doc_id + i) % 13 = 7 THEN ' javascript embedded here'
-            ELSE '' END
-    || (['.', '', '!', '?', ''])[CAST((doc_id + i) % 5 AS INT) + 1]) AS ls
-  FROM tk),
-pages AS (SELECT doc_id, source,
-  array_to_string(ls, chr(10))
-  || CASE WHEN doc_id % 89 = 0
-          THEN chr(10) || 'this page quotes lorem ipsum boilerplate.'
-          ELSE '' END
-  || CASE WHEN doc_id % 97 = 0
-          THEN chr(10) || 'function f() {{ return 1; }}'
-          ELSE '' END AS text FROM lines),
-kept AS (SELECT doc_id, source, text,
-  string_split(text, chr(10)) AS lns,
-  list_filter(string_split(text, chr(10)), ln ->
-    regexp_matches(ln, '[.!?"]$')
-    AND len(list_filter(string_split(ln, ' '), w -> w != '')) >= 5
-    AND NOT contains(lower(ln), 'javascript')) AS kl FROM pages),
-stat AS (SELECT source, len(lns) AS n_lines, len(kl) AS n_kept_lines,
-  CASE WHEN contains(lower(text), 'lorem ipsum') THEN 'lorem_ipsum'
-       WHEN contains(text, '{{') THEN 'brace'
-       WHEN len(kl) < 3 THEN 'too_few_lines' ELSE 'kept' END AS status,
-  length(array_to_string(kl, chr(10))) AS clean_len FROM kept)
-SELECT source, count(*)::BIGINT AS n_docs,
-  sum(CASE WHEN status = 'kept' THEN 1 ELSE 0 END)::BIGINT AS n_kept_docs,
-  sum(CASE WHEN status = 'lorem_ipsum' THEN 1 ELSE 0 END)::BIGINT
-      AS n_lorem_ipsum,
-  sum(CASE WHEN status = 'brace' THEN 1 ELSE 0 END)::BIGINT AS n_brace,
-  sum(CASE WHEN status = 'too_few_lines' THEN 1 ELSE 0 END)::BIGINT
-      AS n_too_few_lines,
-  sum(n_lines)::BIGINT AS n_lines,
-  sum(CASE WHEN status = 'kept' THEN n_kept_lines ELSE 0 END)::BIGINT
-      AS n_lines_kept,
-  sum(CASE WHEN status = 'kept' THEN clean_len ELSE 0 END)::BIGINT
-      AS chars_kept
-FROM stat GROUP BY source ORDER BY source
-""",
-        # paragraph construction mirrors _docs_paras; keep-first = min
-        # packed (doc_id, pos) key per md5-derived 60-bit paragraph hash
-        "paragraph_dedup": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-paras AS (SELECT doc_id, source,
-  list_transform(range(0, CAST(ceil(len(tk) / 8.0) AS BIGINT)), i ->
-    array_to_string(tk[CAST(i*8+1 AS INT) : CAST(i*8+8 AS INT)], ' ')) AS ps
-  FROM tk),
-occ AS (SELECT doc_id, source, u.i AS pos, u.p AS para FROM
-  (SELECT doc_id, source, unnest(list_transform(range(1, len(ps) + 1),
-     i -> {{'i': i, 'p': ps[CAST(i AS INT)]}})) AS u FROM paras)),
-hashed AS (SELECT doc_id, pos, length(para) AS plen,
-  {_PHASH.format(x='para')} AS h,
-  doc_id * 1048576 + pos AS key FROM occ),
-firsts AS (SELECT h, min(key) AS mk FROM hashed GROUP BY h),
-cuts AS (SELECT doc_id, count(*) AS n_cut, sum(plen) AS chars_cut
-  FROM hashed JOIN firsts USING (h) WHERE key != mk GROUP BY doc_id),
-docs AS (SELECT doc_id, source, len(ps) AS n_paras FROM paras)
-SELECT source, count(*)::BIGINT AS n_docs,
-  sum(n_paras)::BIGINT AS n_paras,
-  sum(coalesce(n_cut, 0))::BIGINT AS n_dup_paras,
-  sum(CASE WHEN coalesce(n_cut, 0) > 0 THEN 1 ELSE 0 END)::BIGINT
-      AS n_docs_affected,
-  sum(coalesce(chars_cut, 0))::BIGINT AS chars_removed
-FROM docs LEFT JOIN cuts USING (doc_id) GROUP BY source ORDER BY source
-""",
-        # the full composed pipeline: C4 CTEs as in c4_line_filter, line
-        # dedup as in paragraph_dedup (min packed key per md5-60bit line
-        # hash, rewrite via indexed list_filter), DSIR as in dsir_select
-        # but over the REWRITTEN text — every stage's values flow into
-        # the next, so a mismatch anywhere surfaces in the final hash
-        "llm_data_mix": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-lines AS (SELECT doc_id, source,
-  list_transform(range(0, CAST(ceil(len(tk) / 6.0) AS BIGINT)), i ->
-    array_to_string(tk[CAST(i*6+1 AS INT) : CAST(i*6+6 AS INT)], ' ')
-    || CASE WHEN (doc_id + i) % 13 = 7 THEN ' javascript embedded here'
-            ELSE '' END
-    || (['.', '', '!', '?', ''])[CAST((doc_id + i) % 5 AS INT) + 1]) AS ls
-  FROM tk),
-pages AS (SELECT doc_id, source,
-  array_to_string(ls, chr(10))
-  || CASE WHEN doc_id % 89 = 0
-          THEN chr(10) || 'this page quotes lorem ipsum boilerplate.'
-          ELSE '' END
-  || CASE WHEN doc_id % 97 = 0
-          THEN chr(10) || 'function f() {{ return 1; }}'
-          ELSE '' END AS text FROM lines),
-keptl AS (SELECT doc_id, source, text,
-  list_filter(string_split(text, chr(10)), ln ->
-    regexp_matches(ln, '[.!?"]$')
-    AND len(list_filter(string_split(ln, ' '), w -> w != '')) >= 5
-    AND NOT contains(lower(ln), 'javascript')) AS kl FROM pages),
-s1 AS (SELECT source, count(*)::BIGINT AS n_docs,
-  sum(CASE WHEN NOT contains(lower(text), 'lorem ipsum')
-            AND NOT contains(text, '{{')
-            AND len(kl) >= 3 THEN 1 ELSE 0 END)::BIGINT AS n_c4_kept
-  FROM keptl GROUP BY source),
-c4docs AS (SELECT doc_id, source, kl FROM keptl
-  WHERE NOT contains(lower(text), 'lorem ipsum')
-    AND NOT contains(text, '{{')
-    AND len(kl) >= 3),
-occ1 AS (SELECT doc_id, source, u.i AS pos, u.p AS ln FROM
-  (SELECT doc_id, source, unnest(list_transform(range(1, len(kl) + 1),
-     i -> {{'i': i, 'p': kl[CAST(i AS INT)]}})) AS u FROM c4docs)),
-hashed AS (SELECT doc_id, pos, {_PHASH.format(x='ln')} AS h,
-  doc_id * 1048576 + pos AS key FROM occ1),
-firsts AS (SELECT h, min(key) AS mk FROM hashed GROUP BY h),
-cuts AS (SELECT doc_id, list(pos) AS cps, count(*)::BIGINT AS ncut
-  FROM hashed JOIN firsts USING (h) WHERE key != mk GROUP BY doc_id),
-dedup AS (SELECT c.doc_id, c.source,
-  array_to_string(list_transform(
-    list_filter(range(1, len(c.kl) + 1),
-      i -> NOT coalesce(list_contains(u.cps, i), false)),
-    i -> c.kl[CAST(i AS INT)]), chr(10)) AS dtext,
-  coalesce(u.ncut, 0)::BIGINT AS ncut
-  FROM c4docs c LEFT JOIN cuts u ON c.doc_id = u.doc_id),
-s2 AS (SELECT source, sum(ncut)::BIGINT AS n_line_dups_removed
-  FROM dedup GROUP BY source),
-dre AS (SELECT doc_id, source, dtext AS text FROM dedup),
-dtk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM dre),
-dth AS (SELECT doc_id, source, {_TH} AS th FROM dtk),
-occ2 AS (SELECT doc_id,
-  unnest(list_transform(range(1, len(th)), i -> {_rwh('i', 2)} % 4096)) AS b
-  FROM dth),
-dist AS (SELECT b, count(*)::BIGINT AS raw_c,
-  sum(CASE WHEN doc_id % 17 = 0 THEN 1 ELSE 0 END)::BIGINT AS tgt_c
-  FROM occ2 GROUP BY b),
-tot AS (SELECT sum(raw_c)::BIGINT AS t_raw, sum(tgt_c)::BIGINT AS t_tgt
-  FROM dist),
-terms AS (SELECT b,
-  round(((tgt_c + 1)::DOUBLE / (t_tgt + 4096)::DOUBLE)
-      / ((raw_c + 1)::DOUBLE / (t_raw + 4096)::DOUBLE), 6)::DECIMAL(18,6)
-      AS term
-  FROM dist, tot),
-perdoc AS (SELECT o.doc_id, count(*)::BIGINT AS n, sum(term) AS ws
-  FROM occ2 o JOIN terms USING (b) GROUP BY o.doc_id),
-s3 AS (SELECT d.source,
-  sum(CASE WHEN p.ws >= p.n THEN 1 ELSE 0 END)::BIGINT AS n_dsir_kept,
-  sum(CASE WHEN p.ws >= p.n THEN p.n + 1 ELSE 0 END)::BIGINT AS tokens_kept,
-  round(sum(p.ws)::DOUBLE / sum(p.n), 6) AS mean_weight
-  FROM dth d LEFT JOIN perdoc p ON d.doc_id = p.doc_id GROUP BY d.source)
-SELECT s1.source, s1.n_docs, s1.n_c4_kept,
-  coalesce(s2.n_line_dups_removed, 0)::BIGINT AS n_line_dups_removed,
-  coalesce(s3.n_dsir_kept, 0)::BIGINT AS n_dsir_kept,
-  coalesce(s3.tokens_kept, 0)::BIGINT AS tokens_kept,
-  s3.mean_weight
-FROM s1 LEFT JOIN s2 USING (source) LEFT JOIN s3 USING (source)
-ORDER BY source
-""",
-        # feature-hashing embeddings: integer bucket-count vectors from
-        # the same md5-60bit token hash; cosine = 4 identically-ordered
-        # IEEE ops over exact integer dot/norms
-        "hashed_embed_knn": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-th AS (SELECT doc_id, {_TH} AS th FROM tk),
-v AS (SELECT doc_id, list_transform(range(0, 64), j ->
-   coalesce(list_sum(list_transform(th, h -> CASE WHEN h % 64 = j
-      THEN CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END
-      ELSE 0 END)), 0)) AS v FROM th),
-n AS (SELECT doc_id, v,
-   list_sum(list_transform(v, x -> x * x)) AS nsq FROM v),
-base AS (SELECT doc_id, v, nsq FROM n WHERE nsq > 0),
-q AS (SELECT doc_id AS qid, v AS qv, nsq AS qn FROM base
-      WHERE doc_id % 250 = 0),
-s AS (SELECT q.qid, b.doc_id AS id,
-   1.0 - list_sum(list_transform(list_zip(q.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(q.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS d
-   FROM base b, q),
-r AS (SELECT qid, id, d,
-   row_number() OVER (PARTITION BY qid ORDER BY d, id) AS rank FROM s)
-SELECT qid, id, round(d, 6) AS dist, rank FROM r WHERE rank <= 10
-""",
-        # corpus-delta dedup: same md5 content key, corpus-copy precedence
-        "incremental_dedup": f"""
-WITH d AS (SELECT doc_id, source,
-  md5(array_to_string({_TOKENS}, ' ')) AS k FROM documents),
-b AS (SELECT doc_id, source, k FROM d
-  WHERE ((doc_id * 2654435761) % 4294967296) % 10 = 9),
-seen AS (SELECT DISTINCT k FROM d
-  WHERE ((doc_id * 2654435761) % 4294967296) % 10 != 9),
-fb AS (SELECT k, min(doc_id) AS first_id FROM b GROUP BY k),
-s AS (SELECT b.source,
-  CASE WHEN seen.k IS NOT NULL THEN 'dup_vs_corpus'
-       WHEN b.doc_id != fb.first_id THEN 'dup_in_batch'
-       ELSE 'new' END AS status
-  FROM b LEFT JOIN seen ON b.k = seen.k JOIN fb ON b.k = fb.k)
-SELECT source, count(*)::BIGINT AS n_batch,
-  sum(CASE WHEN status = 'dup_vs_corpus' THEN 1 ELSE 0 END)::BIGINT
-      AS n_dup_vs_corpus,
-  sum(CASE WHEN status = 'dup_in_batch' THEN 1 ELSE 0 END)::BIGINT
-      AS n_dup_in_batch,
-  sum(CASE WHEN status = 'new' THEN 1 ELSE 0 END)::BIGINT AS n_new
-FROM s GROUP BY source ORDER BY source
-""",
-        # sliding-window chunking: same ceil/slice arithmetic, chunk text
-        # re-joined and length-accounted so the window content is checked
-        "doc_chunks": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-c AS (SELECT doc_id, source, tk,
-  CASE WHEN len(tk) <= 0 THEN 0
-       ELSE 1 + CAST(ceil(greatest(len(tk) - 32, 0) / 24.0) AS BIGINT)
-  END AS nc FROM tk),
-ch AS (SELECT doc_id, source,
-  unnest(list_transform(range(0, nc), i -> {{
-     'nt': len(tk[CAST(i*24 + 1 AS INT) : CAST(i*24 + 32 AS INT)]),
-     'nchars': length(array_to_string(
-         tk[CAST(i*24 + 1 AS INT) : CAST(i*24 + 32 AS INT)], ' '))}})) AS u
-  FROM c)
-SELECT source, count(DISTINCT doc_id)::BIGINT AS n_docs_chunked,
-  count(*)::BIGINT AS n_chunks,
-  sum(u.nt)::BIGINT AS n_chunk_tokens,
-  sum(CASE WHEN u.nt < 32 THEN 1 ELSE 0 END)::BIGINT AS n_short_chunks,
-  sum(u.nchars)::BIGINT AS chunk_chars
-FROM ch GROUP BY source ORDER BY source
-""",
-        # CCNet binning: the corpus lang column x the lm_fluency oracle
-        # CTEs, then the same deterministic rank -> integer-division cut
-        "ccnet_bins": f"""
-WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-langs AS (SELECT d.doc_id, d.lang, len(t.tk)::BIGINT AS n_tok
-          FROM documents d JOIN tk t USING (doc_id)),
-pr AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-           i -> {{'w1': tk[i], 'w2': tk[i+1]}})) AS u FROM tk),
-p AS (SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM pr),
-bg AS (SELECT w1, w2, count(*)::BIGINT AS c_bg FROM p
-       WHERE doc_id % 7 = 0 GROUP BY w1, w2),
-ctx AS (SELECT w1, sum(c_bg)::BIGINT AS c_ctx FROM bg GROUP BY w1),
-s AS (SELECT p.doc_id, l.c_bg, l.c_ctx FROM p LEFT JOIN
-        (SELECT w1, w2, c_bg, c_ctx FROM bg JOIN ctx USING (w1)) l
-        USING (w1, w2)),
-r AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-        sum(CASE WHEN c_bg IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-        sum(CASE WHEN c_bg IS NOT NULL
-                 THEN round(c_bg::DOUBLE / c_ctx, 6)::DECIMAL(18,6) END)
-            AS lik_sum
-      FROM s GROUP BY doc_id),
-mcl AS (SELECT doc_id,
-   CASE WHEN n_bigrams - n_oov > 0
-        THEN round(lik_sum::DOUBLE / (n_bigrams - n_oov), 6) END AS mcl
-   FROM r
-   UNION ALL
-   SELECT doc_id, NULL::DOUBLE FROM tk WHERE len(tk) < 2),
-jj AS (SELECT l.doc_id, l.lang, l.n_tok, m.mcl
-       FROM langs l JOIN mcl m USING (doc_id)),
-ranked AS (SELECT doc_id, lang, n_tok, mcl,
-   row_number() OVER (PARTITION BY lang ORDER BY mcl DESC, doc_id) AS rk,
-   count(*) OVER (PARTITION BY lang) AS cnt
-   FROM jj WHERE mcl IS NOT NULL),
-agg AS (
-  SELECT lang,
-    (['head','middle','tail'])[CAST((rk - 1) * 3 // cnt AS INT) + 1] AS bin,
-    count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens,
-    round(sum(mcl::DECIMAL(18,6))::DOUBLE / count(*), 6) AS mean_lik
-  FROM ranked GROUP BY lang, bin
-  UNION ALL
-  SELECT lang, 'unscored', count(*)::BIGINT, sum(n_tok)::BIGINT,
-         NULL::DOUBLE
-  FROM jj WHERE mcl IS NULL GROUP BY lang)
-SELECT lang, bin, n_docs, n_tokens, mean_lik FROM agg ORDER BY lang, bin
-""",
-        # alpha=0.5 temperature sampling: one IEEE sqrt per source, then
-        # pure int64 arithmetic — floor/DIV/Knuth-hash identical in both
-        # engines by construction
-        "temperature_sample": """
-WITH counts AS (SELECT source, count(*)::BIGINT AS n_docs
-  FROM documents GROUP BY source),
-w AS (SELECT source, n_docs,
-  floor(sqrt(n_docs::DOUBLE) * 1000)::BIGINT AS wu FROM counts),
-tot AS (SELECT sum(wu)::BIGINT AS t_wu, sum(n_docs)::BIGINT AS t_n FROM w),
-rates AS (SELECT source, n_docs, wu,
-  least(1000000,
-        (((t_n * 500) // 1000) * wu * 1000000) // (t_wu * n_docs))::BIGINT
-      AS p_ppm
-  FROM w, tot),
-keeps AS (SELECT d.source,
-  sum(CASE WHEN ((d.doc_id * 2654435761) % 4294967296) % 1000000 < r.p_ppm
-           THEN 1 ELSE 0 END)::BIGINT AS n_kept
-  FROM documents d JOIN rates r USING (source) GROUP BY d.source)
-SELECT r.source, r.n_docs, r.wu, r.p_ppm, k.n_kept
-FROM rates r JOIN keeps k USING (source) ORDER BY source
-""",
-        # hashed-bigram DSIR: buckets via the SAME token-hash + 2-window
-        # rolling fold the Spark side uses; each bucket ratio is the
-        # identical IEEE double op sequence rounded once to 6 dp, per-doc
-        # sums exact in DECIMAL, keep = decimal >= integer
-        "dsir_select": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, {_TH} AS th FROM tk),
-occ AS (SELECT doc_id, source,
-  unnest(list_transform(range(1, len(th)), i -> {_rwh('i', 2)} % 4096)) AS b
-  FROM tkh),
-dist AS (SELECT b, count(*)::BIGINT AS raw_c,
-  sum(CASE WHEN doc_id % 17 = 0 THEN 1 ELSE 0 END)::BIGINT AS tgt_c
-  FROM occ GROUP BY b),
-tot AS (SELECT sum(raw_c)::BIGINT AS t_raw, sum(tgt_c)::BIGINT AS t_tgt
-  FROM dist),
-terms AS (SELECT b,
-  round(((tgt_c + 1)::DOUBLE / (t_tgt + 4096)::DOUBLE)
-      / ((raw_c + 1)::DOUBLE / (t_raw + 4096)::DOUBLE), 6)::DECIMAL(18,6)
-      AS term
-  FROM dist, tot),
-perdoc AS (SELECT doc_id, any_value(source) AS source,
-  count(*)::BIGINT AS n, sum(term) AS ws
-  FROM occ JOIN terms USING (b) GROUP BY doc_id),
-alldocs AS (
-  SELECT source, n, ws, CASE WHEN ws >= n THEN 1 ELSE 0 END AS kept,
-         1 AS scored FROM perdoc
-  UNION ALL
-  SELECT source, 0, NULL, 0, 0 FROM tkh WHERE len(th) < 2)
-SELECT source, count(*)::BIGINT AS n_docs,
-  sum(scored)::BIGINT AS n_scored,
-  sum(kept)::BIGINT AS n_kept,
-  sum(n)::BIGINT AS n_bigrams,
-  round(sum(ws)::DOUBLE / sum(n), 6) AS mean_weight
-FROM alldocs GROUP BY source ORDER BY source
-""",
-    }
+    return (dense.oracles() | ann.oracles() | metrics.oracles()
+            | relational.oracles() | temporal.oracles() | dedup.oracles()
+            | mixing.oracles() | text.oracles() | sparse.oracles()
+            | hybrid.oracles())

@@ -108,8 +108,8 @@ def random_filter_ratio(spark: SparkSession, n: int = 10_000, d: int = 32,
                         ratio: float = 0.01, m_test: int = 1_000,
                         centers: int = 100, seed: int = DEFAULT_SEED):
     """Ratio-parameterized filter dataset — the reference's controlled
-    filter-ratio *creation* path (create_artificial_datasets.py:286-520,
-    VERDICT r6 missing #4): blobs; per-filter uniform int train labels at
+    filter-ratio *creation* path (create_artificial_datasets.py:286-520):
+    blobs; per-filter uniform int train labels at
     staggered magnitudes (``max_labels / 10^i``, the reference's range_set
     ladder); per-query RANGES whose widths target the requested keep
     ``ratio`` — the deterministic "average" decomposition (generate_type=
@@ -209,8 +209,8 @@ def random_text(spark: SparkSession, n: int = 4_000, vocab: int = 2_000,
 def sf_documents_text(spark: SparkSession, sf_dir: str | None = None,
                       query_mod: int = 100):
     """The driver testdata `documents` table as a text benchmark dataset
-    (VERDICT r9 ask #6 — the sparse family's Pareto points on the same
-    corpus the declared queries run): every ``query_mod``-th doc becomes
+    (the sparse family's Pareto points on the same corpus the declared
+    queries run): every ``query_mod``-th doc becomes
     an EXTERNAL query (removed from the corpus, weighed under corpus
     statistics by the sparse runner), the rest are the train corpus.
     ``sf_dir`` defaults to $SPARK_GRAFT_SF_DIR (the bench contract's

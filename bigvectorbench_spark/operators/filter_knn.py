@@ -165,7 +165,7 @@ def filtered_ivf_knn(
     id_col: str = "id",
     qid_col: str = "qid",
 ) -> DataFrame:
-    """Filtered ANN on the IVF-pruned path (VERDICT r6 ask #5): per-query
+    """Filtered ANN on the IVF-pruned path: per-query
     label predicates composed with cell pruning under the G5 selectivity
     policy — the reference's adaptive branch
     (create_artificial_datasets.py:151-285) applied to the index scan

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 from bigvectorbench_spark.operators.knn import topk_window
 
 
-# Adaptive beam width (VERDICT r6 ask #4).  Calibrated on the measured
+# Adaptive beam width.  Calibrated on the measured
 # recall/ef ladder of SCALING.md's serving-mode experiments over the iid
 # Gaussian worst-case corpus (no cluster structure — the published hardest
 # case for graph ANN):  shard 2,500 rows → ef 48 gives recall 0.90;
@@ -304,7 +304,7 @@ def build_hnsw_shards(
     every sharded ANN serving system.  Persist with
     ``df.write.parquet(...)`` — this IS the M2 index artifact.
 
-    Non-empty-bucket note (ADVICE r11): an empty hash bucket emits NO
+    Non-empty-bucket note: an empty hash bucket emits NO
     artifact row, so the frame can carry fewer than ``num_shards`` rows
     when rows ≪ num_shards·ln(num_shards) (coupon-collector regime) or
     under unlucky hashing.  Serving is unaffected (search unions

@@ -15,8 +15,8 @@ the same intent.  We provide both:
 - ``mv_knn_fused``    — the WeightedRanker analog: per-position top-k
   subqueries, union, weighted-similarity fusion, final top-k.  At scale this
   is v small jobs over the same scan instead of one wide one.
-- ``mv_indexed_fused`` — the 100× form of ``mv_knn_fused`` (VERDICT r11 ask
-  #1): the reference's execution path runs one ANN subquery per vector
+- ``mv_indexed_fused`` — the 100× form of ``mv_knn_fused``: the
+  reference's execution path runs one ANN subquery per vector
   field (milvus/module.py:422-458); here each position's candidates come
   from a per-position BQ index (packed 1-bit codes + hamming pre-rank +
   exact refine, ``operators/bq.py``) instead of a brute scan of every

@@ -32,8 +32,8 @@ from bigvectorbench_spark.operators.knn import (
     CLUSTER_COL, _collect_queries, arrow_map, arrow_rows, gemm_scan,
     topk_window, unit_rows)
 
-# auto_nprobe calibration (the hnsw.auto_ef / sparse.auto_m twin —
-# VERDICT r10 ask #5, completing the auto-knob trilogy).  Measured on the
+# auto_nprobe calibration (the hnsw.auto_ef / sparse.auto_m twin,
+# completing the auto-knob trilogy).  Measured on the
 # decade ladder (20k → 632k rows, 32-d/100-center
 # blobs, nlist = round(sqrt(n)) — the classic build rule): the minimal
 # nprobe holding mean recall ≥ 0.9 vs exact kNN is

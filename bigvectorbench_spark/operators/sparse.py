@@ -203,7 +203,7 @@ def sparse_delta_report(
     )
 
 
-# auto_m calibration (the hnsw.auto_ef twin — VERDICT r8 ask #2): the
+# auto_m calibration (the hnsw.auto_ef twin): the
 # measured operating rule from the 50k→500k Zipf decade is LINEAR —
 # m ∝ corpus holds the postings cut fraction ≈14% and recall ≈constant
 # (0.81 → 0.79 across the decade at ~10× under exact search cost), where
@@ -225,8 +225,8 @@ def auto_m(n_docs: int) -> int:
 # The operating INVARIANT behind auto_m is the postings cut fraction (the
 # Zipf decade held recall because 0.04·n held the cut at ≈14.2%:
 # 0.1424 → 0.1422).  On a non-Zipf df spectrum the 0.04 coefficient
-# silently lands a different cut — so the general rule (VERDICT r9 ask
-# #4) computes m from the spectrum itself, holding the cut fraction;
+# silently lands a different cut — so the general rule computes m from
+# the spectrum itself, holding the cut fraction;
 # 0.04·n stays the Zipf-validated fast path (no extra job).
 _AUTO_M_CUT = 0.1424
 
@@ -305,7 +305,7 @@ def prune_postings(wpost: DataFrame, m: int | str = "auto",
     docs-with-≥1-feature distinction never moves m materially.
     ``m="spectrum"`` resolves via :func:`auto_m_spectrum` — one extra
     bounded aggregate over the index that holds the cut fraction on ANY
-    df spectrum (VERDICT r9 ask #4), where the 0.04·n
+    df spectrum, where the 0.04·n
     fast path assumes Zipf."""
     if m == "auto":
         m = auto_m(n_docs if n_docs is not None

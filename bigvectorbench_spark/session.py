@@ -12,6 +12,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_mem() -> str:
+    """The smaller of 32g and half the host's memory (``MemTotal`` in
+    /proc/meminfo, in MiB), or 32g where /proc/meminfo cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f
+                       if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{min(32 * 1024, kib // 2048)}m"
+
 # At 100 TB these would be cluster-level conf (shuffle partitions sized to
 # ~128 MB per task, executor-count-aware); locally we size to the core count.
 _DEFAULTS = {
@@ -59,9 +71,11 @@ _DEFAULTS = {
     # standard shape), not like a cluster driver.  The old 8g default
     # (256 MB/core at local[32]) OOMed the PPJoin shingle stages on a
     # 5M-doc/4 GB-text corpus that a per-core-realistic heap absorbs —
-    # artificial scarcity, not a plan defect.  SPARK_GRAFT_DRIVER_MEM
-    # overrides for smaller machines.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    # artificial scarcity, not a plan defect.  A heap larger than the host
+    # lets the JVM grow until the machine, not Spark, fails, so the default
+    # is capped at half the host's memory; SPARK_GRAFT_DRIVER_MEM overrides.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                          _default_driver_mem()),
 }
 
 

@@ -57,8 +57,8 @@ def table_rows(sf_dir: str, name: str) -> int:
 
     Plan-construction decisions that depend on corpus size (HNSW shard
     count, adaptive query-block strides) must not cost a full-table
-    ``count()`` action before the query even runs (VERDICT r5 "What's
-    wrong #4") — the footer already stores the exact row count, the same
+    ``count()`` action before the query even runs — the footer already
+    stores the exact row count, the same
     statistic a cluster catalog serves.  Handles both a single
     ``name.parquet`` file and a directory of part files (the sharded
     layout scripts/gen_sf.py writes at sf1)."""

@@ -265,13 +265,13 @@ def test_search_qblock_matches_collect_path(spark):
 
 
 def test_fused_ctx_thresholds_match_fit(spark, monkeypatch):
-    """__spark_entry__._dense_leg_ctx's float64 mean over the id-sorted
+    """queries.hybrid._dense_leg_ctx's float64 mean over the id-sorted
     collected matrix must reproduce BQIndex.fit(sort_col='id') bit for bit
     (the fused hybrid prelude replaces the fit collect with it).  Its
     collect is capped, and a corpus past the cap raises rather than
     returning a truncated query block."""
-    import __spark_entry__ as entry
     from bigvectorbench_spark.operators import bq
+    from bigvectorbench_spark.queries import hybrid
 
     rng = np.random.RandomState(7)
     V = rng.randint(-50, 50, size=(60, 16)).astype(np.int64)
@@ -279,7 +279,7 @@ def test_fused_ctx_thresholds_match_fit(spark, monkeypatch):
         [(i, [int(x) for x in V[i]], int((V[i] ** 2).sum()))
          for i in range(len(V))],
         "doc_id bigint, v array<bigint>, nsq bigint")
-    ids, M = entry._dense_leg_ctx(base)
+    ids, M = hybrid._dense_leg_ctx(base)
     assert list(ids) == list(range(60))
     fit = BQIndex.fit(
         base.select("doc_id",
@@ -287,7 +287,7 @@ def test_fused_ctx_thresholds_match_fit(spark, monkeypatch):
         vec_col="vec", sort_col="doc_id")
     assert [float(x) for x in M.mean(axis=0)] == fit.thresholds
     monkeypatch.setattr(bq, "MAX_FIT_SAMPLE_ROWS", 60)
-    assert len(entry._dense_leg_ctx(base)[0]) == 60
+    assert len(hybrid._dense_leg_ctx(base)[0]) == 60
     monkeypatch.setattr(bq, "MAX_FIT_SAMPLE_ROWS", 59)
     with pytest.raises(ValueError, match="MAX_FIT_SAMPLE_ROWS=59"):
-        entry._dense_leg_ctx(base)
+        hybrid._dense_leg_ctx(base)

@@ -1,10 +1,14 @@
 """Driver-contract smoke: entry() runs, queries() are callable, and a
 representative query hash-matches its DuckDB oracle at sf0.001."""
 
+import sys
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from bigvectorbench_spark.queries import (
+    dedup, dense, hybrid, mixing, temporal, text)
 from bigvectorbench_spark.sources.tables import TABLES
 
 
@@ -19,13 +23,26 @@ def test_every_oracle_key_has_query():
     assert len(qs) >= 25
 
 
+def test_each_oracle_sits_with_its_builder():
+    """Every oracle comes from the ``oracles()`` of the family module that
+    holds its query's builder, and oracle_sql() is exactly their union."""
+    qs = entry.queries()
+    families = {sys.modules[fn.__module__] for fn in qs.values()}
+    keys = set()
+    for family in families:
+        for key in family.oracles():
+            assert qs[key].__module__ == family.__name__, key
+            keys.add(key)
+    assert keys == set(entry.oracle_sql())
+
+
 def test_knn_euclid_matches_duckdb_at_sf0001(spark, sf_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     got = [
         (r["qid"], r["id"], r["dist"], r["rank"])
-        for r in entry.q_knn_euclid(spark, sf_dir).orderBy("qid", "rank").collect()
+        for r in dense.q_knn_euclid(spark, sf_dir).orderBy("qid", "rank").collect()
     ]
     want = con.execute(
         entry.oracle_sql()["knn_euclid"] + " ORDER BY qid, rank"
@@ -40,7 +57,7 @@ def test_corpus_curation_matches_duckdb_at_sf0001(spark, sf_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    rows = entry.q_corpus_curation(spark, sf_dir).orderBy("source", "lang").collect()
+    rows = dedup.q_corpus_curation(spark, sf_dir).orderBy("source", "lang").collect()
     want = con.execute(
         entry.oracle_sql()["corpus_curation"] + " ORDER BY source, lang"
     ).fetchall()
@@ -78,9 +95,9 @@ def test_llm_data_mix_consistent_with_stage_queries(spark, sf_dir):
     be bounded by the kept corpus, and every stage can only shrink the
     doc set."""
     mix = {r["source"]: r
-           for r in entry.q_llm_data_mix(spark, sf_dir).collect()}
+           for r in mixing.q_llm_data_mix(spark, sf_dir).collect()}
     c4 = {r["source"]: r
-          for r in entry.q_c4_line_filter(spark, sf_dir).collect()}
+          for r in text.q_c4_line_filter(spark, sf_dir).collect()}
     assert set(mix) == set(c4)
     for s, m in mix.items():
         assert m["n_c4_kept"] == c4[s]["n_kept_docs"], s
@@ -96,7 +113,7 @@ def test_iud_final_state_partitions_the_sweep(spark, sf_dir):
     sweep — 100 inserts, 100 upserts, every third of the first 100 ids
     tombstoned — the snapshot row count must be n + 100 − 34, and no
     bucket may be empty (ids cover all residues mod 7)."""
-    rows = entry.q_iud_final_state(spark, sf_dir).collect()
+    rows = temporal.q_iud_final_state(spark, sf_dir).collect()
     n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     deleted = sum(1 for i in range(100) if i % 3 == 0)
     assert sum(r["n_rows"] for r in rows) == n + 100 - deleted
@@ -106,7 +123,7 @@ def test_iud_final_state_partitions_the_sweep(spark, sf_dir):
 def test_hybrid_scale_parity_gate_passes(spark, sf_dir):
     """The brute-vs-BQ fused-overlap gate holds at the defect-only floor
     off the oracle sf (measured mean 0.75 / min 0.6 at sf0.001)."""
-    row = entry.q_hybrid_rrf_parity(spark, sf_dir).collect()[0]
+    row = hybrid.q_hybrid_rrf_parity(spark, sf_dir).collect()[0]
     assert row["n_queries"] >= 2
     assert row["mean_overlap_ok"] and row["min_overlap_ok"]
 
@@ -115,13 +132,13 @@ def test_hybrid_scale_and_mmr_scale_shapes(spark, sf_dir):
     """The scale twins return the same shapes as their brute-declared
     counterparts: fused top-10 per query with dense ranks, and MMR picks
     in rank order with 10 selections per vector query."""
-    fused = entry.q_hybrid_rrf_scale(spark, sf_dir).collect()
+    fused = hybrid.q_hybrid_rrf_scale(spark, sf_dir).collect()
     by_q = {}
     for r in fused:
         by_q.setdefault(r["qid"], []).append(r["rank"])
     for qid, ranks in by_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), qid
-    mmr = entry.q_mmr_scale(spark, sf_dir).collect()
+    mmr = hybrid.q_mmr_scale(spark, sf_dir).collect()
     mq = {}
     for r in mmr:
         mq.setdefault(r["qid"], []).append(r["rank"])
@@ -142,8 +159,8 @@ def test_brute_hybrid_mmr_legs_refuse_at_scale(spark, sf_dir, monkeypatch):
     # Each refusal names the CALLER's declared indexed twin (ADVICE r9 #1):
     # the sparse hybrid must steer at hybrid_sparse_scale, not the dense
     # pair.
-    for q, twin in ((entry.q_hybrid_rrf_topk, "hybrid_rrf_scale"),
-                    (entry.q_hybrid_sparse_rrf, "hybrid_sparse_scale"),
-                    (entry.q_mmr_rerank, "mmr_scale")):
+    for q, twin in ((hybrid.q_hybrid_rrf_topk, "hybrid_rrf_scale"),
+                    (hybrid.q_hybrid_sparse_rrf, "hybrid_sparse_scale"),
+                    (hybrid.q_mmr_rerank, "mmr_scale")):
         with pytest.raises(ValueError, match=twin):
             q(spark, sf_dir)

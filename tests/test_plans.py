@@ -372,9 +372,9 @@ def test_hashed_embed_knn_broadcasts_queries_and_limits_topk(spark):
     """The derived-embedding kNN inherits the knn_* plan contract: query
     embeddings broadcast (no corpus shuffle for the join) and the rank
     filter applies before the window shuffle (WindowGroupLimit)."""
-    import __spark_entry__ as entry
+    from bigvectorbench_spark.queries import hybrid
 
-    plan = plan_of(entry.q_hashed_embed_knn(spark, "/root/testdata/sf0.001"))
+    plan = plan_of(hybrid.q_hashed_embed_knn(spark, "/root/testdata/sf0.001"))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
     assert "WindowGroupLimit" in plan
@@ -508,17 +508,17 @@ def test_bq_leg_hybrid_has_no_corpus_crossjoin(spark, sf_dir):
     declaration; the BQ-leg twin (q_hybrid_rrf_scale) must NOT — its
     candidate stage is the Arrow hamming kernel (mapInArrow) and every
     join after it (refine, fusion) is a bounded equi-join."""
-    import __spark_entry__ as entry
+    from bigvectorbench_spark.queries import hybrid
 
-    full = plan_of(entry.q_hybrid_rrf_scale(spark, sf_dir))
+    full = plan_of(hybrid.q_hybrid_rrf_scale(spark, sf_dir))
     assert "CartesianProduct" not in full
     # BM25's single-row corpus-stats crossJoin is the ONLY nested-loop
     # join allowed in the fused plan (a scalar broadcast, bounded by
     # construction); the VECTOR leg itself must have none at all.
-    vec = plan_of(entry._bq_vec_leg(spark, sf_dir, out_k=20))
+    vec = plan_of(hybrid._bq_vec_leg(spark, sf_dir, out_k=20))
     assert "CartesianProduct" not in vec
     assert "BroadcastNestedLoopJoin" not in vec
     # the brute twin declares exactly that corpus-wide join — the
     # contrast is the point
-    brute = plan_of(entry.q_hybrid_rrf_topk(spark, sf_dir))
+    brute = plan_of(hybrid.q_hybrid_rrf_topk(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in brute or "CartesianProduct" in brute

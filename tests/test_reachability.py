@@ -7,7 +7,9 @@ query bench (``bench.py``) and the benchmark (``vbench/*.py``):
 - the import walk follows every ``import`` / ``from ... import`` it finds,
   function-local ones included, and fails on a package module nothing
   imports;
-- the name walk follows names: a root file is reached whole, and so is the
+- the name walk follows names: ``bench.py`` and ``vbench`` are reached
+  whole, the driver contract through its three functions (``entry``,
+  ``queries``, ``oracle_sql``) and its module-level code, and so is the
   module-level code of every module a reached body imports; a top-level
   function or class is reached when a reached body names it (directly,
   through an import alias or as ``module.attr``), and a method when its
@@ -18,7 +20,8 @@ query bench (``bench.py``) and the benchmark (``vbench/*.py``):
   ``__init__`` bind a name but do not use it.
 
 A definition only tests reach is code no query, oracle or benchmark runs:
-delete it, or declare the query that uses it.
+delete it, or declare the query that uses it.  The contract's own
+top-level definitions are held to the same rule.
 """
 
 import ast
@@ -26,6 +29,9 @@ import os
 
 ROOT = os.path.join(os.path.dirname(__file__), "..")
 PKG = "bigvectorbench_spark"
+ENTRY = "__spark_entry__"
+# What the driver calls in the contract file.
+CONTRACT = ("entry", "queries", "oracle_sql")
 
 EXEMPT = {
     # Tier-1 tests of reached operators build their seeded inputs with it
@@ -72,7 +78,7 @@ def _parse(path):
 
 def _root_files(root):
     vb = os.path.join(root, "vbench")
-    return ([os.path.join(root, "__spark_entry__.py"),
+    return ([os.path.join(root, f"{ENTRY}.py"),
              os.path.join(root, "bench.py")]
             + sorted(os.path.join(vb, f) for f in os.listdir(vb)
                      if f.endswith(".py")))
@@ -171,10 +177,11 @@ def _foreign(mod, node):
 
 
 def reached_defs(root=ROOT, extra_roots=()):
-    """(reached, all) sets of ``module.qualname`` for the package's
-    top-level functions, classes and methods.  ``extra_roots`` are
-    definitions walked as if the system called them."""
+    """(reached, all) sets of ``module.qualname`` for the top-level
+    functions, classes and methods of the package and the contract file.
+    ``extra_roots`` are definitions walked as if the system called them."""
     mods = {m: _Module(m, p) for m, p in _package_modules(root).items()}
+    mods[ENTRY] = _Module(ENTRY, os.path.join(root, f"{ENTRY}.py"))
     loaded, reached, attrs, todo = set(), set(), set(), []
 
     def load(dotted):
@@ -251,7 +258,11 @@ def reached_defs(root=ROOT, extra_roots=()):
                     elif hit:
                         reach(hit[1], hit[2])
 
-    for path in _root_files(root):
+    load(ENTRY)
+    for name in CONTRACT:
+        if name in mods[ENTRY].defs:
+            reach(ENTRY, name)
+    for path in _root_files(root)[1:]:
         rm = _Module(os.path.basename(path)[:-3], path)
         walk(rm, [rm.tree])
     for name in extra_roots:
@@ -328,7 +339,8 @@ def test_name_walk_follows_bodies_tables_and_methods(tmp_path):
     """The name walk: calls through aliases and ``module.attr``, functions
     named in a module-level table, methods named as attributes, and
     re-exports that bind without using.  ``np.save`` and
-    ``df.write...save()`` do not reach ``Index.save``."""
+    ``df.write...save()`` do not reach ``Index.save``.  In the contract
+    file only what ``entry`` reaches counts: ``_stray`` stays unreached."""
     root = _tree(tmp_path, {
         f"{PKG}/__init__.py": "from .ops import dead, run\n",
         f"{PKG}/ops.py": (
@@ -347,11 +359,15 @@ def test_name_walk_follows_bodies_tables_and_methods(tmp_path):
                           "def unused():\n    return 5\n",
         "__spark_entry__.py": (
             f"import numpy as np\nimport {PKG}.ops as o\nfrom {PKG} import run\n"
-            "def q(df):\n    run()\n    np.save('x', 1)\n"
+            "def entry(df):\n    run()\n    np.save('x', 1)\n"
             "    df.write.mode('overwrite').save()\n"
-            "    return o.Index().search()\n"),
+            "    return _leg(o.Index())\n"
+            "def _leg(ix):\n    return ix.search()\n"
+            "def _stray():\n    return 6\n"),
     })
     reached, every = reached_defs(root)
     assert every - reached == {f"{PKG}.ops.dead", f"{PKG}.ops.Index.decode",
-                               f"{PKG}.ops.Index.save", f"{PKG}.util.unused"}
+                               f"{PKG}.ops.Index.save", f"{PKG}.util.unused",
+                               "__spark_entry__._stray"}
     assert f"{PKG}.ops._in_table" in reached
+    assert "__spark_entry__._leg" in reached
