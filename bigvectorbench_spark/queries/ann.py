@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 
 import numpy as np
 import pyarrow.parquet as pq_
@@ -678,7 +679,6 @@ def _ann_oracles() -> dict[str, str]:
     that oracle checks ids/ranks (knn_euclid_gemm convention)."""
     path = f"{_ORACLE_SF_DIR}/embeddings.parquet"
     if not os.path.exists(path):
-        import sys
         print(f"[oracle] {path} missing: ANN queries degrade to rows-only",
               file=sys.stderr, flush=True)
         return {}

@@ -7,8 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigvectorbench_spark.functions import text as tx
-from bigvectorbench_spark.operators import (
-    curation as cur, dedup as dd)
+from bigvectorbench_spark.operators import curation as cur, dedup as dd
 from bigvectorbench_spark.sources.tables import load_table, table_dim
 
 from bigvectorbench_spark.queries._common import (

@@ -5,6 +5,7 @@ the quality classifier and the audio/video feature pipelines."""
 from __future__ import annotations
 
 import os
+import sys
 
 import duckdb
 import numpy as np
@@ -435,7 +436,6 @@ def _bpe_oracle() -> dict[str, str]:
     equivalence are all hash-checked."""
     path = f"{_ORACLE_SF_DIR}/documents.parquet"
     if not os.path.exists(path):
-        import sys
         print(f"[oracle] {path} missing: bpe_train degrades to rows-only",
               file=sys.stderr, flush=True)
         return {}
