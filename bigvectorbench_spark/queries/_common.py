@@ -122,8 +122,43 @@ _TH = ("list_transform(tk, w -> "
        "('0x' || substr(md5(w), 1, 15))::BIGINT % 1099511627776)")
 
 
-def _rwh(i: str, n: int) -> str:
-    return (f"list_reduce(th[{i}:{i}+{n - 1}], "
+# The quality_score_from_tokens features (functions/text.py) of a row's
+# ``tk`` and ``text``: mean word length, stopword ratio, punctuation and
+# digit ratios.
+_QUALITY_FEATS = """CASE WHEN len(tk) = 0 THEN 0.0
+                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
+             CASE WHEN len(tk) = 0 THEN 0.0
+                  ELSE len(list_filter(tk, w -> list_contains(
+                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
+             CASE WHEN length(text) = 0 THEN 0.0
+                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
+             CASE WHEN length(text) = 0 THEN 0.0
+                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr"""
+
+
+# ``_docs_lines`` in SQL: pages(doc_id, source, text) of the planted
+# 6-word lines, punctuation, 'javascript', lorem-ipsum and brace footers.
+_PAGES_SQL = f"""tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
+lines AS (SELECT doc_id, source,
+  list_transform(range(0, CAST(ceil(len(tk) / 6.0) AS BIGINT)), i ->
+    array_to_string(tk[CAST(i*6+1 AS INT) : CAST(i*6+6 AS INT)], ' ')
+    || CASE WHEN (doc_id + i) % 13 = 7 THEN ' javascript embedded here'
+            ELSE '' END
+    || (['.', '', '!', '?', ''])[CAST((doc_id + i) % 5 AS INT) + 1]) AS ls
+  FROM tk),
+pages AS (SELECT doc_id, source,
+  array_to_string(ls, chr(10))
+  || CASE WHEN doc_id % 89 = 0
+          THEN chr(10) || 'this page quotes lorem ipsum boilerplate.'
+          ELSE '' END
+  || CASE WHEN doc_id % 97 = 0
+          THEN chr(10) || 'function f() {{ return 1; }}'
+          ELSE '' END AS text FROM lines)"""
+
+
+def _rwh(n: int) -> str:
+    """The rolling hash of the ``n``-token window starting at token ``i``."""
+    return (f"list_reduce(th[i:i+{n - 1}], "
             f"(a, b) -> (a * 4093 + b) % 2199023255552)")
 
 

@@ -683,7 +683,6 @@ def _ann_oracles() -> dict[str, str]:
               file=sys.stderr, flush=True)
         return {}
 
-
     tbl = pq_.read_table(path, columns=["vec_id", "embedding"])
     ids = tbl.column("vec_id").to_numpy()
     X = np.array(tbl.column("embedding").to_pylist(), dtype=np.float64)
@@ -698,16 +697,23 @@ def _ann_oracles() -> dict[str, str]:
     l2 = _L2.format(a="t.v", b="q.v")
 
     # ---- IVF (nlist=8, seed=1, max_iter=8, nprobe=4) ---------------------
-    C = _kmeans_pp(X, 8, seed=1, max_iter=8)
-    # assignment: identical expansion to IVFIndex._assign_gemm
-    d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
-    cid = d2.argmin(axis=1)
-    # probe lists: identical to IVFIndex.probe_lists
-    dq = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-    probes = np.argpartition(dq, 3, axis=1)[:, :4]
-    assign_vals = ", ".join(f"({int(i)},{int(c)})" for i, c in zip(ids, cid))
-    probe_vals = ", ".join(
-        f"({int(q)},{int(c)})" for qi, q in enumerate(qids_) for c in probes[qi])
+    def ivf(fit_mask, qm):
+        """Centroids fit on the ``fit_mask`` rows, every row's cell and the
+        ``qm`` queries' probe lists, the last two as VALUES literals."""
+        C = _kmeans_pp(X[fit_mask], 8, seed=1, max_iter=8)
+        # assignment: identical expansion to IVFIndex._assign_gemm
+        d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
+        cid = d2.argmin(axis=1)
+        # probe lists: identical to IVFIndex.probe_lists
+        dq = ((X[qm][:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        probes = np.argpartition(dq, 3, axis=1)[:, :4]
+        assign_vals = ", ".join(f"({int(i)},{int(c)})" for i, c in zip(ids, cid))
+        probe_vals = ", ".join(
+            f"({int(q)},{int(c)})"
+            for qi, q in enumerate(ids[qm]) for c in probes[qi])
+        return C, cid, probes, assign_vals, probe_vals
+
+    C, cid, probes, assign_vals, probe_vals = ivf(slice(None), qmask)
     ivf_sql = f"""
 WITH assign(id, cell) AS (VALUES {assign_vals}),
 probe(qid, cell) AS (VALUES {probe_vals}),
@@ -742,31 +748,48 @@ SELECT qid, id, dist, rank FROM r WHERE rank <= 10
     # ---- PQ (m=8, ksub=16, seed=1, max_iter=8, overfetch=4) --------------
     m, ksub, k_adc = 8, 16, 40
     dsub = X.shape[1] // m
-    books = np.stack([
-        _kmeans_pp(X[:, j * dsub:(j + 1) * dsub], ksub, 1 + j, 8) for j in range(m)
-    ])
-    # encode: identical expansion to PQIndex.encode
-    c2 = (books * books).sum(axis=2)
-    codes = np.empty((len(X), m), dtype=np.int64)
-    Xs = X.reshape(len(X), m, dsub)
-    for j in range(m):
-        S = Xs[:, j, :]
-        codes[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books[j].T)
-                       + c2[j][None, :]).argmin(axis=1)
-    # ADC: identical LUT build + accumulation order to PQIndex.search
-    Qs = Q.reshape(len(qids_), m, dsub)
-    lut = np.stack([
-        ((books[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
-        for j in range(m)
-    ])  # (m, ksub, nq)
-    acc = np.zeros((len(X), len(qids_)), dtype=np.float64)
-    for j in range(m):
-        acc += lut[j][codes[:, j], :]
-    D = np.sqrt(np.maximum(acc, 0.0))
+
+    def fit_books(Xm):
+        return np.stack([
+            _kmeans_pp(Xm[:, j * dsub:(j + 1) * dsub], ksub, 1 + j, 8)
+            for j in range(m)
+        ])
+
+    def encode(Xm, books):
+        # identical expansion to PQIndex.encode
+        c2 = (books * books).sum(axis=2)
+        codes = np.empty((len(Xm), m), dtype=np.int64)
+        Xs = Xm.reshape(len(Xm), m, dsub)
+        for j in range(m):
+            S = Xs[:, j, :]
+            codes[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books[j].T)
+                           + c2[j][None, :]).argmin(axis=1)
+        return codes
+
+    def adc(Qm, books, codes):
+        # identical LUT build + accumulation order to PQIndex.search
+        Qs = Qm.reshape(len(Qm), m, dsub)
+        lut = np.stack([
+            ((books[j][:, None, :] - Qs[None, :, j, :]) ** 2).sum(axis=2)
+            for j in range(m)
+        ])  # (m, ksub, nq)
+        acc = np.zeros((len(codes), len(Qm)), dtype=np.float64)
+        for j in range(m):
+            acc += lut[j][codes[:, j], :]
+        return np.sqrt(np.maximum(acc, 0.0))
 
     def _adc_topk(D_col, row_ids):
         order = np.lexsort((row_ids, D_col))
         return row_ids[order[:k_adc]]
+
+    def _adc_pairs(D):
+        return ", ".join(
+            f"({int(q)},{int(i)})"
+            for qi, q in enumerate(qids_) for i in _adc_topk(D[:, qi], ids))
+
+    books = fit_books(X)
+    codes = encode(X, books)
+    D = adc(Q, books, codes)
 
     def _cand_sql(cand_pairs: str) -> str:
         return f"""
@@ -780,10 +803,7 @@ r AS (SELECT qid, id, round(d, 4) + 0.0 AS dist,
 SELECT qid, id, dist, rank FROM r WHERE rank <= 10
 """
 
-    pq_pairs = ", ".join(
-        f"({int(q)},{int(i)})"
-        for qi, q in enumerate(qids_) for i in _adc_topk(D[:, qi], ids))
-    pq_sql = _cand_sql(pq_pairs)
+    pq_sql = _cand_sql(_adc_pairs(D))
 
     # ---- IVFPQ (IVF mask over the same ADC scores) -----------------------
     member = np.zeros((8, len(qids_)), dtype=bool)
@@ -820,30 +840,10 @@ WHERE cosine >= 0.4
     # Identical arithmetic to OPQIndex: shared numpy fit (opq_fit_numpy),
     # rotation rounded to 6 dp, norm-expansion encode, LUT-sum ADC, then
     # (D, id) lexsort — the pq_knn oracle with rotated inputs.
-
     R_o, books_o = opq_fit_numpy(X, m=8, ksub=16, iters=3, seed=1, max_iter=8)
     XR = np.round(X @ R_o, 6)
-    QR = XR[qmask]
-    c2o = (books_o * books_o).sum(axis=2)
-    codes_o = np.empty((len(X), 8), dtype=np.int64)
-    XRs = XR.reshape(len(X), 8, dsub)
-    for j in range(8):
-        S = XRs[:, j, :]
-        codes_o[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books_o[j].T)
-                         + c2o[j][None, :]).argmin(axis=1)
-    QRs = QR.reshape(len(qids_), 8, dsub)
-    lut_o = np.stack([
-        ((books_o[j][:, None, :] - QRs[None, :, j, :]) ** 2).sum(axis=2)
-        for j in range(8)
-    ])
-    acc_o = np.zeros((len(X), len(qids_)), dtype=np.float64)
-    for j in range(8):
-        acc_o += lut_o[j][codes_o[:, j], :]
-    D_o = np.sqrt(np.maximum(acc_o, 0.0))
-    opq_pairs = ", ".join(
-        f"({int(q)},{int(i)})"
-        for qi, q in enumerate(qids_) for i in _adc_topk(D_o[:, qi], ids))
-    opq_sql = _cand_sql(opq_pairs)
+    opq_sql = _cand_sql(_adc_pairs(
+        adc(XR[qmask], books_o, encode(XR, books_o))))
 
     # ---- BQ (mean thresholds, overfetch=4 → 40 hamming candidates) -------
     # Identical arithmetic to BQIndex: float64 mean over the id-sorted
@@ -859,17 +859,7 @@ WHERE cosine >= 0.4
     bq_sql = _cand_sql(", ".join(bq_pairs))
 
     # ---- incremental IVF (fit on BASE ids%10!=0; delta assigned, no refit)
-    base_mask = ids % 10 != 0
-    Cd = _kmeans_pp(X[base_mask], 8, seed=1, max_iter=8)
-    d2d = (X * X).sum(1)[:, None] - 2.0 * (X @ Cd.T) + (Cd * Cd).sum(1)[None, :]
-    cidd = d2d.argmin(axis=1)
-    q1 = ids % 50 == 1
-    dqd = ((X[q1][:, None, :] - Cd[None, :, :]) ** 2).sum(axis=2)
-    probesd = np.argpartition(dqd, 3, axis=1)[:, :4]
-    assignd_vals = ", ".join(f"({int(i)},{int(c)})" for i, c in zip(ids, cidd))
-    probed_vals = ", ".join(
-        f"({int(qv)},{int(c)})"
-        for qi, qv in enumerate(ids[q1]) for c in probesd[qi])
+    Cd, _, _, assignd_vals, probed_vals = ivf(ids % 10 != 0, ids % 50 == 1)
     ivf_delta_sql = f"""
 WITH assign(id, cell) AS (VALUES {assignd_vals}),
 probe(qid, cell) AS (VALUES {probed_vals}),
@@ -905,18 +895,8 @@ FROM j GROUP BY cell
     # ---- PQ delta report (base-only fit, frozen-book encode of ALL rows;
     # the ivf_delta_report convention: embed the argmins — codes — and let
     # SQL recompute every reconstruction error from codebook literals) ----
-    mask_b = ids % 10 != 0
-    Xb = X[mask_b]
-    books_pd = np.stack([
-        _kmeans_pp(Xb[:, j * dsub:(j + 1) * dsub], ksub, 1 + j, 8)
-        for j in range(m)
-    ])
-    c2_pd = (books_pd * books_pd).sum(axis=2)
-    codes_pd = np.empty((len(X), m), dtype=np.int64)
-    for j in range(m):
-        S = Xs[:, j, :]
-        codes_pd[:, j] = ((S * S).sum(1)[:, None] - 2.0 * (S @ books_pd[j].T)
-                          + c2_pd[j][None, :]).argmin(axis=1)
+    books_pd = fit_books(X[ids % 10 != 0])
+    codes_pd = encode(X, books_pd)
     code_vals = ", ".join(
         f"({int(i)},{j},{int(codes_pd[r, j])})"
         for r, i in enumerate(ids) for j in range(m))

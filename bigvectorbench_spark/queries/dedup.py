@@ -11,7 +11,7 @@ from bigvectorbench_spark.operators import curation as cur, dedup as dd
 from bigvectorbench_spark.sources.tables import load_table, table_dim
 
 from bigvectorbench_spark.queries._common import (
-    _docs_wide, _PHASH, _rwh, _TH, _TOKENS)
+    _docs_wide, _PHASH, _QUALITY_FEATS, _rwh, _TH, _TOKENS)
 
 
 def q_dedup_exact(spark, sf):
@@ -376,9 +376,66 @@ FROM p WHERE cosine >= 0.95
 """
 
 
-def oracles() -> dict[str, str]:
+def _minhash_sql(elect: bool = False) -> str:
+    """MinHash banding over ``tk`` as CTEs: md5-60bit 3-shingle hashes
+    ``sh``, the 64-permutation signatures ``sig`` (dedup.py's universal-hash
+    parameters, embedded) and 16 bands × 4 rows ``bands``; with ``elect``
+    also each (band, bucket)'s min doc_id ``mins`` and each doc's smallest
+    elected id ``keep`` (the lsh_dedup election).  Spark hashes the band
+    string with xxhash64 purely as a bucket key; grouping on the string
+    itself is identical."""
     p = dd._MERSENNE
     perms = "[" + ", ".join(f"[{a}, {b}]" for a, b in dd._perm_params(64)) + "]"
+    sql = f"""sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
+       FROM tk WHERE len(tk) >= 3),
+sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
+            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
+        FROM sh),
+bands AS (SELECT doc_id, t.b AS band,
+                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
+          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b))"""
+    return sql + (""",
+mins AS (SELECT band, bucket, min(doc_id) AS m FROM bands
+         GROUP BY band, bucket),
+keep AS (SELECT b.doc_id, min(m.m) AS keeper
+         FROM bands b JOIN mins m USING (band, bucket) GROUP BY b.doc_id)""" if elect else "")
+
+
+def oracles() -> dict[str, str]:
+    # the curation quality gate over ``tk`` minus the dup ids ``drops``:
+    # the unrounded score gates, the 6-dp one is averaged
+    quality = f"""feat AS (SELECT doc_id, len(tk) AS ntok,
+             {_QUALITY_FEATS}
+      FROM tk),
+q AS (SELECT doc_id, ntok,
+             0.3 * least(ntok::DOUBLE / 64.0, 1.0)
+                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
+                 + 0.2 * least(swr * 4.0, 1.0)
+                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0) AS quality_raw,
+             round(0.3 * least(ntok::DOUBLE / 64.0, 1.0)
+                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
+                 + 0.2 * least(swr * 4.0, 1.0)
+                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS quality
+      FROM feat),"""
+    status = """st AS (SELECT t.source, t.lang, q.ntok, q.quality,
+              CASE WHEN t.doc_id IN (SELECT id FROM drops) THEN 'dup'
+                   WHEN q.quality_raw < 0.8 THEN 'low_quality'
+                   ELSE 'kept' END AS status
+       FROM tk t JOIN q ON t.doc_id = q.doc_id)"""
+    # train docs sharing an 8-token window hash with the doc_id % 97 = 0
+    # eval slice, per source
+    decon = f"""WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
+tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
+w AS (SELECT doc_id, source, doc_id % 97 = 0 AS is_eval,
+             list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
+                 i -> {_rwh(8)})) AS whs
+      FROM tkh),
+e AS (SELECT DISTINCT unnest(whs) AS wh FROM w WHERE is_eval),
+t AS (SELECT doc_id, source, whs FROM w WHERE NOT is_eval),
+c AS (SELECT DISTINCT doc_id FROM
+        (SELECT doc_id, unnest(whs) AS wh FROM t) x JOIN e USING (wh))
+SELECT source, count(*)::BIGINT AS n_train,
+       count(c.doc_id)::BIGINT AS n_contaminated"""
     return {
         "srp_recall": _SRP_RECALL_SQL,
         "dedup_exact": f"""
@@ -401,14 +458,7 @@ SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM p WHERE jaccard >= 0.5
         # to grouping on the string itself, which the oracle uses directly.
         "minhash_dups": f"""
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
-       FROM tk WHERE len(tk) >= 3),
-sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
-            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
-        FROM sh),
-bands AS (SELECT doc_id, t.b AS band,
-                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
-          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b)),
+{_minhash_sql()},
 cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          FROM bands a JOIN bands b
            ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
@@ -424,18 +474,7 @@ SELECT id_a, id_b, round(jaccard, 6) AS jaccard FROM v WHERE jaccard >= 0.5
         # occupies.  Docs too short to shingle have no bands -> kept.
         "lsh_dedup": f"""
 WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
-       FROM tk WHERE len(tk) >= 3),
-sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
-            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
-        FROM sh),
-bands AS (SELECT doc_id, t.b AS band,
-                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
-          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b)),
-mins AS (SELECT band, bucket, min(doc_id) AS m FROM bands
-         GROUP BY band, bucket),
-keep AS (SELECT b.doc_id, min(m.m) AS keeper
-         FROM bands b JOIN mins m USING (band, bucket) GROUP BY b.doc_id)
+{_minhash_sql(elect=True)}
 SELECT t.source, count(*)::BIGINT AS n_docs,
        sum(CASE WHEN k.keeper IS NULL OR k.keeper = t.doc_id
                 THEN 1 ELSE 0 END)::BIGINT AS n_kept,
@@ -450,45 +489,10 @@ GROUP BY t.source
         # mean).
         "corpus_curation_scale": f"""
 WITH tk AS (SELECT doc_id, source, lang, text, {_TOKENS} AS tk FROM documents),
-sh AS (SELECT doc_id, list_transform({_SHINGLES}, x -> {_PHASH.format(x='x')}) AS s
-       FROM tk WHERE len(tk) >= 3),
-sig AS (SELECT doc_id, list_transform({perms}::BIGINT[][], ab ->
-            list_min(list_transform(s, h -> (ab[1] * (h % {p}) + ab[2]) % {p}))) AS sig
-        FROM sh),
-bands AS (SELECT doc_id, t.b AS band,
-                 array_to_string(sig[(t.b*4 + 1):(t.b*4 + 4)], ',') AS bucket
-          FROM sig CROSS JOIN unnest(range(0, 16)) AS t(b)),
-mins AS (SELECT band, bucket, min(doc_id) AS m FROM bands
-         GROUP BY band, bucket),
-keep AS (SELECT b.doc_id, min(m.m) AS keeper
-         FROM bands b JOIN mins m USING (band, bucket) GROUP BY b.doc_id),
+{_minhash_sql(elect=True)},
 drops AS (SELECT doc_id AS id FROM keep WHERE keeper != doc_id),
-feat AS (SELECT doc_id, len(tk) AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM tk),
-q AS (SELECT doc_id, ntok,
-             0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0) AS quality_raw,
-             round(0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS quality
-      FROM feat),
-st AS (SELECT t.source, t.lang, q.ntok, q.quality,
-              CASE WHEN t.doc_id IN (SELECT id FROM drops) THEN 'dup'
-                   WHEN q.quality_raw < 0.8 THEN 'low_quality'
-                   ELSE 'kept' END AS status
-       FROM tk t JOIN q ON t.doc_id = q.doc_id)
+{quality}
+{status}
 SELECT source, lang, count(*) AS n_docs,
        sum(CASE WHEN status = 'dup' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_dup,
        sum(CASE WHEN status = 'low_quality' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_quality,
@@ -551,35 +555,11 @@ reach AS (SELECT a, b FROM e
           SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a WHERE e.b != r.a),
 comp AS (SELECT a AS id, least(a, min(b)) AS component_id FROM reach GROUP BY a),
 drops AS (SELECT id FROM comp WHERE id != component_id),
-feat AS (SELECT doc_id, len(tk) AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
-      FROM tk),
-q AS (SELECT doc_id, ntok,
-             0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0) AS quality_raw,
-             round(0.3 * least(ntok::DOUBLE / 64.0, 1.0)
-                 + 0.2 * (CASE WHEN awl >= 3.0 AND awl <= 10.0 THEN 1.0 ELSE 0.3 END)
-                 + 0.2 * least(swr * 4.0, 1.0)
-                 + 0.3 * greatest(1.0 - (pr + dr) * 2.0, 0.0), 6) AS quality
-      FROM feat),
+{quality}
 -- the keep/drop threshold reads the UNROUNDED score (half-ulp 6-dp
 -- boundary rounding must not flip integer counts — ADVICE r5); the
 -- rounded value feeds only the emitted mean
-st AS (SELECT t.source, t.lang, q.ntok, q.quality,
-              CASE WHEN t.doc_id IN (SELECT id FROM drops) THEN 'dup'
-                   WHEN q.quality_raw < 0.8 THEN 'low_quality'
-                   ELSE 'kept' END AS status
-       FROM tk t JOIN q ON t.doc_id = q.doc_id)
+{status}
 SELECT source, lang, count(*) AS n_docs,
        sum(CASE WHEN status = 'dup' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_dup,
        sum(CASE WHEN status = 'low_quality' THEN 1 ELSE 0 END)::BIGINT AS n_dropped_quality,
@@ -611,36 +591,14 @@ h AS (SELECT doc_id,
 SELECT doc_id, array_to_string(hs[1:8], ',') AS fingerprint FROM h
 """,
         "decontaminate": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, source, doc_id % 97 = 0 AS is_eval,
-             list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-                 i -> {_rwh("i", 8)})) AS whs
-      FROM tkh),
-e AS (SELECT DISTINCT unnest(whs) AS wh FROM w WHERE is_eval),
-t AS (SELECT doc_id, source, whs FROM w WHERE NOT is_eval),
-c AS (SELECT DISTINCT doc_id FROM
-        (SELECT doc_id, unnest(whs) AS wh FROM t) x JOIN e USING (wh))
-SELECT source, count(*)::BIGINT AS n_train,
-       count(c.doc_id)::BIGINT AS n_contaminated
+{decon}
 FROM t LEFT JOIN c USING (doc_id) GROUP BY source
 """,
         # bloom_decontaminate: the exact counts are the decontaminate CTEs
         # verbatim (independently recomputed); the booleans assert the
         # Bloom contract — superset (no false negatives) and the fp bound.
         "bloom_decontaminate": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
-w AS (SELECT doc_id, source, doc_id % 97 = 0 AS is_eval,
-             list_distinct(list_transform(range(1, greatest(len(tk) - 6, 1)),
-                 i -> {_rwh("i", 8)})) AS whs
-      FROM tkh),
-e AS (SELECT DISTINCT unnest(whs) AS wh FROM w WHERE is_eval),
-t AS (SELECT doc_id, source, whs FROM w WHERE NOT is_eval),
-c AS (SELECT DISTINCT doc_id FROM
-        (SELECT doc_id, unnest(whs) AS wh FROM t) x JOIN e USING (wh))
-SELECT source, count(*)::BIGINT AS n_train,
-       count(c.doc_id)::BIGINT AS n_contaminated,
+{decon},
        TRUE AS superset_ok, TRUE AS fp_extra_ok
 FROM t LEFT JOIN c USING (doc_id) GROUP BY source
 """,
@@ -649,7 +607,7 @@ WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
 tkh AS (SELECT doc_id, source, tk, {_TH} AS th FROM tk),
 w AS (SELECT doc_id, source,
              unnest(list_transform(range(1, greatest(len(tk) - 13, 1)),
-                 i -> {_rwh("i", 15)})) AS wh
+                 i -> {_rwh(15)})) AS wh
       FROM tkh),
 cnt AS (SELECT wh, count(*) AS n_occ FROM w GROUP BY wh),
 d AS (SELECT doc_id, count(*) AS nd
@@ -664,7 +622,7 @@ LEFT JOIN d USING (doc_id) GROUP BY docs.source
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
 tkh AS (SELECT doc_id, tk, {_TH} AS th FROM tk),
 w AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 13, 1)),
-             i -> {{'pos': i, 'wh': {_rwh("i", 15)}}})) AS u
+             i -> {{'pos': i, 'wh': {_rwh(15)}}})) AS u
       FROM tkh),
 p AS (SELECT doc_id, u.pos AS pos, u.wh AS wh FROM w),
 cnt AS (SELECT wh, count(*) AS n FROM p GROUP BY wh),
@@ -680,7 +638,7 @@ FROM isl GROUP BY doc_id, g
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
 tkh AS (SELECT doc_id, tk, {_TH} AS th FROM tk),
 w AS (SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 13, 1)),
-             i -> {{'pos': i, 'wh': {_rwh("i", 15)}}})) AS u
+             i -> {{'pos': i, 'wh': {_rwh(15)}}})) AS u
       FROM tkh),
 p AS (SELECT doc_id, u.pos AS pos, u.wh AS wh,
              doc_id * 1048576 + u.pos AS key FROM w),

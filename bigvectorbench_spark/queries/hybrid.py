@@ -426,6 +426,23 @@ def q_mmr_scale(spark, sf):
     return rt.mmr_rerank(cand, k=10, lamb=0.5)
 
 
+# The sparse leg's weights replayed from ``tk0``: unigram+bigram features,
+# corpus-wide df and SMART-ltn weights rounded to 6 dp (sparse.py's ladder)
+# as CTEs ending in sw(term, doc_id, w).
+_SPARSE_W_SQL = f"""tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
+ftk AS (SELECT doc_id,
+               list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
+                   i -> tk[i] || ' ' || tk[i+1])) AS ft
+        FROM tk0),
+sstats AS (SELECT count(*)::DOUBLE AS n FROM ftk WHERE len(ft) > 0),
+spost AS (SELECT doc_id, unnest(ft) AS term FROM ftk),
+stfs AS (SELECT term, doc_id, count(*) AS tf FROM spost GROUP BY term, doc_id),
+sdfr AS (SELECT term, count(*) AS df FROM stfs GROUP BY term),
+sw AS (SELECT t.term, t.doc_id,
+              round((1.0 + ln(t.tf::DOUBLE)) * ln(s.n / sdfr.df::DOUBLE), 6) AS w
+       FROM stfs t JOIN sdfr ON t.term = sdfr.term CROSS JOIN sstats s)"""
+
+
 # hybrid_rrf_parity: the oracle recomputes the fused-query universe (every
 # %250 doc with at least one token retrieves itself through the lexical
 # leg, so the fused qid set is exactly that) and asserts the Spark-side
@@ -440,6 +457,29 @@ FROM tk WHERE doc_id % 250 = 0 AND len(tk) > 0
 """
 
 
+def _fuse_sql(cand: bool) -> str:
+    """The hashed-embedding cosine top-20 leg over ``vbase``/``vq`` — every
+    doc, or with ``cand`` the embedded ``cand`` (qid, doc_id) rows — RRF-fused
+    with the ``lexr`` top-20 as CTEs vs, vecr, u and f(qid, doc_id, score):
+    1/(60+rank) rounded to 9 dp, summed in DECIMAL, then 6 dp."""
+    pairs = ("cand c JOIN vbase b ON b.doc_id = c.doc_id JOIN vq ON vq.qid = c.qid"
+             if cand else "vbase b, vq")
+    return f"""vs AS (SELECT {"c" if cand else "vq"}.qid, b.doc_id,
+   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
+       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
+   FROM {pairs}),
+vecr AS (SELECT qid, doc_id,
+                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
+         FROM vs QUALIFY rank <= 20),
+u AS (SELECT qid, doc_id,
+             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
+      UNION ALL
+      SELECT qid, doc_id,
+             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
+f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
+      FROM u GROUP BY qid, doc_id)"""
+
+
 def _mmr_oracle() -> dict[str, str]:
     """Independent recomputation of q_mmr_rerank: DuckDB derives the
     hashed-embed top-30 candidates (rounded relevance + integer vectors),
@@ -449,7 +489,6 @@ def _mmr_oracle() -> dict[str, str]:
     path = f"{_ORACLE_SF_DIR}/documents.parquet"
     if not os.path.exists(path):
         return {}
-
 
     cand_sql = f"""
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM read_parquet('{path}')),
@@ -463,9 +502,15 @@ r AS (SELECT qid, doc_id, v, round(1.0 - d, 6) AS rel,
       FROM s)
 SELECT qid, doc_id, rel, v FROM r WHERE rank <= 30 ORDER BY qid, doc_id
 """
-    rows = duckdb.connect().execute(cand_sql).fetchall()
+    return {"mmr_rerank": _mmr_sql(cand_sql)}
+
+
+def _mmr_sql(cand_sql: str) -> str:
+    """The MMR selections (λ = 0.5, top-10) of the (qid, doc_id, rel, v)
+    candidates ``cand_sql`` yields in DuckDB, run through the SAME numpy
+    greedy (retrieval.mmr_select_numpy) and embedded as VALUES."""
     by_q: dict[int, list] = {}
-    for qid, doc_id, rel, v in rows:
+    for qid, doc_id, rel, v in duckdb.connect().execute(cand_sql).fetchall():
         by_q.setdefault(int(qid), []).append((int(doc_id), float(rel), v))
     vals = []
     for qid in sorted(by_q):
@@ -475,11 +520,10 @@ SELECT qid, doc_id, rel, v FROM r WHERE rank <= 30 ORDER BY qid, doc_id
         chosen, objs = mmr_select_numpy(ids, rel, V, k=10, lamb=0.5)
         for rnk, (d, o) in enumerate(zip(chosen, objs), 1):
             vals.append(f"({qid},{d},{o!r},{rnk})")
-    sql = f"""
+    return f"""
 WITH m(qid, doc_id, objective, rank) AS (VALUES {", ".join(vals)})
 SELECT qid, doc_id, objective, rank FROM m
 """
-    return {"mmr_rerank": sql}
 
 
 def _hybrid_scale_oracles() -> dict[str, str]:
@@ -495,7 +539,6 @@ def _hybrid_scale_oracles() -> dict[str, str]:
     path = f"{_ORACLE_SF_DIR}/documents.parquet"
     if not os.path.exists(path):
         return {}
-
 
     base_sql = f"""
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM read_parquet('{path}')),
@@ -534,20 +577,7 @@ lexr AS (SELECT qid, doc_id,
                 row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
          FROM agg QUALIFY rank <= 20),
 {emb_ctes},
-vs AS (SELECT c.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM cand c JOIN vbase b ON b.doc_id = c.doc_id JOIN vq ON vq.qid = c.qid),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
+{_fuse_sql(cand=True)},
 rr AS (SELECT qid, doc_id, score,
               row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
        FROM f)
@@ -570,22 +600,7 @@ r AS (SELECT qid, doc_id, v, round(1.0 - d, 6) AS rel,
       FROM s)
 SELECT qid, doc_id, rel, v FROM r WHERE rank <= 30 ORDER BY qid, doc_id
 """
-    mrows = duckdb.connect().execute(mmr_cand_sql).fetchall()
-    by_q: dict[int, list] = {}
-    for qid, doc_id, rel, v in mrows:
-        by_q.setdefault(int(qid), []).append((int(doc_id), float(rel), v))
-    vals = []
-    for qid in sorted(by_q):
-        cids = [t[0] for t in by_q[qid]]
-        rel = [t[1] for t in by_q[qid]]
-        V = [t[2] for t in by_q[qid]]
-        chosen, objs = mmr_select_numpy(cids, rel, V, k=10, lamb=0.5)
-        for rnk, (dd, o) in enumerate(zip(chosen, objs), 1):
-            vals.append(f"({qid},{dd},{o!r},{rnk})")
-    mmr_scale_sql = f"""
-WITH m(qid, doc_id, objective, rank) AS (VALUES {", ".join(vals)})
-SELECT qid, doc_id, objective, rank FROM m
-"""
+    mmr_scale_sql = _mmr_sql(mmr_cand_sql)
     # hybrid_sparse_scale: BOTH legs indexed — the sparse leg replays the
     # full weight ladder PLUS the impact-pruning row_number cut at the
     # auto_m cap (deterministic SQL: w is 6-dp rounded, ties by doc_id,
@@ -602,18 +617,7 @@ SELECT qid, doc_id, objective, rank FROM m
     m_auto = auto_m(int(n_rows))
     hybrid_sparse_sql = f"""
 WITH cand(qid, doc_id) AS (VALUES {_cand_pairs(160)}),
-tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-ftk AS (SELECT doc_id,
-               list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS ft
-        FROM tk0),
-sstats AS (SELECT count(*)::DOUBLE AS n FROM ftk WHERE len(ft) > 0),
-spost AS (SELECT doc_id, unnest(ft) AS term FROM ftk),
-stfs AS (SELECT term, doc_id, count(*) AS tf FROM spost GROUP BY term, doc_id),
-sdfr AS (SELECT term, count(*) AS df FROM stfs GROUP BY term),
-sw AS (SELECT t.term, t.doc_id,
-              round((1.0 + ln(t.tf::DOUBLE)) * ln(s.n / sdfr.df::DOUBLE), 6) AS w
-       FROM stfs t JOIN sdfr ON t.term = sdfr.term CROSS JOIN sstats s),
+{_SPARSE_W_SQL},
 swp AS (SELECT term, doc_id, w FROM (
             SELECT term, doc_id, w,
                    row_number() OVER (PARTITION BY term
@@ -629,20 +633,7 @@ lexr AS (SELECT qid, doc_id,
                 AS rank
          FROM sagg QUALIFY rank <= 20),
 {emb_ctes},
-vs AS (SELECT c.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM cand c JOIN vbase b ON b.doc_id = c.doc_id JOIN vq ON vq.qid = c.qid),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
+{_fuse_sql(cand=True)},
 rr AS (SELECT qid, doc_id, score,
               row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)
               AS rank
@@ -665,20 +656,7 @@ lexr AS (SELECT qid, doc_id,
                 row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
          FROM agg QUALIFY rank <= 20),
 {_hashed_sql("tk", "v")},
-vs AS (SELECT vq.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM vbase b, vq),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
+{_fuse_sql(cand=False)},
 rr AS (SELECT qid, doc_id, score,
               row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rank
        FROM f)
@@ -688,18 +666,7 @@ SELECT qid, doc_id, score, rank FROM rr WHERE rank <= 10
         # %250 queries, top-20) + the hashed-embed cosine leg + the RRF
         # tail — every stage the rounding-ladder twin of its Spark form.
         "hybrid_sparse_rrf": f"""
-WITH tk0 AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-ftk AS (SELECT doc_id,
-               list_concat(tk, list_transform(range(1, greatest(len(tk), 1)),
-                   i -> tk[i] || ' ' || tk[i+1])) AS ft
-        FROM tk0),
-sstats AS (SELECT count(*)::DOUBLE AS n FROM ftk WHERE len(ft) > 0),
-spost AS (SELECT doc_id, unnest(ft) AS term FROM ftk),
-stfs AS (SELECT term, doc_id, count(*) AS tf FROM spost GROUP BY term, doc_id),
-sdfr AS (SELECT term, count(*) AS df FROM stfs GROUP BY term),
-sw AS (SELECT t.term, t.doc_id,
-              round((1.0 + ln(t.tf::DOUBLE)) * ln(s.n / sdfr.df::DOUBLE), 6) AS w
-       FROM stfs t JOIN sdfr ON t.term = sdfr.term CROSS JOIN sstats s),
+WITH {_SPARSE_W_SQL},
 sqw AS (SELECT doc_id AS qid, term, w AS qwv FROM sw WHERE doc_id % 250 = 0),
 ssc AS (SELECT sqw.qid, sw.doc_id, round(sw.w * sqw.qwv, 9)::DECIMAL(28,10) AS c
         FROM sw JOIN sqw ON sw.term = sqw.term),
@@ -710,20 +677,7 @@ lexr AS (SELECT qid, doc_id,
                 AS rank
          FROM sagg QUALIFY rank <= 20),
 {_hashed_sql("tk0", "v")},
-vs AS (SELECT vq.qid, b.doc_id,
-   1.0 - list_sum(list_transform(list_zip(vq.qv, b.v), p -> p[1] * p[2]))::DOUBLE
-       / (sqrt(vq.qn::DOUBLE) * sqrt(b.nsq::DOUBLE)) AS dd
-   FROM vbase b, vq),
-vecr AS (SELECT qid, doc_id,
-                row_number() OVER (PARTITION BY qid ORDER BY dd, doc_id) AS rank
-         FROM vs QUALIFY rank <= 20),
-u AS (SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM lexr
-      UNION ALL
-      SELECT qid, doc_id,
-             round(1.0 / (60.0 + rank), 9)::DECIMAL(28,10) AS t FROM vecr),
-f AS (SELECT qid, doc_id, CAST(round(sum(t), 6) AS DOUBLE) AS score
-      FROM u GROUP BY qid, doc_id),
+{_fuse_sql(cand=False)},
 rr AS (SELECT qid, doc_id, score,
               row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)
               AS rank

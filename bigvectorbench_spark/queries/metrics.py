@@ -115,6 +115,20 @@ def q_pareto_frontier(spark, sf):
 
 def oracles() -> dict[str, str]:
     l2 = _L2.format(a="t.v", b="q.v")
+    # each query's top-10 by the 64-dim truth (tt) and the 32-dim run (rr)
+    recall_ctes = f"""
+WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
+q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
+full_r AS (SELECT q.qid, t.id,
+                  row_number() OVER (PARTITION BY q.qid ORDER BY {l2}, t.id) AS rn
+           FROM q CROSS JOIN t),
+lo AS (SELECT qid, v[1:32] AS v FROM q),
+lot AS (SELECT id, v[1:32] AS v FROM t),
+low_r AS (SELECT lo.qid, lot.id,
+                 row_number() OVER (PARTITION BY lo.qid ORDER BY {_L2.format(a="lot.v", b="lo.v")}, lot.id) AS rn
+          FROM lo CROSS JOIN lot),
+tt AS (SELECT qid, id FROM full_r WHERE rn <= 10),
+rr AS (SELECT qid, id FROM low_r WHERE rn <= 10)"""
     return {
         "groundtruth_pack": f"""
 WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v, label FROM embeddings),
@@ -129,19 +143,7 @@ UNION ALL
 SELECT c.qid, t.i AS pos, (-1)::BIGINT AS neighbor, 'inf'::DOUBLE AS dist
 FROM c CROSS JOIN range(1, 61) t(i) WHERE t.i > c.c
 """,
-        "recall_summary": f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
-full_r AS (SELECT q.qid, t.id,
-                  row_number() OVER (PARTITION BY q.qid ORDER BY {l2}, t.id) AS rn
-           FROM q CROSS JOIN t),
-lo AS (SELECT qid, v[1:32] AS v FROM q),
-lot AS (SELECT id, v[1:32] AS v FROM t),
-low_r AS (SELECT lo.qid, lot.id,
-                 row_number() OVER (PARTITION BY lo.qid ORDER BY {_L2.format(a="lot.v", b="lo.v")}, lot.id) AS rn
-          FROM lo CROSS JOIN lot),
-tt AS (SELECT qid, id FROM full_r WHERE rn <= 10),
-rr AS (SELECT qid, id FROM low_r WHERE rn <= 10),
+        "recall_summary": f"""{recall_ctes},
 pq AS (SELECT tt.qid, round(count(rr.id)::DOUBLE / 10.0, 6) AS recall
        FROM tt LEFT JOIN rr ON tt.qid = rr.qid AND tt.id = rr.id GROUP BY tt.qid)
 SELECT round(avg(recall), 6) AS mean_recall,
@@ -161,19 +163,7 @@ SELECT CASE WHEN (vec_id * 2654435761) % 100 < 80 THEN 'train' ELSE 'test' END A
        count(*) AS n_rows, CAST(sum(vec_id) AS BIGINT) AS id_sum
 FROM embeddings GROUP BY 1
 """,
-        "recall_lowdim_vs_full": f"""
-WITH t AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 50 = 0),
-full_r AS (SELECT q.qid, t.id,
-                  row_number() OVER (PARTITION BY q.qid ORDER BY {l2}, t.id) AS rn
-           FROM q CROSS JOIN t),
-lo AS (SELECT qid, v[1:32] AS v FROM q),
-lot AS (SELECT id, v[1:32] AS v FROM t),
-low_r AS (SELECT lo.qid, lot.id,
-                 row_number() OVER (PARTITION BY lo.qid ORDER BY {_L2.format(a="lot.v", b="lo.v")}, lot.id) AS rn
-          FROM lo CROSS JOIN lot),
-tt AS (SELECT qid, id FROM full_r WHERE rn <= 10),
-rr AS (SELECT qid, id FROM low_r WHERE rn <= 10)
+        "recall_lowdim_vs_full": f"""{recall_ctes}
 SELECT tt.qid, round(count(rr.id)::DOUBLE / 10.0, 6) AS recall
 FROM tt LEFT JOIN rr ON tt.qid = rr.qid AND tt.id = rr.id
 GROUP BY tt.qid

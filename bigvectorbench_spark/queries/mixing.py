@@ -11,7 +11,7 @@ from bigvectorbench_spark.operators import (
 from bigvectorbench_spark.sources.tables import load_table
 
 from bigvectorbench_spark.queries._common import (
-    _docs_lines, _docs_wide, _PHASH, _rwh, _TH, _TOKENS)
+    _docs_lines, _docs_wide, _PAGES_SQL, _PHASH, _rwh, _TH, _TOKENS)
 
 
 def q_doc_chunks(spark, sf):
@@ -351,22 +351,7 @@ FROM documents GROUP BY source
         # but over the REWRITTEN text — every stage's values flow into
         # the next, so a mismatch anywhere surfaces in the final hash
         "llm_data_mix": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-lines AS (SELECT doc_id, source,
-  list_transform(range(0, CAST(ceil(len(tk) / 6.0) AS BIGINT)), i ->
-    array_to_string(tk[CAST(i*6+1 AS INT) : CAST(i*6+6 AS INT)], ' ')
-    || CASE WHEN (doc_id + i) % 13 = 7 THEN ' javascript embedded here'
-            ELSE '' END
-    || (['.', '', '!', '?', ''])[CAST((doc_id + i) % 5 AS INT) + 1]) AS ls
-  FROM tk),
-pages AS (SELECT doc_id, source,
-  array_to_string(ls, chr(10))
-  || CASE WHEN doc_id % 89 = 0
-          THEN chr(10) || 'this page quotes lorem ipsum boilerplate.'
-          ELSE '' END
-  || CASE WHEN doc_id % 97 = 0
-          THEN chr(10) || 'function f() {{ return 1; }}'
-          ELSE '' END AS text FROM lines),
+WITH {_PAGES_SQL},
 keptl AS (SELECT doc_id, source, text,
   list_filter(string_split(text, chr(10)), ln ->
     regexp_matches(ln, '[.!?"]$')
@@ -402,7 +387,7 @@ dre AS (SELECT doc_id, source, dtext AS text FROM dedup),
 dtk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM dre),
 dth AS (SELECT doc_id, source, {_TH} AS th FROM dtk),
 occ2 AS (SELECT doc_id,
-  unnest(list_transform(range(1, len(th)), i -> {_rwh('i', 2)} % 4096)) AS b
+  unnest(list_transform(range(1, len(th)), i -> {_rwh(2)} % 4096)) AS b
   FROM dth),
 dist AS (SELECT b, count(*)::BIGINT AS raw_c,
   sum(CASE WHEN doc_id % 17 = 0 THEN 1 ELSE 0 END)::BIGINT AS tgt_c
@@ -479,7 +464,7 @@ FROM rates r JOIN keeps k USING (source) ORDER BY source
 WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
 tkh AS (SELECT doc_id, source, {_TH} AS th FROM tk),
 occ AS (SELECT doc_id, source,
-  unnest(list_transform(range(1, len(th)), i -> {_rwh('i', 2)} % 4096)) AS b
+  unnest(list_transform(range(1, len(th)), i -> {_rwh(2)} % 4096)) AS b
   FROM tkh),
 dist AS (SELECT b, count(*)::BIGINT AS raw_c,
   sum(CASE WHEN doc_id % 17 = 0 THEN 1 ELSE 0 END)::BIGINT AS tgt_c

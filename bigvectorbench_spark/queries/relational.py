@@ -9,7 +9,8 @@ from bigvectorbench_spark.functions import text as tx
 from bigvectorbench_spark.operators import metrics as mx
 from bigvectorbench_spark.sources.tables import load_table
 
-from bigvectorbench_spark.queries._common import _docs_wide, _TOKENS
+from bigvectorbench_spark.queries._common import (
+    _docs_wide, _QUALITY_FEATS, _TOKENS)
 
 
 def q_topk_per_group(spark, sf):
@@ -382,15 +383,7 @@ FROM documents GROUP BY source
 WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk FROM documents),
 s AS (SELECT doc_id,
              len(tk)::DOUBLE AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
+             {_QUALITY_FEATS}
       FROM tk),
 q AS (SELECT doc_id,
              round(0.3 * least(ntok / 64.0, 1.0)

@@ -22,8 +22,8 @@ from bigvectorbench_spark.operators.curation import (
 from bigvectorbench_spark.sources.tables import load_table
 
 from bigvectorbench_spark.queries._common import (
-    _docs_lines, _docs_wide, _hashed_sql, _ORACLE_SF_DIR, _rwh, _TH,
-    _TOKENS)
+    _docs_lines, _docs_wide, _hashed_sql, _ORACLE_SF_DIR, _PAGES_SQL,
+    _QUALITY_FEATS, _rwh, _TH, _TOKENS)
 
 
 def q_token_stats(spark, sf):
@@ -365,6 +365,26 @@ _PII_AUG = """text
           ELSE '' END"""
 
 
+# The bigram LM (lm.py) over ``tk``: MLE conditionals fit on the
+# doc_id % 7 = 0 slice, and per doc r(doc_id, n_bigrams, n_oov, lik_sum)
+# with 6-dp conditionals summed in DECIMAL.
+_BIGRAM_LM_SQL = """pr AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
+           i -> {'w1': tk[i], 'w2': tk[i+1]})) AS u FROM tk),
+p AS (SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM pr),
+bg AS (SELECT w1, w2, count(*)::BIGINT AS c_bg FROM p
+       WHERE doc_id % 7 = 0 GROUP BY w1, w2),
+ctx AS (SELECT w1, sum(c_bg)::BIGINT AS c_ctx FROM bg GROUP BY w1),
+s AS (SELECT p.doc_id, l.c_bg, l.c_ctx FROM p LEFT JOIN
+        (SELECT w1, w2, c_bg, c_ctx FROM bg JOIN ctx USING (w1)) l
+        USING (w1, w2)),
+r AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
+        sum(CASE WHEN c_bg IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
+        sum(CASE WHEN c_bg IS NOT NULL
+                 THEN round(c_bg::DOUBLE / c_ctx, 6)::DECIMAL(18,6) END)
+            AS lik_sum
+      FROM s GROUP BY doc_id)"""
+
+
 def _gopher_repetition_sql() -> str:
     """Oracle for the nine Gopher repetition rules: one unnest+groupBy CTE
     per n regenerating the per-doc character masses the Spark folds
@@ -377,7 +397,7 @@ def _gopher_repetition_sql() -> str:
         # char mass) bigint the Spark folds group on (window_stat_packed),
         # so even a hash collision is mirrored.  range() is empty when the
         # doc has fewer than n tokens.
-        win = f"{_rwh('i', n)} * 4194304 + list_sum(lens[i:i+{n - 1}])"
+        win = f"{_rwh(n)} * 4194304 + list_sum(lens[i:i+{n - 1}])"
         per_win = (f"SELECT doc_id, unnest(list_transform("
                    f"range(1, len(th) - {n - 2}), i -> {win})) AS pw "
                    f"FROM tkh")
@@ -515,22 +535,13 @@ def _classifier_oracle() -> dict[str, str]:
     if not os.path.exists(path):
         return {}
 
-
     feats = f"""
 WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk
             FROM read_parquet('{path}')),
 {_hashed_sql("tk", keep="text, tk, ", base=False)},
 q AS (SELECT doc_id, v,
              len(tk)::DOUBLE AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
+             {_QUALITY_FEATS}
       FROM v)
 SELECT doc_id, v,
        CASE WHEN 0.3 * least(ntok / 64.0, 1.0)
@@ -643,15 +654,7 @@ FROM tk
 WITH tk AS (SELECT doc_id, text, {_TOKENS} AS tk FROM documents),
 s AS (SELECT doc_id,
              len(tk)::DOUBLE AS ntok,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE list_sum(list_transform(tk, w -> length(w)))::DOUBLE / len(tk) END AS awl,
-             CASE WHEN len(tk) = 0 THEN 0.0
-                  ELSE len(list_filter(tk, w -> list_contains(
-                       ['the','and','of','to','is','a','in','that'], w)))::DOUBLE / len(tk) END AS swr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^[:punct:]]', '', 'g'))::DOUBLE / length(text) END AS pr,
-             CASE WHEN length(text) = 0 THEN 0.0
-                  ELSE length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) END AS dr
+             {_QUALITY_FEATS}
       FROM tk)
 SELECT doc_id,
        round(0.3 * least(ntok / 64.0, 1.0)
@@ -742,21 +745,7 @@ FROM aug
 """,
         "lm_fluency": f"""
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
-pr AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-           i -> {{'w1': tk[i], 'w2': tk[i+1]}})) AS u FROM tk),
-p AS (SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM pr),
-bg AS (SELECT w1, w2, count(*)::BIGINT AS c_bg FROM p
-       WHERE doc_id % 7 = 0 GROUP BY w1, w2),
-ctx AS (SELECT w1, sum(c_bg)::BIGINT AS c_ctx FROM bg GROUP BY w1),
-s AS (SELECT p.doc_id, l.c_bg, l.c_ctx FROM p LEFT JOIN
-        (SELECT w1, w2, c_bg, c_ctx FROM bg JOIN ctx USING (w1)) l
-        USING (w1, w2)),
-r AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-        sum(CASE WHEN c_bg IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-        sum(CASE WHEN c_bg IS NOT NULL
-                 THEN round(c_bg::DOUBLE / c_ctx, 6)::DECIMAL(18,6) END)
-            AS lik_sum
-      FROM s GROUP BY doc_id)
+{_BIGRAM_LM_SQL}
 SELECT doc_id, n_bigrams, n_oov,
    CASE WHEN n_bigrams > 0
         THEN round((n_bigrams - n_oov)::DOUBLE / n_bigrams, 6) END AS hit_rate,
@@ -772,22 +761,7 @@ FROM tk WHERE len(tk) < 2
         # the line/page construction mirrors _docs_lines verbatim; the
         # C4 rules themselves are re-derived with DuckDB list/regexp ops
         "c4_line_filter": f"""
-WITH tk AS (SELECT doc_id, source, {_TOKENS} AS tk FROM documents),
-lines AS (SELECT doc_id, source,
-  list_transform(range(0, CAST(ceil(len(tk) / 6.0) AS BIGINT)), i ->
-    array_to_string(tk[CAST(i*6+1 AS INT) : CAST(i*6+6 AS INT)], ' ')
-    || CASE WHEN (doc_id + i) % 13 = 7 THEN ' javascript embedded here'
-            ELSE '' END
-    || (['.', '', '!', '?', ''])[CAST((doc_id + i) % 5 AS INT) + 1]) AS ls
-  FROM tk),
-pages AS (SELECT doc_id, source,
-  array_to_string(ls, chr(10))
-  || CASE WHEN doc_id % 89 = 0
-          THEN chr(10) || 'this page quotes lorem ipsum boilerplate.'
-          ELSE '' END
-  || CASE WHEN doc_id % 97 = 0
-          THEN chr(10) || 'function f() {{ return 1; }}'
-          ELSE '' END AS text FROM lines),
+WITH {_PAGES_SQL},
 kept AS (SELECT doc_id, source, text,
   string_split(text, chr(10)) AS lns,
   list_filter(string_split(text, chr(10)), ln ->
@@ -819,21 +793,7 @@ FROM stat GROUP BY source ORDER BY source
 WITH tk AS (SELECT doc_id, {_TOKENS} AS tk FROM documents),
 langs AS (SELECT d.doc_id, d.lang, len(t.tk)::BIGINT AS n_tok
           FROM documents d JOIN tk t USING (doc_id)),
-pr AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-           i -> {{'w1': tk[i], 'w2': tk[i+1]}})) AS u FROM tk),
-p AS (SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM pr),
-bg AS (SELECT w1, w2, count(*)::BIGINT AS c_bg FROM p
-       WHERE doc_id % 7 = 0 GROUP BY w1, w2),
-ctx AS (SELECT w1, sum(c_bg)::BIGINT AS c_ctx FROM bg GROUP BY w1),
-s AS (SELECT p.doc_id, l.c_bg, l.c_ctx FROM p LEFT JOIN
-        (SELECT w1, w2, c_bg, c_ctx FROM bg JOIN ctx USING (w1)) l
-        USING (w1, w2)),
-r AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-        sum(CASE WHEN c_bg IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov,
-        sum(CASE WHEN c_bg IS NOT NULL
-                 THEN round(c_bg::DOUBLE / c_ctx, 6)::DECIMAL(18,6) END)
-            AS lik_sum
-      FROM s GROUP BY doc_id),
+{_BIGRAM_LM_SQL},
 mcl AS (SELECT doc_id,
    CASE WHEN n_bigrams - n_oov > 0
         THEN round(lik_sum::DOUBLE / (n_bigrams - n_oov), 6) END AS mcl

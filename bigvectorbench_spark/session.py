@@ -72,10 +72,9 @@ _DEFAULTS = {
     # (256 MB/core at local[32]) OOMed the PPJoin shingle stages on a
     # 5M-doc/4 GB-text corpus that a per-core-realistic heap absorbs —
     # artificial scarcity, not a plan defect.  A heap larger than the host
-    # lets the JVM grow until the machine, not Spark, fails, so the default
-    # is capped at half the host's memory; SPARK_GRAFT_DRIVER_MEM overrides.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
-                                          _default_driver_mem()),
+    # lets the JVM grow until the machine, not Spark, fails, so get_spark
+    # caps the default at half the host's memory (_default_driver_mem);
+    # SPARK_GRAFT_DRIVER_MEM overrides.
 }
 
 
@@ -87,6 +86,8 @@ def get_spark(app_name: str = "bigvectorbench-spark", **overrides: str) -> Spark
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    for k, v in {**_DEFAULTS, **overrides}.items():
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+    confs = {**_DEFAULTS, "spark.driver.memory": mem, **overrides}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
