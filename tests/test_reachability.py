@@ -262,9 +262,10 @@ def reached_defs(root=ROOT, extra_roots=()):
     for name in CONTRACT:
         if name in mods[ENTRY].defs:
             reach(ENTRY, name)
-    for path in _root_files(root)[1:]:
+    for path in _root_files(root):
         rm = _Module(os.path.basename(path)[:-3], path)
-        walk(rm, [rm.tree])
+        if rm.name != ENTRY:
+            walk(rm, [rm.tree])
     for name in extra_roots:
         hit = resolve(name)
         if hit and hit[0] == "def":
