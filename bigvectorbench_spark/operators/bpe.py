@@ -29,7 +29,7 @@ Scale design (the shuffle account at 100 TB):
   token stream; the rollup is map-side combined.  Corpus text is
   scanned, never shuffled.
 
-Cross-engine check: the oracle (``__spark_entry__._bpe_oracle``) learns
+Cross-engine check: the oracle (``queries.text._bpe_oracle``) learns
 the same merge table with an INDEPENDENT implementation — Sennrich-style
 apply-merges-in-order segmentation vs this module's GPT-2-style
 lowest-rank-first loop — and embeds its (word, n_pieces) map as SQL

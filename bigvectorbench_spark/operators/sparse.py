@@ -23,7 +23,7 @@ Scale design:
   the classic impact-sorted-index trick that caps the cost of stopword-like
   terms (idf already down-weights them; pruning stops paying their join
   cost too).  Recall against the exact join is gated in
-  ``__spark_entry__.q_sparse_prune_recall``.
+  ``queries.sparse.q_sparse_prune_recall``.
 - **Engine-stable scoring** (the bm25_topk convention): weights round to
   6 dp, per-term products to 9 dp, accumulation in DECIMAL (order- and
   partitioning-independent), final score rounds to 6 dp *before* ranking;
