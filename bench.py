@@ -7,11 +7,14 @@ selects a subset; $SPARK_GRAFT_BENCH_RUNS (default 3) sets best-of-N.
 stdout ends with ONE compact JSON headline line, short enough to be
 parsed whole from a bounded 2000-char stdout tail:
   {"metric": "headline_queries_total_time", "value": N, "unit": "sec",
-   "queries": {name: best-of-N seconds}, "sf": ...}
+   "queries": {name: best-of-N seconds}, "sf": ..., "records": path}
 
 stderr gets one JSON record per query from ``run_query``, the single place
 a query is run and measured, so every number about a query (wall time,
-phase split, Spark work, plan shape) comes from the same runs:
+phase split, Spark work, plan shape) comes from the same runs.  The same
+lines go to ``results/bench/bench_sf<sf>_<time>_<pid>.jsonl``, free of
+Spark's log lines; the headline's ``records`` names that file, relative
+to this script's directory:
   {"query", "runs": [s...], "cold_s", "min_s", "build_s", "plan_s",
    "exec_s", "jobs", "stages", "tasks", "task_s", "job_s": [s...],
    "shuffle_mb", "spill_mb", "persisted_rdds",
@@ -196,14 +199,20 @@ def main() -> None:
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in names:
-        rec = run_query(spark, stats, name, qs[name], sf_dir, runs)
-        print(json.dumps(rec, separators=(",", ":")), file=sys.stderr,
-              flush=True)
-        if "error" in rec:
-            errors[name] = rec["error"]
-        else:
-            timings[name] = rec["min_s"]
+    records = os.path.join("results", "bench", f"bench_sf{sf}_"
+                           f"{time.strftime('%Y%m%d-%H%M%S')}_{os.getpid()}.jsonl")
+    root = os.path.dirname(os.path.abspath(__file__))
+    os.makedirs(os.path.join(root, os.path.dirname(records)), exist_ok=True)
+    with open(os.path.join(root, records), "w") as log:
+        for name in names:
+            rec = run_query(spark, stats, name, qs[name], sf_dir, runs)
+            line = json.dumps(rec, separators=(",", ":"))
+            print(line, file=sys.stderr, flush=True)
+            print(line, file=log, flush=True)
+            if "error" in rec:
+                errors[name] = rec["error"]
+            else:
+                timings[name] = rec["min_s"]
 
     out = {
         "metric": "headline_queries_total_time",
@@ -211,6 +220,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "records": records,
     }
     if errors:
         # A partially-failed run must never look faster than a passing one:

@@ -29,6 +29,17 @@ PQ, IVF-PQ, BQ, multi-vector); each supplies only its per-batch scoring.
 Its per-batch selection keeps the k smallest rows by (dist, id), so the
 kernels break ties by ascending id exactly as the final window does.
 
+When the train frame is a bare local parquet relation (a parquet file
+relation without partition columns under at most one projection of
+columns or renames; ``parquet_fragments`` decides from the optimized
+plan), ``topk_scan`` fuses the scan into the kernel: the Python worker
+reads the files' row groups with pyarrow and scores them in the same
+task, so the vectors are never decoded by the JVM nor sent over Arrow
+IPC, and only each batch's partial top-k crosses back.  Any other frame
+(a filter, cast, computed column, union, join, partitioned or
+non-``file:`` table, such as IVF's cluster-pruned scan) runs the kernel
+over Spark's own scan.  The results are the same either way.
+
 ``topk_scan`` runs on ``arrow_map``, the package's one Arrow batch idiom:
 broadcast the state once, call a per-batch function on each non-empty
 batch, pass chosen input columns through and declare the new columns as
@@ -115,8 +126,23 @@ def knn(
 
 
 def _first_dim(frame: DataFrame, col: str) -> Optional[int]:
-    row = frame.select(F.size(col)).first()
-    return None if row is None else row[0]
+    """Element count of ``col``'s first row.  A bare parquet frame
+    (``parquet_fragments``) is read with pyarrow up to its first non-null
+    row, as ``sources.tables.table_dim`` does, with no Spark job."""
+    src = parquet_fragments(frame.select(col))
+    if src is None:
+        row = frame.select(F.size(col)).first()
+        return None if row is None else row[0]
+    import pyarrow.parquet as pq
+
+    [(_, name)], frags = src
+    for path, group, _ in frags:
+        with pq.ParquetFile(path) as f:
+            for batch in f.iter_batches(batch_size=64, row_groups=[group], columns=[name]):
+                for v in batch.column(0):
+                    if v.is_valid:
+                        return len(v)
+    return None
 
 
 def _check_dims(t_dim: Optional[int], q_dim: Optional[int], vec_col: str) -> None:
@@ -294,14 +320,15 @@ def _arrow_array(values, arrow_type):
     return pa.array(values, arrow_type)
 
 
-def arrow_map(frame: DataFrame, fn, out, *, state=None, keep=()) -> DataFrame:
+def arrow_map(frame: DataFrame, fn, out, *, state=None, keep=(), read=None) -> DataFrame:
     """The one Arrow batch kernel: ``fn(batch, state)`` runs on every
     non-empty Arrow batch of ``frame`` and returns one array per
     ``(name, pyarrow type)`` in ``out``.  ``state`` is broadcast once.  The
     ``keep`` input columns pass through ahead of the new ones (then ``fn``
     must return one value per input row); a 2-D ndarray becomes a list
     column of its rows.  The Spark types of the new columns come from
-    their Arrow types."""
+    their Arrow types.  ``read``, when given, maps each task's stream of
+    ``frame`` batches to the batches ``fn`` sees (``fused_scan``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import StructType
@@ -313,6 +340,8 @@ def arrow_map(frame: DataFrame, fn, out, *, state=None, keep=()) -> DataFrame:
 
     def kernel(batches):
         b_state = bc.value
+        if read is not None:
+            batches = read(batches)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -321,6 +350,112 @@ def arrow_map(frame: DataFrame, fn, out, *, state=None, keep=()) -> DataFrame:
                                              names=names)
 
     return frame.mapInArrow(kernel, schema=schema)
+
+
+def _jname(obj) -> str:
+    return obj.getClass().getSimpleName()
+
+
+def _jseq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def parquet_fragments(frame: DataFrame) -> Optional[tuple[list, list]]:
+    """``(columns, fragments)`` when ``frame`` is a bare local parquet
+    relation, else None.  ``columns`` pairs each frame column, in order,
+    with the file column it reads; ``fragments`` lists every non-empty
+    ``(path, row group, rows)`` of the frame's files, read from the
+    footers with no Spark job (``sources.tables.table_rows``).
+
+    Bare means: the optimized plan is a ``LogicalRelation`` over a parquet
+    ``HadoopFsRelation`` with no partition columns, under at most one
+    ``Project`` of attributes or renames of them; every input file is a
+    ``file:`` URI; and each column's Arrow type in every file maps to the
+    frame's Spark type.  A filter, cast, computed column, union, join or
+    limit makes the frame not bare."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    exprs = None
+    if _jname(plan) == "Project":
+        exprs, plan = _jseq(plan.projectList()), plan.child()
+    if _jname(plan) != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (_jname(rel) != "HadoopFsRelation" or _jname(rel.fileFormat()) != "ParquetFileFormat"
+            or rel.partitionSchema().length() > 0):
+        return None
+    attrs = _jseq(plan.output())
+    file_cols = {a.exprId().id(): a.name() for a in attrs}
+    sources = []
+    for e in attrs if exprs is None else exprs:
+        if _jname(e) == "Alias":
+            e = e.child()
+        if _jname(e) != "AttributeReference" or e.exprId().id() not in file_cols:
+            return None
+        sources.append(file_cols[e.exprId().id()])
+    fields = frame.schema.fields
+    paths = []
+    for uri in frame.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        paths.append(unquote(u.path))
+    frags = []
+    for path in sorted(paths):
+        with pq.ParquetFile(path) as f:
+            schema, md = f.schema_arrow, f.metadata
+        for field, src in zip(fields, sources):
+            i = schema.get_field_index(src)
+            try:
+                if i < 0 or from_arrow_type(schema.field(i).type) != field.dataType:
+                    return None
+            except TypeError:  # an Arrow type Spark has no type for
+                return None
+        frags += [(path, g, md.row_group(g).num_rows) for g in range(md.num_row_groups)
+                  if md.row_group(g).num_rows]
+    return [(f.name, src) for f, src in zip(fields, sources)], frags
+
+
+def fused_scan(frame: DataFrame, columns: list, frags: list) -> tuple[DataFrame, object]:
+    """``(tasks, read)`` for ``arrow_map(tasks, …, read=read)``: the scan
+    of a bare parquet ``frame`` (``parquet_fragments``) run in the Python
+    worker.  ``tasks`` is a ``spark.range`` of one row per task, at most
+    ``defaultParallelism`` of them; the fragments are dealt out by row
+    count, the largest first to the task with the fewest rows.  ``read``
+    turns a task's row into its fragments' rows, read with pyarrow in
+    batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows under
+    the frame's column names."""
+    spark = frame.sparkSession
+    n = max(1, min(len(frags), spark.sparkContext.defaultParallelism))
+    dealt, load = [[] for _ in range(n)], [0] * n
+    for path, group, rows in sorted(frags, key=lambda f: -f[2]):
+        i = load.index(min(load))
+        dealt[i].append((path, group))
+        load[i] += rows
+    per_task = [[(p, sorted(g for q, g in d if q == p)) for p in sorted({p for p, _ in d})]
+                for d in dealt]
+    names, sources = [c for c, _ in columns], [s for _, s in columns]
+    size = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    size = size if size > 0 else 1 << 24
+
+    def read(batches):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        for batch in batches:
+            for task in batch.column(0).to_pylist():
+                for path, groups in per_task[task]:
+                    with pq.ParquetFile(path) as f:
+                        for b in f.iter_batches(batch_size=size, row_groups=groups,
+                                                columns=sorted(set(sources))):
+                            yield pa.RecordBatch.from_arrays([b.column(s) for s in sources],
+                                                             names=names)
+
+    return spark.range(0, n, numPartitions=n), read
 
 
 def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
@@ -339,7 +474,16 @@ def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
 
     Each batch emits only its per-column partial top-k (``partial_topk``),
     so the shuffle carries O(q·k·batches) rows instead of O(q·n); a final
-    window ranks them.  Returns ``(keys…, id, dist, rank)`` with rank 1..k
+    window ranks them.
+
+    A bare local parquet ``frame`` (``parquet_fragments``: a projection of
+    columns or renames over a parquet table without partition columns,
+    every file a ``file:`` URI, every column's file type the frame's type)
+    is read by the kernel itself (``fused_scan``): its row groups are
+    dealt out to at most ``defaultParallelism`` tasks, read with pyarrow in
+    batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows under
+    the frame's column names, and scored there.  Every other frame falls
+    back to the kernel over Spark's scan of ``frame``.  Returns ``(keys…, id, dist, rank)`` with rank 1..k
     ordered by (dist, id) per key.  A NaN or +inf distance is never
     returned, masked or not, so a key with fewer than k other distances
     gets fewer than k rows."""
@@ -359,7 +503,9 @@ def topk_scan(frame: DataFrame, keys: dict, k: int, score, *, state=None,
         rows, cols = partial_topk(D, ids, k)
         return [*(c[cols] for c in b_cols), ids[rows], D[rows, cols]]
 
-    partial = arrow_map(frame, scan, out, state=(cols, state, member))
+    src = parquet_fragments(frame)
+    frame, read = (frame, None) if src is None else fused_scan(frame, *src)
+    partial = arrow_map(frame, scan, out, state=(cols, state, member), read=read)
     return topk_window(partial, k, qid=names, dist=dist).select(*names, "id", dist, "rank")
 
 

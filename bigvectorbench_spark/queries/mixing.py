@@ -57,30 +57,22 @@ def q_llm_data_mix(spark, sf):
     # by the stage-1 rollup and the dedup; the rewritten corpus by the
     # DSIR distribution fit, the weight join, and the empties sweep).
     # At 100 TB these would be parquet checkpoints between jobs; locally
-    # persist() plays that role (bench.py clears the cache per query).
-    # The boundaries are
-    # load-bearing, not advisory: executing this plan with them stripped
+    # a lazy localCheckpoint plays that role: the first job that reads a
+    # stage computes it once, the later ones read its blocks.  The
+    # boundaries are load-bearing: executing this plan with them stripped
     # re-runs every upstream stage once per downstream reference — the
     # planted-lines construction alone is recomputed ~10x — measured
-    # 241s vs 22s at 500k Zipf docs.  That is exactly why the
-    # cluster-scale analog is a DURABLE checkpoint (parquet between
-    # jobs), not best-effort executor caching: at 100 TB an evicted
-    # cache silently turns a 3-stage pipeline into a ~10x recomputation
-    # storm, while a written boundary caps each stage at one
-    # materialization.
+    # 241s vs 22s at 500k Zipf docs.
     #
-    # Boundary mechanism, MEASURED both ways (this composition's cold
-    # Catalyst tree took 4.4 s): lazy
-    # localCheckpoint boundaries DO cut the per-run cold cost (same-
-    # session 3-way A/B at sf0.1: persist 5.0-6.9 s, eager checkpoint
-    # 5.0-5.3 s, lazy 4.3-4.8 s per cold run) — but they LOSE under the
-    # bench's best-of-N protocol as it then stood (interleaved tree A/B:
-    # 1.31x), because persist's runs 2..N re-matched run 1's
-    # still-registered cache entries by plan identity while checkpointed
-    # RDDs are new objects every run.  persist stays; the checkpoint
-    # variant is the right shape only for single-shot cold execution.
+    # Lazy localCheckpoint against persist() at both boundaries, 12 cold
+    # runs each way through bench.run_query at sf0.1 (4 cores), the two
+    # interleaved in two sets: cold_s median 2.15 s against 2.58 s and
+    # 2.37 s against 2.75 s, faster in every adjacent pair; 24 jobs
+    # against 35 per run, same 20 rows.  Its build_s is longer (0.9-1.2 s
+    # against 0.6-0.95 s: each boundary plans its input where it is
+    # declared) and its exec_s shorter (1.0-1.5 s against 1.8-2.9 s).
     lines = _docs_lines(spark, sf)
-    c4 = cur.c4_clean(lines, extra_cols=("source",)).persist()
+    c4 = cur.c4_clean(lines, extra_cols=("source",)).localCheckpoint(eager=False)
     s1 = c4.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum((F.col("status") == "kept").cast("int")).cast("bigint")
@@ -92,7 +84,7 @@ def q_llm_data_mix(spark, sf):
     s2 = dd.groupBy("source").agg(
         F.sum("n_dup_removed").cast("bigint").alias("n_line_dups_removed"))
     final = dd.select("doc_id", "source",
-                      F.col("text_clean").alias("text")).persist()
+                      F.col("text_clean").alias("text")).localCheckpoint(eager=False)
     w = dsir.dsir_weights(final, extra_cols=("source",))
     s3 = w.groupBy("source").agg(
         F.sum(F.col("keep").cast("int")).cast("bigint").alias("n_dsir_kept"),

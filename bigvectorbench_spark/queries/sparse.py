@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from bigvectorbench_spark.functions import text as tx
 from bigvectorbench_spark.operators import retrieval as rt, sparse as sp
 from bigvectorbench_spark.operators.retrieval import ndcg_weights
-from bigvectorbench_spark.sources.tables import load_table
+from bigvectorbench_spark.sources.tables import load_table, table_rows
 
 from bigvectorbench_spark.queries._common import (
     _bm25_sql, _docs_wide, _gate, _recall_gate, _TOKENS)
@@ -135,8 +135,7 @@ def q_sparse_prune_recall(spark, sf):
     exact = sp.sparse_topk(docs, queries, k=10, wpost=wpost)
     pruned = sp.sparse_topk(
         docs, queries, k=10,
-        wpost=sp.prune_postings(wpost, m="auto",
-                                n_docs=load_table(spark, sf, "documents").count()),
+        wpost=sp.prune_postings(wpost, m="auto", n_docs=table_rows(sf, "documents")),
         qwpost=wpost)
     return _recall_gate(pruned, exact, mean_thr, min_thr, col="doc_id")
 

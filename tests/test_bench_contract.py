@@ -3,9 +3,10 @@ its bench signal to this): the driver reads a bounded 2000-char stdout
 TAIL and parses the LAST line as the headline JSON, so
 
 - stdout must end with one compact JSON line under ~1,900 chars carrying
-  {metric, value, unit, queries, sf};
+  {metric, value, unit, queries, sf, records};
 - the per-query records (per-run arrays, phase split, Spark counts, plan
-  fingerprint) go to stderr, one JSON line per query, never stdout.
+  fingerprint) go to stderr, one JSON line per query, never stdout, and
+  the same lines to the ``records`` file the headline names.
 
 Runs bench.py as a subprocess on a tiny query subset at sf0.001: the
 records read the Spark UI REST API, which the test session runs without.
@@ -45,6 +46,14 @@ def test_bench_stdout_fits_driver_tail_window(sf_dir):
     assert head["unit"] == "sec" and head["value"] > 0
     assert set(head["queries"]) == {"token_stats", "corpus_rollup"}
     assert len(last) < 1900
+
+    # the records file the headline names holds the stderr records, alone
+    path = os.path.join(ROOT, head["records"])
+    assert head["records"].startswith(os.path.join("results", "bench", ""))
+    with open(path) as f:
+        logged = f.read().splitlines()
+    os.remove(path)
+    assert logged == [l for l in proc.stderr.splitlines() if l.startswith('{"query"')]
 
     # one record per query on stderr, in queries() order
     import __spark_entry__ as entry
@@ -96,12 +105,15 @@ def test_fit_headline_line_tiers():
     import bench
 
     timings = {f"query_name_{i:03d}": 0.001 + i * 0.037 for i in range(120)}
+    records = "results/bench/bench_sf0.1_20261020-201500_123456.jsonl"
     out = {"metric": "headline_queries_total_time", "value": 12.345,
-           "unit": "sec", "queries": dict(timings), "sf": 0.1}
+           "unit": "sec", "queries": dict(timings), "sf": 0.1,
+           "records": records}
     line = bench.fit_headline_line(out, timings)
     assert len(line) <= 1900
     parsed = json.loads(line)
     assert parsed["value"] == 12.345  # headline precision untouched
+    assert parsed["records"] == records  # the records path survives the cut
     kept = parsed["queries"]
     assert parsed["q_omitted"] == 120 - len(kept)
     # the kept set is the SLOWEST queries

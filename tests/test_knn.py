@@ -143,3 +143,131 @@ def test_jaccard_sparse_matches_expr(spark):
     rb = [(r["qid"], r["id"], round(r["dist"], 9), r["rank"])
           for r in b.orderBy("qid", "rank").collect()]
     assert ra == rb
+
+
+def _write_parquet(path, ids, X, cols=("id", "vec"), row_group_size=None):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = X.shape[1]
+    vec = pa.ListArray.from_arrays(pa.array(np.arange(len(ids) + 1, dtype=np.int32) * d),
+                                   pa.array(X.ravel(), pa.float32()))
+    pq.write_table(pa.table({cols[0]: pa.array(ids, pa.int64()), cols[1]: vec}), path,
+                   row_group_size=row_group_size)
+
+
+@pytest.fixture(scope="module")
+def parquet_ties(spark, tmp_path_factory):
+    """``make_ties`` written as four files of 16-row row groups plus an
+    empty file.  The 40 duplicates tied at the k-th distance (ids 20-98)
+    cross three files."""
+    Xtr, Xte = make_ties(500)
+    path = tmp_path_factory.mktemp("fused") / "train.parquet"
+    path.mkdir()
+    for f, (lo, hi) in enumerate([(0, 50), (50, 80), (80, 300), (300, 500), (500, 500)]):
+        _write_parquet(str(path / f"part-{f}.parquet"), np.arange(lo, hi), Xtr[lo:hi],
+                       row_group_size=16)
+    test = spark.createDataFrame(
+        [(i, [float(x) for x in Xte[i]]) for i in range(len(Xte))],
+        "qid bigint, vec array<float>",
+    )
+    return Xtr, Xte, spark.read.parquet(str(path)), test
+
+
+def _kernel_input(df) -> str:
+    """The formatted plan's tree below its Arrow kernel node."""
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    tree = buf.getvalue().split("\n\n", 1)[0]
+    return tree[tree.index("MapInArrow"):]
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "angular"])
+def test_fused_scan_matches_arrow_map_path(parquet_ties, metric, monkeypatch):
+    """On a bare parquet table ``topk_scan`` reads the files in the Python
+    worker (``Range`` under the kernel, no scan), and returns the rows the
+    ``arrow_map`` path over Spark's scan returns, ties across files and
+    batches included."""
+    Xtr, Xte, train, test = parquet_ties
+    _, frags = knn_ops.parquet_fragments(train)
+    assert len(frags) == 33 and {n for *_, n in frags} == {16, 2, 14, 12, 8}
+
+    def run():
+        with arrow_batch_rows(train.sparkSession, 7):
+            res = knn_ops.knn(train, test, k=10, metric=metric)
+            return _kernel_input(res), res.orderBy("qid", "rank").collect()
+
+    fused_plan, fused = run()
+    monkeypatch.setattr(knn_ops, "parquet_fragments", lambda frame: None)
+    plain_plan, plain = run()
+    assert "Range" in fused_plan and "Scan parquet" not in fused_plan
+    assert "Scan parquet" in plain_plan and "Range" not in plain_plan
+    assert fused == plain
+    expect = brute_force_knn(Xtr, Xte, 10, metric)
+    got = _group(fused)
+    for qid in range(len(Xte)):
+        assert [r["id"] for r in got[qid]] == list(expect[qid])
+
+
+def test_fused_scan_reads_renamed_columns(spark, tmp_path):
+    """Renamed columns (``doc_id``/``emb``) take the fused path: the
+    kernel sees them under the frame's names."""
+    X = make_blobs(300, 8, seed=2)
+    _write_parquet(str(tmp_path / "docs.parquet"), np.arange(300) * 3, X, cols=("doc_id", "emb"))
+    train = spark.read.parquet(str(tmp_path / "docs.parquet"))
+    test = spark.createDataFrame([(i, [float(x) for x in X[i * 11]]) for i in range(9)],
+                                 "qid bigint, emb array<float>")
+    projected = train.select(F.col("doc_id").cast("bigint").alias("id"),
+                             F.col("emb").alias("vec"))
+    assert knn_ops.parquet_fragments(projected)[0] == [("id", "doc_id"), ("vec", "emb")]
+    res = knn_ops.knn(train, test, k=5, vec_col="emb", id_col="doc_id")
+    assert "Range" in _kernel_input(res) and "Scan parquet" not in _kernel_input(res)
+    got = _group(res.orderBy("qid", "rank").collect())
+    expect = brute_force_knn(X, X[::11][:9], 5)
+    for qid in range(9):
+        assert [r["id"] for r in got[qid]] == [3 * i for i in expect[qid]]
+
+
+@pytest.mark.parametrize("shape", ["filtered", "cast", "computed", "partitioned"])
+def test_non_bare_frames_fall_back_to_spark_scan(spark, tmp_path, shape):
+    X = make_blobs(200, 8, seed=3)
+    path = str(tmp_path / "t.parquet")
+    if shape == "partitioned":
+        spark.createDataFrame([(i, [float(x) for x in X[i]], i % 3) for i in range(200)],
+                              "id bigint, vec array<float>, part int"
+                              ).write.partitionBy("part").parquet(path)
+    else:
+        _write_parquet(path, np.arange(200), X)
+    train = spark.read.parquet(path)
+    train = {"filtered": lambda t: t.filter(F.col("id") % 2 == 0),
+             "cast": lambda t: t.withColumn("vec", F.col("vec").cast("array<double>")),
+             "computed": lambda t: t.withColumn("id", F.col("id") * 2),
+             "partitioned": lambda t: t}[shape](train)
+    test = spark.createDataFrame([(0, [float(x) for x in X[0]])], "qid bigint, vec array<float>")
+    assert knn_ops.parquet_fragments(train) is None
+    res = knn_ops.knn(train, test, k=5)
+    plan = _kernel_input(res)
+    assert "Scan parquet" in plan and "Range" not in plan
+    assert res.filter("rank = 1").first()["id"] == 0
+
+
+def test_parquet_train_width_needs_no_spark_job(parquet_ties):
+    """``knn`` reads a bare parquet table's vector width from the file,
+    and still refuses queries of another width at call time."""
+    _, _, train, _ = parquet_ties
+    spark = train.sparkSession
+    sc = spark.sparkContext
+    sc.setJobGroup("width-probe", "width-probe")
+    try:
+        assert knn_ops._first_dim(train, "vec") == 16
+    finally:
+        sc.setJobGroup("after-width-probe", "")
+    assert sc.statusTracker().getJobIdsForGroup("width-probe") == []
+    q = spark.createDataFrame([(0, [1.0, 2.0])], "qid bigint, vec array<float>")
+    for method in ("expr", "gemm"):
+        with pytest.raises(ValueError, match="dimension mismatch"):
+            knn_ops.knn(train, q, k=1, method=method)

@@ -92,6 +92,22 @@ def test_gemm_path_partial_topk_reduces_shuffle(pq, queries):
     assert plan.index(kernel) > plan.index("Exchange")  # formatted: tree order
 
 
+def test_knn_reads_load_table_parquet_in_the_kernel(spark, sf_dir):
+    """``knn`` over a ``load_table`` frame feeds its Arrow kernel from a
+    ``Range`` of read tasks, not a parquet scan: a cast or computed column
+    added to ``_knn_gemm``'s projection would make the frame not bare and
+    silently put the JVM decode back under the kernel."""
+    from bigvectorbench_spark.sources.tables import load_table
+
+    train = load_table(spark, sf_dir, "embeddings")
+    queries = spark.createDataFrame([(0, [0.0] * 64)], "qid bigint, vec array<float>")
+    plan = plan_of(knn(train, queries, k=5, vec_col="embedding", id_col="vec_id",
+                       query_vec_col="vec"))
+    tree = plan.split("\n\n", 1)[0]
+    below = tree[tree.index("MapInArrow"):]
+    assert "Range" in below and "Scan parquet" not in below
+
+
 def test_semi_anti_and_topk_plan_shapes(spark, sf_dir):
     import __spark_entry__ as e
 
